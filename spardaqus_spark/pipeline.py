@@ -6,6 +6,10 @@ Logical DAG (all lazy — Catalyst optimizes the whole thing as one plan):
          sha: PERFECTLY uniform, so the scoring stages that pipeline on top
          of it are skew-free by construction — no mega-repo can hot-spot a
          content-hash partitioning)
+         -> resume filter (codegen: drop committed / non-whitelisted
+            buckets — above the window, which must see every row to pick
+            global dedup winners, and below the kernel, so a resume
+            scores only unfinished buckets)
          -> fused score mapInPandas (narrow) -> verdict (codegen)
          -> [kept rows only] scrub mapInPandas (narrow)
          -> bucketize repartition (shuffle #2 — repo-hash bucket + salt,
@@ -42,9 +46,18 @@ def build_verdict_frame(
     cfg: PipelineConfig | None = None,
     hot_repos: list[str] | None = None,
     prebucketed: bool = False,
+    run_dir: str | Path | None = None,
+    bucket_whitelist: list[int] | None = None,
 ) -> "DataFrame":
     """read-input -> scored + verdict frame (keep, rule_hits, dup_loser).
-    Pure plan construction — nothing executes.
+    Pure plan construction — nothing executes (bar reading the manifests).
+
+    Rows of buckets committed under ``run_dir``, and of buckets outside
+    ``bucket_whitelist``, are pruned right after the dedup window: every
+    row still takes part in dedup (a committed winner keeps making its
+    open-bucket copy a loser), but only the rest reaches the verdict.
+    Catalyst pushes predicates through a ``Window`` only on its partition
+    key (``content_sha256``), so the ``bucket`` filter stays above it.
 
     Default (dedup-first): the content-hash dedup exchange doubles as the
     skew-free physical partitioning for scoring; ``bucket``/``salt`` are
@@ -76,6 +89,8 @@ def build_verdict_frame(
         df = bk.with_bucket_columns(df, cfg)  # logical columns, no shuffle
         df = stages.with_sha(df)
         df = stages.dedup_exact(df)  # shuffle #1: uniform content-hash
+    df = ckpt.filter_resume(df, run_dir, only=bucket_whitelist)
+    if not prebucketed:
         # fused score+verdict+scrub: 2 Arrow crossings total, scrub only
         # on kept rows, verdict via the oracle-shared pandas rules
         return stages.score_scrub(df, cfg)
@@ -111,8 +126,11 @@ def run(
 ) -> dict:
     """Execute end-to-end with checkpoint/resume + lineage.
 
-    ``bucket_whitelist`` limits processing to specific buckets (used by the
-    kill-at-50% resume test; prod uses it for targeted reruns).
+    A resumed run (``run_dir`` holding bucket manifests) and
+    ``bucket_whitelist`` (used by the kill-at-50% resume test; prod uses it
+    for targeted reruns) both prune buckets inside
+    ``build_verdict_frame``, before scoring: only the buckets this attempt
+    processes are scored, written and committed.
     ``prebucketed=True`` runs the Iceberg bucket(repo) production DAG
     (score in place with hot-repo salting, dedup after) — same outputs,
     same checkpoint/lineage plumbing. Returns summary counters.
@@ -123,11 +141,10 @@ def run(
     run_id = run_id or uuid.uuid4().hex[:12]
     run_dir = Path(run_dir) if run_dir else None
 
-    v = build_verdict_frame(df, cfg, hot_repos=hot_repos, prebucketed=prebucketed)
-    if run_dir is not None:
-        v = ckpt.filter_resume(v, run_dir)
-    if bucket_whitelist is not None:
-        v = v.filter(F.col("bucket").isin([int(b) for b in bucket_whitelist]))
+    v = build_verdict_frame(
+        df, cfg, hot_repos=hot_repos, prebucketed=prebucketed,
+        run_dir=run_dir, bucket_whitelist=bucket_whitelist,
+    )
 
     if run_dir is None:
         n_out = build_clean_frame(v, cfg).count()

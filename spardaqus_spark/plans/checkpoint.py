@@ -14,11 +14,13 @@ reprocessing can never duplicate rows (single-writer-per-run_dir
 assumption, same as Iceberg's). Data + lineage are both bucket-
 partitioned so the same sweep covers both sinks.
 
-Resume: load the manifest -> tiny ``buckets_done`` DataFrame -> broadcast
-``left_anti`` join drops already-processed buckets, so a restarted run
-touches only the unprocessed fraction (resume-overhead target,
-BASELINE.md). Combined with parquet partition pruning on ``bucket``, done
-buckets are never even scanned.
+Resume: ``filter_resume`` turns the manifests into one literal
+``NOT bucket IN (...)`` filter. The pipeline applies it above the dedup
+window and below the scoring kernel, so a restarted run scores and writes
+only the unprocessed buckets (resume-overhead target, BASELINE.md). Done
+buckets are still scanned and hashed: ``bucket`` is derived from
+``xxhash64(repo)``, not a partition column of the input, and the dedup
+window must see every row to pick the same winners as an uninterrupted run.
 """
 
 from __future__ import annotations
@@ -96,15 +98,18 @@ def clean_orphans(run_dir: str | Path, *data_paths: str | Path) -> list[int]:
     return sorted(removed)
 
 
-def filter_resume(df: "DataFrame", run_dir: str | Path) -> "DataFrame":
-    """Drop rows of already-committed buckets (broadcast anti-join; also a
-    codegen'd NOT-IN for the tiny literal list would do — anti-join keeps
-    the plan shape identical at any bucket count)."""
+def filter_resume(
+    df: "DataFrame", run_dir: str | Path | None, only: list[int] | None = None
+) -> "DataFrame":
+    """Keep the rows of buckets still to process: drop the buckets
+    committed under ``run_dir`` and, if ``only`` is given, every bucket
+    outside it. A codegen'd literal predicate (at most ``num_buckets``
+    values), or ``df`` itself when nothing is pruned."""
     from pyspark.sql import functions as F
 
-    done = done_buckets(run_dir)
-    if not done:
-        return df
-    spark = df.sparkSession
-    done_df = spark.createDataFrame([(int(b),) for b in done], "bucket int")
-    return df.join(F.broadcast(done_df), "bucket", "left_anti")
+    done = done_buckets(run_dir) if run_dir is not None else []
+    if done:
+        df = df.filter(~F.col("bucket").isin(done))
+    if only is not None:
+        df = df.filter(F.col("bucket").isin([int(b) for b in only]))
+    return df

@@ -234,15 +234,17 @@ def minhash_candidate_stream(
 
     r6 (VERDICT r05 #3, opt guide §5 — bound per-key state): the
     production TTL bound is now CODE, not prose. ``state_ttl_ms`` set ->
-    ProcessingTimeTimeout: every bucket update re-arms an idle timer;
-    a bucket that sees no arrival for the TTL window is dropped whole
+    ProcessingTimeTimeout: every batch that touches a bucket, a
+    redelivery-only one included, re-arms its idle timer; a bucket
+    that no batch touches for the TTL window is dropped whole
     (members can no longer pair with it — the same horizon argument as
     dedup_stream's watermark: near-dups arrive close together in
     ingestion time, so an idle bucket's members have left the match
     window). Default ``None`` keeps the exact r5 NoTimeout behavior —
     the finite-corpus tests and the batch-parity pin replay without a
-    clock in the loop; expiry is covered by its own test
-    (tests/test_streaming.py::test_minhash_stream_state_ttl_expires)."""
+    clock in the loop; expiry is covered by its own tests
+    (tests/test_streaming.py::test_minhash_stream_state_ttl_expires,
+    ::test_minhash_stream_ttl_rearmed_by_redelivery)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -255,6 +257,14 @@ def minhash_candidate_stream(
     bands = band_frame(
         minhash_signatures(docs_stream.select("doc_id", "text"))
     )
+
+    def rearm(state):
+        # GroupState's contract: a processing-time timeout holds only if
+        # each invocation of the group sets it. The early exits below
+        # re-arm too, so a redelivery-only batch never leaves a bucket
+        # without a timer, whatever the runtime does with an untouched one
+        if state_ttl_ms is not None and state.exists:
+            state.setTimeoutDuration(int(state_ttl_ms))
 
     def fn(key, pdfs, state):
         # TTL expiry: a bucket idle past state_ttl_ms arrives here with
@@ -279,6 +289,7 @@ def minhash_candidate_stream(
             id_chunks.append(pdf["doc_id"].to_numpy(dtype=np.int64))
             sig_chunks.append(np.array(pdf["sig"].tolist(), dtype=np.int64))
         if not id_chunks:
+            rearm(state)
             return
         new_ids = np.concatenate(id_chunks)
         S_new = np.vstack(sig_chunks)
@@ -290,6 +301,7 @@ def minhash_candidate_stream(
         first[np.unique(new_ids, return_index=True)[1]] = True
         fresh = first & ~np.isin(new_ids, old_ids)
         if not fresh.any():
+            rearm(state)
             return
         new_ids = new_ids[fresh]
         S_new = S_new[fresh]
@@ -306,10 +318,7 @@ def minhash_candidate_stream(
         keep = (gi < gj) & (E >= 0.5)
         ii, jj = np.nonzero(keep)
         state.update((aid.tolist(), A.ravel().tolist()))
-        if state_ttl_ms is not None:
-            # re-arm the idle timer on every update (ProcessingTimeTimeout
-            # requires an explicit duration per touched group per batch)
-            state.setTimeoutDuration(int(state_ttl_ms))
+        rearm(state)
         if len(ii):
             yield pd.DataFrame(
                 {

@@ -5,6 +5,8 @@ alive at 1000 executors; they are asserted, not assumed."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -80,6 +82,41 @@ def test_full_dag_two_shuffles(spark, files_parquet):
     clean = pipeline.build_clean_frame(v, default_config())
     p = _plan(clean)
     assert p.count("+- Exchange") + p.count(":- Exchange") == 2
+
+
+def _node_ids(plan: str, node: str, detail: str = "") -> list[int]:
+    """Formatted-plan ids of ``node`` operators whose detail block contains
+    ``detail``. Ids are assigned children-first, so an operator's id is
+    larger than the ids of everything below it."""
+    blocks = re.split(r"\n(?=\(\d+\) )", plan)
+    return [
+        int(m.group(1))
+        for b in blocks
+        if (m := re.match(rf"\((\d+)\) {node}\n", b)) and detail in b
+    ]
+
+
+def test_resumed_dag_prunes_between_window_and_kernel(spark, files_parquet, tmp_path):
+    """Resume prunes committed buckets with one literal filter that sits
+    ABOVE the dedup window (which must see every row, or a committed
+    winner's open-bucket copy would be kept) and BELOW the scoring kernel
+    (so committed rows are never scored). No broadcast, no extra shuffle."""
+    from spardaqus_spark.plans import checkpoint as ckpt
+
+    cfg = default_config()
+    for b in range(cfg.num_buckets // 2):
+        ckpt.commit_bucket(tmp_path, "prior", b, 0, str(tmp_path / "files_clean"))
+    src = spark.read.parquet(files_parquet)
+    v = pipeline.build_verdict_frame(src, cfg, run_dir=tmp_path)
+    plan = _plan(v)
+    assert plan.count("+- Exchange") + plan.count(":- Exchange") == 1, plan[:2000]
+    clean = _plan(pipeline.build_clean_frame(v, cfg))
+    assert clean.count("+- Exchange") + clean.count(":- Exchange") == 2
+
+    (window,) = _node_ids(plan, "Window")
+    (prune,) = _node_ids(plan, "Filter", "NOT bucket#")
+    (kernel,) = _node_ids(plan, "MapInPandas")
+    assert window < prune < kernel, plan[:3000]
 
 
 def test_boilerplate_stage_plan_shape(spark, files_parquet):

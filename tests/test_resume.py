@@ -5,10 +5,12 @@ byte-for-byte, and that resume reprocesses only the missing buckets."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from spardaqus_spark import pipeline
 from spardaqus_spark.config import default_config
+from spardaqus_spark.operators import bucketize as bk
 from spardaqus_spark.plans import checkpoint as ckpt
 
 CFG = default_config(num_buckets=8, hot_repo_threshold=100)
@@ -38,7 +40,7 @@ def test_kill_and_resume_matches_uninterrupted(spark, corpus_sdf, tmp_path):
     assert r1["buckets"] == 4
     assert sorted(ckpt.done_buckets(part_dir)) == [0, 1, 2, 3]
 
-    # resume: anti-join drops done buckets; remainder processes
+    # resume: done buckets are pruned before scoring; remainder processes
     r2 = pipeline.run(corpus_sdf, CFG, run_dir=part_dir, run_id="a2")
     assert r2["buckets"] == 4  # ONLY the unprocessed fraction (overhead target)
     assert sorted(ckpt.done_buckets(part_dir)) == list(range(8))
@@ -46,6 +48,69 @@ def test_kill_and_resume_matches_uninterrupted(spark, corpus_sdf, tmp_path):
     a = _read_clean(spark, full_dir)
     b = _read_clean(spark, part_dir)
     pd.testing.assert_frame_equal(a, b)
+
+
+PAIR = ("boundary/r0", "boundary/pair.py", "c0")  # the pinned dedup winner
+
+
+@pytest.fixture(scope="module")
+def boundary_frame(spark, golden):
+    """Hand-made input: one exact-dup pair whose repos hash to different
+    buckets, plus a few unrelated rows. The winner is ``PAIR`` (smallest
+    (repo, path, commit)); the loser differs only in its repo. Returns the
+    frame and the winner's and loser's buckets."""
+    names = spark.createDataFrame(
+        [(f"boundary/r{i}", PAIR[1]) for i in range(16)], "repo string, path string"
+    )
+    bucket_of = {
+        r["repo"]: r["bucket"] for r in bk.with_bucket_columns(names, CFG).collect()
+    }
+    winner = PAIR[0]
+    loser = next(r for r in sorted(bucket_of) if bucket_of[r] != bucket_of[winner])
+    cols = ["repo", "path", "commit", "lang", "content"]
+    base = golden[~golden["dup_loser"]]
+    kept = base[base["keep"]].iloc[0]
+    pair = pd.DataFrame(
+        [[repo, PAIR[1], PAIR[2], kept["lang"], kept["content"]] for repo in (winner, loser)],
+        columns=cols,
+    )
+    pdf = pd.concat([pair, base.drop(index=kept.name).head(8)[cols]], ignore_index=True)
+    return spark.createDataFrame(pdf), {
+        "winner": bucket_of[winner], "loser": bucket_of[loser]
+    }
+
+
+@pytest.mark.parametrize("committed", ["winner", "loser"])
+def test_resume_dedups_across_the_bucket_boundary(
+    spark, boundary_frame, tmp_path, committed
+):
+    """Dedup is global, resume is per bucket: whichever copy of an exact
+    dup sits in a committed bucket, the resumed run must still see it in
+    the dedup window. A committed winner keeps its open-bucket copy a
+    loser (never written); a committed loser leaves the open-bucket winner
+    kept. Either way the union equals the uninterrupted run."""
+    sdf, pair_buckets = boundary_frame
+    done = pair_buckets[committed]
+    full_dir, part_dir = tmp_path / "full", tmp_path / "part"
+    pipeline.run(sdf, CFG, run_dir=full_dir, run_id="full")
+    pipeline.run(sdf, CFG, run_dir=part_dir, run_id="a1", bucket_whitelist=[done])
+    pipeline.run(sdf, CFG, run_dir=part_dir, run_id="a2")
+
+    a = _read_clean(spark, full_dir)
+    b = _read_clean(spark, part_dir)
+    pd.testing.assert_frame_equal(a, b)
+    pair_rows = b[(b["path"] == PAIR[1]) & (b["commit"] == PAIR[2])]
+    assert list(pair_rows["repo"]) == [PAIR[0]]
+
+    # the resumed attempt's dedup lineage counts the open buckets' rows only
+    buckets = [
+        r["bucket"]
+        for r in bk.with_bucket_columns(sdf, CFG).select("bucket").collect()
+    ]
+    lin = spark.read.parquet(str(part_dir / "lineage")).filter(
+        (F.col("run_id") == "a2") & (F.col("stage") == "dedup")
+    )
+    assert lin.agg(F.sum("files_in")).first()[0] == sum(b != done for b in buckets)
 
 
 def test_resume_noop_when_all_done(spark, corpus_sdf, tmp_path):

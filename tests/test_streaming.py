@@ -416,6 +416,59 @@ def test_minhash_candidate_stream_matches_batch(spark, tmp_path):
     )
 
 
+TTL_X = "the quick brown fox jumps over the lazy dog repeatedly for tests"
+TTL_Z = "completely different content about structured streaming state"
+
+
+def _ttl_protocol(spark, tmp_path, name: str, ttl_ms, steps) -> pd.DataFrame:
+    """Run ``minhash_candidate_stream`` over one source dir + checkpoint as
+    a series of restarted availableNow queries, so band-bucket state
+    persists between steps. A ``(file, doc_id, text)`` step adds one file
+    and runs the query on it; a number step sleeps that many seconds when
+    the TTL is on. Returns every emitted (d1, d2)."""
+    import time
+
+    src = tmp_path / f"ttl_src_{name}"
+    src.mkdir()
+    ckpt = str(tmp_path / f"ttl_ckpt_{name}")
+    out = str(tmp_path / f"ttl_out_{name}")
+    for step in steps:
+        if not isinstance(step, tuple):
+            if ttl_ms is not None:
+                time.sleep(step)
+            continue
+        fname, doc_id, text = step
+        # file sink (memory sink cannot recover from a checkpoint); the
+        # output dir accumulates every step's emitted pairs
+        pd.DataFrame({"doc_id": [doc_id], "text": [text]}).to_parquet(
+            src / fname, index=False
+        )
+        stream = (
+            spark.readStream.schema("doc_id bigint, text string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        q = (
+            spipe.minhash_candidate_stream(stream, state_ttl_ms=ttl_ms)
+            .writeStream.format("parquet")
+            .outputMode("append")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        # stop once the file's batch is done: with a ProcessingTimeTimeout
+        # the query runs no-data batches forever (processAllAvailable
+        # never returns either), and left running they would expire
+        # state while later steps run
+        deadline = time.monotonic() + 120
+        while q.isActive and not any(p["numInputRows"] for p in q.recentProgress):
+            assert time.monotonic() < deadline, "step's batch never ran"
+            time.sleep(0.1)
+        q.stop()
+    return spark.read.parquet(out).select("d1", "d2").toPandas()
+
+
 def test_minhash_stream_state_ttl_expires(spark, tmp_path):
     """r6 (VERDICT r05 #3): the config-gated ProcessingTimeTimeout TTL
     actually DROPS idle bucket state — no stale pairs after expiry.
@@ -432,53 +485,41 @@ def test_minhash_stream_state_ttl_expires(spark, tmp_path):
     Control: the identical protocol with state_ttl_ms=None emits the
     (1,2) pair in phase 3 (proves the expiry assertion is non-vacuous
     and the default path is byte-for-byte the r5 behavior)."""
-    import time
-
-    X = "the quick brown fox jumps over the lazy dog repeatedly for tests"
-    Z = "completely different content about structured streaming state"
-
-    def run_protocol(name: str, ttl_ms):
-        src = tmp_path / f"ttl_src_{name}"
-        src.mkdir()
-        ckpt = str(tmp_path / f"ttl_ckpt_{name}")
-        out = str(tmp_path / f"ttl_out_{name}")
-
-        def phase(fname: str, doc_id: int, text: str):
-            # file sink (memory sink cannot recover from a checkpoint);
-            # the output dir accumulates every phase's emitted pairs
-            pd.DataFrame({"doc_id": [doc_id], "text": [text]}).to_parquet(
-                src / fname, index=False
-            )
-            stream = (
-                spark.readStream.schema("doc_id bigint, text string")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(str(src))
-            )
-            q = (
-                spipe.minhash_candidate_stream(stream, state_ttl_ms=ttl_ms)
-                .writeStream.format("parquet")
-                .outputMode("append")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-
-        phase("a.parquet", 1, X)
-        if ttl_ms is not None:
-            time.sleep(ttl_ms / 1000 + 1.5)  # idle past the TTL
-        phase("b.parquet", 3, Z)
-        phase("c.parquet", 2, X)
-        return spark.read.parquet(out).select("d1", "d2").toPandas()
-
-    control = run_protocol("off", None)
+    ttl_ms = 1500
+    steps = [
+        ("a.parquet", 1, TTL_X),
+        ttl_ms / 1000 + 1.5,  # idle past the TTL
+        ("b.parquet", 3, TTL_Z),
+        ("c.parquet", 2, TTL_X),
+    ]
+    control = _ttl_protocol(spark, tmp_path, "off", None, steps)
     assert {(r.d1, r.d2) for r in control.itertuples()} == {(1, 2)}, (
         "control (no TTL) must emit the (1,2) pair — protocol is vacuous "
         f"otherwise; got {control.to_dict('records')}"
     )
-    expired = run_protocol("on", 1500)
+    expired = _ttl_protocol(spark, tmp_path, "on", ttl_ms, steps)
     assert len(expired) == 0, (
         "bucket state survived past the TTL: stale pair(s) "
         f"{expired.to_dict('records')} emitted after expiry"
+    )
+
+
+def test_minhash_stream_ttl_rearmed_by_redelivery(spark, tmp_path):
+    """A batch that only redelivers an already-stored doc takes the early
+    no-op exit. GroupState's contract is that a processing-time timeout
+    holds only if every invocation of the group sets it, so that exit
+    must re-arm the timer: the bucket still expires after an idle TTL
+    instead of living forever. The TTL is long enough for the redelivery
+    to land before the first timer runs out."""
+    ttl_ms = 8000
+    stale = _ttl_protocol(spark, tmp_path, "redeliver", ttl_ms, [
+        ("a.parquet", 1, TTL_X),
+        ("a_again.parquet", 1, TTL_X),  # redelivery only: no fresh doc
+        ttl_ms / 1000 + 1.5,  # idle past the TTL
+        ("b.parquet", 3, TTL_Z),  # sweeps expired timers
+        ("c.parquet", 2, TTL_X),
+    ])
+    assert len(stale) == 0, (
+        "a redelivery-only batch disarmed the TTL: stale pair(s) "
+        f"{stale.to_dict('records')} emitted after the idle window"
     )
