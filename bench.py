@@ -157,7 +157,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # --- pipeline throughput (the BASELINE.json headline) ---------------
-    cfg = default_config(num_buckets=64, hot_repo_threshold=max(BENCH_N // 50, 1000))
+    cfg = default_config(num_buckets=64)
     src = spark.read.parquet(cpath)
     files_in = src.count()  # warms the scan; excluded from the timed window
     # warm-up: python-worker spinup + per-worker model training + codegen
@@ -172,22 +172,6 @@ def main() -> None:
         "files_out": res["files_out"],
         "sec": round(pipe_sec, 3),
         "files_per_sec": round(files_in / pipe_sec, 1),
-    }
-
-    # --- prebucketed (Iceberg bucket(repo) production) DAG --------------
-    # Same input, prebucketed=True: scores on the (bucket, salt) layout an
-    # Iceberg bucket(repo) table would arrive in, with explicit hot-repo
-    # salting. Reported alongside the default DAG so the production path
-    # has a measured number (VERDICT r02 #8). The default run above doubles
-    # as its warm-up (same kernels, same workers).
-    t0 = time.perf_counter()
-    res_pb = pipeline.run(src, cfg, prebucketed=True)
-    pb_sec = time.perf_counter() - t0
-    pipe_pb = {
-        "files_in": files_in,
-        "files_out": res_pb["files_out"],
-        "sec": round(pb_sec, 3),
-        "files_per_sec": round(files_in / pb_sec, 1),
     }
 
     # --- headline coverage queries at SF_DIR -----------------------------
@@ -222,7 +206,6 @@ def main() -> None:
         "queries": qtimes,
         "sf": None,
         "pipeline": pipe,
-        "pipeline_prebucketed": pipe_pb,
         "host_probe": probe,
         "cores": master,  # the actual master used, not the env echo
     }

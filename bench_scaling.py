@@ -43,7 +43,7 @@ from spardaqus_spark.session import get_spark
 
 spark = get_spark(app="scaling", master="local[{cores}]")
 spark.sparkContext.setLogLevel("ERROR")
-cfg = default_config(num_buckets=64, hot_repo_threshold=2000)
+cfg = default_config(num_buckets=64)
 src = spark.read.parquet({corpus!r})
 n = src.count()
 # warm-up: JVM + python-worker spinup + model training, excluded from the

@@ -5,9 +5,10 @@
         --config conf/pipeline.yaml --input <iceberg-table-or-parquet-dir> \
         --run-dir /runs/2026-08-16 [--resume RUN_ID] [--buckets 0,1,2]
 
-Builds the full DAG (bucketize -> dedup -> fused score -> verdict -> scrub)
-and executes with checkpoint/resume + lineage. On a cluster the SparkSession
-comes from spark-submit; standalone it falls back to local mode.
+Builds the full DAG (dedup -> fused score+verdict+scrub -> bucket
+repartition -> write) and executes with checkpoint/resume + lineage. On a
+cluster the SparkSession comes from spark-submit; standalone it falls back
+to local mode.
 """
 
 from __future__ import annotations
@@ -35,12 +36,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         action="store_true",
         help="print the formatted physical plan instead of executing",
     )
-    p.add_argument(
-        "--prebucketed",
-        action="store_true",
-        help="input is already bucket(repo)-partitioned (Iceberg prod "
-        "layout): score in place with hot-repo salting, dedup after",
-    )
     return p.parse_args(argv)
 
 
@@ -63,8 +58,7 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
     src = io.read_files(spark, cfg)
     if args.explain:
-        v = pipeline.build_verdict_frame(src, cfg, prebucketed=args.prebucketed)
-        clean = pipeline.build_clean_frame(v, cfg)
+        clean = pipeline.build_clean_frame(pipeline.build_verdict_frame(src, cfg))
         print(
             clean._sc._jvm.PythonSQLUtils.explainString(
                 clean._jdf.queryExecution(), "formatted"
@@ -81,7 +75,6 @@ def main(argv: list[str] | None = None) -> int:
         run_dir=args.run_dir,
         run_id=args.resume,
         bucket_whitelist=buckets,
-        prebucketed=args.prebucketed,
     )
     print(res)
     spark.stop()

@@ -24,7 +24,7 @@ Verdict semantics (pinned, §2.9.7 + r02 amendment):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, fields
 from pathlib import Path
 from typing import Any
 
@@ -58,14 +58,27 @@ class Rule:
         return None
 
 
+def parse_verdict(verdict: str) -> float | None:
+    """-> tau for ``weighted_sum>=<tau>``, None for ``all_pass`` (pinned
+    §2.9.7); ValueError for anything else."""
+    if verdict == "all_pass":
+        return None
+    if isinstance(verdict, str) and verdict.startswith("weighted_sum>="):
+        try:
+            return float(verdict.split(">=", 1)[1])
+        except ValueError:
+            pass
+    raise ValueError(
+        f"unknown verdict {verdict!r} (expected all_pass | weighted_sum>=<float>)"
+    )
+
+
 @dataclass(frozen=True)
 class PipelineConfig:
     rules: tuple[Rule, ...]
     verdict: str = "all_pass"
     num_buckets: int = 64
     salt_k: int = 8
-    hot_repo_threshold: int = 10_000
-    arrow_batch_size: int = 512
     # cross-file boilerplate metric (SURVEY §2.9.17, r3): when enabled, a
     # per-file `boilerplate_frac` column is computed BEFORE scoring — the
     # fraction of the file's token occurrences that are repo-boilerplate
@@ -82,27 +95,12 @@ class PipelineConfig:
     table_format: str = "parquet"  # parquet | iceberg (prod)
 
     def __post_init__(self) -> None:
-        if self.verdict != "all_pass" and self.verdict_tau is None:
-            raise ValueError(
-                f"unknown verdict {self.verdict!r} "
-                "(expected all_pass | weighted_sum>=<float>)"
-            )
+        parse_verdict(self.verdict)
 
     @property
     def verdict_tau(self) -> float | None:
         """tau for ``verdict: weighted_sum>=<tau>``, else None."""
-        if isinstance(self.verdict, str) and self.verdict.startswith(
-            "weighted_sum>="
-        ):
-            try:
-                return float(self.verdict.split(">=", 1)[1])
-            except ValueError:
-                return None
-        return None
-
-    @property
-    def drop_rules(self) -> tuple[Rule, ...]:
-        return tuple(r for r in self.rules if r.action == "drop")
+        return parse_verdict(self.verdict)
 
 
 DEFAULT_RULES = (
@@ -133,22 +131,10 @@ def load_config(path: str | Path) -> PipelineConfig:
         )
         for r in raw.get("rules", [])
     ) or DEFAULT_RULES
-    keys = {
-        k: raw[k]
-        for k in (
-            "verdict",
-            "num_buckets",
-            "salt_k",
-            "hot_repo_threshold",
-            "arrow_batch_size",
-            "boilerplate_frac_enabled",
-            "boilerplate_doc_frac",
-            "boilerplate_min_files",
-            "lexicon_path",
-            "input_path",
-            "output_path",
-            "table_format",
-        )
-        if k in raw
-    }
+    # the dataclass is the key list: a typo or a removed key fails loudly
+    # instead of silently falling back to its default
+    unknown = sorted(set(raw) - {f.name for f in fields(PipelineConfig)})
+    if unknown:
+        raise ValueError(f"{path}: unknown config keys {unknown}")
+    keys = {k: v for k, v in raw.items() if k != "rules"}
     return PipelineConfig(rules=rules, **keys)

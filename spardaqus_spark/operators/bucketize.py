@@ -4,13 +4,11 @@ skewed mega-repos (BASELINE.json:6,14; SURVEY.md §1.4).
 - bucket = pmod(xxhash64(repo), NUM_BUCKETS) — the lineage/checkpoint/
   partition-pruning grain; in production Iceberg this is the partition
   transform ``bucket(N, repo)``.
-- Skew: AQE can split skewed JOIN partitions but cannot rebalance a running
-  pandas-UDF stage, so mega-repos are salted EXPLICITLY: repos whose file
-  count exceeds ``hot_repo_threshold`` (detected by a cheap metadata-only
-  pre-pass: groupBy(repo).count() reads just the `repo` column thanks to
-  parquet column pruning) get salt = pmod(xxhash64(path), SALT_K); the
-  physical repartition key is (bucket, salt). Safe because every scoring/
-  scrub stage is row-local (SURVEY.md §1.4).
+- salt = pmod(xxhash64(path), SALT_K): the pre-write repartition key is
+  (bucket, salt), so a mega-repo's kept rows spread over SALT_K write
+  tasks instead of landing on one. Scoring never runs on this layout —
+  it pipelines on the skew-free content-hash dedup exchange — so every
+  repo is salted and no hot-repo detection pass is needed.
 """
 
 from __future__ import annotations
@@ -23,72 +21,18 @@ if TYPE_CHECKING:
     from pyspark.sql import DataFrame
 
 
-def detect_hot_repos(df: "DataFrame", threshold: int) -> list[str]:
-    """Metadata-only skew pre-pass. At 10^12 rows this is a single narrow
-    column scan + partial-aggregated count; result is a tiny driver list."""
-    from pyspark.sql import functions as F
-
-    rows = (
-        df.select("repo")
-        .groupBy("repo")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") > threshold)
-        .select("repo")
-        .collect()
-    )
-    return sorted(r["repo"] for r in rows)
-
-
 def with_bucket_columns(
-    df: "DataFrame",
-    cfg: PipelineConfig | None = None,
-    hot_repos: list[str] | None = None,
+    df: "DataFrame", cfg: PipelineConfig | None = None
 ) -> "DataFrame":
     """+ bucket:int, salt:int as LOGICAL columns (codegen, no shuffle).
 
-    Used by the dedup-first DAG where the physical partitioning comes from
-    the content-hash dedup exchange; bucket/salt drive lineage grain,
-    resume, and the pre-write repartition only.
+    The physical partitioning for scoring comes from the content-hash
+    dedup exchange; bucket/salt drive lineage grain, resume, and the
+    pre-write repartition only.
     """
     from pyspark.sql import functions as F
 
     cfg = cfg or default_config()
     bucket = F.pmod(F.xxhash64("repo"), F.lit(cfg.num_buckets)).cast("int")
-    if hot_repos:
-        salt = F.when(
-            F.col("repo").isin(hot_repos),
-            F.pmod(F.xxhash64("path"), F.lit(cfg.salt_k)).cast("int"),
-        ).otherwise(F.lit(0))
-    else:
-        salt = F.pmod(F.xxhash64("path"), F.lit(cfg.salt_k)).cast("int")
+    salt = F.pmod(F.xxhash64("path"), F.lit(cfg.salt_k)).cast("int")
     return df.withColumn("bucket", bucket).withColumn("salt", salt)
-
-
-def bucketize(
-    df: "DataFrame",
-    cfg: PipelineConfig | None = None,
-    hot_repos: list[str] | None = None,
-    num_partitions: int | None = None,
-) -> "DataFrame":
-    """+ bucket:int, salt:int; repartition on (bucket, salt).
-
-    The explicit-salting path for repo-keyed physical partitioning (prod
-    pre-bucketed inputs; SURVEY.md §1.4). Hot repos detected by the cheap
-    metadata-only pre-pass unless a static hot-list is supplied.
-    """
-    from pyspark.sql import functions as F
-
-    cfg = cfg or default_config()
-    if hot_repos is None:
-        hot_repos = detect_hot_repos(df, cfg.hot_repo_threshold)
-    bucket = F.pmod(F.xxhash64("repo"), F.lit(cfg.num_buckets)).cast("int")
-    if hot_repos:
-        salt = F.when(
-            F.col("repo").isin(hot_repos),
-            F.pmod(F.xxhash64("path"), F.lit(cfg.salt_k)).cast("int"),
-        ).otherwise(F.lit(0))
-    else:
-        salt = F.lit(0)
-    out = df.withColumn("bucket", bucket).withColumn("salt", salt)
-    n = num_partitions or out.sparkSession.sparkContext.defaultParallelism * 2
-    return out.repartition(n, "bucket", "salt")

@@ -5,15 +5,17 @@ follows the mandate exactly (BASELINE.json:15): Arrow-batched pandas
 kernels (``mapInPandas``) for text work, whole-stage-codegen Column
 expressions for everything else, zero per-row Python UDFs.
 
-Shuffle budget (SURVEY.md §4.2): scoring and scrubbing are NARROW — they
-pipeline over whatever partitioning the bucketize stage established. Only
-bucketize (repartition) and dedup (window over content hash) shuffle.
+Shuffle budget (SURVEY.md §4.2): ``score_scrub`` is NARROW — it pipelines
+over the content-hash partitioning of the dedup window, the only shuffle
+here (the pipeline's pre-write bucket repartition is the other one).
 
-The scoring stage is FUSED: heuristic metrics + langid + perplexity are
-computed in one ``mapInPandas`` pass so the giant ``content`` column
-crosses the JVM<->Python Arrow boundary exactly once for all three models
-(vs. three crossings for naive chained UDFs — the dominant cost at 100 TB).
-Models are trained/cached once per Python worker process (iterator pattern).
+``score_scrub`` is the ONE scoring kernel, shared by the batch pipeline,
+the streaming micro-batch and the pipeline query: heuristic metrics +
+langid + perplexity + the rule verdict (``rules.apply_rules_pandas``, the
+oracle's own rule engine) + scrub of kept rows, in one ``mapInPandas``
+pass, so the giant ``content`` column crosses the JVM<->Python Arrow
+boundary exactly twice (in, and scrubbed out). Models are trained/cached
+once per Python worker process (iterator pattern).
 """
 
 from __future__ import annotations
@@ -25,7 +27,6 @@ import pandas as pd
 
 from ..config import PipelineConfig, default_config
 from ..kernels import heuristics, langid, ppl, scrub
-from ..rules import compile_spark
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -39,34 +40,6 @@ SCORE_FIELDS = (
 
 def _schema_str(df: "DataFrame") -> str:
     return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-
-
-def score(df: "DataFrame", content_col: str = "content") -> "DataFrame":
-    """Fused scoring stage: + heuristic metrics + langid + perplexity.
-
-    One Arrow round-trip of `content`; all other columns pass through.
-    """
-    out_schema = f"{_schema_str(df)}, {SCORE_FIELDS}"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernels import textnum
-
-        for pdf in batches:
-            c = pdf[content_col].fillna("").astype(str).reset_index(drop=True)
-            # ONE decode of the giant content column, shared by all three
-            # kernels (utf-32 flatten dominates per-batch memory traffic)
-            flat = textnum.flatten_codepoints(c)
-            m = heuristics.compute_metrics(c, flat=flat)
-            lid = langid.predict(c, flat=flat)
-            out = pdf.copy()
-            for col in m.columns:
-                out[col] = m[col].to_numpy()
-            out["lang_pred"] = lid["lang_pred"].to_numpy()
-            out["lang_conf"] = lid["lang_conf"].to_numpy()
-            out["ppl"] = ppl.perplexity(c, flat=flat).to_numpy()
-            yield out
-
-    return df.mapInPandas(fn, out_schema)
 
 
 def score_scrub(
@@ -88,7 +61,8 @@ def score_scrub(
 
     Output: input columns (content := scrubbed where keep), score struct,
     rule_keep, rule_hits, keep, scrubbed_sha256. Requires an upstream
-    ``dup_loser`` column (dedup window).
+    ``dup_loser`` column: the dedup window's, or ``lit(False)`` where
+    there is no dedup (streaming micro-batches, the pipeline query).
     """
     cfg = cfg or default_config()
     lex = scrub.load_lexicon(cfg.lexicon_path)
@@ -230,14 +204,6 @@ def with_boilerplate_frac(
     )
 
 
-def verdict(df: "DataFrame", cfg: PipelineConfig | None = None) -> "DataFrame":
-    """+ rule_keep:boolean, rule_hits:array<string>. Pure codegen — the
-    compiled rule tree runs JVM-side (SURVEY.md §2.6)."""
-    cfg = cfg or default_config()
-    keep_col, hits_col = compile_spark(cfg.rules, cfg.verdict)
-    return df.withColumn("rule_keep", keep_col).withColumn("rule_hits", hits_col)
-
-
 def with_sha(df: "DataFrame", content_col: str = "content") -> "DataFrame":
     from pyspark.sql import functions as F
 
@@ -247,40 +213,8 @@ def with_sha(df: "DataFrame", content_col: str = "content") -> "DataFrame":
 def dedup_exact(df: "DataFrame") -> "DataFrame":
     """+ dup_loser:boolean. Pinned winner = lexicographically smallest
     (repo, path, commit) per content_sha256 (matches oracle.dedup_flag).
-    This is shuffle #2 (hash partition by content hash)."""
+    This is shuffle #1 (hash partition by content hash)."""
     from pyspark.sql import Window, functions as F
 
     w = Window.partitionBy("content_sha256").orderBy("repo", "path", "commit")
     return df.withColumn("dup_loser", F.row_number().over(w) > 1)
-
-
-def final_keep(df: "DataFrame") -> "DataFrame":
-    from pyspark.sql import functions as F
-
-    return df.withColumn("keep", F.col("rule_keep") & ~F.col("dup_loser"))
-
-
-def scrub_stage(df: "DataFrame", cfg: PipelineConfig | None = None,
-                content_col: str = "content") -> "DataFrame":
-    """Rewrite `content` through the pinned scrub chain; + scrubbed_sha256.
-
-    Apply AFTER filtering to kept rows — dropped rows never pay regex cost.
-    Narrow stage: no shuffle, patterns compiled once per worker.
-    """
-    cfg = cfg or default_config()
-    lex = scrub.load_lexicon(cfg.lexicon_path)
-    out_schema = f"{_schema_str(df)}, scrubbed_sha256 string"
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            out = pdf.copy()
-            s = scrub.scrub_series(pdf[content_col], lex)
-            out[content_col] = s.to_numpy()
-            out["scrubbed_sha256"] = s.map(
-                lambda x: hashlib.sha256(x.encode("utf-8")).hexdigest()
-            ).to_numpy()
-            yield out
-
-    return df.mapInPandas(fn, out_schema)

@@ -3,28 +3,25 @@
 Logical DAG (all lazy — Catalyst optimizes the whole thing as one plan):
 
     read -> sha2 (codegen) -> dedup window (shuffle #1, hash by content
-         sha: PERFECTLY uniform, so the scoring stages that pipeline on top
-         of it are skew-free by construction — no mega-repo can hot-spot a
+         sha: PERFECTLY uniform, so the scoring stage that pipelines on top
+         of it is skew-free by construction — no mega-repo can hot-spot a
          content-hash partitioning)
          -> resume filter (codegen: drop committed / non-whitelisted
             buckets — above the window, which must see every row to pick
             global dedup winners, and below the kernel, so a resume
             scores only unfinished buckets)
-         -> fused score mapInPandas (narrow) -> verdict (codegen)
-         -> [kept rows only] scrub mapInPandas (narrow)
+         -> ONE fused mapInPandas (narrow, ``stages.score_scrub``):
+            metrics + langid + ppl + in-worker verdict + scrub of kept rows
+         -> keep filter
          -> bucketize repartition (shuffle #2 — repo-hash bucket + salt,
             kept rows only, so the write lands 1-2 files per task per
             bucket and resume/pruning stay bucket-grained)
          -> write(partitionBy bucket) + lineage agg + per-bucket manifests
 
 Exactly two shuffles at any scale, and shuffle #2 carries only the ~75%
-kept, scrubbed rows. The dedup-first ordering also removes the per-run
-hot-repo detection scan: salting is only needed when scoring runs on a
-repo-keyed partitioning, which this DAG never does. That path still exists
-for production inputs that arrive ALREADY bucketed by Iceberg's
-``bucket(repo)`` transform (no dedup shuffle wanted before scoring):
-``build_verdict_frame(..., prebucketed=True)`` scores on the (bucket,
-salt) partitioning with explicit hot-repo salting (SURVEY.md §1.4).
+kept, scrubbed rows. Input laid out by Iceberg's ``bucket(repo)``
+transform runs through the same DAG unchanged: the dedup exchange
+repartitions by content hash whatever the arrival layout.
 """
 
 from __future__ import annotations
@@ -44,73 +41,45 @@ if TYPE_CHECKING:
 def build_verdict_frame(
     df: "DataFrame",
     cfg: PipelineConfig | None = None,
-    hot_repos: list[str] | None = None,
-    prebucketed: bool = False,
     run_dir: str | Path | None = None,
     bucket_whitelist: list[int] | None = None,
 ) -> "DataFrame":
-    """read-input -> scored + verdict frame (keep, rule_hits, dup_loser).
-    Pure plan construction — nothing executes (bar reading the manifests).
+    """read-input -> scored + verdict frame (keep, rule_hits, dup_loser,
+    scrubbed content of kept rows). Pure plan construction — nothing
+    executes (bar reading the manifests).
 
     Rows of buckets committed under ``run_dir``, and of buckets outside
     ``bucket_whitelist``, are pruned right after the dedup window: every
     row still takes part in dedup (a committed winner keeps making its
-    open-bucket copy a loser), but only the rest reaches the verdict.
+    open-bucket copy a loser), but only the rest reaches the kernel.
     Catalyst pushes predicates through a ``Window`` only on its partition
     key (``content_sha256``), so the ``bucket`` filter stays above it.
 
-    Default (dedup-first): the content-hash dedup exchange doubles as the
-    skew-free physical partitioning for scoring; ``bucket``/``salt`` are
-    logical columns only until the write repartition.
-
-    ``prebucketed=True``: input arrives physically partitioned by Iceberg's
-    ``bucket(repo)`` — score in place with explicit hot-repo salting, and
-    dedup via the same window afterwards.
+    The content-hash dedup exchange doubles as the skew-free physical
+    partitioning for scoring; ``bucket``/``salt`` are logical columns
+    only until the write repartition.
     """
     cfg = cfg or default_config()
     if cfg.boilerplate_frac_enabled:
-        # Hot-repo detection must read the RAW input: it is a narrow
-        # repo-column scan, and running it on the boilerplate-joined frame
-        # would execute the whole token-grain subtree a second time just
-        # to count rows per repo (code-review r3 #1).
-        if prebucketed and hot_repos is None:
-            hot_repos = bk.detect_hot_repos(df, cfg.hot_repo_threshold)
         # opt-in cross-file stage (VERDICT r02 #7): per-repo boilerplate
-        # fraction joined on BEFORE scoring so rules can reference it in
-        # both verdict compilers. Computed over the RAW input (pre-dedup),
-        # matching oracle.run.
+        # fraction joined on BEFORE scoring so rules can reference it.
+        # Computed over the RAW input (pre-dedup), matching oracle.run.
         df = stages.with_boilerplate_frac(df, cfg)
-    if prebucketed:
-        df = bk.bucketize(df, cfg, hot_repos=hot_repos)
-        df = stages.with_sha(df)
-        df = stages.score(df)
-        df = stages.dedup_exact(df)
-    else:
-        df = bk.with_bucket_columns(df, cfg)  # logical columns, no shuffle
-        df = stages.with_sha(df)
-        df = stages.dedup_exact(df)  # shuffle #1: uniform content-hash
+    df = bk.with_bucket_columns(df, cfg)  # logical columns, no shuffle
+    df = stages.with_sha(df)
+    df = stages.dedup_exact(df)  # shuffle #1: uniform content-hash
     df = ckpt.filter_resume(df, run_dir, only=bucket_whitelist)
-    if not prebucketed:
-        # fused score+verdict+scrub: 2 Arrow crossings total, scrub only
-        # on kept rows, verdict via the oracle-shared pandas rules
-        return stages.score_scrub(df, cfg)
-    df = stages.verdict(df, cfg)
-    df = stages.final_keep(df)
-    return df
+    # fused score+verdict+scrub: 2 Arrow crossings total, scrub only on
+    # kept rows, verdict via the oracle-shared pandas rules
+    return stages.score_scrub(df, cfg)
 
 
-def build_clean_frame(df_verdict: "DataFrame", cfg: PipelineConfig | None = None) -> "DataFrame":
+def build_clean_frame(df_verdict: "DataFrame") -> "DataFrame":
     """verdict frame -> files_clean (kept rows, scrubbed content), then the
-    bucket repartition (shuffle #2, kept rows only) for write layout.
-
-    The default (fused) verdict frame already carries scrubbed content +
-    scrubbed_sha256; the prebucketed path scrubs here instead."""
+    bucket repartition (shuffle #2, kept rows only) for write layout."""
     from pyspark.sql import functions as F
 
-    cfg = cfg or default_config()
     kept = df_verdict.filter(F.col("keep"))
-    if "scrubbed_sha256" not in kept.columns:
-        kept = stages.scrub_stage(kept, cfg)
     n = kept.sparkSession.sparkContext.defaultParallelism * 2
     return kept.repartition(n, "bucket", "salt")
 
@@ -121,8 +90,6 @@ def run(
     run_dir: str | Path | None = None,
     run_id: str | None = None,
     bucket_whitelist: list[int] | None = None,
-    prebucketed: bool = False,
-    hot_repos: list[str] | None = None,
 ) -> dict:
     """Execute end-to-end with checkpoint/resume + lineage.
 
@@ -130,10 +97,7 @@ def run(
     ``bucket_whitelist`` (used by the kill-at-50% resume test; prod uses it
     for targeted reruns) both prune buckets inside
     ``build_verdict_frame``, before scoring: only the buckets this attempt
-    processes are scored, written and committed.
-    ``prebucketed=True`` runs the Iceberg bucket(repo) production DAG
-    (score in place with hot-repo salting, dedup after) — same outputs,
-    same checkpoint/lineage plumbing. Returns summary counters.
+    processes are scored, written and committed. Returns summary counters.
     """
     from pyspark.sql import functions as F
 
@@ -142,12 +106,11 @@ def run(
     run_dir = Path(run_dir) if run_dir else None
 
     v = build_verdict_frame(
-        df, cfg, hot_repos=hot_repos, prebucketed=prebucketed,
-        run_dir=run_dir, bucket_whitelist=bucket_whitelist,
+        df, cfg, run_dir=run_dir, bucket_whitelist=bucket_whitelist
     )
 
     if run_dir is None:
-        n_out = build_clean_frame(v, cfg).count()
+        n_out = build_clean_frame(v).count()
         return {"run_id": run_id, "files_out": n_out}
 
     # The verdict frame feeds four consumers (clean-write, lineage, bucket
@@ -164,7 +127,7 @@ def run(
     # attempt's append write, so reprocessing cannot duplicate rows.
     ckpt.clean_orphans(run_dir, out_path, lineage_path)
     try:
-        clean = build_clean_frame(v, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+        clean = build_clean_frame(v).persist(StorageLevel.MEMORY_AND_DISK)
         (
             clean.sortWithinPartitions("repo", "path", "commit")
             .write.mode("append")

@@ -477,8 +477,9 @@ def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship: run the REAL quality pipeline (fused mapInPandas
-    scoring + codegen verdict) over `documents` as the corpus analog.
+    """The flagship: run the REAL quality pipeline's kernel (the fused
+    ``stages.score_scrub`` mapInPandas: scoring + in-worker verdict, no
+    dedup) over `documents` as the corpus analog.
     Model-backed -> rows-only driver check; exact equality vs the pandas
     oracle is enforced separately in tests/test_pipeline_oracle.py.
     r6: corpus spread (queries.spread) — the fused score kernel otherwise
@@ -501,9 +502,9 @@ def q_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "path",
     )
-    cfg = default_config()
-    scored = stages.score(corpus)
-    v = stages.verdict(scored, cfg)
+    v = stages.score_scrub(
+        corpus.withColumn("dup_loser", F.lit(False)), default_config()
+    )
     return (
         v.groupBy("lang_pred")
         .agg(

@@ -1,13 +1,9 @@
-"""Rule compiler: one Rule definition -> two executable forms.
+"""Rule engine: the ONE executable form of the declarative rules.
 
-1. ``compile_spark`` -> a Catalyst ``Column`` expression tree (when/boolean
-   algebra — fully whole-stage-codegen'd, zero Python in the hot path,
-   SURVEY.md §2.5 `verdict`).
-2. ``compile_pandas`` -> a boolean mask over a pandas DataFrame (the oracle
-   path, SURVEY.md §0.3).
-
-Both are generated from the SAME Rule objects in the SAME config order, so
-verdicts agree by construction (§2.9.7).
+``apply_rules_pandas`` evaluates a config's Rule objects, in config order,
+over a pandas frame of metrics. The oracle (``oracle.run``) and the Spark
+scoring kernel (``operators.stages.score_scrub``, in-worker) both call it,
+so their verdicts agree by shared code (§2.9.7).
 """
 
 from __future__ import annotations
@@ -17,10 +13,9 @@ from collections.abc import Sequence
 import numpy as np
 import pandas as pd
 
-from .config import Rule
+from .config import Rule, parse_verdict
 
 
-# ---------------------------------------------------------------- pandas ---
 def rule_mask_pandas(rule: Rule, df: pd.DataFrame) -> pd.Series:
     col = df[rule.metric]
     t = rule.threshold
@@ -46,15 +41,6 @@ def rule_mask_pandas(rule: Rule, df: pd.DataFrame) -> pd.Series:
     raise ValueError(rule.op)
 
 
-def _parse_verdict(verdict: str) -> float | None:
-    """-> tau for 'weighted_sum>=tau', None for 'all_pass' (pinned §2.9.7)."""
-    if verdict == "all_pass":
-        return None
-    if verdict.startswith("weighted_sum>="):
-        return float(verdict.split(">=", 1)[1])
-    raise ValueError(f"unknown verdict {verdict!r}")
-
-
 def apply_rules_pandas(
     rules: Sequence[Rule], df: pd.DataFrame, verdict: str = "all_pass"
 ) -> tuple[pd.Series, pd.Series]:
@@ -64,7 +50,7 @@ def apply_rules_pandas(
     Σ weight over fired ``weight:`` rules >= tau. Drop rules stay hard
     vetoes; under ``all_pass`` weight rules are annotation-only."""
     n = len(df)
-    tau = _parse_verdict(verdict)
+    tau = parse_verdict(verdict)
     hit_masks = [(r, rule_mask_pandas(r, df).fillna(False).to_numpy()) for r in rules]
     keep = np.ones(n, dtype=bool)
     for r, m in hit_masks:
@@ -87,66 +73,3 @@ def apply_rules_pandas(
         [names[j] for j in np.flatnonzero(stacked[i])] for i in range(n)
     ]
     return pd.Series(keep), pd.Series(hits, dtype=object)
-
-
-# ----------------------------------------------------------------- spark ---
-def rule_condition_spark(rule: Rule):
-    from pyspark.sql import functions as F
-
-    col = F.col(rule.metric)
-    t = rule.threshold
-    if rule.op == ">":
-        return col > F.lit(t)
-    if rule.op == ">=":
-        return col >= F.lit(t)
-    if rule.op == "<":
-        return col < F.lit(t)
-    if rule.op == "<=":
-        return col <= F.lit(t)
-    if rule.op == "==":
-        return col == F.lit(t)
-    if rule.op == "!=":
-        return col != F.lit(t)
-    if rule.op == "in":
-        return col.isin(list(t))
-    if rule.op == "not_in":
-        return ~col.isin(list(t))
-    if rule.op == "between":
-        lo, hi = t
-        return (col >= F.lit(lo)) & (col <= F.lit(hi))
-    raise ValueError(rule.op)
-
-
-def compile_spark(rules: Sequence[Rule], verdict: str = "all_pass"):
-    """-> (keep: Column, rule_hits: Column(array<string>)).
-
-    keep = NOT any(drop-rule fires); NULL metric never fires a rule
-    (coalesce to false), matching the pandas fillna(False) above. A
-    ``weighted_sum>=tau`` verdict additionally requires the codegen'd
-    Σ weight-of-fired-weight-rules to reach tau — same float64 addition
-    order as the pandas form (config order), so both engines agree at
-    the ulp.
-    """
-    from pyspark.sql import functions as F
-
-    tau = _parse_verdict(verdict)
-    conds = [
-        (r, F.coalesce(rule_condition_spark(r), F.lit(False))) for r in rules
-    ]
-    keep = F.lit(True)
-    for r, c in conds:
-        if r.action == "drop":
-            keep = keep & ~c
-    if tau is not None:
-        score = F.lit(0.0)
-        for r, c in conds:
-            if r.weight is not None:
-                score = score + F.when(c, F.lit(float(r.weight))).otherwise(F.lit(0.0))
-        keep = keep & (score >= F.lit(tau))
-    if conds:
-        hits = F.array_compact(
-            F.array(*[F.when(c, F.lit(r.name)) for r, c in conds])
-        )
-    else:
-        hits = F.array().cast("array<string>")
-    return keep, hits

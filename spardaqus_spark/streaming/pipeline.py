@@ -1,20 +1,22 @@
 """Streaming ingest path (SURVEY.md §2.8).
 
 Spardaqus's analyze service consumed a Kafka stream (SURVEY.md App. C);
-this rebuild keeps the identical stage functions and wires them to
-Structured Streaming. In-sandbox the source is a file/rate stream (no
-kafka jar — App. A); in production the same code points at
-``readStream.format("kafka")`` via one config key.
+this rebuild runs the batch pipeline's scoring kernel
+(``stages.score_scrub``) unchanged inside Structured Streaming.
+In-sandbox the source is a file/rate stream (no kafka jar — App. A); in
+production the same code points at ``readStream.format("kafka")`` via
+one config key.
 
 Two shapes:
 
-1. ``scrub_stream`` — continuous per-file pipeline: watermark + the batch
-   stages reused inside ``foreachBatch``. foreachBatch alone is only
-   AT-LEAST-once (a retry after the write lands but before the offset
-   commit re-runs the batch), so the sink is made IDEMPOTENT: output is
-   partitioned by ``batch_id`` with dynamic partition overwrite — the
-   retried batch replaces exactly its own partition. checkpointLocation
-   (offset tracking) + idempotent sink = exactly-once end-to-end.
+1. ``scrub_stream`` — continuous per-file pipeline: the fused batch
+   kernel reused inside ``foreachBatch`` (no cross-batch dedup).
+   foreachBatch alone is only AT-LEAST-once (a retry after the write
+   lands but before the offset commit re-runs the batch), so the sink is
+   made IDEMPOTENT: output is partitioned by ``batch_id`` with dynamic
+   partition overwrite — the retried batch replaces exactly its own
+   partition. checkpointLocation (offset tracking) + idempotent sink =
+   exactly-once end-to-end.
 2. windowed quality telemetry — tumbling/sliding/session aggregates of
    rule-hit counts past the watermark, append mode.
 """
@@ -33,7 +35,9 @@ if TYPE_CHECKING:
 
 def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
                       out_dir: str) -> None:
-    """The foreachBatch body: batch stages verbatim over the micro-batch.
+    """The foreachBatch body: the batch pipeline's one scoring kernel
+    (``stages.score_scrub``: score + verdict + scrub of kept rows) over
+    the micro-batch, then the rule-kept rows to the sink.
 
     Idempotent sink: dynamic partition overwrite on ``batch_id`` — a
     Structured Streaming retry of the same micro-batch overwrites its own
@@ -49,15 +53,18 @@ def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
 
     from ..plans import lineage as lin
 
-    scored = stages.verdict(stages.score(stages.with_sha(batch_df)), cfg)
+    # the batch pipeline's fused kernel; the stream does no cross-batch
+    # dedup, so no row is a dup loser and keep == rule_keep
+    scored = stages.score_scrub(
+        stages.with_sha(batch_df).withColumn("dup_loser", F.lit(False)), cfg
+    ).drop("dup_loser", "keep")
     # the scored frame feeds two consumers (data sink + lineage agg);
     # persist so the pandas scoring stage runs once per batch
     scored = scored.persist()
     try:
         kept = scored.filter(F.col("rule_keep"))
-        clean = stages.scrub_stage(kept, cfg)
         (
-            clean.withColumn("batch_id", F.lit(batch_id))
+            kept.withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")

@@ -31,7 +31,7 @@ def files_parquet(spark, corpus_pdf, tmp_path_factory):
 
 
 def test_metadata_query_prunes_content(spark, files_parquet):
-    """The skew pre-pass (groupBy(repo).count) must never deserialize the
+    """A metadata query (groupBy(repo).count) must never deserialize the
     giant `content` column — column pruning reaches the scan."""
     df = spark.read.parquet(files_parquet).groupBy("repo").count()
     plan = _plan(df)
@@ -57,17 +57,21 @@ def test_dim_joins_broadcast(spark):
 def test_pipeline_shuffle_budget(spark, files_parquet):
     """Exactly ONE Exchange in the verdict DAG — the dedup window's
     content-hash partition, which doubles as the (perfectly uniform)
-    physical partitioning for the scoring stages. Scoring + verdict
-    pipeline on top with NO additional shuffle (SURVEY.md §4.2)."""
+    physical partitioning for the scoring kernel. Scoring + verdict +
+    scrub pipeline on top with NO additional shuffle (SURVEY.md §4.2)."""
     src = spark.read.parquet(files_parquet)
     v = pipeline.build_verdict_frame(src, default_config())
     plan = _plan(v)
     n_exchange = plan.count("+- Exchange") + plan.count(":- Exchange")
     assert n_exchange == 1, f"expected 1 shuffle, got {n_exchange}:\n{plan[:2000]}"
-    # scoring runs as Arrow-batched python stages, verdict as codegen
-    assert "MapInPandas" in plan or "ArrowEvalPython" in plan
-    # the verdict expression tree must compile into whole-stage codegen
-    # (AQE's formatted plan hides spans pre-execution -> use codegen mode)
+    # one scoring kernel: score + verdict + scrub run in ONE Arrow-batched
+    # map (stages.score_scrub), with no per-row or chained Python UDF
+    assert len(_node_ids(plan, "MapInPandas")) == 1, plan[:3000]
+    for py_stage in ("ArrowEvalPython", "BatchEvalPython"):
+        assert py_stage not in plan, py_stage
+    # sha2 + the dedup window around the kernel compile into whole-stage
+    # codegen (AQE's formatted plan hides spans pre-execution -> use
+    # codegen mode)
     cg = v._sc._jvm.PythonSQLUtils.explainString(
         v._jdf.queryExecution(), "codegen"
     )
@@ -79,7 +83,7 @@ def test_full_dag_two_shuffles(spark, files_parquet):
     repartition of KEPT rows only. The scrub stage itself adds nothing."""
     src = spark.read.parquet(files_parquet)
     v = pipeline.build_verdict_frame(src, default_config())
-    clean = pipeline.build_clean_frame(v, default_config())
+    clean = pipeline.build_clean_frame(v)
     p = _plan(clean)
     assert p.count("+- Exchange") + p.count(":- Exchange") == 2
 
@@ -110,7 +114,7 @@ def test_resumed_dag_prunes_between_window_and_kernel(spark, files_parquet, tmp_
     v = pipeline.build_verdict_frame(src, cfg, run_dir=tmp_path)
     plan = _plan(v)
     assert plan.count("+- Exchange") + plan.count(":- Exchange") == 1, plan[:2000]
-    clean = _plan(pipeline.build_clean_frame(v, cfg))
+    clean = _plan(pipeline.build_clean_frame(v))
     assert clean.count("+- Exchange") + clean.count(":- Exchange") == 2
 
     (window,) = _node_ids(plan, "Window")
@@ -135,23 +139,6 @@ def test_boilerplate_stage_plan_shape(spark, files_parquet):
     assert "BroadcastNestedLoopJoin" not in plan
     for py_stage in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
         assert py_stage not in plan, py_stage
-
-
-def test_prebucketed_path_salts_and_scores_in_place(spark, files_parquet):
-    """Production shape: input already bucket(repo)-partitioned -> explicit
-    bucketize with hot-repo salting, scoring before the dedup window."""
-    src = spark.read.parquet(files_parquet)
-    v = pipeline.build_verdict_frame(
-        src,
-        default_config(),
-        hot_repos=["mega/repo0", "mega/repo1"],
-        prebucketed=True,
-    )
-    plan = _plan(v)
-    n_exchange = plan.count("+- Exchange") + plan.count(":- Exchange")
-    assert n_exchange == 2  # bucketize repartition + dedup window
-    got = v.select("repo", "path", "commit", "keep").toPandas()
-    assert len(got) > 0
 
 
 def test_minhash_signatures_zero_shuffle(spark):

@@ -13,7 +13,7 @@ from spardaqus_spark.config import default_config
 from spardaqus_spark.operators import bucketize as bk
 from spardaqus_spark.plans import checkpoint as ckpt
 
-CFG = default_config(num_buckets=8, hot_repo_threshold=100)
+CFG = default_config(num_buckets=8)
 
 
 def _read_clean(spark, run_dir):
@@ -216,21 +216,3 @@ def test_write_lineage_surfaces_loss(spark, corpus_sdf):
         - mismatched.loc[lost_bucket, "files_out"]
         == 1
     )
-
-
-def test_prebucketed_run_end_to_end_matches_default(spark, corpus_sdf, tmp_path):
-    """run(prebucketed=True) — the Iceberg bucket(repo) production DAG —
-    must land the same kept rows + sha256 as the default dedup-first DAG
-    through the full checkpoint/lineage machinery."""
-    d1, d2 = tmp_path / "dflt", tmp_path / "pre"
-    r1 = pipeline.run(corpus_sdf, CFG, run_dir=d1, run_id="a")
-    r2 = pipeline.run(corpus_sdf, CFG, run_dir=d2, run_id="b", prebucketed=True)
-    assert r1["files_out"] == r2["files_out"]
-    a = _read_clean(spark, d1)
-    b = _read_clean(spark, d2)
-    pd.testing.assert_frame_equal(
-        a[["repo", "path", "commit", "scrubbed_sha256"]],
-        b[["repo", "path", "commit", "scrubbed_sha256"]],
-    )
-    lin = spark.read.parquet(str(d2 / "lineage"))
-    assert lin.select("stage").distinct().count() == 5

@@ -4,8 +4,8 @@ skewed mega-repos'):
 1. the fixture really is skewed (2 mega-repos own ~30% of rows);
 2. the default DAG's content-hash partitioning is uniform by construction
    (no salt needed — measured balance);
-3. the prebucketed path's hot-repo salting demonstrably flattens the
-   per-partition row distribution vs unsalted repo-bucketing.
+3. the pre-write repartition's (bucket, salt) key demonstrably flattens
+   the per-key row distribution vs repo-bucketing alone.
 """
 
 from __future__ import annotations
@@ -46,32 +46,32 @@ def test_fixture_is_skewed(skewed_sdf):
     assert top / total > 0.25, f"mega-repos own {top/total:.2%}, expected ~30%"
 
 
-def test_hot_repo_detection(skewed_sdf):
-    hot = bk.detect_hot_repos(skewed_sdf, threshold=100)
-    assert hot == ["mega/repo0", "mega/repo1"]
-
-
 def test_salting_flattens_keys(skewed_sdf):
-    """The salting contract at the KEY grain (partition-level balance at
-    1260 rows is dominated by how few keys hash into each partition —
-    at production scale the law of large numbers smooths that; the key
-    distribution is the deterministic signal)."""
-    cfg = default_config(num_buckets=32, salt_k=8)
-    hot = ["mega/repo0", "mega/repo1"]
+    """The salt that runs: the pipeline repartitions kept rows on
+    ``with_bucket_columns``' (bucket, salt) before the write. Checked at
+    the KEY grain (partition-level balance at 1260 rows is dominated by
+    how few keys hash into each partition — at production scale the law
+    of large numbers smooths that; the key distribution is the
+    deterministic signal)."""
+    import re
 
-    unsalted = bk.bucketize(skewed_sdf, cfg, hot_repos=[], num_partitions=16)
-    salted = bk.bucketize(skewed_sdf, cfg, hot_repos=hot, num_partitions=16)
-    u_max = (
-        unsalted.groupBy("bucket", "salt").count().agg(F.max("count")).collect()[0][0]
-    )
+    from spardaqus_spark import pipeline
+
+    cfg = default_config(num_buckets=32, salt_k=8)
+    keyed = bk.with_bucket_columns(skewed_sdf, cfg)
+    b_max = keyed.groupBy("bucket").count().agg(F.max("count")).collect()[0][0]
     s_max = (
-        salted.groupBy("bucket", "salt").count().agg(F.max("count")).collect()[0][0]
+        keyed.groupBy("bucket", "salt").count().agg(F.max("count")).collect()[0][0]
     )
     total = skewed_sdf.count()
-    # unsalted: each mega-repo (~15% of rows) is ONE key
-    assert u_max > total * 0.12, f"unsalted max key {u_max}/{total}"
-    # salted: the hot keys split across salt_k
-    assert s_max < u_max * 0.5, f"salted max key {s_max} vs unsalted {u_max}"
+    # bucket alone: each mega-repo (~15% of rows) is ONE key
+    assert b_max > total * 0.12, f"bucket max key {b_max}/{total}"
+    # (bucket, salt): the mega-repo keys split across salt_k
+    assert s_max < b_max * 0.5, f"salted max key {s_max} vs bucket {b_max}"
+    # and (bucket, salt) is the key the pipeline's write exchange hashes on
+    clean = pipeline.build_clean_frame(pipeline.build_verdict_frame(skewed_sdf, cfg))
+    plan = clean._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"hashpartitioning\(bucket#\d+, salt#\d+", plan), plan[:2000]
 
 
 def test_content_hash_partitioning_is_uniform(skewed_sdf):

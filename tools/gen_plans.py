@@ -73,10 +73,8 @@ def main() -> None:
         "lang",
         "text AS content",
     )
-    cfg = default_config(num_buckets=16, hot_repo_threshold=1000)
-    clean = pipeline.build_clean_frame(
-        pipeline.build_verdict_frame(src, cfg), cfg
-    )
+    cfg = default_config(num_buckets=16)
+    clean = pipeline.build_clean_frame(pipeline.build_verdict_frame(src, cfg))
     out.write("```\n" + fmt(clean) + "\n```\n")
 
     import bench
