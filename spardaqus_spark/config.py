@@ -24,6 +24,7 @@ Verdict semantics (pinned, §2.9.7 + r02 amendment):
 
 from __future__ import annotations
 
+from collections import Counter
 from dataclasses import dataclass, fields
 from pathlib import Path
 from typing import Any
@@ -96,6 +97,11 @@ class PipelineConfig:
 
     def __post_init__(self) -> None:
         parse_verdict(self.verdict)
+        # rule names key rule_hit_counts and the lineage ledger's counts
+        names = Counter(r.name for r in self.rules)
+        dup = sorted(n for n, c in names.items() if c > 1)
+        if dup:
+            raise ValueError(f"duplicate rule names {dup}")
 
     @property
     def verdict_tau(self) -> float | None:

@@ -16,12 +16,18 @@ Logical DAG (all lazy — Catalyst optimizes the whole thing as one plan):
          -> bucketize repartition (shuffle #2 — repo-hash bucket + salt,
             kept rows only, so the write lands 1-2 files per task per
             bucket and resume/pruning stay bucket-grained)
-         -> write(partitionBy bucket) + lineage agg + per-bucket manifests
+         -> write(partitionBy bucket) -> sink read-back -> lineage write
+            -> per-bucket manifests
 
 Exactly two shuffles at any scale, and shuffle #2 carries only the ~75%
 kept, scrubbed rows. Input laid out by Iceberg's ``bucket(repo)``
 transform runs through the same DAG unchanged: the dedup exchange
 repartitions by content hash whatever the arrival layout.
+
+``run`` persists the verdict frame once and, after the write, collects
+ONE small per-(partition, bucket) aggregate from it
+(``plans.lineage.ledger``): the processed buckets, the kept buckets and
+every lineage row are derived on the driver from those rows.
 """
 
 from __future__ import annotations
@@ -97,7 +103,8 @@ def run(
     ``bucket_whitelist`` (used by the kill-at-50% resume test; prod uses it
     for targeted reruns) both prune buckets inside
     ``build_verdict_frame``, before scoring: only the buckets this attempt
-    processes are scored, written and committed. Returns summary counters.
+    processes are scored, written and committed. Every bucket with input
+    rows is committed, zero-kept ones included. Returns summary counters.
     """
     from pyspark.sql import functions as F
 
@@ -113,12 +120,13 @@ def run(
         n_out = build_clean_frame(v).count()
         return {"run_id": run_id, "files_out": n_out}
 
-    # The verdict frame feeds four consumers (clean-write, lineage, bucket
-    # ledger, commit list); persist it so the expensive scoring stage runs
-    # exactly once. MEMORY_AND_DISK: `content` rows are KB-MB, spilling is
+    # The verdict frame feeds two consumers (the ledger aggregate and the
+    # clean write); persist it so the expensive scoring stage runs exactly
+    # once. MEMORY_AND_DISK: `content` rows are KB-MB, spilling is
     # expected and fine at scale.
     from pyspark import StorageLevel
 
+    spark = v.sparkSession
     v = v.persist(StorageLevel.MEMORY_AND_DISK)
     out_path = str(run_dir / "files_clean")
     lineage_path = str(run_dir / "lineage")
@@ -126,72 +134,69 @@ def run(
     # that never got a manifest (orphans of a crashed attempt) BEFORE this
     # attempt's append write, so reprocessing cannot duplicate rows.
     ckpt.clean_orphans(run_dir, out_path, lineage_path)
+    rules = [r.name for r in cfg.rules]
     try:
-        clean = build_clean_frame(v).persist(StorageLevel.MEMORY_AND_DISK)
         (
-            clean.sortWithinPartitions("repo", "path", "commit")
+            build_clean_frame(v)
+            .sortWithinPartitions("repo", "path", "commit")
             .write.mode("append")
             .partitionBy("bucket")
             .parquet(out_path)
         )
-        # buckets that were processed this attempt (incl. zero-kept ones)
-        processed = {
-            int(r["bucket"]) for r in v.select("bucket").distinct().collect()
-        }
-        # TRULY observed committed counts: count the SINK after the write
-        # job commits (code-review r3 on VERDICT r02 #3 — recounting the
-        # persisted pre-write frame would make files_in == files_out by
-        # construction and could never catch a write-side loss). Only THIS
-        # attempt's bucket dirs are listed (basePath keeps the partition
-        # column) — reading the sink root would build a FileIndex over the
-        # whole run history, making resume cost grow with total history
-        # instead of the resumed fraction (code-review r3 #2).
-        # Which dirs exist is derived from the KEPT counts, never from a
-        # filesystem probe (ADVICE r03: pathlib .exists() is always False
-        # on hdfs://s3a:// sinks, which would fabricate a phantom total
-        # write loss; the streaming path pioneered this design). A bucket
-        # with kept rows whose dir is missing is a REAL write loss and the
-        # unguarded read below fails the run loudly, as it should.
-        kept_buckets = sorted(
-            int(r["bucket"])
-            for r in clean.select("bucket").distinct().collect()
-        )
-        bucket_dirs = [
-            f"{out_path.rstrip('/')}/bucket={b}" for b in kept_buckets
-        ]
-        if bucket_dirs:
-            per_bucket = (
-                v.sparkSession.read.option("basePath", out_path)
-                .parquet(*bucket_dirs)
-                .groupBy("bucket")
-                .agg(F.count("*").alias("n"))
-                .collect()
-            )
-            seen = {int(r["bucket"]): int(r["n"]) for r in per_bucket}
-        else:  # nothing kept anywhere: no partition dirs exist
-            seen = {}
-        # per-stage lineage ([B:6] "every stage"): dedup/score/verdict/
-        # scrub/write rows, bucket-partitioned so the orphan sweep covers
-        # the lineage sink with the same manifest check as the data sink.
-        # The write stage's files_out is the sink-observed count per bucket
-        # (`seen`, read back from the written parquet — the same numbers
-        # the manifests commit), so a write-side loss shows up as a
-        # files_in/files_out mismatch (VERDICT r02 #3). lineage is tiny
-        # (<= partitions x buckets x 5 rows) — coalesce(1) so the
-        # bucket-partitioned write emits one file per bucket dir, not one
-        # per (task, bucket).
-        lineage_df = lin.collect_lineage_all_stages(
-            v, run_id, write_counts=seen
-        ).coalesce(1)
-        lineage_df.write.mode("append").partitionBy("bucket").parquet(lineage_path)
-        clean.unpersist()
+        # ONE aggregate, collected: the processed buckets (zero-kept ones
+        # included), the kept buckets and every lineage row come from it
+        ledger = lin.ledger(v, rules)
     finally:
         v.unpersist()
-    for b in sorted(processed):
+    kept = lin.kept_per_bucket(ledger)
+    # TRULY observed committed counts: count the SINK after the write job
+    # commits (code-review r3 on VERDICT r02 #3 — recounting the pre-write
+    # frame would make files_in == files_out by construction and could
+    # never catch a write-side loss). Only THIS attempt's bucket dirs are
+    # listed (basePath keeps the partition column) — reading the sink root
+    # would build a FileIndex over the whole run history, making resume
+    # cost grow with total history instead of the resumed fraction
+    # (code-review r3 #2). Which dirs exist is derived from the ledger's
+    # KEPT counts, never from a filesystem probe (ADVICE r03: pathlib
+    # .exists() is always False on hdfs://s3a:// sinks, which would
+    # fabricate a phantom total write loss). A bucket with kept rows whose
+    # dir is missing is a REAL write loss and the unguarded read below
+    # fails the run loudly, as it should.
+    bucket_dirs = [
+        f"{out_path.rstrip('/')}/bucket={b}"
+        for b, n in sorted(kept.items())
+        if n
+    ]
+    seen: dict[int, int] = {}
+    if bucket_dirs:  # nothing kept anywhere: no partition dirs exist
+        per_bucket = (
+            spark.read.option("basePath", out_path)
+            .parquet(*bucket_dirs)
+            .groupBy("bucket")
+            .agg(F.count("*").alias("n"))
+            .collect()
+        )
+        seen = {int(r["bucket"]): int(r["n"]) for r in per_bucket}
+    # per-stage lineage ([B:6] "every stage"), bucket-partitioned so the
+    # orphan sweep covers the lineage sink with the same manifest check as
+    # the data sink. Tiny (<= partitions x buckets x 4 + buckets rows):
+    # coalesce(1) so the write emits one file per bucket dir, not one per
+    # (task, bucket).
+    (
+        spark.createDataFrame(
+            lin.lineage_rows(ledger, run_id, rules, write_counts=seen),
+            lin.LINEAGE_SCHEMA,
+        )
+        .coalesce(1)
+        .write.mode("append")
+        .partitionBy("bucket")
+        .parquet(lineage_path)
+    )
+    for b in sorted(kept):
         ckpt.commit_bucket(run_dir, run_id, b, seen.get(b, 0), out_path)
     result = {
         "run_id": run_id,
-        "buckets": len(processed),
+        "buckets": len(kept),
         "files_out": sum(seen.values()),
     }
     _write_metrics(run_dir, run_id, result)

@@ -2,250 +2,131 @@
 (run_id, attempt, stage, partition_id, bucket, files_in, files_out,
 rule_hit_counts).
 
-Realized as a single whole-stage-codegen aggregation over
-``spark_partition_id()`` — no Python in the path; at 10^12 rows this is a
-partial+final hash agg producing one row per (partition, bucket).
+Everything comes from ONE Spark aggregate, ``ledger``: a whole-stage-
+codegen ``groupBy(spark_partition_id(), bucket)`` over the verdict frame,
+collected to the driver (at most partitions x buckets rows). The fused
+kernel means the stage boundaries exist logically, not physically, so
+each stage's in/out counts follow exactly from the ledger's
+(n_all, n_surv, n_keep):
+
+  dedup:   in = all rows,   out = dedup survivors (!dup_loser)
+  score:   in = all rows,   out = all rows (scoring drops nothing)
+  verdict: in = all rows,   out = keep (rule_keep & survivor)
+  scrub:   in = kept rows,  out = kept rows (rewrite, no drops)
+  write:   in = kept rows,  out = the count the write job actually
+           committed, read back from the sink by the caller — a
+           write-side loss shows as files_in != files_out (VERDICT r02 #3).
+           Write rows are sink-grained (partition_id = -1, one per bucket
+           or micro-batch): commit happens per bucket, not per partition.
+
+The same ledger, grouped by partition only, gives the streaming
+micro-batch its rows (``stream_rows``); the stream does no dedup, so it
+has no dedup stage and its grain is the micro-batch, not the bucket.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
+from collections import Counter
+from typing import TYPE_CHECKING, Sequence
 
 if TYPE_CHECKING:
-    from pyspark.sql import DataFrame
+    from pyspark.sql import DataFrame, Row
 
 LINEAGE_SCHEMA = (
     "run_id string, attempt int, stage string, partition_id int, bucket int, "
     "files_in bigint, files_out bigint, rule_hit_counts map<string,bigint>"
 )
+STREAM_LINEAGE_SCHEMA = (
+    "batch_id int, stage string, partition_id int, "
+    "files_in bigint, files_out bigint"
+)
 
 
-def collect_lineage(
-    df_verdict: "DataFrame", run_id: str, attempt: int = 1, stage: str = "verdict"
-) -> "DataFrame":
-    """Aggregate lineage from a verdict-stage frame (needs keep, rule_hits,
-    bucket columns)."""
+def ledger(
+    df_verdict: "DataFrame",
+    rules: Sequence[str] = (),
+    by: Sequence[str] = ("bucket",),
+) -> list["Row"]:
+    """One aggregate over ``spark_partition_id()`` x ``by``, collected:
+    rows of (partition_id, *by, n_all, n_surv, n_keep, hits), where
+    ``hits[i]`` counts the rows whose ``rule_hits`` contain ``rules[i]``
+    (needs dup_loser, keep and, with ``rules``, rule_hits columns)."""
     from pyspark.sql import functions as F
 
-    exploded = (
-        df_verdict.select(
-            F.spark_partition_id().alias("partition_id"),
-            "bucket",
-            "keep",
-            "rule_hits",
-        )
-        .withColumn("rule", F.explode_outer("rule_hits"))
-    )
-    per_rule = (
-        exploded.groupBy("partition_id", "bucket", "rule")
-        .agg(F.count(F.col("rule")).alias("n"))
-        .filter(F.col("rule").isNotNull())
-        .groupBy("partition_id", "bucket")
+    def n(cond):
+        return F.sum(cond.cast("long"))
+
+    return (
+        df_verdict.groupBy(F.spark_partition_id().alias("partition_id"), *by)
         .agg(
-            F.map_from_entries(
-                F.sort_array(F.collect_list(F.struct("rule", "n")))
-            ).alias("rule_hit_counts")
+            F.count("*").alias("n_all"),
+            n(~F.col("dup_loser")).alias("n_surv"),
+            n(F.col("keep")).alias("n_keep"),
+            F.array(
+                *[n(F.array_contains("rule_hits", r)) for r in rules]
+            ).alias("hits"),
         )
+        .collect()
     )
-    base = (
-        df_verdict.select(
-            F.spark_partition_id().alias("partition_id"), "bucket", "keep"
-        )
-        .groupBy("partition_id", "bucket")
-        .agg(
-            F.count("*").alias("files_in"),
-            F.sum(F.col("keep").cast("long")).alias("files_out"),
-        )
-    )
-    out = (
-        base.join(per_rule, ["partition_id", "bucket"], "left")
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("attempt", F.lit(attempt))
-        .withColumn("stage", F.lit(stage))
-        .select(
-            "run_id",
-            "attempt",
-            "stage",
-            "partition_id",
-            "bucket",
-            "files_in",
-            "files_out",
-            "rule_hit_counts",
-        )
-    )
+
+
+def _stage_counts(r: "Row") -> list[tuple[str, int, int]]:
+    return [
+        ("dedup", r["n_all"], r["n_surv"]),
+        ("score", r["n_all"], r["n_all"]),
+        ("verdict", r["n_all"], r["n_keep"]),
+        ("scrub", r["n_keep"], r["n_keep"]),
+    ]
+
+
+def kept_per_bucket(rows: list["Row"]) -> dict[int, int]:
+    """bucket -> kept rows entering the write, every ledger bucket (zero-
+    kept ones included)."""
+    kept: Counter[int] = Counter()
+    for r in rows:
+        kept[r["bucket"]] += r["n_keep"]
+    return dict(kept)
+
+
+def lineage_rows(
+    rows: list["Row"],
+    run_id: str,
+    rules: Sequence[str],
+    write_counts: dict[int, int],
+) -> list[tuple]:
+    """Batch lineage rows in ``LINEAGE_SCHEMA`` order from a bucket-keyed
+    ``ledger``: four derived stages per (partition, bucket), then one
+    sink-grained write row per bucket whose files_out is the OBSERVED
+    committed count (``write_counts``: bucket -> rows the write job
+    landed, missing = 0). rule_hit_counts attach to verdict rows only:
+    rules that fired, by name, or NULL when none did. ``attempt`` is
+    always 1: no caller numbers its attempts."""
+    out = []
+    for r in rows:
+        hits = {k: v for k, v in sorted(zip(rules, r["hits"])) if v} or None
+        for stage, fi, fo in _stage_counts(r):
+            out.append((
+                run_id, 1, stage, r["partition_id"], r["bucket"], fi, fo,
+                hits if stage == "verdict" else None,
+            ))
+    for b, n in sorted(kept_per_bucket(rows).items()):
+        out.append((run_id, 1, "write", -1, b, n, write_counts.get(b, 0), None))
     return out
 
 
-PIPELINE_STAGES = ("dedup", "score", "verdict", "scrub", "write")
-
-
-def collect_lineage_all_stages(
-    df_verdict: "DataFrame",
-    run_id: str,
-    attempt: int = 1,
-    write_counts: dict[int, int] | None = None,
-) -> "DataFrame":
-    """Per-partition lineage for EVERY pipeline stage ([B:6] 'every stage
-    writes per-partition lineage rows') from the fused verdict frame in a
-    single codegen aggregation pass — the fused mapInPandas means the
-    stage boundaries exist logically, not physically, so their in/out
-    counts are derivable exactly from (dup_loser, keep):
-
-      dedup:   in = all rows,   out = dedup survivors (!dup_loser)
-      score:   in = all rows,   out = all rows (scoring drops nothing)
-      verdict: in = all rows,   out = keep (rule_keep & survivor)
-      scrub:   in = kept rows,  out = kept rows (rewrite, no drops)
-      write:   in = kept rows,  out = OBSERVED committed count when
-               ``write_counts`` (bucket -> rows the write job actually
-               landed, counted post-write) is given — VERDICT r02 #3: a
-               write-side task failure then shows as files_in != files_out
-               instead of lineage silently overstating the sink. Write
-               rows are sink-grained (partition_id = -1, one row per
-               bucket) because commit happens per bucket, not per input
-               partition. Without ``write_counts`` (plan-only callers,
-               e.g. conservation tests) files_out falls back to the
-               derived n_keep.
-
-    One groupBy(partition, bucket) -> exploded stage rows per group;
-    rule_hit_counts attach to the verdict stage only."""
-    from pyspark.sql import functions as F
-
-    base = (
-        df_verdict.select(
-            F.spark_partition_id().alias("partition_id"),
-            "bucket",
-            "dup_loser",
-            "keep",
-        )
-        .groupBy("partition_id", "bucket")
-        .agg(
-            F.count("*").alias("n_all"),
-            F.sum((~F.col("dup_loser")).cast("long")).alias("n_surv"),
-            F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        )
-    )
-    derived = [
-        F.struct(F.lit("dedup").alias("stage"), F.col("n_all").alias("fi"), F.col("n_surv").alias("fo")),
-        F.struct(F.lit("score").alias("stage"), F.col("n_all").alias("fi"), F.col("n_all").alias("fo")),
-        F.struct(F.lit("verdict").alias("stage"), F.col("n_all").alias("fi"), F.col("n_keep").alias("fo")),
-        F.struct(F.lit("scrub").alias("stage"), F.col("n_keep").alias("fi"), F.col("n_keep").alias("fo")),
+def stream_rows(
+    rows: list["Row"], batch_id: int, n_committed: int
+) -> list[tuple]:
+    """Micro-batch lineage rows in ``STREAM_LINEAGE_SCHEMA`` order from a
+    partition-keyed ``ledger``: score/verdict/scrub per partition, then one
+    write row (files_in = kept rows, files_out = ``n_committed``, the
+    count read back from the batch's sink partition)."""
+    out = [
+        (batch_id, stage, r["partition_id"], fi, fo)
+        for r in rows
+        for stage, fi, fo in _stage_counts(r)
+        if stage != "dedup"
     ]
-    if write_counts is None:
-        derived.append(
-            F.struct(F.lit("write").alias("stage"), F.col("n_keep").alias("fi"), F.col("n_keep").alias("fo"))
-        )
-    per_stage = base.select(
-        "partition_id", "bucket", F.explode(F.array(*derived)).alias("s")
-    ).select(
-        "partition_id",
-        "bucket",
-        F.col("s.stage").alias("stage"),
-        F.col("s.fi").alias("files_in"),
-        F.col("s.fo").alias("files_out"),
-    )
-    if write_counts is not None:
-        # sink-grained write rows: files_in = kept rows entering the write
-        # (derived), files_out = the count the write job actually committed
-        # (a bucket -> n map, O(num_buckets) literals)
-        if write_counts:
-            observed = F.create_map(
-                *[F.lit(x) for kv in write_counts.items() for x in kv]
-            )
-            fo = F.coalesce(observed[F.col("bucket")], F.lit(0))
-        else:  # resumed run with nothing left to write: zero committed
-            fo = F.lit(0)
-        write_rows = (
-            base.groupBy("bucket")
-            .agg(F.sum("n_keep").alias("files_in"))
-            .select(
-                F.lit(-1).alias("partition_id"),
-                "bucket",
-                F.lit("write").alias("stage"),
-                "files_in",
-                fo.cast("long").alias("files_out"),
-            )
-        )
-        per_stage = per_stage.unionByName(write_rows)
-    verdict_only = collect_lineage(df_verdict, run_id, attempt).select(
-        "partition_id", "bucket", "rule_hit_counts"
-    )
-    return (
-        per_stage.join(verdict_only, ["partition_id", "bucket"], "left")
-        .withColumn(
-            "rule_hit_counts",
-            F.when(F.col("stage") == "verdict", F.col("rule_hit_counts")),
-        )
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("attempt", F.lit(attempt))
-        .select(
-            "run_id",
-            "attempt",
-            "stage",
-            "partition_id",
-            "bucket",
-            "files_in",
-            "files_out",
-            "rule_hit_counts",
-        )
-    )
-
-
-# `write` is appended by streaming.pipeline.score_micro_batch as a
-# sink-observed row (partition_id=-1), not derived here — but it IS part
-# of every batch's ledger, so consumers iterating this constant see it.
-STREAM_STAGES = ("score", "verdict", "scrub", "write")
-
-
-def collect_lineage_stream(scored_df: "DataFrame", batch_id: int) -> "DataFrame":
-    """Per-micro-batch, per-partition lineage for the streaming ingest path
-    (VERDICT r02 #4 'streaming lineage parity'): same derivation as the
-    batch path but keyed by ``batch_id`` instead of (run_id, bucket) — the
-    streaming DAG has no bucket repartition; its commit grain IS the
-    micro-batch. The caller writes this partitioned by batch_id with
-    dynamic partition overwrite, so a Structured Streaming retry replaces
-    exactly its own lineage partition (idempotent, like the data sink).
-
-      score:   in = batch rows, out = batch rows
-      verdict: in = batch rows, out = rule_keep rows
-      scrub:   in = kept rows,  out = kept rows
-
-    The caller (streaming.pipeline.score_micro_batch) appends a
-    sink-observed `write` row (files_out counted from the written batch
-    partition) — same detection contract as the batch path.
-    """
-    from pyspark.sql import functions as F
-
-    base = (
-        scored_df.select(
-            F.spark_partition_id().alias("partition_id"), "rule_keep"
-        )
-        .groupBy("partition_id")
-        .agg(
-            F.count("*").alias("n_all"),
-            F.sum(F.col("rule_keep").cast("long")).alias("n_keep"),
-        )
-    )
-    stage_rows = F.array(
-        F.struct(F.lit("score").alias("stage"), F.col("n_all").alias("fi"), F.col("n_all").alias("fo")),
-        F.struct(F.lit("verdict").alias("stage"), F.col("n_all").alias("fi"), F.col("n_keep").alias("fo")),
-        F.struct(F.lit("scrub").alias("stage"), F.col("n_keep").alias("fi"), F.col("n_keep").alias("fo")),
-    )
-    return base.select(
-        "partition_id", F.explode(stage_rows).alias("s")
-    ).select(
-        F.lit(int(batch_id)).alias("batch_id"),
-        F.col("s.stage").alias("stage"),
-        "partition_id",
-        F.col("s.fi").alias("files_in"),
-        F.col("s.fo").alias("files_out"),
-    )
-
-
-def conservation_ok(lineage_df: "DataFrame", total_in: int, total_out: int) -> bool:
-    """Σ files_in == total rows and Σ files_out == kept rows (SURVEY §5.4d)."""
-    from pyspark.sql import functions as F
-
-    row = lineage_df.agg(
-        F.sum("files_in").alias("i"), F.sum("files_out").alias("o")
-    ).collect()[0]
-    return (row["i"] or 0) == total_in and (row["o"] or 0) == total_out
+    n_keep = sum(r["n_keep"] for r in rows)
+    out.append((batch_id, "write", -1, n_keep, n_committed))
+    return out

@@ -57,58 +57,54 @@ def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
     # dedup, so no row is a dup loser and keep == rule_keep
     scored = stages.score_scrub(
         stages.with_sha(batch_df).withColumn("dup_loser", F.lit(False)), cfg
-    ).drop("dup_loser", "keep")
-    # the scored frame feeds two consumers (data sink + lineage agg);
+    )
+    # the scored frame feeds two consumers (ledger aggregate + data sink);
     # persist so the pandas scoring stage runs once per batch
     scored = scored.persist()
     try:
-        kept = scored.filter(F.col("rule_keep"))
         (
-            kept.withColumn("batch_id", F.lit(batch_id))
+            scored.filter(F.col("keep"))
+            .drop("dup_loser", "keep")
+            .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
             .parquet(out_dir)
         )
-        # sink-observed write stage, same as the batch path (code-review
-        # r3: a derived count could never catch a write-side loss): read
-        # back exactly this batch's partition dir and count what actually
-        # committed. files_in = kept rows that entered the write. The dir
-        # is addressed as a PLAIN STRING and absence is detected by
-        # catching the read error — a local pathlib .exists() probe would
-        # always be False on hdfs://, s3a://, ... sinks and report a
-        # permanent phantom write loss (code-review r3 ×2).
-        spark = batch_df.sparkSession
-        n_keep = kept.count()
-        bdir = f"{str(out_dir).rstrip('/')}/batch_id={int(batch_id)}"
-        # n_keep > 0 and the write above succeeded => the partition dir
-        # exists, so the read-back runs unguarded: a transient read
-        # failure must FAIL the batch (foreachBatch retries; the dynamic
-        # overwrite makes the retry idempotent) rather than be swallowed
-        # into n_committed=0, which would fabricate a phantom total write
-        # loss in the ledger (code-review r3 ×3). Zero kept rows write no
-        # dir at all — skip the read instead of catching PATH_NOT_FOUND.
-        n_committed = (
-            spark.read.option("basePath", str(out_dir)).parquet(bdir).count()
-            if n_keep > 0
-            else 0
-        )
-        write_row = spark.createDataFrame(
-            [(int(batch_id), "write", -1, n_keep, n_committed)],
-            "batch_id int, stage string, partition_id int, "
-            "files_in bigint, files_out bigint",
-        )
-        (
-            lin.collect_lineage_stream(scored, batch_id)
-            .unionByName(write_row)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{out_dir.rstrip('/')}_lineage")
-        )
+        ledger = lin.ledger(scored, by=())
     finally:
         scored.unpersist()
+    # sink-observed write stage, same as the batch path (code-review r3: a
+    # derived count could never catch a write-side loss): read back exactly
+    # this batch's partition dir and count what actually committed. The
+    # dir is addressed as a PLAIN STRING — a local pathlib .exists() probe
+    # would always be False on hdfs://, s3a://, ... sinks and report a
+    # permanent phantom write loss (code-review r3 ×2). Kept rows > 0 and
+    # the write above succeeded => the partition dir exists, so the
+    # read-back runs unguarded: a transient read failure must FAIL the
+    # batch (foreachBatch retries; the dynamic overwrite makes the retry
+    # idempotent) rather than be swallowed into n_committed=0, which would
+    # fabricate a phantom total write loss in the ledger (code-review r3
+    # ×3). Zero kept rows write no dir at all — skip the read instead of
+    # catching PATH_NOT_FOUND.
+    spark = batch_df.sparkSession
+    bdir = f"{str(out_dir).rstrip('/')}/batch_id={int(batch_id)}"
+    n_committed = (
+        spark.read.option("basePath", str(out_dir)).parquet(bdir).count()
+        if any(r["n_keep"] for r in ledger)
+        else 0
+    )
+    (
+        spark.createDataFrame(
+            lin.stream_rows(ledger, int(batch_id), n_committed),
+            lin.STREAM_LINEAGE_SCHEMA,
+        )
+        .coalesce(1)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(f"{out_dir.rstrip('/')}_lineage")
+    )
 
 
 def scrub_stream(

@@ -153,6 +153,26 @@ def test_load_config_rejects_unknown_keys(tmp_path):
         load_config(shipped)
 
 
+def test_config_rejects_duplicate_rule_names(tmp_path):
+    """Rule names key rule_hit_counts and the lineage ledger's per-rule
+    counts: two rules sharing a name would merge their counts, so the
+    config must refuse them, naming the duplicate."""
+    from spardaqus_spark.config import DEFAULT_RULES, Rule, load_config
+
+    y = tmp_path / "p.yaml"
+    y.write_text(
+        "rules:\n"
+        "  - {name: long, metric: max_line_len, op: '>', threshold: 1000}\n"
+        "  - {name: long, metric: max_line_len, op: '>', threshold: 500}\n"
+    )
+    with pytest.raises(ValueError, match=r"duplicate rule names \['long'\]"):
+        load_config(y)
+    with pytest.raises(ValueError, match=r"\['autogen'\]"):
+        default_config(
+            rules=DEFAULT_RULES + (Rule("autogen", "ppl", ">", 1.0),)
+        )
+
+
 def test_boilerplate_stage_matches_oracle(spark, corpus_sdf, corpus_pdf):
     """VERDICT r02 #7: the opt-in cross-file boilerplate stage. With
     boilerplate_frac_enabled and a rule over the new metric, the Spark
@@ -190,48 +210,51 @@ def test_boilerplate_stage_matches_oracle(spark, corpus_sdf, corpus_pdf):
     assert j["rule_hits_s"].map(lambda h: "boilerplate" in h).any()
 
 
-def test_lineage_conservation(spark, corpus_sdf):
+def _lineage(v, cfg, run_id="t"):
+    """The run's lineage rows from one ledger over ``v``, write counts
+    derived from the ledger (no sink to read back)."""
     from spardaqus_spark.plans import lineage as lin
 
-    v = pipeline.build_verdict_frame(corpus_sdf, default_config()).cache()
+    rules = [r.name for r in cfg.rules]
+    ledger = lin.ledger(v, rules)
+    rows = lin.lineage_rows(ledger, run_id, rules, lin.kept_per_bucket(ledger))
+    return v.sparkSession.createDataFrame(rows, lin.LINEAGE_SCHEMA).toPandas()
+
+
+def test_lineage_conservation(spark, corpus_sdf):
+    cfg = default_config()
+    v = pipeline.build_verdict_frame(corpus_sdf, cfg).cache()
     total = v.count()
     kept = v.filter(F.col("keep")).count()
-    ldf = lin.collect_lineage(v, run_id="t")
-    assert lin.conservation_ok(ldf, total, kept)
+    ldf = _lineage(v, cfg)
+    verdict = ldf[ldf["stage"] == "verdict"]
+    assert verdict["files_in"].sum() == total
+    assert verdict["files_out"].sum() == kept
     v.unpersist()
 
 
 def test_per_stage_lineage_conservation(spark, corpus_sdf):
-    """[B:6] 'every stage writes per-partition lineage rows': the all-
-    stages collector emits dedup/score/verdict/scrub/write rows whose
-    per-stage sums obey the DAG's conservation laws."""
-    from spardaqus_spark.plans import lineage as lin
-
-    v = pipeline.build_verdict_frame(corpus_sdf, default_config()).cache()
+    """[B:6] 'every stage writes per-partition lineage rows': the ledger
+    yields dedup/score/verdict/scrub/write rows whose per-stage sums obey
+    the DAG's conservation laws."""
+    cfg = default_config()
+    v = pipeline.build_verdict_frame(corpus_sdf, cfg).cache()
     total = v.count()
     surv = v.filter(~F.col("dup_loser")).count()
     kept = v.filter(F.col("keep")).count()
-    ldf = lin.collect_lineage_all_stages(v, run_id="t").cache()
+    ldf = _lineage(v, cfg)
     sums = {
-        r["stage"]: (r["i"], r["o"])
-        for r in ldf.groupBy("stage")
-        .agg(F.sum("files_in").alias("i"), F.sum("files_out").alias("o"))
-        .collect()
+        stage: (int(g["files_in"].sum()), int(g["files_out"].sum()))
+        for stage, g in ldf.groupby("stage")
     }
-    assert set(sums) == set(lin.PIPELINE_STAGES)
+    assert set(sums) == {"dedup", "score", "verdict", "scrub", "write"}
     assert sums["dedup"] == (total, surv)
     assert sums["score"] == (total, total)
     assert sums["verdict"] == (total, kept)
     assert sums["scrub"] == (kept, kept)
     assert sums["write"] == (kept, kept)
     # rule_hit_counts attach to verdict rows only
-    assert (
-        ldf.filter(
-            (F.col("stage") != "verdict") & F.col("rule_hit_counts").isNotNull()
-        ).count()
-        == 0
-    )
-    ldf.unpersist()
+    assert ldf[ldf["stage"] != "verdict"]["rule_hit_counts"].isna().all()
     v.unpersist()
 
 

@@ -186,25 +186,23 @@ def test_write_lineage_surfaces_loss(spark, corpus_sdf):
     write job committed FEWER rows than entered it, the write-stage
     lineage row must show files_in != files_out — the detection signal
     the derived form could never produce. Simulated by feeding
-    collect_lineage_all_stages observed counts one row short (the counts
-    come from the sink read-back in pipeline.run, the only caller)."""
-    from pyspark.sql import functions as F
-
+    lineage_rows observed counts one row short (the counts come from the
+    sink read-back in pipeline.run, the only caller)."""
     from spardaqus_spark import pipeline as pl
     from spardaqus_spark.plans import lineage as lin
 
     v = pl.build_verdict_frame(corpus_sdf, CFG)
-    kept = {
-        int(r["bucket"]): int(r["n"])
-        for r in v.filter("keep").groupBy("bucket").agg(
-            F.count("*").alias("n")
-        ).collect()
-    }
+    rules = [r.name for r in CFG.rules]
+    ledger = lin.ledger(v, rules)
+    kept = lin.kept_per_bucket(ledger)
     lost_bucket = max(kept, key=kept.get)
     observed = dict(kept)
     observed[lost_bucket] -= 1  # one row never made it to the sink
     w = (
-        lin.collect_lineage_all_stages(v, "loss", write_counts=observed)
+        spark.createDataFrame(
+            lin.lineage_rows(ledger, "loss", rules, write_counts=observed),
+            lin.LINEAGE_SCHEMA,
+        )
         .filter(F.col("stage") == "write")
         .toPandas()
         .set_index("bucket")
@@ -216,3 +214,53 @@ def test_write_lineage_surfaces_loss(spark, corpus_sdf):
         - mismatched.loc[lost_bucket, "files_out"]
         == 1
     )
+
+
+@pytest.fixture(scope="module")
+def counted_run(spark, corpus_sdf, tmp_path_factory):
+    """One fresh 8-bucket ``pipeline.run`` under its own Spark job group:
+    (run dir, number of Spark jobs the run launched)."""
+    sc = spark.sparkContext
+    d = tmp_path_factory.mktemp("counted")
+    sc.setJobGroup("counted_run", "pipeline.run job budget")
+    try:
+        pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="c1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return d, len(sc.statusTracker().getJobIdsForGroup("counted_run"))
+
+
+def test_run_job_budget(counted_run):
+    """One run = the write (dedup shuffle, scoring into the cache, the
+    bucket repartition), ONE collected ledger aggregate, the sink
+    read-back and the lineage write: 10 Spark jobs on this corpus. No
+    per-consumer ``distinct().collect()`` and no second lineage aggregate
+    or join may creep back in."""
+    assert counted_run[1] == 10
+
+
+def test_rule_hit_counts_match_verdict_frame(spark, corpus_sdf, counted_run):
+    """Σ rule_hit_counts[r] over a run's verdict lineage rows == the
+    number of verdict-frame rows whose rule_hits contain r, for every
+    configured rule (zero where it never fires)."""
+    hits = (
+        pipeline.build_verdict_frame(corpus_sdf, CFG)
+        .select("rule_hits")
+        .toPandas()["rule_hits"]
+    )
+    want = {
+        r.name: int(hits.map(lambda h, n=r.name: n in h).sum())
+        for r in CFG.rules
+    }
+    assert sum(want.values()) > 0, "vacuous: no rule fires on the corpus"
+    verdict = (
+        spark.read.parquet(str(counted_run[0] / "lineage"))
+        .filter(F.col("stage") == "verdict")
+        .select("rule_hit_counts")
+        .collect()
+    )
+    got = dict.fromkeys(want, 0)
+    for row in verdict:
+        for name, n in (row["rule_hit_counts"] or {}).items():
+            got[name] = got.get(name, 0) + n
+    assert got == want
