@@ -6,9 +6,12 @@
         --run-dir /runs/2026-08-16 [--resume RUN_ID] [--buckets 0,1,2]
 
 Builds the full DAG (dedup -> fused score+verdict+scrub -> bucket
-repartition -> write) and executes with checkpoint/resume + lineage. On a
-cluster the SparkSession comes from spark-submit; standalone it falls back
-to local mode.
+repartition -> write) and executes with checkpoint/resume + lineage.
+Resume is automatic: rerunning against the same --run-dir skips every
+bucket its manifests mark committed, with or without --resume, which only
+names this attempt's run_id in manifests and lineage (default: a fresh
+random id). On a cluster the SparkSession comes from spark-submit;
+standalone it falls back to local mode.
 """
 
 from __future__ import annotations
@@ -25,7 +28,13 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     p.add_argument("--config", default="conf/pipeline.yaml")
     p.add_argument("--input", default=None, help="overrides config input_path")
     p.add_argument("--run-dir", required=True)
-    p.add_argument("--resume", default=None, help="RUN_ID to resume")
+    p.add_argument(
+        "--resume",
+        default=None,
+        metavar="RUN_ID",
+        help="run_id recorded for this attempt (resume itself is automatic "
+        "from the run dir's manifests)",
+    )
     p.add_argument(
         "--buckets",
         default=None,

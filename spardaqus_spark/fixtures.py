@@ -15,7 +15,6 @@ Skew: two mega-repos own ~30% of rows (exercises salted repartition).
 from __future__ import annotations
 
 import hashlib
-from pathlib import Path
 
 import pandas as pd
 
@@ -176,17 +175,3 @@ def gen_files(n: int, seed: int = SEED) -> pd.DataFrame:
         rows, columns=["repo", "path", "commit", "lang", "content", "stratum"]
     )
     return df
-
-
-def write_corpus(out_dir: str | Path, n: int) -> Path:
-    """Write files.parquet (input schema only — stratum kept in a side file)."""
-    out = Path(out_dir)
-    out.mkdir(parents=True, exist_ok=True)
-    df = gen_files(n)
-    df[["repo", "path", "commit", "lang", "content"]].to_parquet(
-        out / "files.parquet", index=False
-    )
-    df[["repo", "path", "commit", "stratum"]].to_parquet(
-        out / "files_strata.parquet", index=False
-    )
-    return out / "files.parquet"

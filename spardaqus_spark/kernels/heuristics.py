@@ -35,17 +35,6 @@ from . import textnum
 
 AUTOGEN_RE = r"(?i)(?:do not edit|auto-?generated|generated by)"
 
-METRIC_COLUMNS = [
-    "n_chars",
-    "n_lines",
-    "max_line_len",
-    "avg_line_len",
-    "alnum_ratio",
-    "dup_line_frac",
-    "blank_frac",
-    "autogen",
-]
-
 _MIX = np.uint32(2654435761)
 _NL = np.uint32(10)
 

@@ -175,19 +175,3 @@ def run(df: pd.DataFrame, cfg: PipelineConfig | None = None) -> pd.DataFrame:
     scored["content_scrubbed"] = scrubbed.where(scored["keep"], scored["content"]).to_numpy()
     scored["scrubbed_sha256"] = sha256_hex(scored["content_scrubbed"]).to_numpy()
     return scored
-
-
-def golden_frame(df: pd.DataFrame, cfg: PipelineConfig | None = None) -> pd.DataFrame:
-    """files_golden per FIXTURES.md §1: the frozen comparison surface."""
-    full = run(df, cfg)
-    g = full[
-        ["repo", "path", "commit", "keep", "rule_hits", "scrubbed_sha256", "content_sha256"]
-    ].copy()
-    g = g.rename(
-        columns={
-            "keep": "expected_keep",
-            "rule_hits": "expected_rule_hits",
-            "scrubbed_sha256": "expected_scrubbed_sha256",
-        }
-    )
-    return g

@@ -744,6 +744,14 @@ FROM embeddings GROUP BY label
 """
 
 
+# Row cap on exact_cos_pairs' single applyInPandas group (10x sf0.1's
+# 2,000 embeddings): past it, one worker's block x n slabs (~330 MB per
+# float64 temporary at 20k rows) and its O(n^2) matmul stop being a
+# correctness-harness cost. Failing fast beats a worker OOM; scale runs
+# use the LSH/IVF paths.
+EXACT_COS_MAX_ROWS = 20_000
+
+
 def exact_cos_pairs(
     spark: SparkSession, sf_dir: str, tau: float, gate_rounded: bool
 ) -> DataFrame:
@@ -779,12 +787,18 @@ def exact_cos_pairs(
     BLOCK = 2048
     TAU = float(tau)
     GATE_ROUNDED = bool(gate_rounded)
+    MAX_ROWS = EXACT_COS_MAX_ROWS
 
     def all_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+        n = len(pdf)
+        if n > MAX_ROWS:
+            raise ValueError(
+                f"exact_cos_pairs: {n} embeddings exceed the single-group "
+                f"cap EXACT_COS_MAX_ROWS={MAX_ROWS}; use the LSH/IVF paths"
+            )
         # deterministic intra-group order: the emitted (v1 < v2) pairing
         # must not depend on arrival order of the single group's rows
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        n = len(pdf)
         if n < 2:
             return pd.DataFrame({"v1": [], "v2": [], "cos": []}).astype(
                 {"v1": "int64", "v2": "int64", "cos": "float64"}

@@ -51,6 +51,7 @@ def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
     duplicate-free under at-least-once delivery."""
     from pyspark.sql import functions as F
 
+    from ..pipeline import committed_counts
     from ..plans import lineage as lin
 
     # the batch pipeline's fused kernel; the stream does no cross-batch
@@ -74,26 +75,14 @@ def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
         ledger = lin.ledger(scored, by=())
     finally:
         scored.unpersist()
-    # sink-observed write stage, same as the batch path (code-review r3: a
-    # derived count could never catch a write-side loss): read back exactly
-    # this batch's partition dir and count what actually committed. The
-    # dir is addressed as a PLAIN STRING — a local pathlib .exists() probe
-    # would always be False on hdfs://, s3a://, ... sinks and report a
-    # permanent phantom write loss (code-review r3 ×2). Kept rows > 0 and
-    # the write above succeeded => the partition dir exists, so the
-    # read-back runs unguarded: a transient read failure must FAIL the
-    # batch (foreachBatch retries; the dynamic overwrite makes the retry
-    # idempotent) rather than be swallowed into n_committed=0, which would
-    # fabricate a phantom total write loss in the ledger (code-review r3
-    # ×3). Zero kept rows write no dir at all — skip the read instead of
-    # catching PATH_NOT_FOUND.
+    # sink-observed write stage, same as the batch path: read back this
+    # batch's partition dir when it kept rows (zero kept rows write no dir).
+    # A failed read fails the batch; foreachBatch retries it idempotently.
     spark = batch_df.sparkSession
-    bdir = f"{str(out_dir).rstrip('/')}/batch_id={int(batch_id)}"
-    n_committed = (
-        spark.read.option("basePath", str(out_dir)).parquet(bdir).count()
-        if any(r["n_keep"] for r in ledger)
-        else 0
-    )
+    n_committed = committed_counts(
+        spark, out_dir, "batch_id",
+        [batch_id] if any(r["n_keep"] for r in ledger) else [],
+    ).get(int(batch_id), 0)
     (
         spark.createDataFrame(
             lin.stream_rows(ledger, int(batch_id), n_committed),

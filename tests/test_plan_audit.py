@@ -52,3 +52,15 @@ def test_no_accidental_cartesian_or_per_row_python(spark, name, fn):
             f"{name}: nested-loop join (missing equi-condition?)"
         )
     assert "BatchEvalPython" not in plan, f"{name}: per-row Python UDF node"
+
+
+def test_exact_cos_pairs_row_cap(spark, monkeypatch):
+    """The exact all-pairs twin runs as ONE applyInPandas group; above
+    EXACT_COS_MAX_ROWS it must fail fast with the cap and the row count
+    named, not grind one worker through an O(n^2) matmul or into an OOM."""
+    from spardaqus_spark import queries_text as QT
+
+    monkeypatch.setattr(QT, "EXACT_COS_MAX_ROWS", 100)
+    df = QT.exact_cos_pairs(spark, SF_DIR, 0.35, gate_rounded=False)
+    with pytest.raises(Exception, match=r"500 embeddings.*EXACT_COS_MAX_ROWS=100"):
+        df.collect()

@@ -230,6 +230,13 @@ def counted_run(spark, corpus_sdf, tmp_path_factory):
     return d, len(sc.statusTracker().getJobIdsForGroup("counted_run"))
 
 
+def test_run_requires_run_dir(corpus_sdf):
+    """``run`` has one path, the committing one: there is no run-dir-less
+    count-only mode to fall into."""
+    with pytest.raises(TypeError, match="run_dir"):
+        pipeline.run(corpus_sdf, CFG)
+
+
 def test_run_job_budget(counted_run):
     """One run = the write (dedup shuffle, scoring into the cache, the
     bucket repartition), ONE collected ledger aggregate, the sink

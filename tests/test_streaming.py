@@ -218,6 +218,21 @@ def test_micro_batch_retry_is_idempotent(spark, corpus_pdf, tmp_path):
         assert (lb[lb["stage"] == "write"]["partition_id"] == -1).all()
 
 
+def test_micro_batch_job_budget(spark, corpus_sdf, tmp_path):
+    """One micro-batch = the scored write (scoring into the cache), ONE
+    collected ledger aggregate, the sink read-back and the lineage write:
+    7 Spark jobs on 120 rows. No extra kept count or second aggregate may
+    creep back in."""
+    sc = spark.sparkContext
+    bdf = corpus_sdf.limit(120)
+    sc.setJobGroup("micro_batch", "score_micro_batch job budget")
+    try:
+        spipe.score_micro_batch(bdf, 3, CFG, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("micro_batch")) == 7
+
+
 def test_streaming_update_and_complete_modes(spark, tmp_path):
     """§2.8 output modes: update + complete over a stateful agg (append is
     exercised by every other streaming test). Memory sink, availableNow."""
