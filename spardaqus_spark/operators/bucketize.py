@@ -5,25 +5,24 @@ skewed mega-repos (BASELINE.json:6,14; SURVEY.md §1.4).
   partition-pruning grain; in production Iceberg this is the partition
   transform ``bucket(N, repo)``.
 - salt = pmod(xxhash64(path), SALT_K): the pre-write repartition key is
-  (bucket, salt), so a mega-repo's kept rows spread over SALT_K write
-  tasks instead of landing on one. Scoring never runs on this layout —
-  it pipelines on the skew-free content-hash dedup exchange — so every
-  repo is salted and no hot-repo detection pass is needed.
+  (bucket, salt), so once AQE keeps more than one write partition a
+  mega-repo's kept rows spread over up to SALT_K tasks, not one. Scoring
+  never runs on this layout — it pipelines on the skew-free content-hash
+  dedup exchange — so every repo is salted and no hot-repo detection
+  pass is needed.
 """
 
 from __future__ import annotations
 
 from typing import TYPE_CHECKING
 
-from ..config import PipelineConfig, default_config
+from ..config import PipelineConfig
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
 
 
-def with_bucket_columns(
-    df: "DataFrame", cfg: PipelineConfig | None = None
-) -> "DataFrame":
+def with_bucket_columns(df: "DataFrame", cfg: PipelineConfig) -> "DataFrame":
     """+ bucket:int, salt:int as LOGICAL columns (codegen, no shuffle).
 
     The physical partitioning for scoring comes from the content-hash
@@ -32,7 +31,6 @@ def with_bucket_columns(
     """
     from pyspark.sql import functions as F
 
-    cfg = cfg or default_config()
     bucket = F.pmod(F.xxhash64("repo"), F.lit(cfg.num_buckets)).cast("int")
     salt = F.pmod(F.xxhash64("path"), F.lit(cfg.salt_k)).cast("int")
     return df.withColumn("bucket", bucket).withColumn("salt", salt)

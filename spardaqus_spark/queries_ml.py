@@ -399,6 +399,8 @@ def _group_cosine_pairs(df: DataFrame, key: str, block: int = 2048) -> DataFrame
     import numpy as np
     import pandas as pd
 
+    from .queries_text import spark_round4
+
     # S is computed in `block`-row slabs: peak extra memory is
     # block x n_group doubles (~16 MB per 1k-wide group at the default),
     # never the full n_group^2 matrix — a sqrt(10^9)-row cell would
@@ -419,13 +421,9 @@ def _group_cosine_pairs(df: DataFrame, key: str, block: int = 2048) -> DataFrame
         out_v1, out_v2, out_cos = [], [], []
         for r0 in range(0, n, BLOCK):
             r1 = min(r0 + BLOCK, n)
-            # floor(x*1e4 + 0.5)/1e4 == Spark F.round HALF_UP for the
-            # non-negative values the >= 0.3 gate can emit — np.round is
-            # banker's HALF_EVEN and would silently diverge from every
-            # F.round in the package at 4-decimal midpoints (code-review
-            # r3 ×3). Negative midpoints round differently but can never
-            # pass the gate, so emitted values are exactly F.round's.
-            S = np.floor(Mn[r0:r1] @ Mn[r0:].T * 1e4 + 0.5) / 1e4
+            # F.round(cos, 4), as the exact twin gates (np.round is
+            # HALF_EVEN and would diverge at 4-decimal midpoints)
+            S = spark_round4(Mn[r0:r1] @ Mn[r0:].T)
             # upper triangle of the (block x tail) slab: global j > global i
             bi, bj = np.nonzero(S >= 0.3)
             gi, gj = bi + r0, bj + r0
@@ -820,12 +818,8 @@ ANN_TAU = 0.3  # pinned WITH _group_cosine_pairs's rounded >= 0.3 gate
 
 def _exact_cos_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs cosine at the ANN gate (F.round(raw, 4) >= ANN_TAU):
-    the independent reference the checked ANN queries union against —
-    delegates to the ONE shared pinned construction
-    (queries_text.exact_cos_pairs; code-review r4 deduplicated three
-    hand copies). Probed sf0.01: 990 pairs at the rounded gate, zero
-    pairs within 1e-9 of the 0.29995 cut and zero 4-decimal midpoints —
-    threshold and rounding are both float-drift-safe on this corpus."""
+    the independent reference the checked ANN queries union against, via
+    the ONE shared construction (queries_text.exact_cos_pairs)."""
     from .queries_text import exact_cos_pairs
 
     return exact_cos_pairs(spark, sf_dir, ANN_TAU, gate_rounded=True)

@@ -752,6 +752,23 @@ FROM embeddings GROUP BY label
 EXACT_COS_MAX_ROWS = 20_000
 
 
+def spark_round4(x):
+    """Spark's ``F.round(x, 4)`` over a float64 ndarray: HALF_UP on the
+    double's shortest decimal repr. ``floor(x*1e4 + 0.5)`` agrees except
+    near 4-decimal midpoints (the product rounds in binary, 0.00015 ->
+    0.0001; negatives round up), so those are rounded in decimal."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    s = x * 1e4
+    out = np.floor(s + 0.5) / 1e4
+    for i in zip(*np.nonzero(np.abs(s - np.floor(s) - 0.5) < 1e-6)):
+        d = Decimal(repr(float(x[i]))).quantize(Decimal("1e-4"), ROUND_HALF_UP)
+        out[i] = float(d)
+    return out
+
+
 def exact_cos_pairs(
     spark: SparkSession, sf_dir: str, tau: float, gate_rounded: bool
 ) -> DataFrame:
@@ -764,20 +781,12 @@ def exact_cos_pairs(
     >= tau (the _group_cosine_pairs / ANN gate). O(n^2) BY DESIGN —
     correctness-harness scale only; LSH/IVF are the scale paths.
 
-    r6 rewrite (opt guide §4.2 — the same lesson as the r3 IVF rewrite):
-    the r1-r5 form was a non-equi self-join whose per-pair dot product
-    was a NESTED higher-order expression — interpreted, never codegen —
-    over n^2/2 join rows. Since the twin only ever runs at correctness
-    scale, the fastest correct shape is ONE blocked NumPy matmul over the
-    whole table (single applyInPandas group; S computed in BLOCK-row
-    slabs exactly like _group_cosine_pairs so peak memory stays
-    block x n doubles). Rounding pinned to Spark's F.round HALF_UP via
-    floor(x*1e4 + 0.5)/1e4 — valid for every emittable value because
-    both gates (0.3 / 0.35) only pass positives. Output verified
-    BIT-IDENTICAL to the r5 HOF join at sf0.01 AND sf0.1 for both gate
-    modes (271/990/4137/14933 pairs), and the DuckDB oracle is untouched.
-    Measured sf0.1 tau=0.3: 46.9 s -> 0.54 s (~87x); the three checked
-    registered entries and embedding_near_dup all ride on this."""
+    Shape: ONE blocked NumPy matmul over the whole table (a single
+    applyInPandas group; S in BLOCK-row slabs like _group_cosine_pairs,
+    so peak memory stays block x n doubles), rounded by ``spark_round4``.
+    It replaced a self-join with an interpreted per-pair dot product:
+    identical output at sf0.01 and sf0.1 for both gate modes
+    (271/990/4137/14933 pairs); sf0.1 tau=0.3 went 46.9 s -> 0.54 s."""
     import numpy as np
     import pandas as pd
 
@@ -810,10 +819,7 @@ def exact_cos_pairs(
         for r0 in range(0, n, BLOCK):
             r1 = min(r0 + BLOCK, n)
             raw = (M[r0:r1] @ M[r0:].T) / np.outer(nrm[r0:r1], nrm[r0:])
-            # floor(x*1e4 + 0.5)/1e4 == Spark F.round HALF_UP for the
-            # non-negative values either gate can emit (negative raws are
-            # filtered out below before anything is emitted)
-            cos = np.floor(raw * 1e4 + 0.5) / 1e4
+            cos = spark_round4(raw)
             keep = (cos >= TAU) if GATE_ROUNDED else (raw >= TAU)
             bi, bj = np.nonzero(keep)
             gi, gj = bi + r0, bj + r0

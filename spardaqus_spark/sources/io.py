@@ -7,8 +7,8 @@ Production notes baked into the layout:
 - reads prune columns at the source (metadata-only passes never
   deserialize `content` — SURVEY.md §1.3);
 - writes partition by `bucket` so resume + targeted reruns get partition
-  pruning for free, and `sortWithinPartitions(repo, path, commit)` pins a
-  deterministic file layout (sha256-stable output bytes, SURVEY.md §4.2).
+  pruning for free, and sorting each bucket by (repo, path, commit) pins
+  a deterministic file layout (sha256-stable bytes, SURVEY.md §4.2).
 """
 
 from __future__ import annotations
@@ -32,10 +32,11 @@ def read_files(spark: "SparkSession", cfg: PipelineConfig, columns: list[str] | 
 
 
 def write_files(df: "DataFrame", cfg: PipelineConfig, path: str, mode: str = "append") -> None:
-    out = df.sortWithinPartitions("repo", "path", "commit")
+    keys = ("repo", "path", "commit")
     if cfg.table_format == "iceberg":
-        out.writeTo(path).append()
-    else:
+        df.sortWithinPartitions(*keys).writeTo(path).append()
+    else:  # bucket first, or the writer's own Sort(bucket) replaces it
+        out = df.sortWithinPartitions("bucket", *keys)
         out.write.mode(mode).partitionBy("bucket").parquet(path)
 
 

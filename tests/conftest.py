@@ -40,3 +40,24 @@ def golden(corpus_pdf):
     from spardaqus_spark import oracle
 
     return oracle.run(corpus_pdf[["repo", "path", "commit", "lang", "content"]])
+
+
+@pytest.fixture(scope="session")
+def unsorted_files():
+    """``root`` -> the parquet data files under it whose rows are not in
+    ``(repo, path, commit)`` order: the sink's deterministic layout
+    (SURVEY §4.2) holds iff this is empty."""
+    import pyarrow.parquet as pq
+
+    def check(root) -> list[str]:
+        files = sorted(Path(root).rglob("*.parquet"))
+        assert files, f"no data files under {root}"
+        bad = []
+        for f in files:
+            t = pq.read_table(f, columns=["repo", "path", "commit"]).to_pylist()
+            keys = [(r["repo"], r["path"], r["commit"]) for r in t]
+            if keys != sorted(keys):
+                bad.append(str(f))
+        return bad
+
+    return check

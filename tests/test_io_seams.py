@@ -25,7 +25,9 @@ def test_read_files_parquet_with_column_pruning(spark, corpus_pdf, tmp_path):
     assert df.count() == len(corpus_pdf)
 
 
-def test_write_files_parquet_bucket_partitioned(spark, corpus_pdf, tmp_path):
+def test_write_files_parquet_bucket_partitioned(
+    spark, corpus_pdf, tmp_path, unsorted_files
+):
     from spardaqus_spark.operators import bucketize as bk
 
     cfg = default_config(num_buckets=4)
@@ -38,6 +40,7 @@ def test_write_files_parquet_bucket_partitioned(spark, corpus_pdf, tmp_path):
     back = spark.read.parquet(str(out))
     assert back.count() == 200
     assert sorted(d.name for d in out.glob("bucket=*"))  # partition dirs exist
+    assert unsorted_files(out) == []  # the sort survives partitionBy
 
 
 def test_iceberg_read_branch_reaches_datasource_resolution(spark):

@@ -232,3 +232,39 @@ def test_embedding_dedup_keep_scale_composition(spark):
         )
         jac = len(k_exact & k_approx) / len(k_exact | k_approx)
         assert jac >= jac_gate, f"{name}: keep-set Jaccard {jac:.3f}"
+
+
+def test_spark_round4_matches_f_round(spark):
+    """The NumPy pair kernels round (and gate) cosines with
+    ``spark_round4``, standing in for ``F.round(x, 4)``. They must agree
+    bit for bit at every 4-decimal midpoint in [-1, 1], one ulp either
+    side of it, and on a fine grid around both gates (0.3, 0.35): a
+    midpoint is exactly where binary ``floor(x*1e4 + 0.5)`` and Spark's
+    decimal HALF_UP part ways."""
+    import numpy as np
+    import pandas as pd
+
+    from spardaqus_spark.queries_text import spark_round4
+
+    mid = (np.arange(-10000, 10000) + 0.5) / 1e4
+    near = np.concatenate(
+        [t + np.arange(-200, 201) * 5e-7 for t in (0.3, 0.35)]
+    )
+    x = np.concatenate(
+        [mid, np.nextafter(mid, 2), np.nextafter(mid, -2), near]
+    )
+    want = (
+        spark.createDataFrame(pd.DataFrame({"i": np.arange(len(x)), "x": x}))
+        .select("i", F.round("x", 4).alias("r"))
+        .toPandas()
+        .sort_values("i")["r"]
+        .to_numpy()
+    )
+    got = spark_round4(x)
+    bad = np.flatnonzero(got != want)
+    assert bad.size == 0, [(x[i], got[i], want[i]) for i in bad[:5]]
+    for tau in (0.3, 0.35):
+        assert ((got >= tau) == (want >= tau)).all(), tau
+    # the kernels round (block x n) slabs: 2-D indexing must agree too
+    n = len(x) // 2 * 2
+    assert (spark_round4(x[:n].reshape(2, -1)).ravel() == want[:n]).all()

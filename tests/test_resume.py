@@ -246,6 +246,23 @@ def test_run_job_budget(counted_run):
     assert counted_run[1] == 10
 
 
+def test_run_files_follow_buckets(counted_run):
+    """The write exchange is sized by AQE from the data, not by the core
+    count: an 8-bucket run over the 1,200-row corpus writes at most two
+    data files per kept bucket (a fixed 2 x cores repartition wrote 45)."""
+    run_dir = counted_run[0] / "files_clean"
+    buckets = list(run_dir.glob("bucket=*"))
+    assert len(buckets) == 8
+    files = list(run_dir.glob("bucket=*/*.parquet"))
+    assert 0 < len(files) <= 2 * len(buckets), len(files)
+
+
+def test_run_files_sorted(counted_run, unsorted_files):
+    """Rows in every sink file are ordered by (repo, path, commit): the
+    run's sort survives the writer's own partition sort."""
+    assert unsorted_files(counted_run[0] / "files_clean") == []
+
+
 def test_rule_hit_counts_match_verdict_frame(spark, corpus_sdf, counted_run):
     """Σ rule_hit_counts[r] over a run's verdict lineage rows == the
     number of verdict-frame rows whose rule_hits contain r, for every
