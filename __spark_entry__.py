@@ -3,7 +3,7 @@
 entry(spark)   -> flagship: the real quality pipeline over sf0.001 documents.
 queries()      -> one entry per implemented operator family (SURVEY.md §2).
 oracle_sql()   -> DuckDB twins for every SQL-expressible query; model-backed
-                  / sketch ops (pipeline, minhash, simhash, ann, multimodal)
+                  / sketch ops (pipeline, simhash, streaming band profile)
                   are rows-only by design (SURVEY.md §3.2).
 """
 
@@ -53,7 +53,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #         arithmetic) — post-optimization driver evidence;
     #   42-50 the r5 head entries not already placed, oldest-evidence
     #         first;
-    #   51-73 unchanged entries with fresh r4/r5 rows, freshest last.
+    #   51-64 unchanged entries with fresh r4/r5 rows, freshest last.
     return {
         # --- flagship composite (r4 evidence; r6 inherits ngram spread +
         #     graphops rewrite through its shared fragments) ---
@@ -109,12 +109,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "collect_set_sorted": Q.q_collect_set_sorted,
         "cardinality_sketches": Q.q_cardinality_sketches,
         "global_sort_limit": Q.q_global_sort_limit,
-        "skew_salted_join": Q.q_skew_salted_join,
         # --- beyond the 50-cap this round: unchanged, fresh r5 rows ---
         "mode_any_value": Q.q_mode_any_value,
-        "salted_two_phase_agg": Q.q_salted_two_phase_agg,
-        "struct_udf_stats": QT.q_struct_udf_stats,
-        "arrow_byte_stats": QT.q_map_in_arrow_bytes,
         "train_val_split": QT.q_train_val_split,
         "mixing_weights": QT.q_mixing_weights,
         "doc_line_metrics": QT.q_doc_line_metrics,
@@ -129,11 +125,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "trimmed_mean_grouped_agg": Q.q_trimmed_mean_grouped_agg,
         "embedding_norms": QT.q_embedding_norms,
         "explode_array_funcs": QT.q_explode_array_funcs,
-        "scalar_udf_vowels": QT.q_scalar_pandas_udf_vowels,
-        "scalar_iter_udf_density": QT.q_scalar_iter_udf_density,
-        "multimodal_features": QM.q_multimodal_features,
-        "multimodal_resize": QM.q_multimodal_resize,
-        "multimodal_frame_sample": QM.q_multimodal_frame_sample,
     }
 
 
@@ -167,9 +158,7 @@ def oracle_sql() -> dict[str, str]:
         "collect_set_sorted": Q.SQL_COLLECT_SET,
         # cardinality_sketches: rows-only (HLL estimates are impl-specific)
         "global_sort_limit": Q.SQL_SORT_LIMIT,
-        "skew_salted_join": Q.SQL_SKEW_SALTED_JOIN,
         "mode_any_value": Q.SQL_MODE_ANY_VALUE,
-        "salted_two_phase_agg": Q.SQL_SALTED_TWO_PHASE,
         "doc_line_metrics": QT.SQL_DOC_LINE_METRICS,
         "token_count": QT.SQL_TOKEN_COUNT,
         "bpe_token_count": QT.SQL_BPE_TOKENS,
@@ -196,10 +185,6 @@ def oracle_sql() -> dict[str, str]:
         "embedding_near_dup": QT.SQL_EMB_NEAR_DUP,
         "median_stats": QT.SQL_MEDIAN_STATS,
         "explode_array_funcs": QT.SQL_EXPLODE_ARRAY,
-        "scalar_udf_vowels": QT.SQL_SCALAR_VOWELS,
-        "scalar_iter_udf_density": QT.SQL_SCALAR_ITER_DENSITY,
-        "struct_udf_stats": QT.SQL_STRUCT_UDF_STATS,
-        "arrow_byte_stats": QT.SQL_ARROW_BYTES,
         # r4 (VERDICT r03 item 4): the minhash/ann entries are now
         # driver-checked. minhash_lsh_pairs runs LSH candidates through an
         # exact-Jaccard verification join (canonical LSH shape) so the
@@ -213,7 +198,7 @@ def oracle_sql() -> dict[str, str]:
         "near_dup_source_stats": QT.SQL_NEAR_DUP_SOURCE_STATS,
         "embedding_dedup_keep": QT.SQL_EMB_DEDUP_KEEP,
         "corpus_build": QT.SQL_CORPUS_BUILD,
-        # pipeline_documents / simhash_buckets / cardinality_sketches /
-        # multimodal_*: intentionally omitted — model- or sketch-backed,
-        # not ANSI-SQL-expressible (SURVEY §3.2).
+        # pipeline_documents / simhash_buckets / streaming_band_profile /
+        # cardinality_sketches: intentionally omitted — model- or
+        # sketch-backed, not ANSI-SQL-expressible (SURVEY §3.2).
     }

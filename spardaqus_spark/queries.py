@@ -23,33 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-
-def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def spread(df: DataFrame, *cols: str) -> DataFrame:
-    """Scale-adaptive scan parallelization (r6, opt guide §2/§6): when the
-    upstream scan yields FEWER partitions than the session's default
-    parallelism — the sandbox testdata tables are one parquet row group
-    each, i.e. ONE scan task, which serializes every pre-shuffle stage
-    (Python kernels, explodes, HOF projections) onto a single core —
-    redistribute by a deterministic hash key so the expensive downstream
-    map stage uses every core. Guarded by the measured partition count, so
-    at production scale (scan splits >= parallelism) this is a structural
-    no-op: no exchange enters the plan. The explicit numPartitions keeps
-    AQE from coalescing the small exchange back to one partition. The
-    exchange itself moves only the projected columns (KB-MB here), far
-    below the serial-stage cost it removes — measured r6: pipeline
-    documents noop 1.39 -> 1.10 s, ngram df-phase 0.75 -> 0.61 s at
-    sf0.1 under local[32]."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    if cols:
-        return df.repartition(target, *[F.col(c) for c in cols])
-    return df.repartition(target)
+from .queries_text import load, spread
 
 
 # --------------------------------------------------------------------------
@@ -817,75 +791,6 @@ def q_global_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_SORT_LIMIT = """
 SELECT o_orderkey, ROUND(o_totalprice, 4) AS price
 FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 25
-"""
-
-
-def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-salted join (§2.2): lineitem (big, possibly hot-keyed) joined
-    to part (small) through operators.saltops.salted_join — big side gets
-    a row-hash salt, small side is exploded K ways, join runs on
-    (key, salt). Result must equal the PLAIN join, which is exactly what
-    the oracle SQL computes (the salt is a physical rewrite only)."""
-    from .operators.saltops import salted_join
-
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_extendedprice", "l_discount"
-    )
-    part = load(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("l_partkey"), "p_brand"
-    )
-    joined = salted_join(li, part, on="l_partkey", k=8)
-    return joined.groupBy("p_brand").agg(
-        F.count("*").alias("n_items"),
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias(
-            "revenue"
-        ),
-    )
-
-
-SQL_SKEW_SALTED_JOIN = """
-SELECT p_brand, COUNT(*) AS n_items,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
-FROM lineitem JOIN part ON l_partkey = p_partkey
-GROUP BY p_brand
-"""
-
-
-def q_salted_two_phase_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Salted two-phase aggregation (§2.2): per-source document stats via
-    operators.saltops.salted_agg — partial agg on (source, salt), re-agg
-    on source. The oracle is the PLAIN GROUP BY: salting is a physical
-    rewrite that must not change any value (avg decomposes to sum+count,
-    never avg-of-avgs)."""
-    from .operators.saltops import salted_agg
-
-    docs = load(spark, sf_dir, "documents").select("source", "doc_id", "n_chars")
-    out = salted_agg(
-        docs,
-        keys=["source"],
-        exprs={
-            "n_docs": ("count", "doc_id"),
-            "total_chars": ("sum", "n_chars"),
-            "max_chars": ("max", "n_chars"),
-            "avg_chars": ("avg", "n_chars"),
-        },
-        k=8,
-    )
-    return out.select(
-        "source",
-        "n_docs",
-        "total_chars",
-        "max_chars",
-        F.round("avg_chars", 4).alias("avg_chars"),
-    )
-
-
-SQL_SALTED_TWO_PHASE = """
-SELECT source, COUNT(doc_id) AS n_docs,
-       CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-       MAX(n_chars) AS max_chars,
-       ROUND(AVG(n_chars), 4) AS avg_chars
-FROM documents GROUP BY source
 """
 
 

@@ -1,28 +1,25 @@
-"""Model-backed / sketch-based coverage: the operators whose semantics are
-not ANSI-SQL-expressible (driver records rows-only checks — SURVEY.md §3.2).
+"""Model-backed / sketch-based queries: the operators whose semantics are
+not ANSI-SQL-expressible as computed (SURVEY.md §3.2).
 
 - pipeline verdict over `documents` (hashed-trigram langid + ppl + rules);
 - MinHash + LSH near-dup candidates (shingle -> minhash -> band -> bucket
   self-join) — the scale path whose exact baseline is
   queries_text.q_ngram_jaccard_pairs;
 - SimHash near-dup buckets;
-- LSH-bucketed approximate nearest neighbors (random-hyperplane signs) —
-  the scale path for queries_text.q_cosine_topk;
-- multimodal binary-column plumbing (schema + batch shape real, decode
-  stubbed — no image/audio libs in this container).
+- LSH- and IVF-bucketed approximate nearest neighbors — the scale paths
+  for queries_text.q_cosine_topk.
 
 All sketches are computed with JVM-side functions where possible
 (xxhash64 on shingles, bit ops) — Python only where the semantics demand
-vectorized NumPy (the pipeline models).
+vectorized NumPy (the pipeline models, minhash signatures).
 
-r4 update: most of this surface is now DRIVER-CHECKED rather than
-rows-only — the registered minhash entry is the verified pipeline
-(candidates + exact-Jaccard verification, hash-matched against an
-all-pairs exact oracle), the registered ann entries are soundness-checked
-(exact-set ∪ violations vs an exact-cosine oracle), multimodal outputs
-are scalar columns the canonicalizer can sort, and minhash signatures
-moved to a zero-shuffle vectorized kernel (kernels/minhash) after the
-JVM explode+agg form measured as the path's floor.
+Most of this surface is oracle-checked all the same: the registered
+minhash entry is the verified pipeline (candidates + exact-Jaccard
+verification, hash-matched against an all-pairs exact oracle), the
+registered ann entries are soundness-checked (exact-set ∪ violations vs
+an exact-cosine oracle), and minhash signatures come from a zero-shuffle
+vectorized kernel (kernels/minhash) after the JVM explode+agg form
+measured as the path's floor.
 """
 
 from __future__ import annotations
@@ -30,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .queries import load
+from .queries_text import load, spread
 
 N_HASHES = 16  # minhash permutations
 N_BANDS = 4    # 4 rows/band -> candidates at J ~ 0.6+
@@ -350,7 +347,6 @@ def q_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     SIM_BITS fingerprint; near-dups share the fingerprint. All JVM bit ops.
     r6: spread — the word explode + 32 per-bit conditionals ran in the
     single scan task (no-op at scale)."""
-    from .queries import spread
 
     docs = spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
@@ -480,12 +476,11 @@ def q_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup) over `documents` as the corpus analog.
     Model-backed -> rows-only driver check; exact equality vs the pandas
     oracle is enforced separately in tests/test_pipeline_oracle.py.
-    r6: corpus spread (queries.spread) — the fused score kernel otherwise
+    r6: corpus spread (queries_text.spread) — the fused score kernel otherwise
     runs in ONE task on the one-row-group sandbox table (no-op at scale;
     measured noop 1.39 -> 1.10 s at sf0.1)."""
     from .config import default_config
     from .operators import stages
-    from .queries import spread
     from .session import ship_package
 
     ship_package(spark)  # driver-owned sessions may lack our PYTHONPATH
@@ -511,167 +506,6 @@ def q_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.avg("ppl"), 2).alias("avg_ppl"),
         )
         .orderBy("lang_pred")
-    )
-
-
-def try_decode_image(payload: bytes) -> "object":
-    """Real image decode slot. The container ships no codec libraries
-    (task brief), so this raises unless PIL appears in the environment —
-    the Spark-side plumbing around it (binary column, Arrow batching,
-    schema) is real and tested with the deterministic fallback."""
-    try:
-        from PIL import Image  # noqa: F401  (absent in this sandbox)
-        import io
-
-        return Image.open(io.BytesIO(payload))
-    except ImportError as e:
-        raise NotImplementedError("no image codec in this environment") from e
-
-
-MULTIMODAL_SCHEMA = (
-    "asset_id bigint, kind string, n_bytes bigint, feat array<double>"
-)
-
-RESIZE_SCHEMA = "asset_id bigint, grid array<double>, n_cells int"
-FRAMES_SCHEMA = "asset_id bigint, frame_idx int, frame_feat array<double>"
-
-# r4: the driver's rows-only canonicalizer pandas-sorts over ALL columns and
-# dies on unhashable list cells (CORRECTNESS_r03 multimodal_* TypeError), so
-# every REGISTERED multimodal query must emit scalar columns only.  The
-# array<double> forms above stay as the internal mapInPandas schemas (and the
-# kernel-equality test surface); the queries below project them to rounded
-# scalars / a fixed-width CSV string before returning.
-
-
-def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: treat text bytes as an opaque binary column
-    with typed metadata, run a mapInPandas feature-extract over it. The
-    DECODE step is a deterministic stand-in (byte histogram moments) —
-    real image/audio decode would slot into `_decode_features` (no codec
-    libs in this container, task brief); schema, partitioning, Arrow batch
-    shape and UDF signature are the real, tested surface."""
-    import pandas as pd
-
-    docs = load(spark, sf_dir, "documents")
-    assets = docs.select(
-        F.col("doc_id").alias("asset_id"),
-        F.when(F.col("doc_id") % 2 == 0, "image").otherwise("audio").alias("kind"),
-        F.encode("text", "utf-8").alias("payload"),
-    )
-
-    from .kernels import multimodal as mm
-
-    def _decode_features(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nb, feat = mm.byte_moment_features(pdf["payload"])
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": nb,
-                    "feat": list(feat),
-                }
-            )
-
-    # Project the stand-in 'embedding' to typed scalar moments: the feat
-    # vector is pinned as [mean, std, median, frac>127] (kernels/multimodal
-    # byte_moment_features), so positional element_at is stable.  Scalars
-    # keep the driver's rows-only canonicalizer (pandas sort over all
-    # columns) happy; the raw array form remains the kernel-test surface.
-    feats = assets.mapInPandas(_decode_features, MULTIMODAL_SCHEMA)
-    return feats.select(
-        "asset_id",
-        "kind",
-        "n_bytes",
-        F.round(F.col("feat")[0], 4).alias("b_mean"),
-        F.round(F.col("feat")[1], 4).alias("b_std"),
-        F.round(F.col("feat")[2], 4).alias("b_median"),
-        F.round(F.col("feat")[3], 4).alias("b_frac_hi"),
-    )
-
-
-def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing: reduce each binary payload to a fixed 4x4 grid of
-    byte-mean cells (the deterministic stand-in for image resize; a real
-    decoder slots into try_decode_image). Demonstrates fixed-shape array
-    output from variable-length binaries through Arrow."""
-    import numpy as np
-    import pandas as pd
-
-    docs = load(spark, sf_dir, "documents")
-    assets = docs.select(
-        F.col("doc_id").alias("asset_id"), F.encode("text", "utf-8").alias("payload")
-    )
-
-    from .kernels import multimodal as mm
-
-    def fn(batches):
-        G = 16
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            grids = mm.byte_grid(pdf["payload"], grid=G)
-            yield pd.DataFrame(
-                {"asset_id": pdf["asset_id"], "grid": list(grids),
-                 "n_cells": np.full(len(pdf), G, dtype=np.int32)}
-            )
-
-    # Fixed-width grid -> one CSV string cell (values already rounded to 4
-    # decimals inside byte_grid), so the driver canonicalizer sees a plain
-    # sortable string instead of an unhashable list.  format_string is
-    # codegen-side; the G-cell width is fixed so the string is bounded.
-    grids = assets.mapInPandas(fn, RESIZE_SCHEMA)
-    return grids.select(
-        "asset_id",
-        F.concat_ws(
-            ",", F.transform("grid", lambda x: F.format_string("%.4f", x))
-        ).alias("grid_csv"),
-        "n_cells",
-    )
-
-
-def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame-sampling plumbing: treat each payload as a 'video' of fixed
-    1024-byte frames, sample every 8th frame deterministically, emit one
-    row per sampled frame (1:N mapInPandas fan-out — the shape a real
-    ffmpeg-backed sampler needs)."""
-    import numpy as np
-    import pandas as pd
-
-    docs = load(spark, sf_dir, "documents")
-    assets = docs.select(
-        F.col("doc_id").alias("asset_id"), F.encode("text", "utf-8").alias("payload")
-    )
-
-    from .kernels import multimodal as mm
-
-    def fn(batches):
-        FRAME, STRIDE = 1024, 8
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            row_idx, frame_idx, mean, std = mm.frame_stats(
-                pdf["payload"], frame=FRAME, stride=STRIDE
-            )
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"].to_numpy()[row_idx],
-                    "frame_idx": frame_idx.astype(np.int32),
-                    "frame_feat": list(np.stack([mean, std], axis=1)),
-                }
-            )
-
-    # frame_feat is pinned as [mean, std] (kernels/multimodal frame_stats,
-    # already rounded to 4 decimals) — split into scalar columns for the
-    # driver's rows-only canonicalizer.
-    frames = assets.mapInPandas(fn, FRAMES_SCHEMA)
-    return frames.select(
-        "asset_id",
-        "frame_idx",
-        F.col("frame_feat")[0].alias("f_mean"),
-        F.col("frame_feat")[1].alias("f_std"),
     )
 
 

@@ -5,7 +5,8 @@ scoring, language heuristics, brute-force + bucketed cosine similarity.
 
 SQL-oracle-expressible variants live here with their DuckDB twins; the
 model-backed / LSH variants (MinHash, SimHash, pipeline verdict) are in
-queries_ml.py with rows-only checks.
+queries_ml.py with rows-only checks. `load` (one table of an sf testdata
+dir) and `spread` (scan parallelization) serve both modules.
 """
 
 from __future__ import annotations
@@ -14,7 +15,34 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .operators.stages import BOILERPLATE_WS
-from .queries import load, spread
+
+
+def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def spread(df: DataFrame, *cols: str) -> DataFrame:
+    """Scale-adaptive scan parallelization (r6, opt guide §2/§6): when the
+    upstream scan yields FEWER partitions than the session's default
+    parallelism — the sandbox testdata tables are one parquet row group
+    each, i.e. ONE scan task, which serializes every pre-shuffle stage
+    (Python kernels, explodes, HOF projections) onto a single core —
+    redistribute by a deterministic hash key so the expensive downstream
+    map stage uses every core. Guarded by the measured partition count, so
+    at production scale (scan splits >= parallelism) this is a structural
+    no-op: no exchange enters the plan. The explicit numPartitions keeps
+    AQE from coalescing the small exchange back to one partition. The
+    exchange itself moves only the projected columns (KB-MB here), far
+    below the serial-stage cost it removes — measured r6: pipeline
+    documents noop 1.39 -> 1.10 s, ngram df-phase 0.75 -> 0.61 s at
+    sf0.1 under local[32]."""
+    sc = df.sparkSession.sparkContext
+    target = sc.defaultParallelism
+    if df.rdd.getNumPartitions() >= target:
+        return df
+    if cols:
+        return df.repartition(target, *[F.col(c) for c in cols])
+    return df.repartition(target)
 
 
 def q_doc_line_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -236,7 +264,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline the MinHash-LSH path approximates; the df-filter is what
     keeps the self-join linear-ish in corpus size at scale.
 
-    r6: the scan is spread (see queries.spread) — the sandbox documents
+    r6: the scan is spread (see `spread` above) — the sandbox documents
     table is one row group, so the bigram explode + array_distinct (the
     heaviest pre-shuffle map) otherwise runs on ONE core; at production
     scale the guard makes this a no-op. Measured: df-phase noop
@@ -1036,72 +1064,6 @@ HAVING COUNT(DISTINCT doc_id) * 1.0 / MAX(total) >= 0.8
 """
 
 
-def q_scalar_pandas_udf_vowels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar (Series->Series) pandas UDF — SURVEY §2.4 row 1: vowel
-    ratio per doc, Arrow-batched. SQL-oracle-matched, so the UDF's
-    batching is proven value-identical to the declarative form."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _vr(s):
-        import numpy as np
-
-        t = s.fillna("").str.lower()
-        r = t.str.count("[aeiou]") / t.str.len().clip(lower=1)
-        # floor-quantize, don't round: k/len hits exact 1e-4 midpoints
-        # (9/32 = 0.28125) where pandas half-even and DuckDB half-up
-        # disagree; floor of the identical IEEE quotient agrees always
-        return np.floor(r * 10000.0) / 10000.0
-
-    _vr.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    vowel_ratio = pandas_udf(_vr, "double")
-
-    docs = load(spark, sf_dir, "documents")
-    return docs.select("doc_id", vowel_ratio("text").alias("vowel_ratio"))
-
-
-SQL_SCALAR_VOWELS = """
-SELECT doc_id,
-       FLOOR(length(regexp_replace(lower(text), '[^aeiou]', '', 'g'))
-             * 1.0 / GREATEST(length(text), 1) * 10000.0) / 10000.0 AS vowel_ratio
-FROM documents
-"""
-
-
-def q_map_in_arrow_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInArrow (SURVEY §2.4 optional fast path): per-batch byte stats
-    computed directly on Arrow RecordBatches — zero pandas materialization.
-    The shape a zero-copy regex scrub would use."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def fn(batches):
-        for rb in batches:
-            tbl = pa.table(
-                {
-                    "doc_id": rb.column(0),
-                    "n_bytes": pc.binary_length(
-                        pc.cast(rb.column(1), pa.binary())
-                    ),
-                    "n_chars": pc.utf8_length(rb.column(1)),
-                }
-            )
-            for out in tbl.to_batches():
-                yield out
-
-    return docs.mapInArrow(fn, "doc_id bigint, n_bytes int, n_chars int")
-
-
-SQL_ARROW_BYTES = """
-SELECT doc_id,
-       CAST(octet_length(encode(text)) AS INTEGER) AS n_bytes,
-       CAST(length(text) AS INTEGER) AS n_chars
-FROM documents
-"""
-
-
 def q_boilerplate_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100-TB shape of q_boilerplate_tokens: identical semantics (same
     oracle SQL), but pure codegen — explode words -> distinct (source,
@@ -1136,89 +1098,6 @@ def q_boilerplate_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source", "word", "n_docs", F.round("frac_raw", 4).alias("frac")
         )
     )
-
-
-def q_scalar_iter_udf_density(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterator pandas UDF (SURVEY §2.4 row 2, the LITERAL SCALAR_ITER
-    form — Iterator[Series] -> Iterator[Series]): one-time per-worker
-    init (here a compiled token pattern standing in for a model load)
-    amortized across every Arrow batch the worker sees, then vectorized
-    work per batch. The fused pipeline achieves the same via module-level
-    caches; this query covers the canonical API shape itself, oracle-
-    matched so the batching is proven value-identical."""
-    import pandas as pd
-    from collections.abc import Iterator
-    from pyspark.sql.functions import pandas_udf
-
-    def _density(it):
-        import numpy as np
-        import re
-
-        pat = re.compile(r"\S+")  # per-worker init, once per executor slot
-        _ = pat  # (the str.count below uses the same pattern text)
-        for s in it:
-            t = s.fillna("")
-            d = t.str.count(r"\S+") / t.str.len().clip(lower=1)
-            # floor-quantize like the scalar twin: identical IEEE quotient
-            # floors identically on both engines
-            yield np.floor(d * 10000.0) / 10000.0
-
-    _density.__annotations__ = {
-        "it": Iterator[pd.Series], "return": Iterator[pd.Series]
-    }
-    token_density = pandas_udf(_density, "double")
-
-    docs = load(spark, sf_dir, "documents")
-    return docs.select("doc_id", token_density("text").alias("token_density"))
-
-
-SQL_SCALAR_ITER_DENSITY = r"""
-SELECT doc_id,
-       FLOOR(len(regexp_extract_all(text, '\S+'))
-             * 1.0 / GREATEST(length(text), 1) * 10000.0) / 10000.0
-         AS token_density
-FROM documents
-"""
-
-
-def q_struct_udf_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Struct-returning pandas UDF (SURVEY §2.4 row 3, the LITERAL form —
-    Series -> DataFrame mapped to a struct column): one Arrow crossing
-    yields several typed fields at once, the shape any multi-metric text
-    scorer takes. The fused pipeline subsumes this pattern; this query
-    covers the API itself, oracle-matched after flattening the struct."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _stats(s):
-        t = s.fillna("")
-        return pd.DataFrame(
-            {
-                "n_chars": t.str.len().astype("int64"),
-                "n_words": t.str.count(r"\S+").astype("int64"),
-                "n_lines": (t.str.count("\n") + 1).astype("int64"),
-            }
-        )
-
-    _stats.__annotations__ = {"s": pd.Series, "return": pd.DataFrame}
-    stats = pandas_udf(_stats, "n_chars bigint, n_words bigint, n_lines bigint")
-
-    docs = load(spark, sf_dir, "documents")
-    return docs.select("doc_id", stats("text").alias("s")).select(
-        "doc_id",
-        F.col("s.n_chars").alias("n_chars"),
-        F.col("s.n_words").alias("n_words"),
-        F.col("s.n_lines").alias("n_lines"),
-    )
-
-
-SQL_STRUCT_UDF_STATS = r"""
-SELECT doc_id,
-       length(text) AS n_chars,
-       len(regexp_extract_all(text, '\S+')) AS n_words,
-       len(regexp_extract_all(text, chr(10))) + 1 AS n_lines
-FROM documents
-"""
 
 
 # ---------------------------------------------------------------------------

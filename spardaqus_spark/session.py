@@ -34,20 +34,40 @@ def _export_pythonpath() -> None:
 def ship_package(spark: SparkSession) -> None:
     """Make `spardaqus_spark` importable by python workers of an ALREADY
     RUNNING session (e.g. one the driver harness created before importing
-    us, from an arbitrary cwd). Zips the package once per process and
-    addPyFile's it — the runtime analog of spark-submit --py-files."""
+    us, from an arbitrary cwd): zip the package and addPyFile it — the
+    runtime analog of spark-submit --py-files. Workers put addPyFile zips
+    AHEAD of PYTHONPATH, so the zip is named by a hash of the package
+    sources (a zip left by an earlier checkout is never reused) and
+    published by an atomic rename (a concurrent shipper never sees a
+    half-written one)."""
     sc = spark.sparkContext
     if getattr(sc, "_spardaqus_shipped", False):
         return
+    import hashlib
     import tempfile
     import zipfile
 
-    zpath = os.path.join(tempfile.gettempdir(), "spardaqus_spark_pkg.zip")
+    root = Path(_PKG_ROOT)
+    srcs = [
+        (p.relative_to(root).as_posix(), p.read_bytes())
+        for p in sorted((root / "spardaqus_spark").rglob("*.py"))
+    ]
+    h = hashlib.sha256()
+    for name, data in srcs:
+        h.update(name.encode() + b"\0" + hashlib.sha256(data).digest())
+    tmpdir = tempfile.gettempdir()
+    zpath = os.path.join(tmpdir, f"spardaqus_spark_pkg-{h.hexdigest()[:16]}.zip")
     if not os.path.exists(zpath):
-        pkg = Path(_PKG_ROOT) / "spardaqus_spark"
-        with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
-            for p in sorted(pkg.rglob("*.py")):
-                z.write(p, p.relative_to(Path(_PKG_ROOT)).as_posix())
+        fd, tmp = tempfile.mkstemp(suffix=".zip", dir=tmpdir)
+        try:
+            with os.fdopen(fd, "wb") as f:
+                with zipfile.ZipFile(f, "w", zipfile.ZIP_DEFLATED) as z:
+                    for name, data in srcs:
+                        z.writestr(name, data)
+            os.replace(tmp, zpath)
+        except BaseException:
+            os.unlink(tmp)
+            raise
     try:
         sc.addPyFile(zpath)
     except Exception:

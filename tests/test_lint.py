@@ -41,7 +41,7 @@ def test_no_per_row_batch_iteration():
     """Round-2 rule (VERDICT r01 'What's wrong' #3): kernels must not
     iterate Python-side over Arrow batch columns (`for x in pdf[...]`,
     iterrows, itertuples). Flat-array NumPy over the whole batch only —
-    see kernels/multimodal.py for the sanctioned pattern."""
+    see kernels/textnum.py:flatten_codepoints for the sanctioned pattern."""
     offenders = []
     for p in sorted(PKG.rglob("*.py")):
         for i, line in enumerate(p.read_text().splitlines(), 1):
@@ -60,7 +60,7 @@ def test_no_nondeterministic_expressions():
     and rand() re-evaluate differently on task recompute, which breaks
     retry-safety for anything derived from them (e.g. salts) and blocks
     filter pushdown through their projection. Salts must be content
-    hashes (operators/saltops.py:_content_salt)."""
+    hashes (operators/bucketize.py:with_bucket_columns' xxhash64(path))."""
     offenders = []
     for p in sorted(PKG.rglob("*.py")):
         for i, line in enumerate(p.read_text().splitlines(), 1):
@@ -81,7 +81,7 @@ def test_no_rdd_api_in_hot_path():
     use is the tiny driver-side JSON-batch envelope in sources/io.py.
     `.rdd.getNumPartitions()` is additionally sanctioned (r6): it is
     metadata-only plan introspection — no data crosses the RDD path — and
-    queries.spread needs it to decide whether a scan is under-split."""
+    queries_text.spread needs it to decide whether a scan is under-split."""
     offenders = []
     for p in sorted(PKG.rglob("*.py")):
         if p.name == "io.py":

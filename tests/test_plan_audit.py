@@ -3,10 +3,10 @@ every query registered in __spark_entry__.queries() is PLANNED (never
 executed — cheap) and its physical plan screened for the two classes of
 regressions that source lints can't see:
 
-1. accidental cartesian products — only the two documented by-design
-   cases may contain one (cosine_topk broadcasts a tiny query side;
-   embedding_near_dup is the pinned exact baseline whose scale path is
-   the LSH/IVF twins);
+1. accidental cartesian products — only the by-design cases in
+   CARTESIAN_OK may contain one (e.g. cosine_topk broadcasts a tiny query
+   side; embedding_near_dup is the pinned exact baseline whose scale path
+   is the LSH/IVF twins), and every exemption names a registered query;
 2. per-row Python evaluation (BatchEvalPython) — the runtime counterpart
    of the `F.udf` source lint; only Arrow-batched eval (ArrowEvalPython,
    MapInPandas, FlatMapGroupsInPandas, PythonMapInArrow) is allowed.
@@ -36,6 +36,14 @@ CARTESIAN_OK = {
 }
 
 QUERIES = sorted(entrymod.queries().items())
+
+
+def test_cartesian_allow_list_is_registered():
+    """A stale exemption must fail, not linger: every allow-listed name is
+    a registered query."""
+    assert CARTESIAN_OK <= set(entrymod.queries()), (
+        CARTESIAN_OK - set(entrymod.queries())
+    )
 
 
 def _plan(spark, fn):

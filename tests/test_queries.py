@@ -88,8 +88,8 @@ def test_rows_only_queries_run(spark, name):
     assert len(df.schema.fields) > 0
     # Driver-grade canonicalization (r4): the driver's rows-only path does a
     # pandas sort_values over ALL columns, which raises on unhashable cells
-    # (the CORRECTNESS_r03 multimodal TypeError) — replicate it exactly so
-    # any list/dict-valued output column fails locally first.
+    # — replicate it exactly so any list/dict-valued output column fails
+    # locally first.
     pdf.sort_values(list(pdf.columns))
 
 
