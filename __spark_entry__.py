@@ -1,7 +1,9 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Harness contract for the PySpark package.
 
 entry(spark)   -> flagship: the real quality pipeline over sf0.001 documents.
-queries()      -> one entry per implemented operator family (SURVEY.md §2).
+queries()      -> the pipeline and its text, dedup, near-dup and embedding
+                  family, plus the relational / events operator-coverage
+                  queries of spardaqus_spark.queries (SURVEY.md §2).
 oracle_sql()   -> DuckDB twins for every SQL-expressible query; model-backed
                   / sketch ops (pipeline, simhash, streaming band profile)
                   are rows-only by design (SURVEY.md §3.2).
@@ -38,29 +40,25 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering note: the driver's CORRECTNESS harness records at most 50
-    # entries per round (observed r1: 45/55, r2: 50/60, r3: 50/69, r4:
-    # 50/72, r5: 50/73 — see BASELINE.md "Driver harness observations"),
-    # so entries needing fresh driver evidence go FIRST.  r6 rotation
-    # (VERDICT r05 item 1 + this round's optimization pass):
-    #   1     corpus_build — the flagship composite, last driver row r4;
-    #   2-23  the 22 relational tail entries the r5 cap rotated out
-    #         (three of them — pricing/top_revenue/region — also carry
-    #         r6 plan changes);
-    #   24-41 every remaining entry whose PLAN changed in the r6
-    #         optimization round (exact-cosine matmul twin, spread scans,
-    #         graphops convergence rewrite, n_bucket_pairs integer
-    #         arithmetic) — post-optimization driver evidence;
-    #   42-50 the r5 head entries not already placed, oldest-evidence
+    # Ordering note: the CORRECTNESS harness records at most 50 entries
+    # per round (observed r1: 45/55, r2: 50/60, r3: 50/69, r4: 50/72,
+    # r5: 50/73 — see BASELINE.md "Driver harness observations"), so
+    # entries needing fresh evidence go FIRST.  56 entries:
+    #   1     corpus_build — the flagship composite;
+    #   2-19  the 18 relational tail entries the r5 cap rotated out;
+    #   20-37 every entry whose PLAN changed in the r6 optimization round
+    #         (exact-cosine matmul twin, spread scans, graphops
+    #         convergence rewrite, n_bucket_pairs integer arithmetic);
+    #   38-42 the r5 head entries not already placed, oldest evidence
     #         first;
-    #   51-64 unchanged entries with fresh r4/r5 rows, freshest last.
+    #   43-56 unchanged entries with fresh r4/r5 rows, freshest last
+    #         (51-56 fall beyond the cap).
     return {
         # --- flagship composite (r4 evidence; r6 inherits ngram spread +
         #     graphops rewrite through its shared fragments) ---
         "corpus_build": QT.q_corpus_build,
         # --- relational tail rotated out by the r5 cap (r4 evidence) ---
         "pricing_summary": Q.q_pricing_summary,
-        "top_revenue_orders": Q.q_top_revenue_orders,
         "region_revenue": Q.q_region_revenue,
         "having_filter": Q.q_having_filter,
         "outer_join_nulls": Q.q_outer_join_nulls,
@@ -74,13 +72,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "rollup_slices": Q.q_rollup_lineage_slices,
         "cube_regions": Q.q_cube_nation_region,
         "set_ops": Q.q_set_ops,
-        "percentiles": Q.q_percentiles,
         "corr_stats": Q.q_corr_stats,
         "json_extract": Q.q_json_extract,
-        "date_trunc_monthly": Q.q_date_trunc_monthly,
         "string_funcs": Q.q_string_funcs,
         "conditional_pivot": Q.q_conditional_pivot,
-        "sessionize": Q.q_sessionize,
         # --- plans changed in the r6 optimization round ---
         "embedding_near_dup": QT.q_embedding_near_dup,
         "ann_lsh_cosine": QM.q_ann_lsh_checked,
@@ -103,13 +98,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- r5 head entries not already placed (oldest evidence first) ---
         "sequence_packing": QT.q_sequence_packing,
         "stratified_sample": QT.q_stratified_sample,
-        "tumbling_hourly": Q.q_tumbling_hourly,
-        "sliding_windows": Q.q_sliding_windows,
         "full_outer_ranked": Q.q_full_outer_ranked,
         "collect_set_sorted": Q.q_collect_set_sorted,
-        "cardinality_sketches": Q.q_cardinality_sketches,
         "global_sort_limit": Q.q_global_sort_limit,
-        # --- beyond the 50-cap this round: unchanged, fresh r5 rows ---
+        # --- unchanged, fresh r4/r5 rows (the last six beyond the cap) ---
         "mode_any_value": Q.q_mode_any_value,
         "train_val_split": QT.q_train_val_split,
         "mixing_weights": QT.q_mixing_weights,
@@ -124,14 +116,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "boilerplate_scalable": QT.q_boilerplate_scalable,
         "trimmed_mean_grouped_agg": Q.q_trimmed_mean_grouped_agg,
         "embedding_norms": QT.q_embedding_norms,
-        "explode_array_funcs": QT.q_explode_array_funcs,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     return {
         "pricing_summary": Q.SQL_PRICING,
-        "top_revenue_orders": Q.SQL_TOP_REVENUE,
         "region_revenue": Q.SQL_REGION_REVENUE,
         "outer_join_nulls": Q.SQL_OUTER_JOIN,
         "semi_join": Q.SQL_SEMI_JOIN,
@@ -144,19 +134,13 @@ def oracle_sql() -> dict[str, str]:
         "rollup_slices": Q.SQL_ROLLUP,
         "cube_regions": Q.SQL_CUBE,
         "set_ops": Q.SQL_SET_OPS,
-        "percentiles": Q.SQL_PERCENTILES,
         "corr_stats": Q.SQL_CORR,
         "json_extract": Q.SQL_JSON,
-        "date_trunc_monthly": Q.SQL_DATE_TRUNC,
         "string_funcs": Q.SQL_STRING,
         "conditional_pivot": Q.SQL_COND_PIVOT,
         "having_filter": Q.SQL_HAVING,
-        "sessionize": Q.SQL_SESSIONIZE,
-        "tumbling_hourly": Q.SQL_TUMBLING,
-        "sliding_windows": Q.SQL_SLIDING,
         "full_outer_ranked": Q.SQL_FULL_OUTER_RANKED,
         "collect_set_sorted": Q.SQL_COLLECT_SET,
-        # cardinality_sketches: rows-only (HLL estimates are impl-specific)
         "global_sort_limit": Q.SQL_SORT_LIMIT,
         "mode_any_value": Q.SQL_MODE_ANY_VALUE,
         "doc_line_metrics": QT.SQL_DOC_LINE_METRICS,
@@ -184,7 +168,6 @@ def oracle_sql() -> dict[str, str]:
         "cosine_topk": QT.SQL_COSINE_TOPK,
         "embedding_near_dup": QT.SQL_EMB_NEAR_DUP,
         "median_stats": QT.SQL_MEDIAN_STATS,
-        "explode_array_funcs": QT.SQL_EXPLODE_ARRAY,
         # r4 (VERDICT r03 item 4): the minhash/ann entries are now
         # driver-checked. minhash_lsh_pairs runs LSH candidates through an
         # exact-Jaccard verification join (canonical LSH shape) so the
@@ -198,7 +181,7 @@ def oracle_sql() -> dict[str, str]:
         "near_dup_source_stats": QT.SQL_NEAR_DUP_SOURCE_STATS,
         "embedding_dedup_keep": QT.SQL_EMB_DEDUP_KEEP,
         "corpus_build": QT.SQL_CORPUS_BUILD,
-        # pipeline_documents / simhash_buckets / streaming_band_profile /
-        # cardinality_sketches: intentionally omitted — model- or
-        # sketch-backed, not ANSI-SQL-expressible (SURVEY §3.2).
+        # pipeline_documents / simhash_buckets / streaming_band_profile:
+        # intentionally omitted — model- or sketch-backed, not
+        # ANSI-SQL-expressible (SURVEY §3.2).
     }

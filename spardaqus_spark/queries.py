@@ -23,7 +23,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .queries_text import load, spread
+from .queries_text import load
 
 
 # --------------------------------------------------------------------------
@@ -59,48 +59,6 @@ SELECT l_returnflag, l_linestatus,
        COUNT(*) AS count_order
 FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
 GROUP BY l_returnflag, l_linestatus
-"""
-
-
-def q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-way join (broadcast dim) + agg + deterministic top-10.
-
-    r6 join order (opt guide §3.1): the BUILDING-segment customer filter
-    reduces orders FIRST (orders ⋈ broadcast(cust)), and lineitem probes
-    that reduced side in a single hash join — vs the r1-r5 shape
-    (li ⋈ orders, then ⋈ cust) where every lineitem row paid two probe
-    passes against a build side 5x larger. Inner-join reorder only;
-    result identical (verified equal at sf0.1 + the DuckDB oracle)."""
-    cust = load(spark, sf_dir, "customer")
-    orders = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    ord_red = orders.join(
-        F.broadcast(cust.filter(F.col("c_mktsegment") == "BUILDING")),
-        orders.o_custkey == cust.c_custkey,
-    )
-    return (
-        li.join(ord_red, li.l_orderkey == ord_red.o_orderkey)
-        .groupBy("o_orderkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), "o_orderkey")
-        .limit(10)
-    )
-
-
-SQL_TOP_REVENUE = """
-SELECT o_orderkey,
-       ROUND(SUM(l_extendedprice * (1 - l_discount)), 4) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-GROUP BY o_orderkey
-ORDER BY revenue DESC, o_orderkey
-LIMIT 10
 """
 
 
@@ -422,34 +380,6 @@ GROUP BY src
 """
 
 
-def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact interpolated percentiles (rule-threshold calibration pattern).
-    r6: spread — exact percentile buffers every group value, and the
-    single-row-group sandbox scan put all 600k rows in ONE partial-agg
-    task (no-op at scale; measured noop 1.90 -> 1.20 s). Spread key is
-    the HIGH-cardinality value column, not the 3-value group key — a
-    group-key repartition would be reused by the groupBy and concentrate
-    the whole shuffle onto #groups tasks."""
-    li = spread(
-        load(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice"),
-        "l_extendedprice",
-    )
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.percentile("l_extendedprice", 0.5), 4).alias("p50"),
-        F.round(F.percentile("l_extendedprice", 0.95), 4).alias("p95"),
-        F.round(F.stddev_samp("l_extendedprice"), 4).alias("sd"),
-    )
-
-
-SQL_PERCENTILES = """
-SELECT l_returnflag,
-       ROUND(CAST(quantile_cont(l_extendedprice, 0.5) AS DOUBLE), 4) AS p50,
-       ROUND(CAST(quantile_cont(l_extendedprice, 0.95) AS DOUBLE), 4) AS p95,
-       ROUND(stddev_samp(l_extendedprice), 4) AS sd
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
 def q_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
@@ -487,26 +417,6 @@ SELECT event_type,
        MAX(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS max_k,
        COUNT(*) AS n
 FROM events GROUP BY event_type
-"""
-
-
-def q_date_trunc_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.withColumn("month", F.date_trunc("month", "o_orderdate"))
-        .groupBy("month")
-        .agg(
-            F.count("*").alias("n_orders"),
-            F.round(F.sum("o_totalprice"), 4).alias("monthly_total"),
-        )
-    )
-
-
-SQL_DATE_TRUNC = """
-SELECT date_trunc('month', o_orderdate) AS month,
-       COUNT(*) AS n_orders,
-       ROUND(SUM(o_totalprice), 4) AS monthly_total
-FROM orders GROUP BY date_trunc('month', o_orderdate)
 """
 
 
@@ -568,98 +478,6 @@ FROM lineitem GROUP BY l_suppkey HAVING SUM(l_quantity) > 100
 """
 
 
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands sessionization (30-min gap), batch-expressible form
-    of the streaming session_window (§2.8)."""
-    ev = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts", 1).over(w)
-    # first event of a user opens a session (prev IS NULL), like the SQL
-    gap = F.when(
-        prev.isNull()
-        | ((F.unix_timestamp("ts") - F.unix_timestamp(prev)) > 1800),
-        1,
-    ).otherwise(0)
-    sess = (
-        ev.withColumn("new_sess", gap)
-        .withColumn(
-            "sess_id",
-            F.sum("new_sess").over(w.rowsBetween(W.unboundedPreceding, 0)),
-        )
-    )
-    return sess.groupBy("user_id").agg(
-        F.max("sess_id").alias("n_sessions"),
-        F.count("*").alias("n_events"),
-    )
-
-
-SQL_SESSIONIZE = """
-WITH marked AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN epoch(ts) - epoch(LAG(ts) OVER
-                (PARTITION BY user_id ORDER BY ts, event_id)) > 1800
-              THEN 1
-              WHEN LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                   IS NULL THEN 1
-              ELSE 0 END AS new_sess
-  FROM events
-), sess AS (
-  SELECT user_id,
-         SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_id
-  FROM marked
-)
-SELECT user_id, CAST(MAX(sess_id) AS BIGINT) AS n_sessions,
-       COUNT(*) AS n_events
-FROM sess GROUP BY user_id
-"""
-
-
-def q_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window agg, batch form (streaming F.window analog)."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.withColumn("hour", F.date_trunc("hour", "ts"))
-        .groupBy("hour", "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.sum("value"), 4).alias("total_value"),
-        )
-    )
-
-
-SQL_TUMBLING = """
-SELECT date_trunc('hour', ts) AS hour, event_type,
-       COUNT(*) AS n, ROUND(SUM(value), 4) AS total_value
-FROM events GROUP BY date_trunc('hour', ts), event_type
-"""
-
-
-def q_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window agg (10-min window, 5-min slide) in batch form —
-    each event lands in 2 windows; the streaming twin is
-    F.window(ts, '10 minutes', '5 minutes') (§2.8)."""
-    ev = load(spark, sf_dir, "events")
-    w = F.window("ts", "10 minutes", "5 minutes")
-    return (
-        ev.groupBy(w.alias("win"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("total_value"))
-        .select(F.col("win.start").alias("win_start"), "event_type", "n", "total_value")
-    )
-
-
-SQL_SLIDING = """
-WITH slid AS (
-  SELECT event_type, value,
-         unnest([CAST(to_timestamp(floor(epoch(ts) / 300) * 300) AS TIMESTAMP),
-                 CAST(to_timestamp(floor(epoch(ts) / 300) * 300 - 300) AS TIMESTAMP)]) AS win_start
-  FROM events
-)
-SELECT win_start, event_type, COUNT(*) AS n, ROUND(SUM(value), 4) AS total_value
-FROM slid GROUP BY win_start, event_type
-"""
-
-
 def q_full_outer_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join + ntile/percent_rank window family."""
     cust = load(spark, sf_dir, "customer")
@@ -716,23 +534,6 @@ SELECT r_name,
 FROM nation JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name
 """
-
-
-def q_cardinality_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL++ approx_count_distinct next to the exact count (10^12-scale
-    cardinality pattern, §2.2). Rows-only: sketch estimates are
-    implementation-specific by nature.
-    r6: spread — the HLL sketch + exact-distinct partials ran in the one
-    scan task (no-op at scale; measured noop 1.12 -> 0.64 s)."""
-    li = spread(
-        load(spark, sf_dir, "lineitem").select("l_returnflag", "l_partkey"),
-        "l_partkey",
-    )
-    return li.groupBy("l_returnflag").agg(
-        F.approx_count_distinct("l_partkey").alias("approx_parts"),
-        F.countDistinct("l_partkey").alias("exact_parts"),
-        F.count("*").alias("n_rows"),
-    )
 
 
 def q_trimmed_mean_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -913,37 +913,6 @@ FROM lineitem GROUP BY l_linestatus
 """
 
 
-def q_explode_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """posexplode + array functions over per-doc word arrays: position-
-    weighted vocabulary (§2.3 array family through the oracle)."""
-    docs = load(spark, sf_dir, "documents")
-    words = F.split(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "), " ")
-    w = docs.select("doc_id", F.posexplode(words).alias("pos", "word"))
-    return (
-        w.filter((F.length("word") >= 6) & (F.col("pos") < 50))
-        .groupBy("word")
-        .agg(
-            F.count("*").alias("n"),
-            F.round(F.avg("pos"), 4).alias("avg_pos"),
-        )
-        .filter(F.col("n") >= 20)
-    )
-
-
-SQL_EXPLODE_ARRAY = r"""
-WITH w AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           regexp_split_to_array(regexp_replace(lower(text), '\s+', ' ', 'g'), ' '),
-           (x, i) -> struct_pack(word := x, pos := i - 1)), recursive := true)
-  FROM documents
-)
-SELECT word, COUNT(*) AS n, ROUND(AVG(pos), 4) AS avg_pos
-FROM w WHERE length(word) >= 6 AND pos < 50
-GROUP BY word HAVING COUNT(*) >= 20
-"""
-
-
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for query vectors (vec_id < 3):
     broadcast the tiny query side, JVM-side zip_with/aggregate dot product.

@@ -17,8 +17,9 @@ Two shapes:
    partition overwrite — the retried batch replaces exactly its own
    partition. checkpointLocation (offset tracking) + idempotent sink =
    exactly-once end-to-end.
-2. windowed quality telemetry — tumbling/sliding/session aggregates of
-   rule-hit counts past the watermark, append mode.
+2. ``minhash_candidate_stream`` — near-dup candidates at arrival: the
+   batch MinHash-LSH banding, with each band bucket's members held in
+   ``applyInPandasWithState`` state (optionally TTL-bounded), append mode.
 """
 
 from __future__ import annotations
@@ -114,94 +115,6 @@ def scrub_stream(
     )
 
 
-def _with_event_time(df: "DataFrame") -> "DataFrame":
-    """Watermarks require TIMESTAMP (with zone); parquet streams may carry
-    TIMESTAMP_NTZ — normalize once here."""
-    from pyspark.sql import functions as F
-
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def windowed_event_counts(events_stream: "DataFrame") -> "DataFrame":
-    """Tumbling 10-min counts past a 10-min watermark (append-safe)."""
-    from pyspark.sql import functions as F
-
-    return (
-        _with_event_time(events_stream).withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("win.start").alias("win_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
-
-
-def sessionized_event_counts(events_stream: "DataFrame") -> "DataFrame":
-    """Session windows (5-min gap) past the watermark."""
-    from pyspark.sql import functions as F
-
-    return (
-        _with_event_time(events_stream).withWatermark("ts", "10 minutes")
-        .groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("sw.start").alias("sess_start"),
-            F.col("sw.end").alias("sess_end"),
-            "user_id",
-            "n_events",
-        )
-    )
-
-
-def dedup_stream(events_stream: "DataFrame") -> "DataFrame":
-    """Stateful exact-dedup within the watermark horizon — the streaming
-    form of the batch dedup_exact stage."""
-    return _with_event_time(events_stream).withWatermark(
-        "ts", "10 minutes"
-    ).dropDuplicatesWithinWatermark(["event_id"])
-
-
-def stateful_user_totals(events_stream: "DataFrame") -> "DataFrame":
-    """Custom stateful operator via ``applyInPandasWithState`` (§2.8 /
-    task brief): per-user running (event count, value sum) maintained in
-    explicit GroupState ACROSS micro-batches — the shape any bespoke
-    streaming accumulator (per-repo quality counters, drift trackers)
-    takes when the built-in windowed aggs can't express it. Emits the
-    updated running total for every user seen in the batch (update mode);
-    state is two scalars per key, so memory is O(distinct users), never
-    O(events)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def fn(key, pdfs, state):
-        n, tot = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            tot += float(pdf["value"].sum())
-        state.update((n, tot))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [round(tot, 4)],
-            }
-        )
-
-    return (
-        events_stream.groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            "user_id bigint, n_events bigint, total_value double",
-            "n bigint, total double",
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def minhash_candidate_stream(
     docs_stream: "DataFrame", state_ttl_ms: int | None = None
 ) -> "DataFrame":
@@ -230,9 +143,9 @@ def minhash_candidate_stream(
     redelivery-only one included, re-arms its idle timer; a bucket
     that no batch touches for the TTL window is dropped whole
     (members can no longer pair with it — the same horizon argument as
-    dedup_stream's watermark: near-dups arrive close together in
-    ingestion time, so an idle bucket's members have left the match
-    window). Default ``None`` keeps the exact r5 NoTimeout behavior —
+    a dedup watermark: near-dups arrive close together in ingestion
+    time, so an idle bucket's members have left the match window).
+    Default ``None`` keeps the exact r5 NoTimeout behavior —
     the finite-corpus tests and the batch-parity pin replay without a
     clock in the loop; expiry is covered by its own tests
     (tests/test_streaming.py::test_minhash_stream_state_ttl_expires,
@@ -286,8 +199,8 @@ def minhash_candidate_stream(
         new_ids = np.concatenate(id_chunks)
         S_new = np.vstack(sig_chunks)
         # at-least-once sources redeliver: a doc_id already stored in the
-        # bucket (or seen earlier in this batch) must be a no-op — same
-        # convention as dedup_stream — else every replay grows state AND
+        # bucket (or seen earlier in this batch) must be a no-op — the
+        # idempotent-consumer convention — else every replay grows state AND
         # re-emits the doc's pairs once per redelivery (ADVICE r04)
         first = np.zeros(len(new_ids), dtype=bool)
         first[np.unique(new_ids, return_index=True)[1]] = True
@@ -335,17 +248,4 @@ def minhash_candidate_stream(
         "ids array<bigint>, sigs array<bigint>",
         "append",
         timeout,
-    )
-
-
-def sliding_event_counts(events_stream: "DataFrame") -> "DataFrame":
-    """Sliding 10-min window, 5-min slide, past the watermark (§2.8)."""
-    from pyspark.sql import functions as F
-
-    return (
-        _with_event_time(events_stream)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("win.start").alias("win_start"), "event_type", "n")
     )

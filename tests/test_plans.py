@@ -147,7 +147,7 @@ def test_minhash_signatures_zero_shuffle(spark):
     its plan. The r1-r3 shingle-explode + groupBy(doc_id) form shuffled
     the full corpus at signature time; at 100 TB the only minhash shuffle
     allowed is the band-bucket self-join downstream."""
-    from spardaqus_spark.queries import load
+    from spardaqus_spark.queries_text import load
     from spardaqus_spark.queries_ml import minhash_signatures
 
     docs = load(spark, "/root/testdata/sf0.001", "documents").select(

@@ -97,15 +97,13 @@ def test_queries_order_puts_unevidenced_first():
     """The driver harness records at most 50 queries per round (BASELINE.md
     'Driver harness observations'), so entries needing fresh driver
     evidence MUST stay first in queries() — guard the dict insertion order
-    against accidental reshuffles.  r6 (VERDICT r05 item 1 + optimization
-    round): corpus_build leads, then the 22 relational tail entries the r5
-    cap rotated out, then every entry whose plan changed in the r6
-    optimization pass."""
-    first41 = list(entrymod.queries())[:41]
-    assert first41 == [
+    against accidental reshuffles: corpus_build leads, then the 18 relational
+    tail entries the r5 cap rotated out, then every entry whose plan
+    changed in the r6 optimization pass."""
+    first37 = list(entrymod.queries())[:37]
+    assert first37 == [
         "corpus_build",
         "pricing_summary",
-        "top_revenue_orders",
         "region_revenue",
         "having_filter",
         "outer_join_nulls",
@@ -119,13 +117,10 @@ def test_queries_order_puts_unevidenced_first():
         "rollup_slices",
         "cube_regions",
         "set_ops",
-        "percentiles",
         "corr_stats",
         "json_extract",
-        "date_trunc_monthly",
         "string_funcs",
         "conditional_pivot",
-        "sessionize",
         "embedding_near_dup",
         "ann_lsh_cosine",
         "ann_ivf_cosine",
@@ -144,7 +139,7 @@ def test_queries_order_puts_unevidenced_first():
         "simhash_buckets",
         "pipeline_documents",
         "streaming_band_profile",
-    ], first41
+    ], first37
 
 
 def test_entry_smoke(spark):

@@ -1,6 +1,6 @@
 """Streaming smoke (SURVEY.md §5.6): file-source stream through the
-foreachBatch pipeline reuse + windowed/session/dedup ops, and equivalence
-of the streamed scrub output with the batch pipeline."""
+foreachBatch pipeline reuse, equivalence of the streamed scrub output with
+the batch pipeline, and the stateful MinHash candidate stream."""
 
 from __future__ import annotations
 
@@ -65,84 +65,6 @@ def test_scrub_stream_matches_batch(spark, stream_src_dir, tmp_path, corpus_pdf)
     assert (m["sha_o"] == m["scrubbed_sha256"]).all()
     # multiple micro-batches actually happened
     assert got.select("batch_id").distinct().count() > 1
-
-
-def _run_stream_to_memory(spark, df, name, mode="append"):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(name)
-
-
-def test_windowed_counts_match_batch(spark, tmp_path):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = tmp_path / "ev"
-    ev.write.parquet(str(src))
-    stream = spark.readStream.schema(ev.schema).parquet(str(src))
-    res = _run_stream_to_memory(
-        spark, spipe.windowed_event_counts(stream), "win_counts", "append"
-    )
-    # append mode emits only windows closed by the watermark; every emitted
-    # row must match the batch computation exactly
-    batch = (
-        ev.withColumn("ts", F.col("ts").cast("timestamp"))
-        .groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("total_value"))
-        .select(F.col("win.start").alias("win_start"), "event_type", "n", "total_value")
-    )
-    got = res.toPandas()
-    exp = batch.toPandas()
-    m = got.merge(exp, on=["win_start", "event_type"], suffixes=("_s", "_b"))
-    assert len(m) == len(got)
-    assert (m["n_s"] == m["n_b"]).all()
-
-
-def test_session_windows_run(spark, tmp_path):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = tmp_path / "ev2"
-    ev.write.parquet(str(src))
-    stream = spark.readStream.schema(ev.schema).parquet(str(src))
-    res = _run_stream_to_memory(
-        spark, spipe.sessionized_event_counts(stream), "sess_counts", "append"
-    )
-    assert res.count() >= 0  # append emits watermark-closed sessions
-
-
-def test_stream_dedup(spark, tmp_path):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").limit(100)
-    dup = ev.union(ev)  # every event twice
-    src = tmp_path / "ev3"
-    dup.write.parquet(str(src))
-    stream = spark.readStream.schema(ev.schema).parquet(str(src))
-    res = _run_stream_to_memory(spark, spipe.dedup_stream(stream), "dedup_ev")
-    assert res.count() == 100
-
-
-def test_sliding_window_stream(spark, tmp_path):
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    src = tmp_path / "ev4"
-    ev.write.parquet(str(src))
-    stream = spark.readStream.schema(ev.schema).parquet(str(src))
-    res = _run_stream_to_memory(
-        spark, spipe.sliding_event_counts(stream), "slide_counts", "append"
-    )
-    got = res.toPandas()
-    if len(got):  # append emits watermark-closed windows only
-        batch = (
-            ev.withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("win.start").alias("win_start"), "event_type", "n")
-            .toPandas()
-        )
-        m = got.merge(batch, on=["win_start", "event_type"], suffixes=("_s", "_b"))
-        assert len(m) == len(got)
-        assert (m["n_s"] == m["n_b"]).all()
 
 
 def test_stream_source_seam_and_json_ingest(spark, tmp_path):
@@ -231,112 +153,6 @@ def test_micro_batch_job_budget(spark, corpus_sdf, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup("micro_batch")) == 7
-
-
-def test_streaming_update_and_complete_modes(spark, tmp_path):
-    """§2.8 output modes: update + complete over a stateful agg (append is
-    exercised by every other streaming test). Memory sink, availableNow."""
-    src = tmp_path / "ev_src"
-    src.mkdir()
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .select("event_id", "ts", "event_type", "value")
-    )
-    pdf = ev.toPandas()
-    # pandas writes ns timestamps; Spark's vectorized reader wants us
-    # (this test survives either way via column pruning, but don't rely on it)
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pdf.iloc[: len(pdf) // 2].to_parquet(src / "a.parquet", index=False)
-    pdf.iloc[len(pdf) // 2 :].to_parquet(src / "b.parquet", index=False)
-    schema = "event_id bigint, ts timestamp_ntz, event_type string, value double"
-    expected = {
-        r["event_type"]: r["n"]
-        for r in ev.groupBy("event_type").agg(F.count("*").alias("n")).collect()
-    }
-
-    def agg(stream):
-        return stream.groupBy("event_type").agg(F.count("*").alias("n"))
-
-    # complete: every trigger emits the FULL result table
-    s1 = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q1 = (
-        agg(s1).writeStream.format("memory").queryName("m_complete")
-        .outputMode("complete").trigger(availableNow=True).start()
-    )
-    q1.awaitTermination(120)
-    got = {
-        r["event_type"]: r["n"] for r in spark.sql("SELECT * FROM m_complete").collect()
-    }
-    assert got == expected
-
-    # update: only changed keys re-emit; the max per key is the final count
-    s2 = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q2 = (
-        agg(s2).writeStream.format("memory").queryName("m_update")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q2.awaitTermination(120)
-    upd = spark.sql(
-        "SELECT event_type, MAX(n) AS n FROM m_update GROUP BY event_type"
-    ).collect()
-    assert {r["event_type"]: r["n"] for r in upd} == expected
-
-
-def test_stateful_user_totals_across_batches(spark, tmp_path):
-    """applyInPandasWithState: GroupState must carry per-user counters
-    ACROSS micro-batches — the final emitted total per user equals the
-    batch aggregate over all files."""
-    src = tmp_path / "st_src"
-    src.mkdir()
-    ev = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .select("event_id", "ts", "user_id", "event_type", "value")
-    )
-    pdf = ev.toPandas()
-    # pandas writes ns timestamps; Spark's vectorized reader wants us
-    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
-    pdf.iloc[: len(pdf) // 2].to_parquet(src / "a.parquet", index=False)
-    pdf.iloc[len(pdf) // 2 :].to_parquet(src / "b.parquet", index=False)
-    schema = (
-        "event_id bigint, ts timestamp_ntz, user_id bigint, "
-        "event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    q = (
-        spipe.stateful_user_totals(stream)
-        .writeStream.format("memory").queryName("m_state")
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    # per user, n_events is monotone across emissions: the max row is the
-    # final state; it must match the batch aggregate
-    final = spark.sql(
-        """SELECT user_id, MAX(n_events) AS n,
-                  MAX_BY(total_value, n_events) AS tot
-           FROM m_state GROUP BY user_id"""
-    ).toPandas().set_index("user_id")
-    exp = (
-        ev.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("tot"))
-        .toPandas()
-        .set_index("user_id")
-    )
-    assert len(final) == len(exp)
-    j = exp.join(final, lsuffix="_e", rsuffix="_g")
-    assert (j["n_e"] == j["n_g"]).all()
-    assert (j["tot_e"] - j["tot_g"]).abs().max() < 1e-6
-    # multi-batch evidence: at least one user was emitted twice
-    n_rows = spark.sql("SELECT COUNT(*) AS c FROM m_state").collect()[0]["c"]
-    assert n_rows > len(exp)
 
 
 def test_minhash_candidate_stream_matches_batch(spark, tmp_path):
