@@ -2,8 +2,8 @@
 
 entry(spark)   -> flagship: the real quality pipeline over sf0.001 documents.
 queries()      -> the pipeline and its text, dedup, near-dup and embedding
-                  family, plus the relational / events operator-coverage
-                  queries of spardaqus_spark.queries (SURVEY.md §2).
+                  family over the `documents` / `embeddings` tables
+                  (SURVEY.md §2), grouped by family.
 oracle_sql()   -> DuckDB twins for every SQL-expressible query; model-backed
                   / sketch ops (pipeline, simhash, streaming band profile)
                   are rows-only by design (SURVEY.md §3.2).
@@ -29,7 +29,6 @@ _pp = os.environ.get("PYTHONPATH", "")
 if str(_REPO) not in _pp.split(os.pathsep):
     os.environ["PYTHONPATH"] = f"{_REPO}{os.pathsep}{_pp}" if _pp else str(_REPO)
 
-from spardaqus_spark import queries as Q  # noqa: E402
 from spardaqus_spark import queries_ml as QM  # noqa: E402
 from spardaqus_spark import queries_text as QT  # noqa: E402
 
@@ -40,148 +39,86 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering note: the CORRECTNESS harness records at most 50 entries
-    # per round (observed r1: 45/55, r2: 50/60, r3: 50/69, r4: 50/72,
-    # r5: 50/73 — see BASELINE.md "Driver harness observations"), so
-    # entries needing fresh evidence go FIRST.  56 entries:
-    #   1     corpus_build — the flagship composite;
-    #   2-19  the 18 relational tail entries the r5 cap rotated out;
-    #   20-37 every entry whose PLAN changed in the r6 optimization round
-    #         (exact-cosine matmul twin, spread scans, graphops
-    #         convergence rewrite, n_bucket_pairs integer arithmetic);
-    #   38-42 the r5 head entries not already placed, oldest evidence
-    #         first;
-    #   43-56 unchanged entries with fresh r4/r5 rows, freshest last
-    #         (51-56 fall beyond the cap).
     return {
-        # --- flagship composite (r4 evidence; r6 inherits ngram spread +
-        #     graphops rewrite through its shared fragments) ---
-        "corpus_build": QT.q_corpus_build,
-        # --- relational tail rotated out by the r5 cap (r4 evidence) ---
-        "pricing_summary": Q.q_pricing_summary,
-        "region_revenue": Q.q_region_revenue,
-        "having_filter": Q.q_having_filter,
-        "outer_join_nulls": Q.q_outer_join_nulls,
-        "semi_join": Q.q_semi_join,
-        "anti_join": Q.q_anti_join,
-        "range_join": Q.q_range_join,
-        "asof_last_signup": Q.q_asof_last_signup,
-        "window_topk": Q.q_window_topk,
-        "window_running": Q.q_window_running,
-        "window_moving_avg": Q.q_window_moving_avg,
-        "rollup_slices": Q.q_rollup_lineage_slices,
-        "cube_regions": Q.q_cube_nation_region,
-        "set_ops": Q.q_set_ops,
-        "corr_stats": Q.q_corr_stats,
-        "json_extract": Q.q_json_extract,
-        "string_funcs": Q.q_string_funcs,
-        "conditional_pivot": Q.q_conditional_pivot,
-        # --- plans changed in the r6 optimization round ---
-        "embedding_near_dup": QT.q_embedding_near_dup,
-        "ann_lsh_cosine": QM.q_ann_lsh_checked,
-        "ann_ivf_cosine": QM.q_ann_ivf_checked,
-        "embedding_dedup_keep": QT.q_embedding_dedup_keep,
-        "near_dedup_keep": QT.q_near_dedup_keep,
-        "dedup_clusters": QT.q_dedup_clusters,
-        "minhash_lsh_pairs": QM.q_minhash_lsh_pairs,
-        "ngram_jaccard_pairs": QT.q_ngram_jaccard_pairs,
-        "near_dup_source_stats": QT.q_near_dup_source_stats,
-        "cosine_topk": QT.q_cosine_topk,
-        "median_stats": QT.q_median_stats,
-        "rolling_fingerprint": QT.q_rolling_fingerprint,
-        "repetition_metrics": QT.q_repetition_metrics,
-        "decontamination": QT.q_decontamination,
-        "quality_binning": QT.q_quality_binning,
-        "simhash_buckets": QM.q_simhash_buckets,
+        # --- the pipeline and the composed corpus build ---
         "pipeline_documents": QM.q_pipeline_documents,
-        "streaming_band_profile": QM.q_streaming_band_profile,
-        # --- r5 head entries not already placed (oldest evidence first) ---
-        "sequence_packing": QT.q_sequence_packing,
-        "stratified_sample": QT.q_stratified_sample,
-        "full_outer_ranked": Q.q_full_outer_ranked,
-        "collect_set_sorted": Q.q_collect_set_sorted,
-        "global_sort_limit": Q.q_global_sort_limit,
-        # --- unchanged, fresh r4/r5 rows (the last six beyond the cap) ---
-        "mode_any_value": Q.q_mode_any_value,
-        "train_val_split": QT.q_train_val_split,
-        "mixing_weights": QT.q_mixing_weights,
+        "corpus_build": QT.q_corpus_build,
+        # --- per-document metrics and quality signals ---
         "doc_line_metrics": QT.q_doc_line_metrics,
         "token_count": QT.q_token_count,
         "bpe_token_count": QT.q_bpe_token_count,
         "quality_score": QT.q_quality_score,
+        "quality_binning": QT.q_quality_binning,
         "lang_stopword_heuristic": QT.q_lang_stopword_heuristic,
-        "fingerprint": QT.q_fingerprint,
-        "dedup_exact_docs": QT.q_dedup_exact_docs,
+        "repetition_metrics": QT.q_repetition_metrics,
         "boilerplate_tokens": QT.q_boilerplate_tokens,
         "boilerplate_scalable": QT.q_boilerplate_scalable,
-        "trimmed_mean_grouped_agg": Q.q_trimmed_mean_grouped_agg,
+        # --- fingerprints and exact dedup ---
+        "fingerprint": QT.q_fingerprint,
+        "rolling_fingerprint": QT.q_rolling_fingerprint,
+        "dedup_exact_docs": QT.q_dedup_exact_docs,
+        # --- text near-dup ---
+        "ngram_jaccard_pairs": QT.q_ngram_jaccard_pairs,
+        "dedup_clusters": QT.q_dedup_clusters,
+        "near_dedup_keep": QT.q_near_dedup_keep,
+        "near_dup_source_stats": QT.q_near_dup_source_stats,
+        "minhash_lsh_pairs": QM.q_minhash_lsh_pairs,
+        "simhash_buckets": QM.q_simhash_buckets,
+        "streaming_band_profile": QM.q_streaming_band_profile,
+        # --- embedding similarity and near-dup ---
         "embedding_norms": QT.q_embedding_norms,
+        "cosine_topk": QT.q_cosine_topk,
+        "embedding_near_dup": QT.q_embedding_near_dup,
+        "embedding_dedup_keep": QT.q_embedding_dedup_keep,
+        "ann_lsh_cosine": QM.q_ann_lsh_checked,
+        "ann_ivf_cosine": QM.q_ann_ivf_checked,
+        # --- dataset construction ---
+        "train_val_split": QT.q_train_val_split,
+        "sequence_packing": QT.q_sequence_packing,
+        "decontamination": QT.q_decontamination,
+        "mixing_weights": QT.q_mixing_weights,
+        "stratified_sample": QT.q_stratified_sample,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        "pricing_summary": Q.SQL_PRICING,
-        "region_revenue": Q.SQL_REGION_REVENUE,
-        "outer_join_nulls": Q.SQL_OUTER_JOIN,
-        "semi_join": Q.SQL_SEMI_JOIN,
-        "anti_join": Q.SQL_ANTI_JOIN,
-        "range_join": Q.SQL_RANGE_JOIN,
-        "asof_last_signup": Q.SQL_ASOF,
-        "window_topk": Q.SQL_WINDOW_TOPK,
-        "window_running": Q.SQL_WINDOW_RUNNING,
-        "window_moving_avg": Q.SQL_WINDOW_MAV,
-        "rollup_slices": Q.SQL_ROLLUP,
-        "cube_regions": Q.SQL_CUBE,
-        "set_ops": Q.SQL_SET_OPS,
-        "corr_stats": Q.SQL_CORR,
-        "json_extract": Q.SQL_JSON,
-        "string_funcs": Q.SQL_STRING,
-        "conditional_pivot": Q.SQL_COND_PIVOT,
-        "having_filter": Q.SQL_HAVING,
-        "full_outer_ranked": Q.SQL_FULL_OUTER_RANKED,
-        "collect_set_sorted": Q.SQL_COLLECT_SET,
-        "global_sort_limit": Q.SQL_SORT_LIMIT,
-        "mode_any_value": Q.SQL_MODE_ANY_VALUE,
+        # pipeline_documents / simhash_buckets / streaming_band_profile:
+        # intentionally omitted — model- or sketch-backed, not
+        # ANSI-SQL-expressible (SURVEY §3.2).
+        "corpus_build": QT.SQL_CORPUS_BUILD,
         "doc_line_metrics": QT.SQL_DOC_LINE_METRICS,
         "token_count": QT.SQL_TOKEN_COUNT,
         "bpe_token_count": QT.SQL_BPE_TOKENS,
-        "rolling_fingerprint": QT.SQL_ROLLING_FP,
         "quality_score": QT.SQL_QUALITY,
+        "quality_binning": QT.SQL_QUALITY_BINNING,
         "lang_stopword_heuristic": QT.SQL_LANG_STOPWORD,
+        "repetition_metrics": QT.SQL_REPETITION_METRICS,
+        "boilerplate_tokens": QT.SQL_BOILERPLATE,
+        "boilerplate_scalable": QT.SQL_BOILERPLATE,
         "fingerprint": QT.SQL_FINGERPRINT,
+        "rolling_fingerprint": QT.SQL_ROLLING_FP,
         "dedup_exact_docs": QT.SQL_DEDUP_EXACT,
         "ngram_jaccard_pairs": QT.SQL_NGRAM_JACCARD,
         "dedup_clusters": QT.SQL_DEDUP_CLUSTERS,
         "near_dedup_keep": QT.SQL_NEAR_DEDUP_KEEP,
-        "train_val_split": QT.SQL_TRAIN_VAL_SPLIT,
-        "sequence_packing": QT.SQL_SEQUENCE_PACKING,
-        "repetition_metrics": QT.SQL_REPETITION_METRICS,
-        "decontamination": QT.SQL_DECONTAMINATION,
-        "mixing_weights": QT.SQL_MIXING_WEIGHTS,
-        "stratified_sample": QT.SQL_STRATIFIED_SAMPLE,
-        "quality_binning": QT.SQL_QUALITY_BINNING,
-        "boilerplate_tokens": QT.SQL_BOILERPLATE,
-        "boilerplate_scalable": QT.SQL_BOILERPLATE,
-        "trimmed_mean_grouped_agg": Q.SQL_TRIMMED_MEAN,
+        "near_dup_source_stats": QT.SQL_NEAR_DUP_SOURCE_STATS,
+        # minhash_lsh_pairs runs LSH candidates through an exact-Jaccard
+        # verification join, so the all-pairs exact oracle matches iff it is
+        # sound with full recall at sf0.01; the ann entries emit exact-set ∪
+        # violations, so the exact-cosine oracle matches iff every
+        # approximate pair is sound (one-sided; recall stays gated by
+        # tests/test_recall.py).
+        "minhash_lsh_pairs": QM.SQL_MINHASH_VERIFIED,
         "embedding_norms": QT.SQL_EMB_NORMS,
         "cosine_topk": QT.SQL_COSINE_TOPK,
         "embedding_near_dup": QT.SQL_EMB_NEAR_DUP,
-        "median_stats": QT.SQL_MEDIAN_STATS,
-        # r4 (VERDICT r03 item 4): the minhash/ann entries are now
-        # driver-checked. minhash_lsh_pairs runs LSH candidates through an
-        # exact-Jaccard verification join (canonical LSH shape) so the
-        # all-pairs exact oracle matches iff sound + full recall at sf0.01;
-        # the ann entries emit exact-set ∪ violations, so the exact-cosine
-        # oracle matches iff every approximate pair is sound (one-sided;
-        # recall stays gated by tests/test_recall.py).
-        "minhash_lsh_pairs": QM.SQL_MINHASH_VERIFIED,
+        "embedding_dedup_keep": QT.SQL_EMB_DEDUP_KEEP,
         "ann_lsh_cosine": QM.SQL_ANN_CHECKED,
         "ann_ivf_cosine": QM.SQL_ANN_CHECKED,
-        "near_dup_source_stats": QT.SQL_NEAR_DUP_SOURCE_STATS,
-        "embedding_dedup_keep": QT.SQL_EMB_DEDUP_KEEP,
-        "corpus_build": QT.SQL_CORPUS_BUILD,
-        # pipeline_documents / simhash_buckets / streaming_band_profile:
-        # intentionally omitted — model- or sketch-backed, not
-        # ANSI-SQL-expressible (SURVEY §3.2).
+        "train_val_split": QT.SQL_TRAIN_VAL_SPLIT,
+        "sequence_packing": QT.SQL_SEQUENCE_PACKING,
+        "decontamination": QT.SQL_DECONTAMINATION,
+        "mixing_weights": QT.SQL_MIXING_WEIGHTS,
+        "stratified_sample": QT.SQL_STRATIFIED_SAMPLE,
     }

@@ -10,8 +10,8 @@ repartition -> write) and executes with checkpoint/resume + lineage.
 Resume is automatic: rerunning against the same --run-dir skips every
 bucket its manifests mark committed, with or without --resume, which only
 names this attempt's run_id in manifests and lineage (default: a fresh
-random id). On a cluster the SparkSession comes from spark-submit;
-standalone it falls back to local mode.
+random id). Under spark-submit the session keeps the submitted --master
+and driver memory; standalone it falls back to local mode.
 """
 
 from __future__ import annotations

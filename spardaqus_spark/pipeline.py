@@ -202,20 +202,25 @@ def committed_counts(
     the run's full history, not this attempt. The dirs are addressed as
     plain strings, never probed with a local ``.exists()`` (always False
     on hdfs://, s3a://, ... sinks, which would fabricate a total write
-    loss). Callers pass only values with kept rows, so each dir must
-    exist: the read is unguarded, and a missing dir is a real write loss
-    that fails the run loudly. No values: no read, ``{}``."""
-    dirs = [f"{root.rstrip('/')}/{col}={int(v)}" for v in values]
+    loss). Callers pass only values with kept rows, so each dir must hold
+    rows: a missing dir fails the read, and a dir that comes back without
+    rows (its data files gone) raises here, naming it. Either is a real
+    write loss that fails the run loudly. No values: no read, ``{}``."""
+    dirs = {int(v): f"{root.rstrip('/')}/{col}={int(v)}" for v in values}
     if not dirs:
         return {}
     rows = (
         spark.read.option("basePath", root)
-        .parquet(*dirs)
+        .parquet(*dirs.values())
         .groupBy(col)
         .count()
         .collect()
     )
-    return {int(r[col]): int(r["count"]) for r in rows}
+    counts = {int(r[col]): int(r["count"]) for r in rows}
+    empty = [d for v, d in dirs.items() if v not in counts]
+    if empty:
+        raise RuntimeError(f"write loss: kept partition dirs hold no rows: {empty}")
+    return counts
 
 
 def _write_metrics(

@@ -884,35 +884,6 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # composes the same fragments at import time).
 
 
-def q_median_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first/last/median/min-max family (SURVEY §2.2 aggregations).
-    r6: spread — exact median buffers every group value in the partial
-    agg, all in one task on the single-row-group sandbox scan (no-op at
-    scale; measured noop 1.44 -> 0.63 s)."""
-    li = spread(
-        load(spark, sf_dir, "lineitem").select(
-            "l_linestatus", "l_quantity", "l_extendedprice", "l_partkey"
-        ),
-        "l_partkey",
-    )
-    return li.groupBy("l_linestatus").agg(
-        F.round(F.median("l_quantity"), 4).alias("med_qty"),
-        F.min("l_extendedprice").alias("min_price"),
-        F.max("l_extendedprice").alias("max_price"),
-        F.count_distinct("l_partkey").alias("n_parts"),
-    )
-
-
-SQL_MEDIAN_STATS = """
-SELECT l_linestatus,
-       ROUND(CAST(median(l_quantity) AS DOUBLE), 4) AS med_qty,
-       MIN(l_extendedprice) AS min_price,
-       MAX(l_extendedprice) AS max_price,
-       COUNT(DISTINCT l_partkey) AS n_parts
-FROM lineitem GROUP BY l_linestatus
-"""
-
-
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for query vectors (vec_id < 3):
     broadcast the tiny query side, JVM-side zip_with/aggregate dot product.

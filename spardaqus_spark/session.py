@@ -69,36 +69,34 @@ def get_spark(
     shuffle_partitions: int | None = None,
     arrow_batch: int = 512,
 ) -> SparkSession:
+    """The session for this process. Under spark-submit (the launcher sets
+    ``PYSPARK_GATEWAY_PORT``) the JVM already runs with the submitted
+    master and driver memory, so both are left to submit unless a master
+    is asked for here; standalone, this process launches a local JVM.
+    Shuffle partitions default to 2 tasks per core of the running session
+    (standard Spark guidance: fine enough that fast cores steal work
+    around stragglers), read from ``defaultParallelism``, which follows
+    whatever master the session got."""
     _export_pythonpath()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    master = master or os.environ.get("SPARK_GRAFT_MASTER")
     b = (
-        SparkSession.builder.master(master)
-        .appName(app)
+        SparkSession.builder.appName(app)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or _default_shuffle(master)))
     )
-    return b.getOrCreate()
-
-
-def _default_shuffle(master: str) -> int:
-    # 2 tasks per core (standard Spark guidance): fine enough granularity
-    # that fast cores steal work around stragglers — measured r2 on this
-    # host: local[8] pipeline 5.9k -> 8.6k files/s going from 1x to 2x
-    # tasks/core, local[2] unchanged. On a real cluster the same setting
-    # absorbs slow-node/stolen-cpu stragglers. local[*] -> 2x cpu count;
-    # cluster -> a sane floor (real deployments size this to the data).
-    if master.startswith("local["):
-        inner = master[6:-1]
-        if inner == "*":
-            return 2 * (os.cpu_count() or 8)
-        try:
-            return max(2 * int(inner), 4)
-        except ValueError:
-            return 32
-    return 200
+    if master or "PYSPARK_GATEWAY_PORT" not in os.environ:
+        b = b.master(
+            master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+        ).config(
+            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+        )
+    spark = b.getOrCreate()
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(shuffle_partitions or 2 * spark.sparkContext.defaultParallelism),
+    )
+    return spark

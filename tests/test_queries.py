@@ -2,7 +2,8 @@
 run every queries() entry on Spark at sf0.01 and compare against
 oracle_sql() via DuckDB — row count + column names + order-insensitive
 canonical value comparison. Rows-only entries just need rows >= 0 and a
-stable schema."""
+stable schema. Every twin reads only the `documents` and `embeddings`
+tables."""
 
 from __future__ import annotations
 
@@ -20,10 +21,7 @@ sys.path.insert(0, str(REPO))
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")
@@ -93,53 +91,11 @@ def test_rows_only_queries_run(spark, name):
     pdf.sort_values(list(pdf.columns))
 
 
-def test_queries_order_puts_unevidenced_first():
+def test_queries_fit_the_harness_cap():
     """The driver harness records at most 50 queries per round (BASELINE.md
-    'Driver harness observations'), so entries needing fresh driver
-    evidence MUST stay first in queries() — guard the dict insertion order
-    against accidental reshuffles: corpus_build leads, then the 18 relational
-    tail entries the r5 cap rotated out, then every entry whose plan
-    changed in the r6 optimization pass."""
-    first37 = list(entrymod.queries())[:37]
-    assert first37 == [
-        "corpus_build",
-        "pricing_summary",
-        "region_revenue",
-        "having_filter",
-        "outer_join_nulls",
-        "semi_join",
-        "anti_join",
-        "range_join",
-        "asof_last_signup",
-        "window_topk",
-        "window_running",
-        "window_moving_avg",
-        "rollup_slices",
-        "cube_regions",
-        "set_ops",
-        "corr_stats",
-        "json_extract",
-        "string_funcs",
-        "conditional_pivot",
-        "embedding_near_dup",
-        "ann_lsh_cosine",
-        "ann_ivf_cosine",
-        "embedding_dedup_keep",
-        "near_dedup_keep",
-        "dedup_clusters",
-        "minhash_lsh_pairs",
-        "ngram_jaccard_pairs",
-        "near_dup_source_stats",
-        "cosine_topk",
-        "median_stats",
-        "rolling_fingerprint",
-        "repetition_metrics",
-        "decontamination",
-        "quality_binning",
-        "simhash_buckets",
-        "pipeline_documents",
-        "streaming_band_profile",
-    ], first37
+    'Driver harness observations'): with every entry inside the cap, no
+    ordering of queries() can leave one without evidence."""
+    assert len(entrymod.queries()) <= 50
 
 
 def test_entry_smoke(spark):

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import json
 import re
+import shutil
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -290,6 +292,41 @@ def test_write_lineage_surfaces_loss(spark, corpus_sdf):
         - mismatched.loc[lost_bucket, "files_out"]
         == 1
     )
+
+
+@pytest.fixture
+def three_bucket_sink(spark, tmp_path):
+    """A sink of 100 rows partitioned into ``bucket=0..2`` (34/33/33)."""
+    root = str(tmp_path / "sink")
+    spark.range(100).withColumn("bucket", F.col("id") % 3).write.partitionBy(
+        "bucket"
+    ).parquet(root)
+    return root
+
+
+def test_committed_counts_counts_present_dirs(spark, three_bucket_sink):
+    """Exactly the requested dirs are counted; no values reads nothing."""
+    def count(values):
+        return pipeline.committed_counts(spark, three_bucket_sink, "bucket", values)
+
+    assert count([0, 1, 2]) == {0: 34, 1: 33, 2: 33}
+    assert count([2]) == {2: 33}
+    assert count([]) == {}
+
+
+@pytest.mark.parametrize("loss", ["missing", "emptied"])
+def test_committed_counts_fails_on_write_loss(spark, three_bucket_sink, loss):
+    """A kept dir that is gone, or that lost its data files, is a write
+    loss: the read-back raises naming the dir instead of counting the
+    bucket as absent (which would commit it with files_out 0)."""
+    lost = Path(three_bucket_sink) / "bucket=2"
+    if loss == "missing":
+        shutil.rmtree(lost)
+    else:
+        for f in lost.glob("*.parquet"):
+            f.unlink()
+    with pytest.raises(Exception, match="bucket=2"):
+        pipeline.committed_counts(spark, three_bucket_sink, "bucket", [0, 1, 2])
 
 
 @pytest.fixture(scope="module")

@@ -57,3 +57,69 @@ def test_ship_package_ships_current_sources(tmp_path, monkeypatch):
     f(*a, **kw)
     assert not zdir.exists()
     assert sorted(tmp_path.iterdir()) == [stale]
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records the master and the
+    configs ``get_spark`` asks for, and hands back a session whose context
+    reports ``parallelism`` cores."""
+
+    def __init__(self, parallelism: int):
+        self.masters: list[str] = []
+        self.configs: dict[str, str] = {}
+        self.session = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=parallelism),
+            conf=SimpleNamespace(set=self.configs.__setitem__),
+        )
+
+    def master(self, m: str) -> "_RecordingBuilder":
+        self.masters.append(m)
+        return self
+
+    def appName(self, name: str) -> "_RecordingBuilder":
+        return self
+
+    def config(self, key: str, value: str) -> "_RecordingBuilder":
+        self.configs[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.session
+
+
+def _get_spark(monkeypatch, gateway: bool, parallelism: int = 3, **kw):
+    rec = _RecordingBuilder(parallelism)
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=rec))
+    monkeypatch.delenv("SPARK_GRAFT_MASTER", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "2")
+    if gateway:
+        monkeypatch.setenv("PYSPARK_GATEWAY_PORT", "40000")
+    else:
+        monkeypatch.delenv("PYSPARK_GATEWAY_PORT", raising=False)
+    assert session.get_spark(**kw) is rec.session
+    return rec
+
+
+def test_get_spark_keeps_the_submitted_master(monkeypatch):
+    """Under spark-submit the master and driver memory belong to submit:
+    no ``.master()`` override, and the shuffle partitions follow the
+    cores the running session reports, not a master string."""
+    rec = _get_spark(monkeypatch, gateway=True, parallelism=3)
+    assert rec.masters == []
+    assert "spark.driver.memory" not in rec.configs
+    assert rec.configs["spark.sql.shuffle.partitions"] == "6"
+
+
+def test_get_spark_standalone_and_explicit_master(monkeypatch):
+    """Standalone, ``get_spark`` launches local mode itself; an explicit
+    master and shuffle count win, under submit too."""
+    rec = _get_spark(monkeypatch, gateway=False)
+    assert rec.masters == ["local[2]"]
+    assert "spark.driver.memory" in rec.configs
+    assert rec.configs["spark.sql.shuffle.partitions"] == "6"
+
+    rec = _get_spark(
+        monkeypatch, gateway=True, master="local[4]", shuffle_partitions=8
+    )
+    assert rec.masters == ["local[4]"]
+    assert rec.configs["spark.sql.shuffle.partitions"] == "8"
