@@ -2,8 +2,10 @@
 
 entry(spark)   -> flagship: the real quality pipeline over sf0.001 documents.
 queries()      -> the pipeline and its text, dedup, near-dup and embedding
-                  family over the `documents` / `embeddings` tables
-                  (SURVEY.md §2), grouped by family.
+                  family over the `documents` / `embeddings` tables, plus
+                  the relational operator-coverage queries of
+                  spardaqus_spark.queries over the star schema (SURVEY.md
+                  §2), grouped by family.
 oracle_sql()   -> DuckDB twins for every SQL-expressible query; model-backed
                   / sketch ops (pipeline, simhash, streaming band profile)
                   are rows-only by design (SURVEY.md §3.2).
@@ -29,6 +31,7 @@ _pp = os.environ.get("PYTHONPATH", "")
 if str(_REPO) not in _pp.split(os.pathsep):
     os.environ["PYTHONPATH"] = f"{_REPO}{os.pathsep}{_pp}" if _pp else str(_REPO)
 
+from spardaqus_spark import queries as Q  # noqa: E402
 from spardaqus_spark import queries_ml as QM  # noqa: E402
 from spardaqus_spark import queries_text as QT  # noqa: E402
 
@@ -78,6 +81,19 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontamination": QT.q_decontamination,
         "mixing_weights": QT.q_mixing_weights,
         "stratified_sample": QT.q_stratified_sample,
+        # --- relational operator coverage over the star schema ---
+        "pricing_summary": Q.q_pricing_summary,
+        "region_revenue": Q.q_region_revenue,
+        "outer_join_nulls": Q.q_outer_join_nulls,
+        "semi_join": Q.q_semi_join,
+        "anti_join": Q.q_anti_join,
+        "range_join": Q.q_range_join,
+        "window_topk": Q.q_window_topk,
+        "rollup_slices": Q.q_rollup_lineage_slices,
+        "cube_regions": Q.q_cube_nation_region,
+        "set_ops": Q.q_set_ops,
+        "collect_set_sorted": Q.q_collect_set_sorted,
+        "global_sort_limit": Q.q_global_sort_limit,
     }
 
 
@@ -121,4 +137,16 @@ def oracle_sql() -> dict[str, str]:
         "decontamination": QT.SQL_DECONTAMINATION,
         "mixing_weights": QT.SQL_MIXING_WEIGHTS,
         "stratified_sample": QT.SQL_STRATIFIED_SAMPLE,
+        "pricing_summary": Q.SQL_PRICING,
+        "region_revenue": Q.SQL_REGION_REVENUE,
+        "outer_join_nulls": Q.SQL_OUTER_JOIN,
+        "semi_join": Q.SQL_SEMI_JOIN,
+        "anti_join": Q.SQL_ANTI_JOIN,
+        "range_join": Q.SQL_RANGE_JOIN,
+        "window_topk": Q.SQL_WINDOW_TOPK,
+        "rollup_slices": Q.SQL_ROLLUP,
+        "cube_regions": Q.SQL_CUBE,
+        "set_ops": Q.SQL_SET_OPS,
+        "collect_set_sorted": Q.SQL_COLLECT_SET,
+        "global_sort_limit": Q.SQL_SORT_LIMIT,
     }

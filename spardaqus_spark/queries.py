@@ -18,8 +18,6 @@ parquet scan so pushdown + column pruning apply (SURVEY.md §4.1).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -208,37 +206,6 @@ GROUP BY band
 """
 
 
-def q_asof_last_signup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join via window (Spark SQL has no native as-of — SURVEY §2.2):
-    for each purchase, the event_id of the same user's most recent prior
-    signup."""
-    ev = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
-        W.unboundedPreceding, -1
-    )
-    tagged = ev.withColumn(
-        "last_signup",
-        F.last(
-            F.when(F.col("event_type") == "signup", F.col("event_id")),
-            ignorenulls=True,
-        ).over(w),
-    )
-    return tagged.filter(F.col("event_type") == "purchase").select(
-        "event_id", "user_id", "last_signup"
-    )
-
-
-SQL_ASOF = """
-SELECT event_id, user_id, last_signup FROM (
-  SELECT event_id, user_id, event_type,
-         LAST_VALUE(CASE WHEN event_type = 'signup' THEN event_id END IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_signup
-  FROM events
-) WHERE event_type = 'purchase'
-"""
-
-
 def q_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer (dedup 'keep first' pattern of §2.5)."""
     orders = load(spark, sf_dir, "orders")
@@ -257,53 +224,6 @@ SELECT o_custkey, o_orderkey, rn FROM (
                             ORDER BY o_totalprice DESC, o_orderkey) AS rn
   FROM orders
 ) WHERE rn <= 3
-"""
-
-
-def q_window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running sum + lag per user over the event stream."""
-    ev = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(
-            F.sum("value").over(w.rowsBetween(W.unboundedPreceding, 0)), 4
-        ).alias("running_value"),
-        F.lag("event_type", 1).over(w).alias("prev_type"),
-    )
-
-
-SQL_WINDOW_RUNNING = """
-SELECT event_id, user_id,
-       ROUND(SUM(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value,
-       LAG(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
-FROM events
-"""
-
-
-def q_window_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(-9, 0)
-    )
-    # round to 6 (not 4): with 2-decimal inputs and window length k <= 10
-    # the exact average is i/(100k), which can sit exactly ON a 1e-4
-    # midpoint (k=8: i*25 odd) where engine ulp drift flips the digit;
-    # at 1e-6 grain no i/(100k) midpoint exists for any k in 1..10.
-    return ev.select(
-        "event_id", F.round(F.avg("value").over(w), 6).alias("mav10")
-    )
-
-
-SQL_WINDOW_MAV = """
-SELECT event_id,
-       ROUND(AVG(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN 9 PRECEDING AND CURRENT ROW), 6) AS mav10
-FROM events
 """
 
 
@@ -380,138 +300,6 @@ GROUP BY src
 """
 
 
-def q_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.round(F.corr("l_quantity", "l_extendedprice"), 4).alias("corr_qty_price"),
-        F.round(F.covar_samp("l_discount", "l_tax"), 6).alias("covar_disc_tax"),
-        F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-    )
-
-
-SQL_CORR = """
-SELECT ROUND(corr(l_quantity, l_extendedprice), 4) AS corr_qty_price,
-       ROUND(covar_samp(l_discount, l_tax), 6) AS covar_disc_tax,
-       ROUND(AVG(l_quantity), 4) AS avg_qty
-FROM lineitem
-"""
-
-
-def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON column parse on the event stream (§2.3 json family)."""
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.withColumn("k", F.get_json_object("props", "$.k").cast("int"))
-        .groupBy("event_type")
-        .agg(
-            F.round(F.avg("k"), 4).alias("avg_k"),
-            F.max("k").alias("max_k"),
-            F.count("*").alias("n"),
-        )
-    )
-
-
-SQL_JSON = """
-SELECT event_type,
-       ROUND(AVG(CAST(json_extract_string(props, '$.k') AS INTEGER)), 4) AS avg_k,
-       MAX(CAST(json_extract_string(props, '$.k') AS INTEGER)) AS max_k,
-       COUNT(*) AS n
-FROM events GROUP BY event_type
-"""
-
-
-def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    part = load(spark, sf_dir, "part")
-    return part.select(
-        "p_partkey",
-        F.upper(F.substring("p_name", 1, 8)).alias("prefix"),
-        F.length("p_name").alias("name_len"),
-        F.when(F.col("p_type").rlike("BRASS|COPPER"), "metal")
-        .otherwise("other")
-        .alias("material"),
-    )
-
-
-SQL_STRING = """
-SELECT p_partkey,
-       UPPER(SUBSTRING(p_name, 1, 8)) AS prefix,
-       LENGTH(p_name) AS name_len,
-       CASE WHEN regexp_matches(p_type, 'BRASS|COPPER') THEN 'metal'
-            ELSE 'other' END AS material
-FROM part
-"""
-
-
-def q_conditional_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot via conditional aggregation (engine-portable pivot form)."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(
-            F.sum(F.when(F.col("l_linestatus") == "O", F.col("l_quantity")).otherwise(0.0)), 4
-        ).alias("qty_open"),
-        F.round(
-            F.sum(F.when(F.col("l_linestatus") == "F", F.col("l_quantity")).otherwise(0.0)), 4
-        ).alias("qty_filled"),
-    )
-
-
-SQL_COND_PIVOT = """
-SELECT l_returnflag,
-       ROUND(SUM(CASE WHEN l_linestatus = 'O' THEN l_quantity ELSE 0.0 END), 4) AS qty_open,
-       ROUND(SUM(CASE WHEN l_linestatus = 'F' THEN l_quantity ELSE 0.0 END), 4) AS qty_filled
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
-def q_having_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_suppkey")
-        .agg(F.round(F.sum("l_quantity"), 4).alias("total_qty"))
-        .filter(F.col("total_qty") > 100)
-    )
-
-
-SQL_HAVING = """
-SELECT l_suppkey, ROUND(SUM(l_quantity), 4) AS total_qty
-FROM lineitem GROUP BY l_suppkey HAVING SUM(l_quantity) > 100
-"""
-
-
-def q_full_outer_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join + ntile/percent_rank window family."""
-    cust = load(spark, sf_dir, "customer")
-    sup = load(spark, sf_dir, "supplier")
-    c = cust.groupBy("c_nationkey").agg(F.count("*").alias("n_cust"))
-    s = sup.groupBy("s_nationkey").agg(F.count("*").alias("n_supp"))
-    j = c.join(s, c.c_nationkey == s.s_nationkey, "full").select(
-        F.coalesce("c_nationkey", "s_nationkey").alias("nationkey"),
-        F.coalesce("n_cust", F.lit(0)).alias("n_cust"),
-        F.coalesce("n_supp", F.lit(0)).alias("n_supp"),
-    )
-    w = W.orderBy(F.desc("n_cust"), "nationkey")
-    return j.select(
-        "nationkey",
-        "n_cust",
-        "n_supp",
-        F.ntile(4).over(w).alias("quartile"),
-        F.round(F.percent_rank().over(w), 4).alias("pct_rank"),
-    )
-
-
-SQL_FULL_OUTER_RANKED = """
-WITH c AS (SELECT c_nationkey, COUNT(*) AS n_cust FROM customer GROUP BY c_nationkey),
-     s AS (SELECT s_nationkey, COUNT(*) AS n_supp FROM supplier GROUP BY s_nationkey),
-     j AS (SELECT COALESCE(c_nationkey, s_nationkey) AS nationkey,
-                  COALESCE(n_cust, 0) AS n_cust, COALESCE(n_supp, 0) AS n_supp
-           FROM c FULL OUTER JOIN s ON c_nationkey = s_nationkey)
-SELECT nationkey, n_cust, n_supp,
-       NTILE(4) OVER (ORDER BY n_cust DESC, nationkey) AS quartile,
-       ROUND(PERCENT_RANK() OVER (ORDER BY n_cust DESC, nationkey), 4) AS pct_rank
-FROM j
-"""
-
-
 def q_collect_set_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """collect_set with pinned ordering (sort_array) so the array value is
     deterministic and oracle-comparable."""
@@ -536,49 +324,6 @@ GROUP BY r_name
 """
 
 
-def q_trimmed_mean_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPED_AGG pandas UDF (SURVEY §2.4): 10-90% trimmed mean per
-    event_type. Pinned: bounds = round(linear-interpolated percentile, 6)
-    (np.percentile 'linear' == quantile_cont), inclusive, mean rounded 4."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _tm(v):
-        a = v.to_numpy(dtype=np.float64)
-        if len(a) == 0:
-            return float("nan")
-        lo = round(float(np.percentile(a, 10)), 6)
-        hi = round(float(np.percentile(a, 90)), 6)
-        sel = a[(a >= lo) & (a <= hi)]
-        return round(float(sel.mean()), 4) if len(sel) else float("nan")
-
-    # real (non-string) annotations: this module uses postponed annotation
-    # evaluation, which Spark's Series->scalar hint inspection can't read
-    _tm.__annotations__ = {"v": pd.Series, "return": float}
-    trimmed_mean = pandas_udf(_tm, "double")
-
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        trimmed_mean("value").alias("trimmed_mean_value")
-    )
-
-
-SQL_TRIMMED_MEAN = """
-WITH q AS (
-  SELECT event_type,
-         ROUND(CAST(quantile_cont(value, 0.1) AS DOUBLE), 6) AS lo,
-         ROUND(CAST(quantile_cont(value, 0.9) AS DOUBLE), 6) AS hi
-  FROM events GROUP BY event_type
-)
-SELECT e.event_type,
-       ROUND(AVG(value), 4) AS trimmed_mean_value
-FROM events e JOIN q ON e.event_type = q.event_type
-WHERE value >= lo AND value <= hi
-GROUP BY e.event_type
-"""
-
-
 def q_global_sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global order-by + limit -> TakeOrderedAndProject (no full sort)."""
     orders = load(spark, sf_dir, "orders")
@@ -594,24 +339,3 @@ SELECT o_orderkey, ROUND(o_totalprice, 4) AS price
 FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 25
 """
 
-
-def q_mode_any_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mode() + any_value() aggregate coverage (§2.2 first/last/mode row).
-    Determinism by construction: the modal l_returnflag is a unique winner
-    per l_linestatus on this corpus (counts differ), and any_value runs
-    over a column functionally dependent on the group key."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.groupBy("l_linestatus").agg(
-        F.mode("l_returnflag").alias("modal_flag"),
-        F.any_value(F.upper("l_linestatus")).alias("status_uc"),
-        F.count("*").alias("n"),
-    )
-
-
-SQL_MODE_ANY_VALUE = """
-SELECT l_linestatus,
-       mode(l_returnflag) AS modal_flag,
-       any_value(UPPER(l_linestatus)) AS status_uc,
-       COUNT(*) AS n
-FROM lineitem GROUP BY l_linestatus
-"""

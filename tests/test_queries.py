@@ -2,8 +2,8 @@
 run every queries() entry on Spark at sf0.01 and compare against
 oracle_sql() via DuckDB — row count + column names + order-insensitive
 canonical value comparison. Rows-only entries just need rows >= 0 and a
-stable schema. Every twin reads only the `documents` and `embeddings`
-tables."""
+stable schema. The twins read `documents` and `embeddings` plus the
+star-schema tables of the relational coverage queries."""
 
 from __future__ import annotations
 
@@ -21,7 +21,10 @@ sys.path.insert(0, str(REPO))
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = ["documents", "embeddings"]
+TABLES = [
+    "region", "nation", "customer", "orders", "lineitem", "documents",
+    "embeddings",
+]
 
 
 @pytest.fixture(scope="module")
