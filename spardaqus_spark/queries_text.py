@@ -1048,13 +1048,6 @@ def q_boilerplate_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
 # whitespace class (SURVEY §2.9.17).
 # ---------------------------------------------------------------------------
 
-# Spark-side tokenizer: THE pinned constant from operators.stages (SURVEY
-# §2.9.17) — never a fresh copy of the literal, so a future re-pin moves
-# every Spark-side user together (code-review r3 ×2). The DuckDB twins
-# must keep the literal inline (SQL strings), pinned by the parity tests.
-_ASCII_WS = BOILERPLATE_WS
-
-
 def q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filter: per-doc duplicate-token fraction
     (1 - distinct/total) and top-2-gram fraction (most frequent token
@@ -1071,7 +1064,7 @@ def q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
-    toks = F.array_remove(F.split(F.col("text"), _ASCII_WS), "")
+    toks = F.array_remove(F.split(F.col("text"), BOILERPLATE_WS), "")
     d = (
         docs.select("doc_id", toks.alias("toks"))
         .withColumn("n_tok", F.size("toks").cast("long"))
@@ -1160,7 +1153,7 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(
         load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
-    toks = F.array_remove(F.split(F.col("text"), _ASCII_WS), "")
+    toks = F.array_remove(F.split(F.col("text"), BOILERPLATE_WS), "")
     d = docs.select("doc_id", toks.alias("toks")).withColumn(
         "n", F.size("toks")
     )
@@ -1249,7 +1242,7 @@ def q_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI default, mean/0 THROWS at runtime (it is not NULL) — the edge-
     corpus test caught a whole-job crash here (tests/test_edge_corpus.py)."""
     docs = load(spark, sf_dir, "documents").select("source", "text")
-    n_tok = F.size(F.array_remove(F.split(F.col("text"), _ASCII_WS), ""))
+    n_tok = F.size(F.array_remove(F.split(F.col("text"), BOILERPLATE_WS), ""))
     s = (
         docs.select("source", n_tok.alias("nt"))
         .groupBy("source")

@@ -40,12 +40,12 @@ def write_files(df: "DataFrame", cfg: PipelineConfig, path: str, mode: str = "ap
         out.write.mode(mode).partitionBy("bucket").parquet(path)
 
 
-def read_stream_source(spark: "SparkSession", cfg: "PipelineConfig", **opts):
+def read_stream_source(spark: "SparkSession", **opts):
     """Streaming source seam (SURVEY §2.1/§2.8 — the Spardaqus transport
-    analog). kafka is config-gated: the sandbox ships no kafka jar, so the
-    branch is exercised only in production; the file branch feeds the same
-    foreachBatch pipeline in tests."""
-    fmt = opts.get("format", getattr(cfg, "stream_format", "parquet"))
+    analog). ``format="kafka"`` picks kafka; the sandbox ships no kafka
+    jar, so that branch is exercised only in production. The default
+    parquet file branch feeds the same foreachBatch pipeline in tests."""
+    fmt = opts.get("format", "parquet")
     if fmt == "kafka":
         return (
             spark.readStream.format("kafka")

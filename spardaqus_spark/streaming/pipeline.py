@@ -4,8 +4,8 @@ Spardaqus's analyze service consumed a Kafka stream (SURVEY.md App. C);
 this rebuild runs the batch pipeline's scoring kernel
 (``stages.score_scrub``) unchanged inside Structured Streaming.
 In-sandbox the source is a file/rate stream (no kafka jar — App. A); in
-production the same code points at ``readStream.format("kafka")`` via
-one config key.
+production the same code reads Kafka through
+``sources.io.read_stream_source(spark, format="kafka", ...)``.
 
 Two shapes:
 

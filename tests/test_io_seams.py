@@ -59,11 +59,9 @@ def test_iceberg_write_branch_reaches_datasource_resolution(spark, corpus_pdf):
 
 
 def test_kafka_stream_branch_reaches_datasource_resolution(spark):
-    cfg = default_config()
     with pytest.raises(Exception, match="(?i)kafka"):
         sio.read_stream_source(
             spark,
-            cfg,
             format="kafka",
             bootstrap_servers="localhost:9092",
             topic="files",

@@ -1,7 +1,6 @@
 """Whole-surface physical-plan audit (SURVEY §4 / BASELINE.json:15):
-every query registered in __spark_entry__.queries() — the pipeline, its
-text, dedup, near-dup and embedding family, and the relational coverage
-queries — is PLANNED (never
+every query registered in __spark_entry__.queries() — the pipeline and
+its text, dedup, near-dup and embedding family — is PLANNED (never
 executed — cheap) and its physical plan screened for the two classes of
 regressions that source lints can't see:
 
@@ -26,7 +25,6 @@ SF_DIR = "/root/testdata/sf0.001"
 CARTESIAN_OK = {
     "cosine_topk",        # 5-row query side, crossJoin by design
     "embedding_near_dup", # pinned exact O(n^2) baseline; LSH twin scales
-    "range_join",         # broadcast nested loop vs 3-row literal bands
     "mixing_weights",     # 1-row global-mean broadcast (scalar-subquery shape)
     "quality_binning",    # 1-row quartile-threshold broadcast (same shape)
     # r4 checked ANN forms: the exact verification side (_exact_cos_pairs)

@@ -1,7 +1,8 @@
 """Physical-plan assertions (SURVEY.md §4) — the 100-TB design contract:
-column pruning, predicate pushdown, broadcast dim joins, and the
-two-shuffle pipeline budget. These are the properties that keep the job
-alive at 1000 executors; they are asserted, not assumed."""
+column pruning, predicate pushdown, the boilerplate stage's broadcast
+per-repo totals join, and the two-shuffle pipeline budget. These are the
+properties that keep the job alive at 1000 executors; they are asserted,
+not assumed."""
 
 from __future__ import annotations
 
@@ -12,7 +13,6 @@ from pyspark.sql import functions as F
 
 from spardaqus_spark import pipeline
 from spardaqus_spark.config import default_config
-from spardaqus_spark.queries import q_region_revenue
 
 
 def _plan(df) -> str:
@@ -47,11 +47,6 @@ def test_filter_pushdown_reaches_scan(spark, files_parquet):
     assert "PushedFilters" in plan
     pushed = plan[plan.index("PushedFilters") : plan.index("\n", plan.index("PushedFilters"))]
     assert "lang" in pushed, pushed
-
-
-def test_dim_joins_broadcast(spark):
-    plan = _plan(q_region_revenue(spark, "/root/testdata/sf0.001"))
-    assert "BroadcastHashJoin" in plan
 
 
 def test_pipeline_shuffle_budget(spark, files_parquet):

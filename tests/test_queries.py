@@ -2,8 +2,7 @@
 run every queries() entry on Spark at sf0.01 and compare against
 oracle_sql() via DuckDB — row count + column names + order-insensitive
 canonical value comparison. Rows-only entries just need rows >= 0 and a
-stable schema. The twins read `documents` and `embeddings` plus the
-star-schema tables of the relational coverage queries."""
+stable schema. The twins read only `documents` and `embeddings`."""
 
 from __future__ import annotations
 
@@ -21,10 +20,7 @@ sys.path.insert(0, str(REPO))
 import __spark_entry__ as entrymod
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "orders", "lineitem", "documents",
-    "embeddings",
-]
+TABLES = ["documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")

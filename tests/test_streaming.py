@@ -68,14 +68,13 @@ def test_scrub_stream_matches_batch(spark, stream_src_dir, tmp_path, corpus_pdf)
 
 
 def test_stream_source_seam_and_json_ingest(spark, tmp_path):
-    from spardaqus_spark.config import default_config
     from spardaqus_spark.sources import io as sio
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     src = tmp_path / "ev5"
     ev.write.parquet(str(src))
     stream = sio.read_stream_source(
-        spark, default_config(), path=str(src), schema=ev.schema,
+        spark, path=str(src), schema=ev.schema,
         max_files_per_trigger=1,
     )
     assert stream.isStreaming
