@@ -8,15 +8,17 @@
 Builds the full DAG (dedup -> fused score+verdict+scrub -> bucket
 repartition -> write) and executes with checkpoint/resume + lineage.
 Resume is automatic: rerunning against the same --run-dir skips every
-bucket its manifests mark committed, with or without --resume, which only
-names this attempt's run_id in manifests and lineage (default: a fresh
-random id). Under spark-submit the session keeps the submitted --master
-and driver memory; standalone it falls back to local mode.
+bucket its attempt manifests mark committed, with or without --resume,
+which only names this attempt's run_id in its manifest and lineage
+(default: a fresh random id). Under spark-submit the session keeps the
+submitted --master and driver memory; standalone it falls back to local
+mode.
 """
 
 from __future__ import annotations
 
 import argparse
+import dataclasses
 import sys
 from pathlib import Path
 
@@ -58,7 +60,7 @@ def main(argv: list[str] | None = None) -> int:
 
     cfg = load_config(args.config)
     if args.input:
-        object.__setattr__(cfg, "input_path", args.input)  # frozen dataclass
+        cfg = dataclasses.replace(cfg, input_path=args.input)
     if not cfg.input_path:
         print("error: no input (--input or config input_path)", file=sys.stderr)
         return 2

@@ -92,7 +92,6 @@ class PipelineConfig:
     boilerplate_min_files: int = 2
     lexicon_path: str | None = None
     input_path: str | None = None
-    output_path: str | None = None
     table_format: str = "parquet"  # parquet | iceberg (prod)
 
     def __post_init__(self) -> None:

@@ -25,7 +25,7 @@ from typing import TYPE_CHECKING
 
 import pandas as pd
 
-from ..config import PipelineConfig, default_config
+from ..config import PipelineConfig
 from ..kernels import heuristics, langid, ppl, scrub
 
 if TYPE_CHECKING:
@@ -42,11 +42,7 @@ def _schema_str(df: "DataFrame") -> str:
     return ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
 
 
-def score_scrub(
-    df: "DataFrame",
-    cfg: PipelineConfig | None = None,
-    content_col: str = "content",
-) -> "DataFrame":
+def score_scrub(df: "DataFrame", cfg: PipelineConfig) -> "DataFrame":
     """Fully-fused Python stage: metrics + langid + ppl + VERDICT + scrub
     in ONE mapInPandas.
 
@@ -64,7 +60,6 @@ def score_scrub(
     ``dup_loser`` column: the dedup window's, or ``lit(False)`` where
     there is no dedup (streaming micro-batches, the pipeline query).
     """
-    cfg = cfg or default_config()
     lex = scrub.load_lexicon(cfg.lexicon_path)
     rules = cfg.rules
     verdict_mode = cfg.verdict
@@ -80,7 +75,7 @@ def score_scrub(
         from ..rules import apply_rules_pandas
 
         for pdf in batches:
-            c = pdf[content_col].fillna("").astype(str).reset_index(drop=True)
+            c = pdf["content"].fillna("").astype(str).reset_index(drop=True)
             flat = textnum.flatten_codepoints(c)
             m = heuristics.compute_metrics(c, flat=flat)
             lid = langid.predict(c, flat=flat)
@@ -111,7 +106,7 @@ def score_scrub(
                 sha[kept_idx] = scrubbed.map(
                     lambda x: hashlib.sha256(x.encode("utf-8")).hexdigest()
                 ).to_numpy()
-            out[content_col] = content
+            out["content"] = content
             out["scrubbed_sha256"] = sha
             yield out
 
@@ -124,9 +119,7 @@ def score_scrub(
 BOILERPLATE_WS = "[ \\t\\n\\r\\f\\x0B]+"
 
 
-def with_boilerplate_frac(
-    df: "DataFrame", cfg: PipelineConfig | None = None
-) -> "DataFrame":
+def with_boilerplate_frac(df: "DataFrame", cfg: PipelineConfig) -> "DataFrame":
     """+ boilerplate_frac:double — the CROSS-FILE stage (VERDICT r02 #7):
     fraction of each file's token occurrences that are repo-boilerplate
     (lowercased ASCII-whitespace tokens present in >= cfg.boilerplate_doc_frac
@@ -157,7 +150,6 @@ def with_boilerplate_frac(
     groups identically)."""
     from pyspark.sql import functions as F
 
-    cfg = cfg or default_config()
     file_key = ["repo", "path", "commit"]
     toks = df.select(
         *file_key,
@@ -204,10 +196,10 @@ def with_boilerplate_frac(
     )
 
 
-def with_sha(df: "DataFrame", content_col: str = "content") -> "DataFrame":
+def with_sha(df: "DataFrame") -> "DataFrame":
     from pyspark.sql import functions as F
 
-    return df.withColumn("content_sha256", F.sha2(F.col(content_col), 256))
+    return df.withColumn("content_sha256", F.sha2(F.col("content"), 256))
 
 
 def dedup_exact(df: "DataFrame") -> "DataFrame":

@@ -16,8 +16,8 @@ Logical DAG (all lazy — Catalyst optimizes the whole thing as one plan):
          -> bucketize repartition (shuffle #2 — repo-hash bucket + salt,
             kept rows only, sized by AQE: files follow the buckets, not
             the cores; resume/pruning stay bucket-grained)
-         -> write(partitionBy bucket) -> sink read-back -> per-bucket
-            manifests
+         -> write(partitionBy bucket) -> sink read-back -> lineage file
+            -> ONE attempt manifest
 
 Exactly two shuffles at any scale, and shuffle #2 carries only the ~75%
 kept, scrubbed rows. Input laid out by Iceberg's ``bucket(repo)``
@@ -30,7 +30,9 @@ ONE small per-(partition, bucket) aggregate from it
 every lineage row are derived on the driver from those rows. The
 attempt's lineage rows never go back through Spark: the driver writes
 them as one parquet file (``plans.lineage.write_attempt``), so a run is
-the data write, the ledger and the read-back, and no lineage job.
+the data write, the ledger and the read-back, and no lineage job. One
+manifest, named after that lineage file, then commits the whole attempt
+(``plans.checkpoint``).
 """
 
 from __future__ import annotations
@@ -104,19 +106,20 @@ def run(
 ) -> dict:
     """Execute end-to-end with checkpoint/resume + lineage.
 
-    A resumed run (``run_dir`` holding bucket manifests) and
+    A resumed run (``run_dir`` holding attempt manifests) and
     ``bucket_whitelist`` (used by the kill-at-50% resume test; prod uses it
     for targeted reruns) both prune buckets inside
     ``build_verdict_frame``, before scoring: only the buckets this attempt
     processes are scored, written and committed. Every bucket with input
-    rows is committed, zero-kept ones included. Returns summary counters.
+    rows is committed, zero-kept ones included, by one manifest for the
+    attempt. Returns summary counters.
     """
     from pyspark import StorageLevel
 
     run_id = run_id or uuid.uuid4().hex[:12]
     run_dir = Path(run_dir)
     lineage_dir = run_dir / "lineage"
-    lin.check_sink(lineage_dir)
+    ckpt.check_layout(run_dir)
 
     v = build_verdict_frame(
         df, cfg, run_dir=run_dir, bucket_whitelist=bucket_whitelist
@@ -130,7 +133,7 @@ def run(
     v = v.persist(StorageLevel.MEMORY_AND_DISK)
     out_path = str(run_dir / "files_clean")
     # crash-atomicity: sweep what a crashed attempt left without a manifest
-    # (bucket dirs of the data sink, rows of the lineage sink) BEFORE this
+    # (bucket dirs of the data sink, its lineage file) BEFORE this
     # attempt's append write, so reprocessing cannot duplicate rows.
     ckpt.clean_orphans(run_dir, out_path, lineage_dir)
     rules = [r.name for r in cfg.rules]
@@ -160,15 +163,18 @@ def run(
             spark, out_path, "bucket", [b for b, n in sorted(kept.items()) if n]
         )
     # per-stage lineage ([B:6] "every stage"): a few thousand rows already
-    # on the driver, published before the manifests so a committed bucket
-    # always has its rows; an attempt that processed nothing writes none
+    # on the driver, published before the manifest so a committed bucket
+    # always has its rows; an attempt that processed nothing writes
+    # neither lineage nor manifest
     with _phase(phase_s, "lineage"):
         rows = lin.lineage_rows(ledger, run_id, rules, write_counts=seen)
-        if rows:
-            lin.write_attempt(lineage_dir, run_id, rows)
+        lineage_file = lin.write_attempt(lineage_dir, run_id, rows) if rows else None
     with _phase(phase_s, "commit"):
-        for b in sorted(kept):
-            ckpt.commit_bucket(run_dir, run_id, b, seen.get(b, 0), out_path)
+        if lineage_file:
+            ckpt.commit_bucket(
+                run_dir, lineage_file.stem, run_id,
+                {b: seen.get(b, 0) for b in kept}, out_path,
+            )
     result = {
         "run_id": run_id,
         "buckets": len(kept),

@@ -17,13 +17,16 @@ each stage's in/out counts follow exactly from the ledger's
            committed, read back from the sink by the caller — a
            write-side loss shows as files_in != files_out (VERDICT r02 #3).
            Write rows are sink-grained (partition_id = -1, one per bucket
-           or micro-batch): commit happens per bucket, not per partition.
+           or micro-batch): the sink is read back per bucket, not per
+           partition.
 
 A batch attempt's rows already sit on the driver, so ``write_attempt``
 writes them with pyarrow as ONE parquet file per attempt under the run
 dir's ``lineage/`` (no Spark job), published by temp file + atomic
-``os.replace``; ``bucket`` is a data column, not a partition dir.
-``plans.checkpoint.clean_orphans`` sweeps those files by row.
+``os.replace``; ``bucket`` is a data column, not a partition dir. The
+file's stem names the attempt's manifest (``plans.checkpoint``), and
+``plans.checkpoint.clean_orphans`` deletes a file whose manifest never
+landed.
 
 The same ledger, grouped by partition only, gives the streaming
 micro-batch its rows (``stream_rows``); the stream does no dedup, so it
@@ -41,7 +44,6 @@ from typing import TYPE_CHECKING, Sequence
 from pyspark.sql import types as T
 
 if TYPE_CHECKING:
-    import pyarrow as pa
     from pyspark.sql import DataFrame, Row
 
 # a StructType, not a DDL string: the batch sink's Arrow schema is derived
@@ -134,28 +136,17 @@ def lineage_rows(
     return out
 
 
-def check_sink(lineage_dir: str | Path) -> None:
-    """Refuse a lineage sink in the old bucket-partitioned layout: Spark
-    cannot read ``bucket=<b>`` dirs (``bucket`` a partition column) mixed
-    with attempt files (``bucket`` a data column). Such run dirs are not
-    migrated."""
-    old = sorted(p.name for p in Path(lineage_dir).glob("bucket=*"))
-    if old:
-        raise ValueError(
-            f"{lineage_dir} holds bucket-partitioned lineage ({old[0]}, ... "
-            f"{len(old)} dirs) from an older layout; finish that run dir "
-            "with the version that started it, or start a new run dir"
-        )
-
-
 def write_attempt(
     lineage_dir: str | Path, run_id: str, rows: list[tuple]
 ) -> Path:
     """Write one attempt's ``lineage_rows`` (at least one) as ONE parquet
     file under ``lineage_dir`` and return its path. The name carries a
     fresh uuid, so two attempts sharing a ``run_id`` never replace each
-    other's rows."""
+    other's rows. Published via a ``.tmp-`` sibling and an atomic
+    ``os.replace``: readers (Spark and pyarrow skip dot files) see the
+    whole file or none of it, never a torn one."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(LINEAGE_SCHEMA)
@@ -164,20 +155,11 @@ def write_attempt(
         schema=schema,
     )
     path = Path(lineage_dir) / f"attempt-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
-    publish(table, path)
-    return path
-
-
-def publish(table: "pa.Table", path: Path) -> None:
-    """Write ``table`` to ``path`` via a ``.tmp-`` sibling and an atomic
-    ``os.replace``: readers (Spark and pyarrow skip dot files) see the old
-    file or the whole new one, never a torn one."""
-    import pyarrow.parquet as pq
-
     path.parent.mkdir(parents=True, exist_ok=True)
     tmp = path.with_name(f".tmp-{uuid.uuid4().hex}")
     pq.write_table(table, tmp)
     os.replace(tmp, path)
+    return path
 
 
 def stream_rows(

@@ -1,14 +1,9 @@
-"""Table-format seam (SURVEY.md §7 M5): one config key switches between
-sandbox parquet and production Iceberg. The sandbox has no Iceberg jar
-(SURVEY.md App. A), so the iceberg branch is config-gated and exercised
-only for plan construction in prod.
-
-Production notes baked into the layout:
-- reads prune columns at the source (metadata-only passes never
-  deserialize `content` — SURVEY.md §1.3);
-- writes partition by `bucket` so resume + targeted reruns get partition
-  pruning for free, and sorting each bucket by (repo, path, commit) pins
-  a deterministic file layout (sha256-stable bytes, SURVEY.md §4.2).
+"""Source seams (SURVEY.md §7 M5): one config key switches the batch
+read between sandbox parquet and production Iceberg. The sandbox has no
+Iceberg jar (SURVEY.md App. A), so the iceberg branch is config-gated and
+exercised only for plan construction in prod. Reads prune columns at the
+source (metadata-only passes never deserialize `content` — SURVEY.md
+§1.3). The sink write is ``pipeline.run``'s own.
 """
 
 from __future__ import annotations
@@ -29,15 +24,6 @@ def read_files(spark: "SparkSession", cfg: PipelineConfig, columns: list[str] | 
     if columns:
         df = df.select(*columns)
     return df
-
-
-def write_files(df: "DataFrame", cfg: PipelineConfig, path: str, mode: str = "append") -> None:
-    keys = ("repo", "path", "commit")
-    if cfg.table_format == "iceberg":
-        df.sortWithinPartitions(*keys).writeTo(path).append()
-    else:  # bucket first, or the writer's own Sort(bucket) replaces it
-        out = df.sortWithinPartitions("bucket", *keys)
-        out.write.mode(mode).partitionBy("bucket").parquet(path)
 
 
 def read_stream_source(spark: "SparkSession", **opts):

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from typing import TYPE_CHECKING
 
-from ..config import PipelineConfig, default_config
+from ..config import PipelineConfig
 from ..operators import stages
 
 if TYPE_CHECKING:
@@ -101,10 +101,9 @@ def scrub_stream(
     files_stream: "DataFrame",
     out_dir: str,
     checkpoint_dir: str,
-    cfg: PipelineConfig | None = None,
+    cfg: PipelineConfig,
 ) -> "StreamingQuery":
     """files-shaped stream -> scrubbed parquet, exactly-once."""
-    cfg = cfg or default_config()
     return (
         files_stream.writeStream.foreachBatch(
             lambda df, bid: score_micro_batch(df, bid, cfg, out_dir)

@@ -103,8 +103,10 @@ def test_resumed_dag_prunes_between_window_and_kernel(spark, files_parquet, tmp_
     from spardaqus_spark.plans import checkpoint as ckpt
 
     cfg = default_config()
-    for b in range(cfg.num_buckets // 2):
-        ckpt.commit_bucket(tmp_path, "prior", b, 0, str(tmp_path / "files_clean"))
+    half = dict.fromkeys(range(cfg.num_buckets // 2), 0)
+    ckpt.commit_bucket(
+        tmp_path, "attempt-prior-0", "prior", half, str(tmp_path / "files_clean")
+    )
     src = spark.read.parquet(files_parquet)
     v = pipeline.build_verdict_frame(src, cfg, run_dir=tmp_path)
     plan = _plan(v)

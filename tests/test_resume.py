@@ -143,63 +143,97 @@ def test_resume_noop_when_all_done(spark, corpus_sdf, tmp_path):
     assert r["files_out"] == 0
 
 
-def test_crash_between_write_and_manifest_no_duplicates(
-    spark, corpus_sdf, tmp_path, counted_run
-):
-    """ADVICE r01 (medium): data lands (append) before manifests commit, so
-    a crash in that window leaves visible bucket partitions with no
-    manifest. Simulate it by deleting committed manifests post-run; the
-    resumed run must sweep the orphan partitions before its append write
-    so the final output has NO duplicate rows."""
-    d = tmp_path / "crash"
-    pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a1")
-    full = _read_clean(spark, d)
-    [crashed] = _lineage_files(d, "a1")
+class Crash(Exception):
+    """The driver dies at the patched call."""
 
-    # "crash window": buckets 5..7 wrote data but never got a manifest
-    for b in (5, 6, 7):
-        (ckpt.manifest_dir(d) / f"bucket-{b:05d}.json").unlink()
-    assert sorted(ckpt.done_buckets(d)) == [0, 1, 2, 3, 4]
 
-    r = pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a2")
-    assert r["buckets"] == 3  # only the orphaned fraction reprocessed
-    after = _read_clean(spark, d)
-    # byte-identical to the uninterrupted result — no appended duplicates
-    pd.testing.assert_frame_equal(full, after)
-    # lineage sink swept by row: the crashed attempt's file is rewritten
-    # in place to its committed buckets, the resumed attempt's file holds
-    # the rest, and every (stage, partition, bucket) row exists once
-    assert _lineage_files(d, "a1") == [crashed]
-    assert set(pd.read_parquet(crashed)["bucket"]) == {0, 1, 2, 3, 4}
-    [resumed] = _lineage_files(d, "a2")
-    assert set(pd.read_parquet(resumed)["bucket"]) == {5, 6, 7}
+def _crashed_run(monkeypatch, sdf, run_dir, run_id, target, name, **kw):
+    """A ``pipeline.run`` killed on reaching ``target.name``: what the run
+    wrote before that call is on disk, nothing after it is."""
+    def crash(*a, **k):
+        raise Crash(name)
+
+    with monkeypatch.context() as m:
+        m.setattr(target, name, crash)
+        with pytest.raises(Crash):
+            pipeline.run(sdf, CFG, run_dir=run_dir, run_id=run_id, **kw)
+
+
+def _assert_resumed(spark, run_dir, counted_run):
+    """The run dir equals an uninterrupted run's: the same rows and
+    scrubbed sha256, the same lineage totals per (stage, bucket), no
+    lineage row twice, and exactly one manifest per lineage file."""
+    full = _read_clean(spark, counted_run[0])
+    pd.testing.assert_frame_equal(full, _read_clean(spark, run_dir))
     dupes = (
-        spark.read.parquet(str(d / "lineage"))
+        spark.read.parquet(str(run_dir / "lineage"))
         .groupBy("stage", "partition_id", "bucket")
         .count()
         .filter(F.col("count") > 1)
         .count()
     )
     assert dupes == 0
-    assert _lineage_totals(spark, d) == _lineage_totals(spark, counted_run[0])
+    assert _lineage_totals(spark, run_dir) == _lineage_totals(spark, counted_run[0])
+    assert sorted(p.name for p in ckpt.manifest_dir(run_dir).iterdir()) == sorted(
+        f"{p.stem}.json" for p in _lineage_files(run_dir)
+    )
+
+
+def test_crash_between_write_and_manifest_no_duplicates(
+    spark, corpus_sdf, tmp_path, counted_run, monkeypatch
+):
+    """ADVICE r01 (medium): data lands (append) before the manifest
+    commits, so a kill after the data write and before the lineage
+    publish leaves visible bucket partitions with no manifest. The
+    resumed run must sweep them before its append write, so the final
+    output has NO duplicate rows."""
+    d = tmp_path / "crash"
+    _crashed_run(monkeypatch, corpus_sdf, d, "a1", lin, "write_attempt")
+    assert len(list((d / "files_clean").glob("bucket=*"))) == 8
+    assert ckpt.done_buckets(d) == []
+
+    r = pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a2")
+    assert r["buckets"] == 8
+    _assert_resumed(spark, d, counted_run)
 
 
 def test_crash_before_any_manifest_drops_lineage_file(
-    spark, corpus_sdf, tmp_path, counted_run
+    spark, corpus_sdf, tmp_path, counted_run, monkeypatch
 ):
-    """A crash after the lineage publish but before the first manifest
-    leaves a whole attempt file with no committed bucket: the resume
-    deletes it, and its lineage totals per (stage, bucket) equal an
-    uninterrupted run's."""
+    """A kill after the lineage publish and before the manifest rename
+    leaves a whole lineage file and a manifest temp file that no commit
+    owns: the resume deletes both with the orphan bucket dirs and equals
+    an uninterrupted run."""
     d = tmp_path / "crash0"
-    pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a1")
-    for f in ckpt.manifest_dir(d).glob("bucket-*.json"):
-        f.unlink()
+    _crashed_run(monkeypatch, corpus_sdf, d, "a1", ckpt.os, "rename")
+    assert len(_lineage_files(d, "a1")) == 1
+    assert [p.name[:5] for p in ckpt.manifest_dir(d).iterdir()] == [".tmp-"]
+
     r = pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a2")
     assert r["buckets"] == 8
     assert _lineage_files(d, "a1") == []
-    assert len(_lineage_files(d, "a2")) == 1
-    assert _lineage_totals(spark, d) == _lineage_totals(spark, counted_run[0])
+    _assert_resumed(spark, d, counted_run)
+
+
+def test_crash_after_a_committed_attempt(
+    spark, corpus_sdf, tmp_path, counted_run, monkeypatch
+):
+    """A whitelisted attempt commits buckets 0-3, the next attempt is
+    killed before its manifest rename: the resume keeps the first
+    attempt's buckets and lineage, drops the killed attempt's output and
+    reprocesses only buckets 4-7."""
+    d = tmp_path / "crash1"
+    pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a1", bucket_whitelist=[0, 1, 2, 3])
+    [first] = _lineage_files(d, "a1")
+    _crashed_run(monkeypatch, corpus_sdf, d, "a2", ckpt.os, "rename")
+    assert ckpt.done_buckets(d) == [0, 1, 2, 3]
+
+    r = pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a3")
+    assert r["buckets"] == 4
+    assert _lineage_files(d, "a1") == [first]
+    assert _lineage_files(d, "a2") == []
+    assert set(pd.read_parquet(_lineage_files(d, "a3")[0])["bucket"]) == {4, 5, 6, 7}
+    _assert_resumed(spark, d, counted_run)
 
 
 def test_attempts_sharing_a_run_id_keep_their_lineage(
@@ -217,14 +251,22 @@ def test_attempts_sharing_a_run_id_keep_their_lineage(
 
 def test_clean_orphans_sweeps_stale_lineage_temp(tmp_path):
     """A publish that died before its rename leaves a ``.tmp-*`` file in
-    the lineage sink; the next start removes it and nothing else."""
+    the lineage sink or under ``_manifest/``, and an attempt killed before
+    its manifest rename leaves a lineage file no manifest names; the next
+    start removes those and keeps the committed attempt's file."""
     sink = tmp_path / "lineage"
     sink.mkdir()
     (sink / ".tmp-deadbeef").write_bytes(b"torn")
-    kept = lin.write_attempt(sink, "a1", [("a1", 1, "write", -1, 3, 2, 2, None)])
-    ckpt.commit_bucket(tmp_path, "a1", 3, 2, str(tmp_path / "files_clean"))
-    assert ckpt.clean_orphans(tmp_path, tmp_path / "files_clean", sink) == []
+    row = ("a1", 1, "write", -1, 3, 2, 2, None)
+    kept = lin.write_attempt(sink, "a1", [row])
+    ckpt.commit_bucket(tmp_path, kept.stem, "a1", {3: 2}, str(tmp_path / "files_clean"))
+    orphan = lin.write_attempt(sink, "a2", [row])
+    (ckpt.manifest_dir(tmp_path) / ".tmp-cafe").write_text("{")
+    assert ckpt.clean_orphans(tmp_path, tmp_path / "files_clean", sink) == sorted([
+        ckpt.manifest_dir(tmp_path) / ".tmp-cafe", sink / ".tmp-deadbeef", orphan
+    ])
     assert list(sink.iterdir()) == [kept]
+    assert [p.name for p in ckpt.manifest_dir(tmp_path).iterdir()] == [f"{kept.stem}.json"]
 
 
 def test_old_bucket_partitioned_lineage_is_rejected(corpus_sdf, tmp_path):
@@ -236,18 +278,27 @@ def test_old_bucket_partitioned_lineage_is_rejected(corpus_sdf, tmp_path):
     assert not ckpt.manifest_dir(tmp_path).exists()
 
 
+def test_old_per_bucket_manifests_are_rejected(corpus_sdf, tmp_path):
+    """A run dir committed with per-bucket manifests (the old layout) is
+    refused at start, naming the dir, before anything is written."""
+    old = ckpt.manifest_dir(tmp_path) / "bucket-00003.json"
+    old.parent.mkdir()
+    old.write_text(json.dumps({"run_id": "old", "bucket": 3, "status": "done"}))
+    with pytest.raises(ValueError, match=re.escape(str(old.parent))):
+        pipeline.run(corpus_sdf, CFG, run_dir=tmp_path, run_id="new")
+    assert sorted(tmp_path.rglob("*")) == [old.parent, old]
+
+
 def test_write_lineage_matches_manifests(spark, corpus_sdf, tmp_path):
     """VERDICT r02 #3: write-stage lineage files_out must be the OBSERVED
-    committed count per bucket — exactly the number each bucket manifest
-    carries — not the derived n_keep. Write rows are sink-grained
+    committed count per bucket — exactly the number the attempt manifest
+    carries for it — not the derived n_keep. Write rows are sink-grained
     (partition_id = -1, one per bucket), and files_in (kept rows entering
     the write) equals files_out on a healthy run."""
     d = tmp_path / "wl"
     pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="w1")
-    manifest = {
-        json.loads(f.read_text())["bucket"]: json.loads(f.read_text())["files_out"]
-        for f in ckpt.manifest_dir(d).glob("bucket-*.json")
-    }
+    [f] = ckpt.manifest_dir(d).glob("attempt-*.json")
+    manifest = {int(b): n for b, n in json.loads(f.read_text())["buckets"].items()}
     lin = (
         spark.read.parquet(str(d / "lineage"))
         .filter(F.col("stage") == "write")
@@ -255,10 +306,7 @@ def test_write_lineage_matches_manifests(spark, corpus_sdf, tmp_path):
     )
     assert (lin["partition_id"] == -1).all()
     got = dict(zip(lin["bucket"].astype(int), lin["files_out"].astype(int)))
-    # manifests also record zero-kept buckets; lineage only has buckets
-    # that had input rows — every lineage write row must match its manifest
-    assert got == {b: n for b, n in manifest.items() if b in got}
-    assert sum(got.values()) == sum(manifest.values())
+    assert got == manifest
     assert (lin["files_in"].astype(int) == lin["files_out"].astype(int)).all()
 
 
@@ -371,6 +419,23 @@ def test_run_writes_one_lineage_file(spark, counted_run):
     assert [(f.name, f.dataType) for f in got] == [
         (f.name, f.dataType) for f in lin.LINEAGE_SCHEMA
     ]
+
+
+def test_run_commits_one_manifest(counted_run):
+    """A run commits exactly one manifest, named after its lineage file,
+    listing every bucket with the rows it wrote there."""
+    run_dir = counted_run[0]
+    [f] = ckpt.manifest_dir(run_dir).iterdir()
+    [lineage_file] = _lineage_files(run_dir)
+    assert f.name == f"{lineage_file.stem}.json"
+    entry = json.loads(f.read_text())
+    assert entry["run_id"] == "c1"
+    assert entry["schema_version"] == 2
+    written = pd.read_parquet(run_dir / "files_clean", columns=["bucket"])
+    counts = written["bucket"].astype(int).value_counts().to_dict()
+    assert {int(b): n for b, n in entry["buckets"].items()} == {
+        b: counts.get(b, 0) for b in range(8)
+    }
 
 
 def test_run_metrics_record_phase_seconds(counted_run):
