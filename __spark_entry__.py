@@ -43,16 +43,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- the pipeline and the composed corpus build ---
         "pipeline_documents": QM.q_pipeline_documents,
         "corpus_build": QT.q_corpus_build,
-        # --- per-document metrics and quality signals ---
-        "doc_line_metrics": QT.q_doc_line_metrics,
-        "token_count": QT.q_token_count,
-        "bpe_token_count": QT.q_bpe_token_count,
-        "quality_score": QT.q_quality_score,
-        "quality_binning": QT.q_quality_binning,
-        "lang_stopword_heuristic": QT.q_lang_stopword_heuristic,
-        "repetition_metrics": QT.q_repetition_metrics,
-        "boilerplate_tokens": QT.q_boilerplate_tokens,
-        "boilerplate_scalable": QT.q_boilerplate_scalable,
         # --- fingerprints and exact dedup ---
         "fingerprint": QT.q_fingerprint,
         "rolling_fingerprint": QT.q_rolling_fingerprint,
@@ -73,6 +63,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_lsh_cosine": QM.q_ann_lsh_checked,
         "ann_ivf_cosine": QM.q_ann_ivf_checked,
         # --- dataset construction ---
+        "repetition_metrics": QT.q_repetition_metrics,
         "train_val_split": QT.q_train_val_split,
         "sequence_packing": QT.q_sequence_packing,
         "decontamination": QT.q_decontamination,
@@ -87,15 +78,7 @@ def oracle_sql() -> dict[str, str]:
         # intentionally omitted — model- or sketch-backed, not
         # ANSI-SQL-expressible (SURVEY §3.2).
         "corpus_build": QT.SQL_CORPUS_BUILD,
-        "doc_line_metrics": QT.SQL_DOC_LINE_METRICS,
-        "token_count": QT.SQL_TOKEN_COUNT,
-        "bpe_token_count": QT.SQL_BPE_TOKENS,
-        "quality_score": QT.SQL_QUALITY,
-        "quality_binning": QT.SQL_QUALITY_BINNING,
-        "lang_stopword_heuristic": QT.SQL_LANG_STOPWORD,
         "repetition_metrics": QT.SQL_REPETITION_METRICS,
-        "boilerplate_tokens": QT.SQL_BOILERPLATE,
-        "boilerplate_scalable": QT.SQL_BOILERPLATE,
         "fingerprint": QT.SQL_FINGERPRINT,
         "rolling_fingerprint": QT.SQL_ROLLING_FP,
         "dedup_exact_docs": QT.SQL_DEDUP_EXACT,

@@ -68,8 +68,16 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app="spardaqus-pipeline")
     spark.sparkContext.setLogLevel("WARN")
     src = io.read_files(spark, cfg)
+    buckets = (
+        [int(b) for b in args.buckets.split(",")] if args.buckets else None
+    )
     if args.explain:
-        clean = pipeline.build_clean_frame(pipeline.build_verdict_frame(src, cfg))
+        # the plan run() would execute: same resume / whitelist pruning
+        clean = pipeline.build_clean_frame(
+            pipeline.build_verdict_frame(
+                src, cfg, run_dir=args.run_dir, bucket_whitelist=buckets
+            )
+        )
         print(
             clean._sc._jvm.PythonSQLUtils.explainString(
                 clean._jdf.queryExecution(), "formatted"
@@ -77,9 +85,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         spark.stop()
         return 0
-    buckets = (
-        [int(b) for b in args.buckets.split(",")] if args.buckets else None
-    )
     res = pipeline.run(
         src,
         cfg,

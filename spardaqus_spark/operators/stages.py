@@ -115,7 +115,10 @@ def score_scrub(df: "DataFrame", cfg: PipelineConfig) -> "DataFrame":
 
 # pinned tokenizer (SURVEY §2.9.17): explicit ASCII whitespace class —
 # identical across this codegen stage, the oracle's pandas twin
-# (oracle.boilerplate_frac) and the boilerplate queries (queries_text.py)
+# (oracle.boilerplate_frac) and the tokenizing queries in queries_text.py
+# with their DuckDB twins. Explicit because the engines' \s defaults
+# disagree: pandas str.split() is Unicode-aware, and Java \s and RE2 \s
+# differ on \x0b.
 BOILERPLATE_WS = "[ \\t\\n\\r\\f\\x0B]+"
 
 
@@ -126,8 +129,7 @@ def with_boilerplate_frac(df: "DataFrame", cfg: PipelineConfig) -> "DataFrame":
     of the repo's distinct files; repos with < cfg.boilerplate_min_files
     files contribute no boilerplate; token-less files get 0.0).
 
-    Pure codegen, the q_boilerplate_scalable shape generalized to the
-    pipeline: explode tokens -> per-(file, token) occurrence counts ->
+    Pure codegen: explode tokens -> per-(file, token) occurrence counts ->
     doc-frequency per (repo, token) -> boilerplate set -> two sums per
     file -> left join back. Every shuffle key ((repo,path,commit,tok)
     then (repo,tok)) is high-cardinality and near-uniform, so no

@@ -695,8 +695,8 @@ def q_ann_ivf_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Independent DuckDB exact-cosine twin at the ANN gate — shared by both
-# checked ANN entries (like SQL_BOILERPLATE serves two queries), built
-# from the ONE pinned template (queries_text.COS_PAIRS_SQL). Gate on
+# checked ANN entries, built from the ONE pinned template
+# (queries_text.COS_PAIRS_SQL). Gate on
 # ROUND(raw, 4) >= tau to mirror _group_cosine_pairs / _exact_cos_pairs
 # exactly (probed: no midpoint or cut-boundary pairs at sf0.01).
 from .queries_text import COS_PAIRS_SQL as _COS_PAIRS_SQL  # noqa: E402

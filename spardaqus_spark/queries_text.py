@@ -1,7 +1,8 @@
 """Text-analysis / dedup / similarity coverage over `documents` and
 `embeddings` — the training-data-pipeline operator family (task brief):
-exact + n-gram-Jaccard dedup, fingerprinting, token counting, quality
-scoring, language heuristics, brute-force + bucketed cosine similarity.
+exact + n-gram-Jaccard dedup, fingerprinting, brute-force + bucketed
+cosine similarity, and the dataset-construction ops (repetition,
+decontamination, mixing, sampling, packing, the composed corpus build).
 
 SQL-oracle-expressible variants live here with their DuckDB twins; the
 model-backed / LSH variants (MinHash, SimHash, pipeline verdict) are in
@@ -45,86 +46,6 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(target)
 
 
-def q_doc_line_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pure-SQL heuristic metrics (the codegen'd fast path of §2.5
-    heuristics: max line len + alnum ratio per doc, aggregated by lang)."""
-    docs = load(spark, sf_dir, "documents")
-    lines = F.split(F.col("text"), "\n")
-    max_line = F.array_max(F.transform(lines, lambda x: F.length(x)))
-    alnum = F.length(F.regexp_replace("text", "[^A-Za-z0-9]", "")) / F.greatest(
-        F.length("text"), F.lit(1)
-    )
-    return (
-        docs.select("lang", max_line.alias("mll"), alnum.alias("ar"))
-        .groupBy("lang")
-        .agg(
-            F.max("mll").alias("max_line_len"),
-            F.round(F.avg("ar"), 4).alias("avg_alnum_ratio"),
-            F.count("*").alias("n_docs"),
-        )
-    )
-
-
-SQL_DOC_LINE_METRICS = """
-SELECT lang,
-       MAX(list_max(list_transform(str_split(text, chr(10)), x -> length(x)))) AS max_line_len,
-       ROUND(AVG(length(regexp_replace(text, '[^A-Za-z0-9]', '', 'g'))
-                 / GREATEST(length(text), 1)), 4) AS avg_alnum_ratio,
-       COUNT(*) AS n_docs
-FROM documents GROUP BY lang
-"""
-
-
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Whitespace tokenization + counts per source (token-counting op).
-
-    Tokenizer note: this r1-pinned query splits on \\s in BOTH engines;
-    Java \\s and RE2 \\s agree on everything except \\x0b (vertical tab),
-    absent from this corpus — documented ASCII-corpus assumption (ADVICE
-    r02). New queries use the explicit class [ \\t\\n\\r\\f\\x0b]+
-    instead (q_boilerplate_tokens, q_sequence_packing)."""
-    docs = load(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.trim(F.col("text")), "\\s+"))
-    return (
-        docs.groupBy("source")
-        .agg(
-            F.sum(toks.cast("bigint")).alias("total_tokens"),
-            F.round(F.avg(toks), 4).alias("avg_tokens"),
-        )
-    )
-
-
-SQL_TOKEN_COUNT = r"""
-SELECT source,
-       CAST(SUM(len(regexp_split_to_array(trim(text), '\s+'))) AS BIGINT) AS total_tokens,
-       ROUND(AVG(len(regexp_split_to_array(trim(text), '\s+'))), 4) AS avg_tokens
-FROM documents GROUP BY source
-"""
-
-
-def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-ish tokenization: GPT-2-style pretokenizer regex (word pieces,
-    number runs, punctuation runs) — the token-budget estimator a training
-    pipeline runs before spending real tokenizer cycles."""
-    docs = load(spark, sf_dir, "documents")
-    pat = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
-    toks = F.regexp_count("text", F.lit(pat))
-    return docs.groupBy("lang").agg(
-        F.sum(toks.cast("bigint")).alias("bpe_tokens"),
-        F.round(F.avg(toks), 4).alias("avg_bpe_tokens"),
-        F.count("*").alias("n_docs"),
-    )
-
-
-SQL_BPE_TOKENS = r"""
-SELECT lang,
-       CAST(SUM(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+'))) AS BIGINT) AS bpe_tokens,
-       ROUND(AVG(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+'))), 4) AS avg_bpe_tokens,
-       COUNT(*) AS n_docs
-FROM documents GROUP BY lang
-"""
-
-
 def q_rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash document fingerprint: min/max of the 8-char shingle
     hash stream (winnowing's two anchors) — cheap locality-sensitive
@@ -156,62 +77,6 @@ FROM (
   FROM (SELECT doc_id, regexp_replace(lower(text), '\s+', ' ', 'g') AS t
         FROM documents)
 )
-"""
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Composite quality score: length + punctuation ratio + uppercase
-    ratio (Gopher-style rule calibration surface)."""
-    docs = load(spark, sf_dir, "documents")
-    length = F.length("text")
-    punct = F.length(F.regexp_replace("text", "[^!-/:-@\\[-`{-~]", ""))
-    upper = F.length(F.regexp_replace("text", "[^A-Z]", ""))
-    score = (
-        F.least(length / F.lit(1000.0), F.lit(1.0))
-        - punct / F.greatest(length, F.lit(1)) * 0.5
-        - upper / F.greatest(length, F.lit(1)) * 0.25
-    )
-    return docs.select(
-        "doc_id", F.round(score, 4).alias("quality_score")
-    )
-
-
-SQL_QUALITY = """
-SELECT doc_id,
-       ROUND(LEAST(length(text) / 1000.0, 1.0)
-             - length(regexp_replace(text, '[^!-/:-@\\[-`{-~]', '', 'g'))
-               / GREATEST(length(text), 1) * 0.5
-             - length(regexp_replace(text, '[^A-Z]', '', 'g'))
-               / GREATEST(length(text), 1) * 0.25, 4) AS quality_score
-FROM documents
-"""
-
-
-def q_lang_stopword_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SQL-expressible language-ID heuristic: per-language stopword hit
-    counts (the codegen'd cousin of the hashed-trigram classifier)."""
-    docs = load(spark, sf_dir, "documents")
-    low = F.lower(F.col("text"))
-    en = F.regexp_count(low, F.lit(r"\b(the|and|of)\b"))
-    fr = F.regexp_count(low, F.lit(r"\b(le|la|et)\b"))
-    es = F.regexp_count(low, F.lit(r"\b(el|los|y)\b"))
-    return (
-        docs.select("lang", en.alias("en_hits"), fr.alias("fr_hits"), es.alias("es_hits"))
-        .groupBy("lang")
-        .agg(
-            F.sum(F.col("en_hits").cast("bigint")).alias("en_stopwords"),
-            F.sum(F.col("fr_hits").cast("bigint")).alias("fr_stopwords"),
-            F.sum(F.col("es_hits").cast("bigint")).alias("es_stopwords"),
-        )
-    )
-
-
-SQL_LANG_STOPWORD = r"""
-SELECT lang,
-       CAST(SUM(len(regexp_extract_all(lower(text), '\b(the|and|of)\b'))) AS BIGINT) AS en_stopwords,
-       CAST(SUM(len(regexp_extract_all(lower(text), '\b(le|la|et)\b'))) AS BIGINT) AS fr_stopwords,
-       CAST(SUM(len(regexp_extract_all(lower(text), '\b(el|los|y)\b'))) AS BIGINT) AS es_stopwords
-FROM documents GROUP BY lang
 """
 
 
@@ -646,9 +511,8 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed — one window shuffle keyed by source, never a global
     single-partition sort; at corpus scale `source` is the shard key.
     Tokenizer: EXPLICIT ASCII whitespace class (the boilerplate pin,
-    SURVEY §2.9.17) — NOT q_token_count's legacy \\s, because Java \\s
-    and RE2 \\s disagree on \\x0b — and EMPTY tokens removed after the
-    split, because a trailing newline (most real files) or empty text
+    SURVEY §2.9.17) — NOT \\s, because Java \\s and RE2 \\s disagree
+    on \\x0b — and EMPTY tokens removed after the split, because a trailing newline (most real files) or empty text
     otherwise counts a phantom token and a one-token drift shifts every
     downstream bin (code-review r3 ×2)."""
     docs = load(spark, sf_dir, "documents").select("source", "doc_id", "text")
@@ -939,107 +803,6 @@ SELECT query_id, nbr_id, cos, rk FROM (
 """
 
 
-def q_boilerplate_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """applyInPandas grouped-map (SURVEY §2.4): per-source boilerplate —
-    lowercased words present in >= 80% of the source's docs (per-source
-    stop-tokens). The cross-file-context op the row-local pipeline can't
-    express; per-repo boilerplate detection at corpus scale is this exact
-    shape with repo as the key. (Whole-LINE sharing is zero in this
-    corpus — measured — so the word grain keeps the check non-vacuous.)
-    Pinned: words = ASCII-whitespace-split ([ \\t\\n\\r\\f\\x0b]+) of
-    lowercased text, counted once per doc, frac rounded to 4. The split
-    class is EXPLICIT in all three engines (pandas here, Java regex in
-    q_boilerplate_scalable, RE2 in SQL_BOILERPLATE) because their \\s
-    defaults disagree on Unicode whitespace (pandas str.split() is
-    Unicode-aware; Java \\s and RE2 \\s are ASCII-ish but differ on
-    \\x0b) — ADVICE r02."""
-    import pandas as pd
-
-    docs = load(spark, sf_dir, "documents").select("source", "doc_id", "text")
-    schema = "source string, word string, n_docs bigint, frac double"
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        total = pdf["doc_id"].nunique()
-        words = (
-            pdf["text"]
-            .fillna("")
-            .str.lower()
-            .str.split(r"[ \t\n\r\f\x0b]+", regex=True)
-        )
-        ex = words.explode()
-        d = pd.DataFrame(
-            {"doc": pdf["doc_id"].reindex(ex.index).to_numpy(), "word": ex.to_numpy()}
-        )
-        d = d[d["word"].notna() & (d["word"] != "")].drop_duplicates()
-        cnt = d.groupby("word")["doc"].nunique()
-        hit = cnt[cnt / total >= 0.8]
-        return pd.DataFrame(
-            {
-                "source": pdf["source"].iloc[0],
-                "word": hit.index,
-                "n_docs": hit.to_numpy(),
-                "frac": (hit / total).round(4).to_numpy(),
-            }
-        )
-
-    return docs.groupBy("source").applyInPandas(fn, schema)
-
-
-SQL_BOILERPLATE = r"""
-WITH ex AS (
-  SELECT DISTINCT source, doc_id,
-         unnest(regexp_split_to_array(trim(lower(text)), '[ \t\n\r\f\x0B]+')) AS word
-  FROM documents
-), nb AS (
-  SELECT * FROM ex WHERE word <> ''
-), totals AS (
-  SELECT source, COUNT(DISTINCT doc_id) AS total FROM documents GROUP BY source
-)
-SELECT nb.source, word,
-       COUNT(DISTINCT doc_id) AS n_docs,
-       ROUND(COUNT(DISTINCT doc_id) * 1.0 / MAX(total), 4) AS frac
-FROM nb JOIN totals ON nb.source = totals.source
-GROUP BY nb.source, word
-HAVING COUNT(DISTINCT doc_id) * 1.0 / MAX(total) >= 0.8
-"""
-
-
-def q_boilerplate_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100-TB shape of q_boilerplate_tokens: identical semantics (same
-    oracle SQL), but pure codegen — explode words -> distinct (source,
-    doc, word) -> two-phase count per (source, word) -> broadcast-join
-    per-source totals -> frac filter. No applyInPandas, so a mega-source
-    can never pin one Python task: every shuffle key here ((source, doc,
-    word) then (source, word)) is high-cardinality and near-uniform. The
-    grouped-map twin stays as the §2.4 coverage entry; THIS is the form
-    to run per-repo at corpus scale."""
-    docs = load(spark, sf_dir, "documents").select("source", "doc_id", "text")
-    words = docs.select(
-        "source",
-        "doc_id",
-        F.explode(
-            # explicit ASCII whitespace class — pinned identically across
-            # the pandas twin and the RE2 oracle (see q_boilerplate_tokens)
-            F.split(F.trim(F.lower(F.col("text"))), BOILERPLATE_WS)
-        ).alias("word"),
-    ).filter(F.col("word") != "")
-    per_doc = words.dropDuplicates(["source", "doc_id", "word"])
-    counts = per_doc.groupBy("source", "word").agg(
-        F.countDistinct("doc_id").alias("n_docs")
-    )
-    totals = docs.groupBy("source").agg(
-        F.countDistinct("doc_id").alias("total")
-    )
-    return (
-        counts.join(F.broadcast(totals), "source")
-        .withColumn("frac_raw", F.col("n_docs") / F.col("total"))
-        .filter(F.col("frac_raw") >= 0.8)
-        .select(
-            "source", "word", "n_docs", F.round("frac_raw", 4).alias("frac")
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # r3 continuation: four more training-data pipeline ops (task brief / SURVEY
 # §2.10) — repetition filtering, benchmark decontamination, source mixing
@@ -1311,84 +1074,3 @@ SELECT doc_id, lang,
 FROM documents
 ORDER BY doc_id
 """.replace("@STRAT", STRAT_PRED_SQL)
-
-
-def q_quality_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-stratified corpus binning (the curriculum / quality-mix
-    step a pretraining pipeline runs after scoring): EXACT quartile
-    thresholds of the quality score, each doc assigned its quartile
-    bucket, per-bucket count + score stats. Thresholds are exact
-    percentile_cont in BOTH engines — probed bit-identical (linear
-    interpolation over identically-computed doubles), so bucket
-    boundaries cannot drift between the twins.
-
-    Scale: narrow scan -> ONE single-row exact-percentile aggregate
-    (sort-based within the agg, only 3 doubles reach the driver side of
-    the plan) broadcast back -> one groupBy(bucket) over 4 keys. The
-    4-row output sort is trivial. avg rounds to 4 like every float
-    aggregate (double-sum order drift is far below 1e-4 at any count).
-    r6: spread — the three score regexes run twice over the corpus (th +
-    binning side) and both passes sat in the single scan task (no-op at
-    scale)."""
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id")
-    length = F.length("text")
-    punct = F.length(F.regexp_replace("text", "[^!-/:-@\\[-`{-~]", ""))
-    upper = F.length(F.regexp_replace("text", "[^A-Z]", ""))
-    score = (
-        F.least(length / F.lit(1000.0), F.lit(1.0))
-        - punct / F.greatest(length, F.lit(1)) * 0.5
-        - upper / F.greatest(length, F.lit(1)) * 0.25
-    )
-    d = docs.select("doc_id", score.alias("qs"))
-    th = d.agg(
-        F.percentile("qs", 0.25).alias("t1"),
-        F.percentile("qs", 0.50).alias("t2"),
-        F.percentile("qs", 0.75).alias("t3"),
-    )
-    bucket = (
-        F.when(F.col("qs") <= F.col("t1"), F.lit("q1_low"))
-        .when(F.col("qs") <= F.col("t2"), F.lit("q2"))
-        .when(F.col("qs") <= F.col("t3"), F.lit("q3"))
-        .otherwise(F.lit("q4_high"))
-    )
-    return (
-        d.crossJoin(F.broadcast(th))
-        .select(bucket.alias("bucket"), "qs")
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.round(F.avg("qs"), 4).alias("avg_qs"),
-            F.round(F.min("qs"), 4).alias("min_qs"),
-            F.round(F.max("qs"), 4).alias("max_qs"),
-        )
-        .orderBy("bucket")
-    )
-
-
-SQL_QUALITY_BINNING = r"""
-WITH s AS (
-  SELECT doc_id,
-         LEAST(length(text) / 1000.0, 1.0)
-         - length(regexp_replace(text, '[^!-/:-@\[-`{-~]', '', 'g'))
-           / GREATEST(length(text), 1) * 0.5
-         - length(regexp_replace(text, '[^A-Z]', '', 'g'))
-           / GREATEST(length(text), 1) * 0.25 AS qs
-  FROM documents
-), th AS (
-  SELECT CAST(quantile_cont(qs, 0.25) AS DOUBLE) AS t1,
-         CAST(quantile_cont(qs, 0.50) AS DOUBLE) AS t2,
-         CAST(quantile_cont(qs, 0.75) AS DOUBLE) AS t3
-  FROM s
-)
-SELECT CASE WHEN qs <= t1 THEN 'q1_low'
-            WHEN qs <= t2 THEN 'q2'
-            WHEN qs <= t3 THEN 'q3'
-            ELSE 'q4_high' END AS bucket,
-       COUNT(*) AS n_docs,
-       ROUND(AVG(qs), 4) AS avg_qs,
-       ROUND(MIN(qs), 4) AS min_qs,
-       ROUND(MAX(qs), 4) AS max_qs
-FROM s, th
-GROUP BY 1
-ORDER BY bucket
-"""

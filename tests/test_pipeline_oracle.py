@@ -210,6 +210,50 @@ def test_boilerplate_stage_matches_oracle(spark, corpus_sdf, corpus_pdf):
     assert j["rule_hits_s"].map(lambda h: "boilerplate" in h).any()
 
 
+def test_boilerplate_stage_tokenizer_edges(spark):
+    """The pinned ASCII-whitespace tokenizer at its edges, Spark stage vs
+    pandas twin, exact float equality: tokens split only by \\x0b, \\f or
+    \\r\\n, leading and trailing newlines, a no-break space that splits
+    nothing, upper case. Repo ``b``'s whitespace-only, empty and null
+    files hold no token but still count as files, so ``x`` (in 4 of 7)
+    is not boilerplate there; repo ``c`` is below boilerplate_min_files."""
+    from spardaqus_spark.operators import stages
+
+    rows = [
+        ("a", "1", "import os\x0bdef main\fpass\r\nreturn\u00a0x"),
+        ("a", "2", "\n\nimport os\ndef helper\n\n"),
+        ("a", "3", "IMPORT\tOS\r\ndef\x0bfoo\n"),
+        ("a", "4", "import os def"),
+        ("b", "1", "x one two"),
+        ("b", "2", "x\x0btwo"),
+        ("b", "3", "x\ftwo"),
+        ("b", "4", "\r\nx\r\n"),
+        ("b", "5", " \t\n\x0b\f\r\n "),
+        ("b", "6", ""),
+        ("b", "7", None),
+        ("c", "1", "import os def"),
+    ]
+    pdf = pd.DataFrame(
+        [(r, p, "c0", t) for r, p, t in rows],
+        columns=["repo", "path", "commit", "content"],
+    )
+    cfg = default_config()
+    want = pdf[["repo", "path", "commit"]].assign(
+        boilerplate_frac=oracle.boilerplate_frac(pdf).to_numpy()
+    )
+    assert ((want["boilerplate_frac"] > 0) & (want["boilerplate_frac"] < 1)).any()
+    sdf = spark.createDataFrame(
+        pdf, "repo string, path string, commit string, content string"
+    )
+    got = (
+        stages.with_boilerplate_frac(sdf, cfg)
+        .select("repo", "path", "commit", "boilerplate_frac")
+        .toPandas()
+    )
+    j = _join(want, got)
+    assert (j["boilerplate_frac_o"] == j["boilerplate_frac_s"]).all(), j
+
+
 def _lineage(v, cfg, run_id="t"):
     """The run's lineage rows from one ledger over ``v``, write counts
     derived from the ledger (no sink to read back)."""

@@ -26,7 +26,6 @@ CARTESIAN_OK = {
     "cosine_topk",        # 5-row query side, crossJoin by design
     "embedding_near_dup", # pinned exact O(n^2) baseline; LSH twin scales
     "mixing_weights",     # 1-row global-mean broadcast (scalar-subquery shape)
-    "quality_binning",    # 1-row quartile-threshold broadcast (same shape)
     # r4 checked ANN forms: the exact verification side (_exact_cos_pairs)
     # is the same pinned O(n^2) twin as embedding_near_dup — it exists to
     # make the approximate path driver-checkable at small sf; the raw

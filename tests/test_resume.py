@@ -5,8 +5,11 @@ byte-for-byte, and that resume reprocesses only the missing buckets."""
 from __future__ import annotations
 
 import json
+import os
 import re
 import shutil
+import subprocess
+import sys
 from pathlib import Path
 
 import pandas as pd
@@ -20,6 +23,7 @@ from spardaqus_spark.plans import checkpoint as ckpt
 from spardaqus_spark.plans import lineage as lin
 
 CFG = default_config(num_buckets=8)
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _lineage_files(run_dir, run_id="*"):
@@ -287,6 +291,38 @@ def test_old_per_bucket_manifests_are_rejected(corpus_sdf, tmp_path):
     with pytest.raises(ValueError, match=re.escape(str(old.parent))):
         pipeline.run(corpus_sdf, CFG, run_dir=tmp_path, run_id="new")
     assert sorted(tmp_path.rglob("*")) == [old.parent, old]
+
+
+def test_explain_prints_the_resumed_plan(corpus_pdf, tmp_path):
+    """``main.py --explain`` prints the plan ``run()`` would execute: on a
+    run dir with a committed attempt and a ``--buckets`` whitelist, the
+    plan prunes both right after the dedup window. ``main`` starts and
+    stops its own session, so it runs in a subprocess."""
+    src = tmp_path / "files.parquet"
+    corpus_pdf[["repo", "path", "commit", "lang", "content"]].head(60).to_parquet(
+        src, index=False
+    )
+    run_dir = tmp_path / "run"
+    ckpt.commit_bucket(
+        run_dir, "attempt-old-0000abcd", "old", {0: 5, 3: 7},
+        str(run_dir / "files_clean"),
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_GATEWAY_PORT"}
+    env.update(SPARK_GRAFT_MASTER="local[1]", SPARK_GRAFT_DRIVER_MEM="1g")
+    proc = subprocess.run(
+        [
+            sys.executable, str(REPO / "main.py"),
+            "--config", str(REPO / "conf" / "pipeline.yaml"),
+            "--input", str(src),
+            "--run-dir", str(run_dir),
+            "--buckets", "3,5",
+            "--explain",
+        ],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert re.search(r"NOT bucket#\d+ IN \(0,3\)", proc.stdout), proc.stdout
+    assert re.search(r"\bbucket#\d+ IN \(3,5\)", proc.stdout), proc.stdout
 
 
 def test_write_lineage_matches_manifests(spark, corpus_sdf, tmp_path):
