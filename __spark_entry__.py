@@ -1,8 +1,9 @@
 """Harness contract for the PySpark package.
 
 entry(spark)   -> flagship: the real quality pipeline over sf0.001 documents.
-queries()      -> the pipeline and its text, dedup, near-dup and embedding
-                  family over the `documents` / `embeddings` tables,
+queries()      -> the pipeline, the corpus build with its sequence packer,
+                  and the fingerprint, dedup, near-dup and embedding
+                  families over the `documents` / `embeddings` tables,
                   grouped by family.
 oracle_sql()   -> DuckDB twins for every SQL-expressible query; model-backed
                   / sketch ops (pipeline, simhash, streaming band profile)
@@ -40,9 +41,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
-        # --- the pipeline and the composed corpus build ---
+        # --- the pipeline, the composed corpus build and its packer ---
         "pipeline_documents": QM.q_pipeline_documents,
         "corpus_build": QT.q_corpus_build,
+        "sequence_packing": QT.q_sequence_packing,
         # --- fingerprints and exact dedup ---
         "fingerprint": QT.q_fingerprint,
         "rolling_fingerprint": QT.q_rolling_fingerprint,
@@ -62,13 +64,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_dedup_keep": QT.q_embedding_dedup_keep,
         "ann_lsh_cosine": QM.q_ann_lsh_checked,
         "ann_ivf_cosine": QM.q_ann_ivf_checked,
-        # --- dataset construction ---
-        "repetition_metrics": QT.q_repetition_metrics,
-        "train_val_split": QT.q_train_val_split,
-        "sequence_packing": QT.q_sequence_packing,
-        "decontamination": QT.q_decontamination,
-        "mixing_weights": QT.q_mixing_weights,
-        "stratified_sample": QT.q_stratified_sample,
     }
 
 
@@ -78,7 +73,7 @@ def oracle_sql() -> dict[str, str]:
         # intentionally omitted — model- or sketch-backed, not
         # ANSI-SQL-expressible (SURVEY §3.2).
         "corpus_build": QT.SQL_CORPUS_BUILD,
-        "repetition_metrics": QT.SQL_REPETITION_METRICS,
+        "sequence_packing": QT.SQL_SEQUENCE_PACKING,
         "fingerprint": QT.SQL_FINGERPRINT,
         "rolling_fingerprint": QT.SQL_ROLLING_FP,
         "dedup_exact_docs": QT.SQL_DEDUP_EXACT,
@@ -99,9 +94,4 @@ def oracle_sql() -> dict[str, str]:
         "embedding_dedup_keep": QT.SQL_EMB_DEDUP_KEEP,
         "ann_lsh_cosine": QM.SQL_ANN_CHECKED,
         "ann_ivf_cosine": QM.SQL_ANN_CHECKED,
-        "train_val_split": QT.SQL_TRAIN_VAL_SPLIT,
-        "sequence_packing": QT.SQL_SEQUENCE_PACKING,
-        "decontamination": QT.SQL_DECONTAMINATION,
-        "mixing_weights": QT.SQL_MIXING_WEIGHTS,
-        "stratified_sample": QT.SQL_STRATIFIED_SAMPLE,
     }

@@ -119,7 +119,6 @@ def run(
     run_id = run_id or uuid.uuid4().hex[:12]
     run_dir = Path(run_dir)
     lineage_dir = run_dir / "lineage"
-    ckpt.check_layout(run_dir)
 
     v = build_verdict_frame(
         df, cfg, run_dir=run_dir, bucket_whitelist=bucket_whitelist

@@ -136,10 +136,15 @@ def filter_resume(
     """Keep the rows of buckets still to process: drop the buckets
     committed under ``run_dir`` and, if ``only`` is given, every bucket
     outside it. A codegen'd literal predicate (at most ``num_buckets``
-    values), or ``df`` itself when nothing is pruned."""
+    values), or ``df`` itself when nothing is pruned. A ``run_dir`` in an
+    older layout is refused first (``check_layout``), so ``run()`` and
+    ``main.py --explain`` both refuse it before any plan exists."""
     from pyspark.sql import functions as F
 
-    done = done_buckets(run_dir) if run_dir is not None else []
+    done = []
+    if run_dir is not None:
+        check_layout(run_dir)
+        done = done_buckets(run_dir)
     if done:
         df = df.filter(~F.col("bucket").isin(done))
     if only is not None:

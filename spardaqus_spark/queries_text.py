@@ -1,8 +1,8 @@
 """Text-analysis / dedup / similarity coverage over `documents` and
 `embeddings` — the training-data-pipeline operator family (task brief):
 exact + n-gram-Jaccard dedup, fingerprinting, brute-force + bucketed
-cosine similarity, and the dataset-construction ops (repetition,
-decontamination, mixing, sampling, packing, the composed corpus build).
+cosine similarity, sequence packing and the composed corpus build
+(near-dedup removal, stratified sampling, packing).
 
 SQL-oracle-expressible variants live here with their DuckDB twins; the
 model-backed / LSH variants (MinHash, SimHash, pipeline verdict) are in
@@ -430,41 +430,6 @@ WHERE e.vec_id NOT IN (SELECT v FROM mins WHERE v <> rep)
 """.replace("@V", COS_V_CTE).replace("@P", COS_P_CTE)
 
 
-def q_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic hash-based train/val split — the assignment step a
-    training-data pipeline runs after filtering: each doc's split is a
-    pure function of its id (md5, engine-portable), so any re-run, any
-    engine, and any subset of the corpus assigns identically (no
-    coordination, no sampling state). val <=> first md5 hex byte <
-    0x0d (13/256 ~ 5.08%); hex-string comparison is identical in Spark
-    and DuckDB, no integer conversion needed. Reported per source so the
-    oracle checks both the counts and the rate."""
-    docs = load(spark, sf_dir, "documents").select("source", "doc_id")
-    h = F.md5(F.concat(F.lit("split:"), F.col("doc_id").cast("string")))
-    is_val = (F.substring(h, 1, 2) < F.lit("0d")).cast("long")
-    return (
-        docs.withColumn("iv", is_val)
-        .groupBy("source")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("iv").alias("n_val"),
-            F.round(F.avg(F.col("iv").cast("double")), 4).alias("val_frac"),
-        )
-        .orderBy("source")
-    )
-
-
-SQL_TRAIN_VAL_SPLIT = """
-SELECT source,
-       COUNT(*) AS n_docs,
-       CAST(SUM(CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < '0d'
-                     THEN 1 ELSE 0 END) AS BIGINT) AS n_val,
-       ROUND(AVG(CASE WHEN substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < '0d'
-                      THEN 1.0 ELSE 0.0 END), 4) AS val_frac
-FROM documents GROUP BY source ORDER BY source
-"""
-
-
 PACK_BUDGET = 2048  # tokens per bin — pinned with the SQL fragment below
 
 
@@ -545,11 +510,10 @@ SQL_SEQUENCE_PACKING = (
 
 
 def stratified_keep_cond():
-    """THE stratified-sampling keep predicate (per-lang md5 hex rates:
-    en -> 25%, others -> 75%), shared by q_stratified_sample and
-    q_corpus_build with STRAT_PRED_SQL as its SQL twin (code-review r4:
-    a rate re-pin edited in one copy would silently diverge the
-    composite from the operator it claims to compose)."""
+    """THE stratified-sampling keep predicate of q_corpus_build (per-lang
+    md5 hex rates: substr(md5, 1, 2) < '40' keeps 64/256 = 25% of en,
+    < 'c0' keeps 192/256 = 75% of every other lang), with STRAT_PRED_SQL
+    as its SQL twin: engine-portable, re-run-stable, no sampling state."""
     h = F.md5(F.concat(F.lit("strat:"), F.col("doc_id").cast("string")))
     thr = F.when(F.col("lang") == "en", F.lit("40")).otherwise(F.lit("c0"))
     return F.substring(h, 1, 2) < thr
@@ -801,276 +765,3 @@ SELECT query_id, nbr_id, cos, rk FROM (
   FROM pairs
 ) WHERE rk <= 5
 """
-
-
-# ---------------------------------------------------------------------------
-# r3 continuation: four more training-data pipeline ops (task brief / SURVEY
-# §2.10) — repetition filtering, benchmark decontamination, source mixing
-# weights, stratified sampling. All thresholds calibrated NON-VACUOUS against
-# sf0.01 (see each docstring); all tokenizers use the pinned explicit ASCII
-# whitespace class (SURVEY §2.9.17).
-# ---------------------------------------------------------------------------
-
-def q_repetition_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition filter: per-doc duplicate-token fraction
-    (1 - distinct/total) and top-2-gram fraction (most frequent token
-    bigram's share of all bigrams); a doc is flagged when either exceeds
-    its threshold. Thresholds calibrated on sf0.01: dup>0.65 flags 99,
-    top2>0.11 flags 9, union 108 of 500 — non-vacuous both ways.
-
-    Scale: one explode + two hash aggs on (doc_id[, gram]) — map-side
-    partial aggregation applies, no skew (gram cardinality is huge).
-    Floats are single int/int double divisions (bit-identical across
-    engines, no rounding — the boilerplate_frac precedent).
-    r6: spread — the tokenize + bigram explode ran in the single scan
-    task (no-op at scale)."""
-    docs = spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
-    )
-    toks = F.array_remove(F.split(F.col("text"), BOILERPLATE_WS), "")
-    d = (
-        docs.select("doc_id", toks.alias("toks"))
-        .withColumn("n_tok", F.size("toks").cast("long"))
-    )
-    dup = F.when(
-        F.col("n_tok") > 0,
-        F.lit(1.0) - F.size(F.array_distinct("toks")).cast("double") / F.col("n_tok"),
-    ).otherwise(F.lit(0.0))
-    grams = d.filter(F.col("n_tok") >= 2).select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), (F.col("n_tok") - 1).cast("int")),
-                lambda i: F.concat_ws(
-                    " ", F.element_at("toks", i), F.element_at("toks", i + 1)
-                ),
-            )
-        ).alias("gram"),
-    )
-    c = grams.groupBy("doc_id", "gram").agg(F.count("*").alias("n"))
-    tg = c.groupBy("doc_id").agg(
-        (F.max("n") * F.lit(1.0) / F.sum("n")).alias("t2")
-    )
-    t2 = F.coalesce("t2", F.lit(0.0))
-    return (
-        d.select("doc_id", "n_tok", dup.alias("dup_tok_frac"))
-        .join(tg, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tok",
-            "dup_tok_frac",
-            t2.alias("top2gram_frac"),
-            ((F.col("dup_tok_frac") > 0.65) | (t2 > 0.11))
-            .cast("long")
-            .alias("flagged"),
-        )
-    )
-
-
-SQL_REPETITION_METRICS = r"""
-WITH t AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(text, '[ \t\n\r\f\x0B]+'),
-                     x -> x <> '') AS toks
-  FROM documents
-), m AS (
-  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tok,
-         CASE WHEN len(toks) = 0 THEN 0.0
-              ELSE 1.0 - len(list_distinct(toks)) * 1.0 / len(toks) END
-           AS dup_tok_frac,
-         toks
-  FROM t
-), g AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, len(toks)),
-                               i -> toks[i] || ' ' || toks[i + 1])) AS gram
-  FROM m WHERE len(toks) >= 2
-), c AS (
-  SELECT doc_id, gram, count(*) AS n FROM g GROUP BY 1, 2
-), tg AS (
-  SELECT doc_id, max(n) * 1.0 / sum(n) AS t2 FROM c GROUP BY 1
-)
-SELECT m.doc_id, m.n_tok, m.dup_tok_frac,
-       COALESCE(tg.t2, 0.0) AS top2gram_frac,
-       CAST(CASE WHEN m.dup_tok_frac > 0.65 OR COALESCE(tg.t2, 0.0) > 0.11
-                 THEN 1 ELSE 0 END AS BIGINT) AS flagged
-FROM m LEFT JOIN tg USING (doc_id)
-ORDER BY doc_id
-"""
-
-
-def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: the eval set is the deterministic slice
-    doc_id % 10 == 0 (a stand-in for a held-out benchmark); a training doc
-    is contaminated when it shares ANY 8-token gram with any eval doc
-    (the GPT-3/PaLM n-gram-overlap rule). Returns every training doc with
-    its shared-gram count. sf0.01: 6 of 450 contaminated — non-vacuous.
-
-    Scale: with a REAL external benchmark table the eval-gram set is tiny
-    (benchmarks are MBs, corpora are TBs) and should be broadcast by the
-    caller; this query's %10 stand-in slice grows with the corpus, so the
-    join carries no hint and AQE decides at runtime. The per-doc distinct
-    + count aggregate on (doc_id, gram) partial-aggregates map-side.
-    r6: spread — the 8-gram explode ran in the single scan task (no-op at
-    scale)."""
-    docs = spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
-    )
-    toks = F.array_remove(F.split(F.col("text"), BOILERPLATE_WS), "")
-    d = docs.select("doc_id", toks.alias("toks")).withColumn(
-        "n", F.size("toks")
-    )
-    grams = (
-        d.filter(F.col("n") >= 8)
-        .select(
-            "doc_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.col("n") - 7),
-                    lambda i: F.array_join(F.slice("toks", i, 8), " "),
-                )
-            ).alias("gram"),
-        )
-        .distinct()
-    )
-    # NO broadcast hint: the %10 stand-in eval slice grows WITH the corpus,
-    # so a forced broadcast would blow past the broadcast limit at scale
-    # (code-review r3 ×2) — AQE picks broadcast at runtime whenever the
-    # built side is actually small. With a real external benchmark table
-    # (MB-scale by nature) the caller should add F.broadcast explicitly.
-    ev = grams.filter(F.col("doc_id") % 10 == 0).select("gram").distinct()
-    hits = (
-        grams.filter(F.col("doc_id") % 10 != 0)
-        .join(ev, "gram")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n"))
-    )
-    train = d.filter(F.col("doc_id") % 10 != 0).select("doc_id")
-    n = F.coalesce("n", F.lit(0)).cast("long")
-    return (
-        train.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            n.alias("n_shared_8grams"),
-            (n > 0).cast("long").alias("contaminated"),
-        )
-    )
-
-
-SQL_DECONTAMINATION = r"""
-WITH t AS (
-  SELECT doc_id,
-         list_filter(regexp_split_to_array(text, '[ \t\n\r\f\x0B]+'),
-                     x -> x <> '') AS toks
-  FROM documents
-), g AS (
-  SELECT DISTINCT doc_id, gram FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(toks) - 6),
-                  i -> list_aggregate(toks[i:i+7], 'string_agg', ' '))) AS gram
-    FROM t WHERE len(toks) >= 8
-  )
-), ev AS (
-  SELECT DISTINCT gram FROM g WHERE doc_id % 10 = 0
-), hits AS (
-  SELECT g.doc_id, count(*) AS n
-  FROM g JOIN ev USING (gram)
-  WHERE g.doc_id % 10 <> 0
-  GROUP BY 1
-)
-SELECT t.doc_id,
-       CAST(COALESCE(hits.n, 0) AS BIGINT) AS n_shared_8grams,
-       CAST(CASE WHEN COALESCE(hits.n, 0) > 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS contaminated
-FROM t LEFT JOIN hits ON t.doc_id = hits.doc_id
-WHERE t.doc_id % 10 <> 0
-ORDER BY t.doc_id
-"""
-
-
-def q_mixing_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source mixing weights: downsample every source to the mean
-    per-source token count (rate = min(1, mean/n_tok)) — the sampling
-    plan a pretraining mix computes before materializing shards. Using
-    the CURRENT mean as the target makes the query scale-free: at every
-    sf, below-mean sources keep rate 1.0 and above-mean sources get a
-    fractional rate (non-vacuous by construction unless all equal).
-
-    Scale: one narrow groupBy(source) agg + a broadcast of the 1-row
-    global mean. The mean is computed as exact-int sum/count in BOTH
-    engines (never AVG: accumulation order could drift) — a single
-    double division, then round(6)/round(4) on the outputs.
-
-    A zero-token source gets rate 1.0 by EXPLICIT branch: under Spark 4's
-    ANSI default, mean/0 THROWS at runtime (it is not NULL) — the edge-
-    corpus test caught a whole-job crash here (tests/test_edge_corpus.py)."""
-    docs = load(spark, sf_dir, "documents").select("source", "text")
-    n_tok = F.size(F.array_remove(F.split(F.col("text"), BOILERPLATE_WS), ""))
-    s = (
-        docs.select("source", n_tok.alias("nt"))
-        .groupBy("source")
-        .agg(F.sum("nt").cast("long").alias("n_tok"))
-    )
-    tot = s.agg(
-        (F.sum("n_tok") * F.lit(1.0) / F.count("*")).alias("mean_tok")
-    )
-    rate = F.when(F.col("n_tok") == 0, F.lit(1.0)).otherwise(
-        F.least(F.lit(1.0), F.col("mean_tok") / F.col("n_tok"))
-    )
-    return (
-        s.crossJoin(F.broadcast(tot))
-        .select(
-            "source",
-            "n_tok",
-            F.round(rate, 6).alias("sample_rate"),
-            F.round(F.col("n_tok") * rate, 4).alias("expected_tok"),
-        )
-        .orderBy("source")
-    )
-
-
-SQL_MIXING_WEIGHTS = r"""
-WITH s AS (
-  SELECT source,
-         CAST(SUM(len(list_filter(
-               regexp_split_to_array(text, '[ \t\n\r\f\x0B]+'),
-               x -> x <> ''))) AS BIGINT) AS n_tok
-  FROM documents GROUP BY source
-), tot AS (
-  SELECT SUM(n_tok) * 1.0 / COUNT(*) AS mean_tok FROM s
-)
-SELECT s.source, s.n_tok,
-       ROUND(CASE WHEN s.n_tok = 0 THEN 1.0
-                  ELSE LEAST(1.0, tot.mean_tok / s.n_tok) END, 6) AS sample_rate,
-       ROUND(s.n_tok * CASE WHEN s.n_tok = 0 THEN 1.0
-                            ELSE LEAST(1.0, tot.mean_tok / s.n_tok) END, 4)
-         AS expected_tok
-FROM s, tot
-ORDER BY source
-"""
-
-
-def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling: per-language keep rates (en is
-    over-represented at ~44% of sf0.01 docs -> 25%; every other lang ->
-    75%), decided per doc by an md5 hex-prefix compare (the
-    train_val_split convention — engine-portable, re-run-stable, no
-    sampling state). substr(md5,1,2) < '40' is 64/256 = 25%; < 'c0' is
-    192/256 = 75%. Returns the per-doc keep decision.
-
-    Scale: pure narrow projection — no shuffle at all beyond the output
-    sort; the keep decision is a pure function of (doc_id, lang)."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "lang")
-    return docs.select(
-        "doc_id",
-        "lang",
-        stratified_keep_cond().cast("long").alias("kept"),
-    )
-
-
-SQL_STRATIFIED_SAMPLE = """
-SELECT doc_id, lang,
-       CAST(CASE WHEN @STRAT THEN 1 ELSE 0 END AS BIGINT) AS kept
-FROM documents
-ORDER BY doc_id
-""".replace("@STRAT", STRAT_PRED_SQL)

@@ -1,15 +1,14 @@
-"""Edge-corpus parity for the r3-continuation training ops: run each
-Spark query AND its DuckDB oracle over a hand-built pathological
-`documents` table (empty text, whitespace-only, single token, all-equal
-tokens, sub-8-token docs, a planted eval/train shared 8-gram, unknown
-lang, a zero-token source) and require the driver-grade canonical match.
+"""Edge-corpus parity for the tokenizer users among the queries: run
+`sequence_packing` and `corpus_build` on Spark AND through their DuckDB
+oracles over a hand-built pathological `documents` table (empty text,
+whitespace-only text, a single token, all-equal tokens, sub-8-token
+docs, an unknown lang, a zero-token source) and require the strict
+canonical match of test_queries.
 
 The sf0.01 parity test (test_queries.py) proves the twins agree on the
-REAL corpus; this proves they agree where the edge semantics live —
-0/0 guards, empty-gram coalesces, the zero-token-source branch (under
-Spark 4 ANSI an unguarded mean/0 THROWS — the explicit CASE/when branch
-exists because this test caught that crash), and the eval-slice
-exclusion."""
+REAL corpus; this proves they agree where the edge semantics live — the
+pinned ASCII-whitespace split, the removal of empty tokens and the
+packer's exclusive running sum over zero-token docs."""
 
 from __future__ import annotations
 
@@ -21,20 +20,18 @@ import __spark_entry__ as entrymod
 
 from test_queries import _canon
 
-# doc_id % 10 == 0 rows are the decontamination eval slice.
-# doc 0 (eval) and doc 1 (train) share the 8-token run "q w e r t y u i".
 _DOCS = pd.DataFrame(
     {
         "doc_id": [0, 1, 2, 3, 4, 5, 6, 11],
         "text": [
-            "q w e r t y u i o p",          # eval doc, 10 tokens
-            "z z q w e r t y u i",           # train: shares 8-gram with eval
+            "q w e r t y u i o p",          # 10 tokens
+            "z z q w e r t y u i",           # 10 tokens, shares a run with doc 0
             "",                               # empty text
             " \t\n ",                         # whitespace-only -> 0 tokens
-            "lonely",                         # single token: no 2-grams
-            "a a a a a a",                    # all-equal: dup=5/6, top2=1.0
-            "seven short tokens only here now x",  # 7 tokens: no 8-grams
-            "unique words entirely here believe me truly",  # train, clean
+            "lonely",                         # single token
+            "a a a a a a",                    # all-equal tokens
+            "seven short tokens only here now x",  # 7 tokens
+            "unique words entirely here believe me truly",
         ],
         "lang": ["en", "en", "xx", "fr", "en", "es", "en", "de"],
         "source": ["s1", "s1", "s_empty", "s_empty", "s2", "s2", "s2", "s2"],
@@ -42,7 +39,7 @@ _DOCS = pd.DataFrame(
 )
 _DOCS["n_chars"] = _DOCS["text"].str.len().astype("int64")
 
-_OPS = ["repetition_metrics", "decontamination", "mixing_weights", "stratified_sample"]
+_OPS = ["sequence_packing", "corpus_build"]
 
 
 @pytest.fixture(scope="module")
@@ -67,30 +64,17 @@ def test_edge_corpus_parity(spark, edge_dir, name):
 
 
 def test_edge_corpus_semantics(spark, edge_dir):
-    """Spot-check the intended edge behaviors (not just parity)."""
-    q = entrymod.queries()
-
-    rep = q["repetition_metrics"](spark, edge_dir).toPandas().set_index("doc_id")
-    assert rep.loc[2, "n_tok"] == 0 and rep.loc[2, "dup_tok_frac"] == 0.0
-    assert rep.loc[3, "n_tok"] == 0          # whitespace-only
-    assert rep.loc[4, "top2gram_frac"] == 0.0  # single token: no grams
-    assert rep.loc[5, "flagged"] == 1 and rep.loc[5, "top2gram_frac"] == 1.0
-
-    dec = q["decontamination"](spark, edge_dir).toPandas().set_index("doc_id")
-    assert 0 not in dec.index               # eval docs excluded
-    assert dec.loc[1, "contaminated"] == 1  # planted shared 8-gram
-    assert dec.loc[6, "contaminated"] == 0  # <8 tokens: no grams at all
-    assert dec.loc[11, "contaminated"] == 0
-
-    mix = q["mixing_weights"](spark, edge_dir).toPandas().set_index("source")
-    # zero-token source: served by the explicit when(n_tok==0) branch —
-    # WITHOUT it, ANSI-mode mean/0 throws and kills the whole job (the
-    # crash this test originally caught); do NOT "simplify" it away
-    assert mix.loc["s_empty", "n_tok"] == 0
-    assert mix.loc["s_empty", "sample_rate"] == 1.0
-
-    st = q["stratified_sample"](spark, edge_dir).toPandas()
-    assert len(st) == len(_DOCS)            # unknown lang still assigned
+    """Spot-check the intended edge behaviors (not just parity): the
+    empty and whitespace-only docs still count as docs but add no
+    phantom token, so a one-token drift cannot shift later bins."""
+    pk = (
+        entrymod.queries()["sequence_packing"](spark, edge_dir)
+        .toPandas()
+        .set_index("source")
+    )
+    assert pk.loc["s_empty", "n_docs"] == 2
+    assert pk.loc["s_empty", "tot_tokens"] == 0
+    assert pk.loc["s1", "tot_tokens"] == 20
 
 
 def test_sequence_packing_budget_invariant(spark):

@@ -25,7 +25,6 @@ SF_DIR = "/root/testdata/sf0.001"
 CARTESIAN_OK = {
     "cosine_topk",        # 5-row query side, crossJoin by design
     "embedding_near_dup", # pinned exact O(n^2) baseline; LSH twin scales
-    "mixing_weights",     # 1-row global-mean broadcast (scalar-subquery shape)
     # r4 checked ANN forms: the exact verification side (_exact_cos_pairs)
     # is the same pinned O(n^2) twin as embedding_near_dup — it exists to
     # make the approximate path driver-checkable at small sf; the raw

@@ -284,10 +284,14 @@ def test_old_bucket_partitioned_lineage_is_rejected(corpus_sdf, tmp_path):
 
 def test_old_per_bucket_manifests_are_rejected(corpus_sdf, tmp_path):
     """A run dir committed with per-bucket manifests (the old layout) is
-    refused at start, naming the dir, before anything is written."""
+    refused at start, naming the dir, before anything is written: by
+    ``run()``, and by ``build_verdict_frame``, whose plan ``main.py
+    --explain`` prints."""
     old = ckpt.manifest_dir(tmp_path) / "bucket-00003.json"
     old.parent.mkdir()
     old.write_text(json.dumps({"run_id": "old", "bucket": 3, "status": "done"}))
+    with pytest.raises(ValueError, match=re.escape(str(old.parent))):
+        pipeline.build_verdict_frame(corpus_sdf, CFG, run_dir=tmp_path)
     with pytest.raises(ValueError, match=re.escape(str(old.parent))):
         pipeline.run(corpus_sdf, CFG, run_dir=tmp_path, run_id="new")
     assert sorted(tmp_path.rglob("*")) == [old.parent, old]
