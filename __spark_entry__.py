@@ -22,16 +22,13 @@ _REPO = Path(__file__).resolve().parent
 if str(_REPO) not in sys.path:
     sys.path.insert(0, str(_REPO))
 
-# Python workers must import spardaqus_spark too (driver may run from
-# any cwd) — export before any Spark action materializes a UDF stage.
-import os
-
-_pp = os.environ.get("PYTHONPATH", "")
-if str(_REPO) not in _pp.split(os.pathsep):
-    os.environ["PYTHONPATH"] = f"{_REPO}{os.pathsep}{_pp}" if _pp else str(_REPO)
-
 from spardaqus_spark import queries_ml as QM  # noqa: E402
 from spardaqus_spark import queries_text as QT  # noqa: E402
+from spardaqus_spark.session import export_pythonpath  # noqa: E402
+
+# Python workers must import spardaqus_spark too (driver may run from
+# any cwd) — export before any Spark action materializes a UDF stage.
+export_pythonpath()
 
 
 def entry(spark: SparkSession) -> DataFrame:

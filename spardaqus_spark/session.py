@@ -1,7 +1,7 @@
 """SparkSession factory tuned for the content-heavy quality pipeline.
 
 Scale notes (SURVEY.md §4.2):
-- Arrow batch size is tuned DOWN (default 512) because `content` rows are
+- Arrow batch size is tuned DOWN (512 records) because `content` rows are
   KB-MB; this bounds python-worker memory regardless of executor count.
 - shuffle partitions follow the session's default parallelism so the same
   code scales N -> 4N without retuning (scaling-efficiency mandate).
@@ -23,7 +23,7 @@ from pyspark.sql import SparkSession
 _PKG_ROOT = str(Path(__file__).resolve().parents[1])
 
 
-def _export_pythonpath() -> None:
+def export_pythonpath() -> None:
     pp = os.environ.get("PYTHONPATH", "")
     if _PKG_ROOT not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = (
@@ -67,7 +67,6 @@ def get_spark(
     app: str = "spardaqus_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
-    arrow_batch: int = 512,
 ) -> SparkSession:
     """The session for this process. Under spark-submit (the launcher sets
     ``PYSPARK_GATEWAY_PORT``) the JVM already runs with the submitted
@@ -77,7 +76,7 @@ def get_spark(
     (standard Spark guidance: fine enough that fast cores steal work
     around stragglers), read from ``defaultParallelism``, which follows
     whatever master the session got."""
-    _export_pythonpath()
+    export_pythonpath()
     master = master or os.environ.get("SPARK_GRAFT_MASTER")
     b = (
         SparkSession.builder.appName(app)
@@ -85,7 +84,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
         .config("spark.ui.enabled", "false")
     )
     if master or "PYSPARK_GATEWAY_PORT" not in os.environ:

@@ -44,13 +44,3 @@ def read_stream_source(spark: "SparkSession", **opts):
         reader = reader.option("maxFilesPerTrigger", opts["max_files_per_trigger"])
     return reader.parquet(opts["path"])
 
-
-def ingest_json_batch(spark: "SparkSession", records: list[dict], schema: str) -> "DataFrame":
-    """REST/batch-extract seam (SURVEY §2.1 — the Splunk-extract analog):
-    a JSON batch from any collector becomes a typed DataFrame ready for
-    the stage DAG. Driver-side only for the (small) batch envelope —
-    payload-scale ingest arrives via the table/stream sources above."""
-    import json as _json
-
-    rdd = spark.sparkContext.parallelize([_json.dumps(r) for r in records])
-    return spark.read.schema(schema).json(rdd)

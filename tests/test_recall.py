@@ -135,11 +135,16 @@ def test_ivf_recall_vs_exact_cosine(spark):
 
 
 def test_group_cosine_blocking_invariant(spark):
-    """The slab-blocked similarity matmul in _group_cosine_pairs must
-    emit EXACTLY the pairs of the unblocked computation — block=3 forces
-    many slab boundaries (incl. a ragged final slab) over one group."""
+    """The slab-blocked similarity matmul in QT.cosine_pairs must emit
+    EXACTLY the pairs of the unblocked computation — block=3 forces many
+    slab boundaries (incl. a ragged final slab) over one group. Under the
+    rounded gate it must also be invariant to grouping: the same vectors
+    split by vec_id % 3 emit exactly the one-group pairs whose two ends
+    share a group, with identical cos (the ANN paths rely on this)."""
     import numpy as np
     import pandas as pd
+
+    from spardaqus_spark import queries_text as QT
 
     rng = np.random.default_rng(7)
     n, dim = 40, 16
@@ -147,23 +152,27 @@ def test_group_cosine_blocking_invariant(spark):
     # plant some high-cosine pairs so the >=0.3 filter is non-vacuous
     V[7] = V[3] + rng.normal(scale=0.05, size=dim)
     V[25] = V[11] + rng.normal(scale=0.05, size=dim)
-    pdf = pd.DataFrame(
-        {"vec_id": np.arange(n, dtype="int64"), "v": list(V), "g": 0}
-    )
+    ids = np.arange(n, dtype="int64")
+    pdf = pd.DataFrame({"vec_id": ids, "v": list(V), "g": 0, "g3": ids % 3})
     sdf = spark.createDataFrame(
         pdf.assign(v=pdf["v"].map(list)),
-        "vec_id bigint, v array<double>, g int",
+        "vec_id bigint, v array<double>, g int, g3 bigint",
     )
 
-    blocked = {
-        (r.v1, r.v2, r.cos)
-        for r in QM._group_cosine_pairs(sdf, "g", block=3).collect()
-    }
-    whole = {
-        (r.v1, r.v2, r.cos)
-        for r in QM._group_cosine_pairs(sdf, "g", block=10_000).collect()
-    }
+    def pairs(key, block):
+        return {
+            (r.v1, r.v2, r.cos)
+            for r in QT.cosine_pairs(
+                sdf, key, 0.3, gate_rounded=True, block=block
+            ).collect()
+        }
+
+    blocked = pairs("g", 3)
+    whole = pairs("g", 10_000)
     assert blocked == whole and len(whole) >= 2
+    grouped = pairs("g3", 10_000)
+    want = {p for p in whole if p[0] % 3 == p[1] % 3}
+    assert grouped == want and len(want) >= 2
 
 
 def test_embedding_dedup_keep_scale_composition(spark):

@@ -67,7 +67,7 @@ def test_scrub_stream_matches_batch(spark, stream_src_dir, tmp_path, corpus_pdf)
     assert got.select("batch_id").distinct().count() > 1
 
 
-def test_stream_source_seam_and_json_ingest(spark, tmp_path):
+def test_stream_source_seam(spark, tmp_path):
     from spardaqus_spark.sources import io as sio
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -78,13 +78,6 @@ def test_stream_source_seam_and_json_ingest(spark, tmp_path):
         max_files_per_trigger=1,
     )
     assert stream.isStreaming
-    df = sio.ingest_json_batch(
-        spark,
-        [{"repo": "r/a", "path": "p1", "n": 1}, {"repo": "r/b", "path": "p2", "n": 2}],
-        "repo string, path string, n int",
-    )
-    assert df.count() == 2
-    assert df.schema.simpleString() == "struct<repo:string,path:string,n:int>"
 
 
 def test_micro_batch_retry_is_idempotent(spark, corpus_pdf, tmp_path):
