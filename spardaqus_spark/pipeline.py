@@ -16,8 +16,8 @@ Logical DAG (all lazy — Catalyst optimizes the whole thing as one plan):
          -> bucketize repartition (shuffle #2 — repo-hash bucket + salt,
             kept rows only, sized by AQE: files follow the buckets, not
             the cores; resume/pruning stay bucket-grained)
-         -> write(partitionBy bucket) -> sink read-back -> lineage file
-            -> ONE attempt manifest
+         -> write(partitionBy bucket) -> footer counts of the kept bucket
+            dirs (driver) -> lineage file -> ONE attempt manifest
 
 Exactly two shuffles at any scale, and shuffle #2 carries only the ~75%
 kept, scrubbed rows. Input laid out by Iceberg's ``bucket(repo)``
@@ -29,10 +29,11 @@ ONE small per-(partition, bucket) aggregate from it
 (``plans.lineage.ledger``): the processed buckets, the kept buckets and
 every lineage row are derived on the driver from those rows. The
 attempt's lineage rows never go back through Spark: the driver writes
-them as one parquet file (``plans.lineage.write_attempt``), so a run is
-the data write, the ledger and the read-back, and no lineage job. One
-manifest, named after that lineage file, then commits the whole attempt
-(``plans.checkpoint``).
+them as one parquet file (``plans.lineage.write_attempt``), and the
+committed counts come from the parquet footers of the kept bucket dirs
+(``committed_counts``), so a run is the data write and the ledger: no
+read-back job and no lineage job. One manifest, named after that lineage
+file, then commits the whole attempt (``plans.checkpoint``).
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ from .operators import bucketize as bk, stages
 from .plans import checkpoint as ckpt, lineage as lin
 
 if TYPE_CHECKING:
-    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql import DataFrame
 
 
 def build_verdict_frame(
@@ -128,7 +129,6 @@ def run(
     # clean write); persist it so the expensive scoring stage runs exactly
     # once. MEMORY_AND_DISK: `content` rows are KB-MB, spilling is
     # expected and fine at scale.
-    spark = v.sparkSession
     v = v.persist(StorageLevel.MEMORY_AND_DISK)
     out_path = str(run_dir / "files_clean")
     # crash-atomicity: sweep what a crashed attempt left without a manifest
@@ -154,12 +154,12 @@ def run(
     finally:
         v.unpersist()
     kept = lin.kept_per_bucket(ledger)
-    # observed committed counts, read back from THIS attempt's kept-bucket
-    # dirs only (which dirs exist comes from the ledger, never from a
-    # filesystem probe)
+    # observed committed counts, from the parquet footers of THIS
+    # attempt's kept-bucket dirs only (which dirs must exist comes from
+    # the ledger, never from a listing of the sink root)
     with _phase(phase_s, "readback"):
         seen = committed_counts(
-            spark, out_path, "bucket", [b for b, n in sorted(kept.items()) if n]
+            Path(out_path), [b for b, n in sorted(kept.items()) if n]
         )
     # per-stage lineage ([B:6] "every stage"): a few thousand rows already
     # on the driver, published before the manifest so a committed bucket
@@ -178,6 +178,8 @@ def run(
         "run_id": run_id,
         "buckets": len(kept),
         "files_out": sum(seen.values()),
+        "rows_scored": sum(r["n_all"] for r in ledger),
+        "rows_kept": sum(r["n_keep"] for r in ledger),
     }
     _write_metrics(run_dir, run_id, result, phase_s)
     return result
@@ -193,36 +195,38 @@ def _phase(phase_s: dict[str, float], name: str):
         phase_s[name] = time.perf_counter() - t0
 
 
-def committed_counts(
-    spark: "SparkSession", root: str, col: str, values: Iterable[int]
-) -> dict[int, int]:
-    """value -> rows the sink at ``root`` holds under ``col=value``, for
-    exactly these partition dirs: the OBSERVED write-stage counts of the
-    batch job and of each stream micro-batch.
+def committed_counts(root: Path, buckets: Iterable[int]) -> dict[int, int]:
+    """bucket -> rows the sink at ``root`` holds under ``bucket=<b>/``, for
+    exactly these dirs: the OBSERVED write-stage counts of the batch job.
 
     Counted from the sink after the write job commits, so a write-side
     loss shows up (recounting the pre-write frame would make files_in ==
-    files_out by construction). Only the given dirs are read, ``basePath``
-    keeping the partition column: listing the whole sink root would cost
-    the run's full history, not this attempt. The dirs are addressed as
-    plain strings, never probed with a local ``.exists()`` (always False
-    on hdfs://, s3a://, ... sinks, which would fabricate a total write
-    loss). Callers pass only values with kept rows, so each dir must hold
-    rows: a missing dir fails the read, and a dir that comes back without
-    rows (its data files gone) raises here, naming it. Either is a real
-    write loss that fails the run loudly. No values: no read, ``{}``."""
-    dirs = {int(v): f"{root.rstrip('/')}/{col}={int(v)}" for v in values}
-    if not dirs:
-        return {}
-    rows = (
-        spark.read.option("basePath", root)
-        .parquet(*dirs.values())
-        .groupBy(col)
-        .count()
-        .collect()
-    )
-    counts = {int(r[col]): int(r["count"]) for r in rows}
-    empty = [d for v, d in dirs.items() if v not in counts]
+    files_out by construction). The counts are the ``num_rows`` of each
+    data file's parquet footer, read on the driver with no Spark job: the
+    batch run dir is local (``plans.checkpoint`` commits with
+    ``os.rename``), and Spark's own count of a partition-column-only read
+    comes from the same row-group metadata. Names starting with ``_`` or
+    ``.`` are skipped, as Hadoop input formats skip them (the local
+    writer's ``.part-*.crc`` checksums). Callers pass only buckets with
+    kept rows, so each dir must hold rows: a dir that is missing, or that
+    holds no rows (its data files gone), raises here, naming it. Either
+    is a real write loss that fails the run loudly. No buckets: ``{}``."""
+    import pyarrow.parquet as pq
+
+    counts: dict[int, int] = {}
+    empty = []
+    for b in map(int, buckets):
+        d = root / f"bucket={b}"
+        files = d.iterdir() if d.is_dir() else ()
+        n = sum(
+            pq.read_metadata(f).num_rows
+            for f in files
+            if not f.name.startswith(("_", "."))
+        )
+        if n:
+            counts[b] = n
+        else:
+            empty.append(str(d))
     if empty:
         raise RuntimeError(f"write loss: kept partition dirs hold no rows: {empty}")
     return counts

@@ -14,10 +14,11 @@ each stage's in/out counts follow exactly from the ledger's
   verdict: in = all rows,   out = keep (rule_keep & survivor)
   scrub:   in = kept rows,  out = kept rows (rewrite, no drops)
   write:   in = kept rows,  out = the count the write job actually
-           committed, read back from the sink by the caller — a
+           committed, counted from the sink by the caller (parquet
+           footers for a batch run, a Spark count for a micro-batch) — a
            write-side loss shows as files_in != files_out (VERDICT r02 #3).
            Write rows are sink-grained (partition_id = -1, one per bucket
-           or micro-batch): the sink is read back per bucket, not per
+           or micro-batch): the sink is counted per bucket, not per
            partition.
 
 A batch attempt's rows already sit on the driver, so ``write_attempt``
@@ -168,7 +169,7 @@ def stream_rows(
     """Micro-batch lineage rows in ``STREAM_LINEAGE_SCHEMA`` order from a
     partition-keyed ``ledger``: score/verdict/scrub per partition, then one
     write row (files_in = kept rows, files_out = ``n_committed``, the
-    count read back from the batch's sink partition)."""
+    count of rows in the batch's sink partition)."""
     out = [
         (batch_id, stage, r["partition_id"], fi, fo)
         for r in rows

@@ -52,7 +52,6 @@ def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
     duplicate-free under at-least-once delivery."""
     from pyspark.sql import functions as F
 
-    from ..pipeline import committed_counts
     from ..plans import lineage as lin
 
     # the batch pipeline's fused kernel; the stream does no cross-batch
@@ -76,14 +75,20 @@ def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
         ledger = lin.ledger(scored, by=())
     finally:
         scored.unpersist()
-    # sink-observed write stage, same as the batch path: read back this
-    # batch's partition dir when it kept rows (zero kept rows write no dir).
-    # A failed read fails the batch; foreachBatch retries it idempotently.
+    # sink-observed write stage: count this batch's partition dir when it
+    # kept rows (zero kept rows write no dir). Spark counts it, where the
+    # batch path reads local parquet footers, because this sink may be any
+    # Hadoop URI (s3a://, hdfs://) that pyarrow cannot open. A failed or
+    # empty read fails the batch; foreachBatch retries it idempotently.
     spark = batch_df.sparkSession
-    n_committed = committed_counts(
-        spark, out_dir, "batch_id",
-        [batch_id] if any(r["n_keep"] for r in ledger) else [],
-    ).get(int(batch_id), 0)
+    n_committed = 0
+    if any(r["n_keep"] for r in ledger):
+        part = f"{out_dir.rstrip('/')}/batch_id={int(batch_id)}"
+        n_committed = spark.read.parquet(part).count()
+        if not n_committed:
+            raise RuntimeError(
+                f"write loss: kept partition dirs hold no rows: {[part]}"
+            )
     (
         spark.createDataFrame(
             lin.stream_rows(ledger, int(batch_id), n_committed),

@@ -356,7 +356,7 @@ def test_write_lineage_surfaces_loss(spark, corpus_sdf):
     lineage row must show files_in != files_out — the detection signal
     the derived form could never produce. Simulated by feeding
     lineage_rows observed counts one row short (the counts come from the
-    sink read-back in pipeline.run, the only caller)."""
+    sink's parquet footers in pipeline.run, the only caller)."""
     v = pipeline.build_verdict_frame(corpus_sdf, CFG)
     rules = [r.name for r in CFG.rules]
     ledger = lin.ledger(v, rules)
@@ -385,36 +385,62 @@ def test_write_lineage_surfaces_loss(spark, corpus_sdf):
 @pytest.fixture
 def three_bucket_sink(spark, tmp_path):
     """A sink of 100 rows partitioned into ``bucket=0..2`` (34/33/33)."""
-    root = str(tmp_path / "sink")
+    root = tmp_path / "sink"
     spark.range(100).withColumn("bucket", F.col("id") % 3).write.partitionBy(
         "bucket"
-    ).parquet(root)
+    ).parquet(str(root))
     return root
 
 
-def test_committed_counts_counts_present_dirs(spark, three_bucket_sink):
-    """Exactly the requested dirs are counted; no values reads nothing."""
-    def count(values):
-        return pipeline.committed_counts(spark, three_bucket_sink, "bucket", values)
+def _zero_row_parquet(path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.parent.mkdir(parents=True, exist_ok=True)
+    pq.write_table(pa.table({"id": pa.array([], pa.int64())}), path)
+
+
+def test_committed_counts_counts_present_dirs(three_bucket_sink):
+    """Exactly the requested dirs are counted; no buckets reads nothing."""
+    def count(buckets):
+        return pipeline.committed_counts(three_bucket_sink, buckets)
 
     assert count([0, 1, 2]) == {0: 34, 1: 33, 2: 33}
     assert count([2]) == {2: 33}
     assert count([]) == {}
 
 
+def test_committed_counts_skip_hidden_and_empty_files(three_bucket_sink):
+    """Names starting with ``.`` or ``_`` are not data files (Hadoop input
+    formats skip them too), and a zero-row data file adds nothing: none
+    of them changes a count. A dir holding only a zero-row file holds no
+    rows, which is a write loss."""
+    one = three_bucket_sink / "bucket=1"
+    (one / ".part-x.parquet.crc").write_bytes(b"not parquet")
+    (one / "_tmp").write_bytes(b"not parquet")
+    _zero_row_parquet(one / "part-empty.parquet")
+    assert pipeline.committed_counts(three_bucket_sink, [0, 1, 2]) == {
+        0: 34, 1: 33, 2: 33,
+    }
+    _zero_row_parquet(three_bucket_sink / "bucket=3" / "part-empty.parquet")
+    with pytest.raises(RuntimeError, match="bucket=3"):
+        pipeline.committed_counts(three_bucket_sink, [0, 1, 2, 3])
+
+
 @pytest.mark.parametrize("loss", ["missing", "emptied"])
-def test_committed_counts_fails_on_write_loss(spark, three_bucket_sink, loss):
-    """A kept dir that is gone, or that lost its data files, is a write
-    loss: the read-back raises naming the dir instead of counting the
-    bucket as absent (which would commit it with files_out 0)."""
-    lost = Path(three_bucket_sink) / "bucket=2"
+def test_committed_counts_fails_on_write_loss(three_bucket_sink, loss):
+    """A kept dir that is gone, or that lost its data files (only the
+    writer's ``.crc`` files remain), is a write loss: the count raises
+    naming the dir instead of counting the bucket as absent (which would
+    commit it with files_out 0)."""
+    lost = three_bucket_sink / "bucket=2"
     if loss == "missing":
         shutil.rmtree(lost)
     else:
         for f in lost.glob("*.parquet"):
             f.unlink()
-    with pytest.raises(Exception, match="bucket=2"):
-        pipeline.committed_counts(spark, three_bucket_sink, "bucket", [0, 1, 2])
+    with pytest.raises(RuntimeError, match="bucket=2"):
+        pipeline.committed_counts(three_bucket_sink, [0, 1, 2])
 
 
 @pytest.fixture(scope="module")
@@ -440,12 +466,25 @@ def test_run_requires_run_dir(corpus_sdf):
 
 def test_run_job_budget(counted_run):
     """One run = the write (dedup shuffle, scoring into the cache, the
-    bucket repartition), ONE collected ledger aggregate and the sink
-    read-back: 9 Spark jobs on this corpus. The lineage rows are written
-    by the driver, not by a Spark job. No per-consumer
+    bucket repartition) and ONE collected ledger aggregate: 6 Spark jobs
+    on this corpus. There is no sink read-back: the committed counts come
+    from the parquet footers, and the lineage rows are written by the
+    driver, neither by a Spark job. No per-consumer
     ``distinct().collect()`` and no second lineage aggregate or join may
     creep back in."""
-    assert counted_run[1] == 9
+    assert counted_run[1] == 6
+
+
+def test_committed_counts_match_spark_read(spark, counted_run):
+    """The footer counts of a real run's sink equal what Spark reads
+    back from it, bucket by bucket."""
+    sink = counted_run[0] / "files_clean"
+    want = {
+        int(r["bucket"]): r["count"]
+        for r in spark.read.parquet(str(sink)).groupBy("bucket").count().collect()
+    }
+    assert want
+    assert pipeline.committed_counts(sink, sorted(want)) == want
 
 
 def test_run_writes_one_lineage_file(spark, counted_run):
@@ -478,9 +517,10 @@ def test_run_commits_one_manifest(counted_run):
     }
 
 
-def test_run_metrics_record_phase_seconds(counted_run):
+def test_run_metrics_record_phase_seconds(counted_run, corpus_pdf):
     """Each run_metrics.jsonl record carries the wall seconds of every
-    phase of the run."""
+    phase of the run, and the rows it scored and kept: on a fresh run
+    every input row is scored, and every kept row is written."""
     [rec] = [
         json.loads(line)
         for line in (counted_run[0] / "run_metrics.jsonl").read_text().splitlines()
@@ -488,6 +528,8 @@ def test_run_metrics_record_phase_seconds(counted_run):
     phases = rec["phase_s"]
     assert set(phases) == {"write", "ledger", "readback", "lineage", "commit"}
     assert all(v >= 0 for v in phases.values())
+    assert rec["rows_scored"] == len(corpus_pdf)
+    assert rec["rows_kept"] == rec["files_out"] > 0
 
 
 def test_run_files_follow_buckets(counted_run):

@@ -134,9 +134,9 @@ def test_micro_batch_retry_is_idempotent(spark, corpus_pdf, tmp_path):
 
 def test_micro_batch_job_budget(spark, corpus_sdf, tmp_path):
     """One micro-batch = the scored write (scoring into the cache), ONE
-    collected ledger aggregate, the sink read-back and the lineage write:
-    7 Spark jobs on 120 rows. No extra kept count or second aggregate may
-    creep back in."""
+    collected ledger aggregate, the Spark count of the batch's sink dir
+    and the lineage write: 7 Spark jobs on 120 rows. No extra kept count
+    or second aggregate may creep back in."""
     sc = spark.sparkContext
     bdf = corpus_sdf.limit(120)
     sc.setJobGroup("micro_batch", "score_micro_batch job budget")
