@@ -9,8 +9,8 @@ partitions, which AQE coalesces to the data), so no retuning happens
 between the two runs — exactly the "same code scales N -> 4N" contract.
 Prod form: spark-submit --py-files at N and 4N executors. The timed job
 is the shipped one: ``pipeline.run`` with its write, footer count of
-the committed rows, lineage and attempt manifest, into a fresh run dir
-that is removed afterwards.
+the committed rows and the lineage file whose publish commits the
+attempt, into a fresh run dir that is removed afterwards.
 
 Methodology: one window, local[1] -> local[4], inside the host's core
 budget. A wider window such as local[8] -> local[32] measures hypervisor

@@ -8,11 +8,11 @@
 Builds the full DAG (dedup -> fused score+verdict+scrub -> bucket
 repartition -> write) and executes with checkpoint/resume + lineage.
 Resume is automatic: rerunning against the same --run-dir skips every
-bucket its attempt manifests mark committed, with or without --resume,
-which only names this attempt's run_id in its manifest and lineage
-(default: a fresh random id). Under spark-submit the session keeps the
-submitted --master and driver memory; standalone it falls back to local
-mode.
+bucket a committed attempt lists (the attempt's lineage file is its
+commit), with or without --resume, which only names this attempt's run_id
+in its lineage file (default: a fresh random id). Under spark-submit the
+session keeps the submitted --master and driver memory; standalone it
+falls back to local mode.
 """
 
 from __future__ import annotations
@@ -35,7 +35,7 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         default=None,
         metavar="RUN_ID",
         help="run_id recorded for this attempt (resume itself is automatic "
-        "from the run dir's manifests)",
+        "from the run dir's committed lineage files)",
     )
     p.add_argument(
         "--buckets",

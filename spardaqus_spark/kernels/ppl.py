@@ -35,12 +35,7 @@ from .textnum import P32
 D1, D2, D3 = 1024, 8192, 32768
 MAX_CHARS = 8000
 _MODEL: tuple[np.ndarray, np.ndarray, np.ndarray, float] | None = None
-
-
-def _chunk() -> int:
-    import os
-
-    return int(os.environ.get("SPARDAQUS_PPL_CHUNK", str(1 << 16)))
+CHUNK = 1 << 16  # trigram positions per cache block in ``perplexity``
 
 
 def _train_text() -> str:
@@ -111,11 +106,9 @@ def perplexity(
     #
     # Chunk ends snap to ROW boundaries so a row's log-prob sum always
     # accumulates inside a single bincount partial: `sums[r]` receives
-    # exactly one non-zero partial regardless of CHUNK, making the env
-    # knob performance-only BY CONSTRUCTION (§2.9 pinned semantics —
-    # different CHUNK values on Spark workers vs the oracle can never
-    # drift the float64 accumulation grouping).
-    CHUNK = _chunk()
+    # exactly one non-zero partial regardless of CHUNK, making CHUNK
+    # performance-only BY CONSTRUCTION (§2.9 pinned semantics — a
+    # different CHUNK can never drift the float64 accumulation grouping).
     row_of = row_id[pos_all]  # non-decreasing
     Np = len(pos_all)
     bounds = [0]

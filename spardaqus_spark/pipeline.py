@@ -16,8 +16,9 @@ Logical DAG (all lazy — Catalyst optimizes the whole thing as one plan):
          -> bucketize repartition (shuffle #2 — repo-hash bucket + salt,
             kept rows only, sized by AQE: files follow the buckets, not
             the cores; resume/pruning stay bucket-grained)
+         -> sort within partitions by (bucket, repo, path, commit)
          -> write(partitionBy bucket) -> footer counts of the kept bucket
-            dirs (driver) -> lineage file -> ONE attempt manifest
+            dirs (driver) -> ONE lineage file, whose publish is the commit
 
 Exactly two shuffles at any scale, and shuffle #2 carries only the ~75%
 kept, scrubbed rows. Input laid out by Iceberg's ``bucket(repo)``
@@ -28,12 +29,12 @@ repartitions by content hash whatever the arrival layout.
 ONE small per-(partition, bucket) aggregate from it
 (``plans.lineage.ledger``): the processed buckets, the kept buckets and
 every lineage row are derived on the driver from those rows. The
-attempt's lineage rows never go back through Spark: the driver writes
-them as one parquet file (``plans.lineage.write_attempt``), and the
 committed counts come from the parquet footers of the kept bucket dirs
-(``committed_counts``), so a run is the data write and the ledger: no
-read-back job and no lineage job. One manifest, named after that lineage
-file, then commits the whole attempt (``plans.checkpoint``).
+(``committed_counts``), and the attempt's lineage rows never go back
+through Spark: the driver writes them as one parquet file, and publishing
+that file commits the whole attempt (``plans.checkpoint.commit_bucket``).
+So a run is the data write and the ledger: no read-back job, no lineage
+job and no second commit record.
 """
 
 from __future__ import annotations
@@ -60,7 +61,7 @@ def build_verdict_frame(
 ) -> "DataFrame":
     """read-input -> scored + verdict frame (keep, rule_hits, dup_loser,
     scrubbed content of kept rows). Pure plan construction — nothing
-    executes (bar reading the manifests).
+    executes (bar reading the committed attempt files).
 
     Rows of buckets committed under ``run_dir``, and of buckets outside
     ``bucket_whitelist``, are pruned right after the dedup window: every
@@ -89,13 +90,19 @@ def build_verdict_frame(
 
 def build_clean_frame(df_verdict: "DataFrame") -> "DataFrame":
     """verdict frame -> files_clean (kept rows, scrubbed content), then the
-    (bucket, salt) repartition (shuffle #2, kept rows only) for the write.
-    No count: AQE (on by default, set by ``get_spark``) coalesces it to
-    the data's size like shuffle #1, where a fixed count would write one
-    file per (task, bucket) however little data there is."""
+    (bucket, salt) repartition (shuffle #2, kept rows only) and the sort
+    the write keeps: this is the plan ``run()`` writes. No count: AQE (on
+    by default, set by ``get_spark``) coalesces it to the data's size like
+    shuffle #1, where a fixed count would write one file per (task,
+    bucket) however little data there is."""
     from pyspark.sql import functions as F
 
-    return df_verdict.filter(F.col("keep")).repartition("bucket", "salt")
+    return (
+        df_verdict.filter(F.col("keep"))
+        .repartition("bucket", "salt")
+        # bucket first, or the writer's own Sort(bucket) replaces it
+        .sortWithinPartitions("bucket", "repo", "path", "commit")
+    )
 
 
 def run(
@@ -107,19 +114,18 @@ def run(
 ) -> dict:
     """Execute end-to-end with checkpoint/resume + lineage.
 
-    A resumed run (``run_dir`` holding attempt manifests) and
+    A resumed run (``run_dir`` holding committed attempt files) and
     ``bucket_whitelist`` (used by the kill-at-50% resume test; prod uses it
     for targeted reruns) both prune buckets inside
     ``build_verdict_frame``, before scoring: only the buckets this attempt
     processes are scored, written and committed. Every bucket with input
-    rows is committed, zero-kept ones included, by one manifest for the
-    attempt. Returns summary counters.
+    rows is committed, zero-kept ones included, by publishing the
+    attempt's one lineage file. Returns summary counters.
     """
     from pyspark import StorageLevel
 
     run_id = run_id or uuid.uuid4().hex[:12]
     run_dir = Path(run_dir)
-    lineage_dir = run_dir / "lineage"
 
     v = build_verdict_frame(
         df, cfg, run_dir=run_dir, bucket_whitelist=bucket_whitelist
@@ -131,18 +137,16 @@ def run(
     # expected and fine at scale.
     v = v.persist(StorageLevel.MEMORY_AND_DISK)
     out_path = str(run_dir / "files_clean")
-    # crash-atomicity: sweep what a crashed attempt left without a manifest
-    # (bucket dirs of the data sink, its lineage file) BEFORE this
+    # crash-atomicity: sweep what a crashed attempt left uncommitted
+    # (bucket dirs of the data sink, its lineage temp file) BEFORE this
     # attempt's append write, so reprocessing cannot duplicate rows.
-    ckpt.clean_orphans(run_dir, out_path, lineage_dir)
+    ckpt.clean_orphans(run_dir, out_path)
     rules = [r.name for r in cfg.rules]
     phase_s: dict[str, float] = {}
     try:
         with _phase(phase_s, "write"):
             (
                 build_clean_frame(v)
-                # bucket first, or the writer's own Sort(bucket) replaces it
-                .sortWithinPartitions("bucket", "repo", "path", "commit")
                 .write.mode("append")
                 .partitionBy("bucket")
                 .parquet(out_path)
@@ -162,18 +166,13 @@ def run(
             Path(out_path), [b for b, n in sorted(kept.items()) if n]
         )
     # per-stage lineage ([B:6] "every stage"): a few thousand rows already
-    # on the driver, published before the manifest so a committed bucket
-    # always has its rows; an attempt that processed nothing writes
-    # neither lineage nor manifest
-    with _phase(phase_s, "lineage"):
-        rows = lin.lineage_rows(ledger, run_id, rules, write_counts=seen)
-        lineage_file = lin.write_attempt(lineage_dir, run_id, rows) if rows else None
+    # on the driver; publishing them commits the attempt, so a committed
+    # bucket always has its rows. An attempt that processed nothing
+    # commits nothing.
     with _phase(phase_s, "commit"):
-        if lineage_file:
-            ckpt.commit_bucket(
-                run_dir, lineage_file.stem, run_id,
-                {b: seen.get(b, 0) for b in kept}, out_path,
-            )
+        rows = lin.lineage_rows(ledger, run_id, rules, write_counts=seen)
+        if rows:
+            ckpt.commit_bucket(run_dir, run_id, rows)
     result = {
         "run_id": run_id,
         "buckets": len(kept),
@@ -204,7 +203,7 @@ def committed_counts(root: Path, buckets: Iterable[int]) -> dict[int, int]:
     files_out by construction). The counts are the ``num_rows`` of each
     data file's parquet footer, read on the driver with no Spark job: the
     batch run dir is local (``plans.checkpoint`` commits with
-    ``os.rename``), and Spark's own count of a partition-column-only read
+    ``os.replace``), and Spark's own count of a partition-column-only read
     comes from the same row-group metadata. Names starting with ``_`` or
     ``.`` are skipped, as Hadoop input formats skip them (the local
     writer's ``.part-*.crc`` checksums). Callers pass only buckets with
@@ -237,7 +236,8 @@ def _write_metrics(
 ) -> None:
     """run_metrics sink (SURVEY §2.1): one JSON line per run, appended —
     the bench/monitoring surface. ``phase_s`` holds the wall seconds of
-    the write, ledger, readback, lineage and commit phases."""
+    the write, ledger, readback and commit (the lineage rows and their
+    publish) phases."""
     import json
 
     p = Path(run_dir) / "run_metrics.jsonl"

@@ -1,25 +1,26 @@
-"""Checkpoint manifest + resume (BASELINE.json:6,14).
+"""Checkpoint commit + resume (BASELINE.json:6,14).
 
-Grain = the attempt. A run writes its output partitioned by repo-hash
-bucket (SURVEY.md §1.4) and its lineage as one parquet file
-(``lineage.write_attempt``); it then commits ONE manifest,
-``_manifest/<stem>.json``, whose stem is that lineage file's
-(``attempt-<run_id>-<uuid8>``). The manifest lists every bucket the
-attempt processed with its observed ``files_out`` (zero-kept buckets
-included) and is published by a temp file + one atomic ``os.rename`` —
-the sandbox stand-in for an Iceberg snapshot commit (SURVEY.md §4.2).
+Grain = the attempt, and the attempt's lineage file is its commit. A run
+writes its output partitioned by repo-hash bucket (SURVEY.md §1.4), then
+``commit_bucket`` writes the attempt's lineage rows as ONE parquet file to
+a ``.tmp-`` sibling under ``lineage/`` and publishes it as
+``attempt-<run_id>-<uuid8>.parquet`` by one atomic ``os.replace`` — the
+sandbox stand-in for an Iceberg snapshot commit (SURVEY.md §4.2). The
+file's write rows list every bucket the attempt processed with its
+observed ``files_out`` (zero-kept buckets included), so a visible attempt
+file is a whole, committed attempt; no second record has to agree with it.
 
 Crash window: a driver crash after the data job commits but before the
-manifest rename leaves VISIBLE bucket partitions, and possibly the
-attempt's lineage file, that no manifest owns. ``clean_orphans`` removes
-them, by file, at the start of a resumed run, BEFORE the append write,
-so reprocessing can never duplicate rows (single-writer-per-run_dir
-assumption, same as Iceberg's).
+publish leaves VISIBLE bucket partitions, and possibly a ``.tmp-`` file,
+that no attempt file owns. ``clean_orphans`` removes them, by file, at the
+start of a resumed run, BEFORE the append write, so reprocessing can
+never duplicate rows (single-writer-per-run_dir assumption, same as
+Iceberg's).
 
-Resume: ``filter_resume`` turns the union of the manifests' buckets into
-one literal ``NOT bucket IN (...)`` filter. The pipeline applies it above
-the dedup window and below the scoring kernel, so a restarted run scores
-and writes only the unprocessed buckets (resume-overhead target,
+Resume: ``filter_resume`` turns the union of the attempt files' buckets
+into one literal ``NOT bucket IN (...)`` filter. The pipeline applies it
+above the dedup window and below the scoring kernel, so a restarted run
+scores and writes only the unprocessed buckets (resume-overhead target,
 BASELINE.md). Done buckets are still scanned and hashed: ``bucket`` is
 derived from ``xxhash64(repo)``, not a partition column of the input, and
 the dedup window must see every row to pick the same winners as an
@@ -28,7 +29,6 @@ uninterrupted run.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import uuid
@@ -38,96 +38,92 @@ from typing import TYPE_CHECKING
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
 
-SCHEMA_VERSION = 2
-
-
-def manifest_dir(run_dir: str | Path) -> Path:
-    return Path(run_dir) / "_manifest"
-
 
 def check_layout(run_dir: str | Path) -> None:
-    """Refuse a run dir written in an older layout: per-bucket manifests
-    (``_manifest/bucket-*.json``) or a bucket-partitioned lineage sink
+    """Refuse a run dir written in an older layout: one holding a
+    ``_manifest/`` dir (the JSON manifests, per bucket or per attempt,
+    that used to commit) or a bucket-partitioned lineage sink
     (``lineage/bucket=*`` dirs, which Spark cannot read mixed with
     attempt files). Such run dirs are not migrated."""
     run_dir = Path(run_dir)
-    for d, pattern in (
-        (manifest_dir(run_dir), "bucket-*.json"),
-        (run_dir / "lineage", "bucket=*"),
-    ):
-        old = sorted(p.name for p in d.glob(pattern))
-        if old:
-            raise ValueError(
-                f"{d} holds {old[0]} ({len(old)} entries) from an older "
-                "layout; finish that run dir with the version that started "
-                "it, or start a new run dir"
-            )
+    old = [*run_dir.glob("_manifest"), *sorted(run_dir.glob("lineage/bucket=*"))]
+    if old:
+        raise ValueError(
+            f"{old[0]} is from an older layout; finish that run dir with the "
+            "version that started it, or start a new run dir"
+        )
 
 
-def commit_bucket(
-    run_dir: str | Path, stem: str, run_id: str, files_out: dict[int, int], output_path: str
-) -> None:
-    """Atomically commit one attempt: every bucket in ``files_out``
-    (bucket -> observed rows written) is done once the manifest
-    ``<stem>.json`` is visible. The name is kept from the per-bucket
-    manifests it replaced because perfbench's ``--trace 1`` runs time
+def commit_bucket(run_dir: str | Path, run_id: str, rows: list[tuple]) -> Path:
+    """Atomically commit one attempt: write its ``lineage_rows`` (at least
+    one) as ONE parquet file under ``run_dir/lineage/`` and return its
+    path. Every bucket in the rows is done once the file is visible. It is
+    written to a ``.tmp-`` sibling (Spark and pyarrow skip dot files) and
+    published by one ``os.replace``, so readers see the whole file or none
+    of it; the name carries a fresh uuid, so two attempts sharing a
+    ``run_id`` never replace each other's rows. Keep the name, though it
+    commits a whole attempt: perfbench's ``--trace 1`` runs time
     ``commit_bucket``, ``clean_orphans`` and ``filter_resume`` by name."""
-    d = manifest_dir(run_dir)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .lineage import LINEAGE_SCHEMA
+
+    schema = to_arrow_schema(LINEAGE_SCHEMA)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)],
+        schema=schema,
+    )
+    d = Path(run_dir) / "lineage"
     d.mkdir(parents=True, exist_ok=True)
-    entry = {
-        "run_id": run_id,
-        "buckets": {str(b): int(n) for b, n in sorted(files_out.items())},
-        "output_path": output_path,
-        "schema_version": SCHEMA_VERSION,
-    }
     tmp = d / f".tmp-{uuid.uuid4().hex}"
-    tmp.write_text(json.dumps(entry))
-    os.rename(tmp, d / f"{stem}.json")
+    pq.write_table(table, tmp)
+    path = d / f"attempt-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
+    os.replace(tmp, path)
+    return path
 
 
-def _committed(run_dir: str | Path) -> dict[str, list[int]]:
-    """stem -> buckets of every committed attempt manifest."""
-    out = {}
-    for f in sorted(manifest_dir(run_dir).glob("attempt-*.json")):
+def _attempts(run_dir: str | Path) -> tuple[set[int], list[Path]]:
+    """(buckets of every committed attempt file, attempt files pyarrow
+    cannot read: not committed, their buckets rerun)."""
+    import pyarrow.parquet as pq
+
+    done: set[int] = set()
+    unreadable = []
+    for f in sorted((Path(run_dir) / "lineage").glob("attempt-*.parquet")):
         try:
-            out[f.stem] = [int(b) for b in json.loads(f.read_text())["buckets"]]
-        except (ValueError, KeyError):
-            continue  # unreadable: not committed, its buckets rerun
-    return out
+            done.update(pq.ParquetFile(f).read(columns=["bucket"])["bucket"].to_pylist())
+        except (OSError, ValueError):
+            unreadable.append(f)
+    return done, unreadable
 
 
 def done_buckets(run_dir: str | Path) -> list[int]:
-    return sorted({b for bs in _committed(run_dir).values() for b in bs})
+    return sorted(_attempts(run_dir)[0])
 
 
-def clean_orphans(run_dir: str | Path, *data_paths: str | Path) -> list[Path]:
-    """Remove the output of attempts that crashed before their manifest
-    rename. Run at the start of every resumed run so ``mode('append')``
-    cannot duplicate rows. Under each path, and under ``_manifest/``:
+def clean_orphans(run_dir: str | Path, data_path: str | Path) -> list[Path]:
+    """Remove the output of attempts that crashed before their publish.
+    Run at the start of every resumed run so ``mode('append')`` cannot
+    duplicate rows:
 
-    - a ``bucket=<b>`` dir (the data sink) goes whole when no manifest
-      lists bucket ``b``;
-    - an ``attempt-*.parquet`` file (the lineage sink) goes when no
-      manifest has its stem;
-    - a ``.tmp-*`` file (a publish that never reached its rename) goes.
+    - a ``bucket=<b>`` dir under ``data_path`` goes whole when no
+      committed attempt file lists bucket ``b``;
+    - a ``.tmp-*`` file under ``lineage/`` (a publish that never reached
+      its rename) goes;
+    - an ``attempt-*.parquet`` file that pyarrow cannot read goes.
 
     Returns the removed paths."""
-    committed = _committed(run_dir)
-    owned = {f"bucket={b}" for bs in committed.values() for b in bs}
-    removed = []
-    for p in (manifest_dir(run_dir), *map(Path, data_paths)):
-        for d in p.glob("bucket=*"):
-            if d.name not in owned:
-                shutil.rmtree(d, ignore_errors=True)
-                removed.append(d)
-        for f in p.glob("attempt-*.parquet"):
-            if f.stem not in committed:
-                f.unlink()
-                removed.append(f)
-        for f in p.glob(".tmp-*"):
-            f.unlink()
-            removed.append(f)
-    return sorted(removed)
+    done, unreadable = _attempts(run_dir)
+    owned = {f"bucket={b}" for b in done}
+    dirs = [d for d in Path(data_path).glob("bucket=*") if d.name not in owned]
+    for d in dirs:
+        shutil.rmtree(d, ignore_errors=True)
+    files = [*(Path(run_dir) / "lineage").glob(".tmp-*"), *unreadable]
+    for f in files:
+        f.unlink()
+    return sorted(dirs + files)
 
 
 def filter_resume(

@@ -21,13 +21,11 @@ each stage's in/out counts follow exactly from the ledger's
            or micro-batch): the sink is counted per bucket, not per
            partition.
 
-A batch attempt's rows already sit on the driver, so ``write_attempt``
-writes them with pyarrow as ONE parquet file per attempt under the run
-dir's ``lineage/`` (no Spark job), published by temp file + atomic
-``os.replace``; ``bucket`` is a data column, not a partition dir. The
-file's stem names the attempt's manifest (``plans.checkpoint``), and
-``plans.checkpoint.clean_orphans`` deletes a file whose manifest never
-landed.
+A batch attempt's rows already sit on the driver, so
+``plans.checkpoint.commit_bucket`` writes them with pyarrow as ONE parquet
+file per attempt under the run dir's ``lineage/`` (no Spark job); ``bucket``
+is a data column, not a partition dir. Publishing that file is the
+attempt's commit.
 
 The same ledger, grouped by partition only, gives the streaming
 micro-batch its rows (``stream_rows``); the stream does no dedup, so it
@@ -36,10 +34,7 @@ has no dedup stage and its grain is the micro-batch, not the bucket.
 
 from __future__ import annotations
 
-import os
-import uuid
 from collections import Counter
-from pathlib import Path
 from typing import TYPE_CHECKING, Sequence
 
 from pyspark.sql import types as T
@@ -48,7 +43,7 @@ if TYPE_CHECKING:
     from pyspark.sql import DataFrame, Row
 
 # a StructType, not a DDL string: the batch sink's Arrow schema is derived
-# from it without a JVM (``write_attempt``)
+# from it without a JVM (``plans.checkpoint.commit_bucket``)
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
     T.StructField("attempt", T.IntegerType()),
@@ -135,32 +130,6 @@ def lineage_rows(
     for b, n in sorted(kept_per_bucket(rows).items()):
         out.append((run_id, 1, "write", -1, b, n, write_counts.get(b, 0), None))
     return out
-
-
-def write_attempt(
-    lineage_dir: str | Path, run_id: str, rows: list[tuple]
-) -> Path:
-    """Write one attempt's ``lineage_rows`` (at least one) as ONE parquet
-    file under ``lineage_dir`` and return its path. The name carries a
-    fresh uuid, so two attempts sharing a ``run_id`` never replace each
-    other's rows. Published via a ``.tmp-`` sibling and an atomic
-    ``os.replace``: readers (Spark and pyarrow skip dot files) see the
-    whole file or none of it, never a torn one."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    schema = to_arrow_schema(LINEAGE_SCHEMA)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)],
-        schema=schema,
-    )
-    path = Path(lineage_dir) / f"attempt-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
-    path.parent.mkdir(parents=True, exist_ok=True)
-    tmp = path.with_name(f".tmp-{uuid.uuid4().hex}")
-    pq.write_table(table, tmp)
-    os.replace(tmp, path)
-    return path
 
 
 def stream_rows(

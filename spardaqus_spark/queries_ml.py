@@ -414,33 +414,28 @@ def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship: run the REAL quality pipeline's kernel (the fused
-    ``stages.score_scrub`` mapInPandas: scoring + in-worker verdict, no
-    dedup) over `documents` as the corpus analog.
+    """The flagship: run the REAL quality pipeline's DAG
+    (``pipeline.build_verdict_frame``: sha2, the content-hash dedup window,
+    then the fused ``stages.score_scrub`` kernel) over `documents` as the
+    corpus analog, and aggregate the rules' verdict (``rule_keep``) per
+    predicted language. The dedup exchange repartitions the one-row-group
+    sandbox table, so the kernel runs on every core without a ``spread``.
     Model-backed -> rows-only driver check; exact equality vs the pandas
-    oracle is enforced separately in tests/test_pipeline_oracle.py.
-    r6: corpus spread (queries_text.spread) — the fused score kernel otherwise
-    runs in ONE task on the one-row-group sandbox table (no-op at scale;
-    measured noop 1.39 -> 1.10 s at sf0.1)."""
+    oracle is enforced separately in tests/test_pipeline_oracle.py."""
     from .config import default_config
-    from .operators import stages
+    from .pipeline import build_verdict_frame
     from .session import ship_package
 
     ship_package(spark)  # driver-owned sessions may lack our PYTHONPATH
     docs = load(spark, sf_dir, "documents")
-    corpus = spread(
-        docs.select(
-            F.concat(F.lit("src/"), F.col("source")).alias("repo"),
-            F.concat(F.lit("doc"), F.col("doc_id").cast("string")).alias("path"),
-            F.md5(F.col("text")).alias("commit"),
-            F.col("lang"),
-            F.col("text").alias("content"),
-        ),
-        "path",
+    corpus = docs.select(
+        F.concat(F.lit("src/"), F.col("source")).alias("repo"),
+        F.concat(F.lit("doc"), F.col("doc_id").cast("string")).alias("path"),
+        F.md5(F.col("text")).alias("commit"),
+        F.col("lang"),
+        F.col("text").alias("content"),
     )
-    v = stages.score_scrub(
-        corpus.withColumn("dup_loser", F.lit(False)), default_config()
-    )
+    v = build_verdict_frame(corpus, default_config())
     return (
         v.groupBy("lang_pred")
         .agg(

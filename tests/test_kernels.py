@@ -151,12 +151,10 @@ class TestDeterminism:
         pd.testing.assert_frame_equal(a.iloc[:50].reset_index(drop=True), c.iloc[:50])
 
 
-def test_ppl_chunk_size_is_performance_only():
-    """ADVICE r01: chunk ends snap to row boundaries, so the CHUNK env
-    knob can never change the float64 accumulation grouping — byte-equal
-    results at any value (§2.9 pinned)."""
-    import os
-
+def test_ppl_chunk_size_is_performance_only(monkeypatch):
+    """ADVICE r01: chunk ends snap to row boundaries, so ``ppl.CHUNK`` can
+    never change the float64 accumulation grouping — byte-equal results
+    at any value (§2.9 pinned)."""
     import pandas as pd
 
     from spardaqus_spark.kernels import ppl as P
@@ -171,10 +169,7 @@ def test_ppl_chunk_size_is_performance_only():
         ]
     )
     base = P.perplexity(texts)
-    try:
-        for c in (256, 4096, 10**9):
-            os.environ["SPARDAQUS_PPL_CHUNK"] = str(c)
-            got = P.perplexity(texts)
-            assert (got.to_numpy() == base.to_numpy()).all(), f"CHUNK={c}"
-    finally:
-        os.environ.pop("SPARDAQUS_PPL_CHUNK", None)
+    for c in (256, 4096, 10**9):
+        monkeypatch.setattr(P, "CHUNK", c)
+        got = P.perplexity(texts)
+        assert (got.to_numpy() == base.to_numpy()).all(), f"CHUNK={c}"

@@ -77,15 +77,12 @@ def test_no_nondeterministic_expressions():
 
 
 def test_no_rdd_api_in_hot_path():
-    """RDD API bypasses Catalyst/Arrow (SURVEY §1.3). The single sanctioned
-    use is the tiny driver-side JSON-batch envelope in sources/io.py.
-    `.rdd.getNumPartitions()` is additionally sanctioned (r6): it is
+    """RDD API bypasses Catalyst/Arrow (SURVEY §1.3), in every module. The
+    one sanctioned use is `.rdd.getNumPartitions()` (r6): it is
     metadata-only plan introspection — no data crosses the RDD path — and
     queries_text.spread needs it to decide whether a scan is under-split."""
     offenders = []
     for p in sorted(PKG.rglob("*.py")):
-        if p.name == "io.py":
-            continue
         for i, line in enumerate(p.read_text().splitlines(), 1):
             code = line.split("#", 1)[0]
             code = code.replace(".rdd.getNumPartitions()", "")

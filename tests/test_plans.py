@@ -103,9 +103,9 @@ def test_resumed_dag_prunes_between_window_and_kernel(spark, files_parquet, tmp_
     from spardaqus_spark.plans import checkpoint as ckpt
 
     cfg = default_config()
-    half = dict.fromkeys(range(cfg.num_buckets // 2), 0)
+    half = range(cfg.num_buckets // 2)
     ckpt.commit_bucket(
-        tmp_path, "attempt-prior-0", "prior", half, str(tmp_path / "files_clean")
+        tmp_path, "prior", [("prior", 1, "write", -1, b, 0, 0, None) for b in half]
     )
     src = spark.read.parquet(files_parquet)
     v = pipeline.build_verdict_frame(src, cfg, run_dir=tmp_path)

@@ -30,6 +30,11 @@ def _lineage_files(run_dir, run_id="*"):
     return sorted((run_dir / "lineage").glob(f"attempt-{run_id}-*.parquet"))
 
 
+def _write_rows(run_id, buckets):
+    """Write-stage lineage rows, one per bucket: enough to commit them."""
+    return [(run_id, 1, "write", -1, b, 0, 0, None) for b in buckets]
+
+
 def _lineage_totals(spark, run_dir):
     """(stage, bucket) -> (Σ files_in, Σ files_out) over every lineage row
     the run dir holds."""
@@ -166,7 +171,7 @@ def _crashed_run(monkeypatch, sdf, run_dir, run_id, target, name, **kw):
 def _assert_resumed(spark, run_dir, counted_run):
     """The run dir equals an uninterrupted run's: the same rows and
     scrubbed sha256, the same lineage totals per (stage, bucket), no
-    lineage row twice, and exactly one manifest per lineage file."""
+    lineage row twice, and no ``_manifest/`` dir."""
     full = _read_clean(spark, counted_run[0])
     pd.testing.assert_frame_equal(full, _read_clean(spark, run_dir))
     dupes = (
@@ -178,22 +183,21 @@ def _assert_resumed(spark, run_dir, counted_run):
     )
     assert dupes == 0
     assert _lineage_totals(spark, run_dir) == _lineage_totals(spark, counted_run[0])
-    assert sorted(p.name for p in ckpt.manifest_dir(run_dir).iterdir()) == sorted(
-        f"{p.stem}.json" for p in _lineage_files(run_dir)
-    )
+    assert not (run_dir / "_manifest").exists()
 
 
-def test_crash_between_write_and_manifest_no_duplicates(
+def test_crash_before_the_publish_no_duplicates(
     spark, corpus_sdf, tmp_path, counted_run, monkeypatch
 ):
-    """ADVICE r01 (medium): data lands (append) before the manifest
+    """ADVICE r01 (medium): data lands (append) before the attempt
     commits, so a kill after the data write and before the lineage
-    publish leaves visible bucket partitions with no manifest. The
-    resumed run must sweep them before its append write, so the final
+    publish leaves visible bucket partitions that no attempt file owns.
+    The resumed run must sweep them before its append write, so the final
     output has NO duplicate rows."""
     d = tmp_path / "crash"
-    _crashed_run(monkeypatch, corpus_sdf, d, "a1", lin, "write_attempt")
+    _crashed_run(monkeypatch, corpus_sdf, d, "a1", ckpt, "commit_bucket")
     assert len(list((d / "files_clean").glob("bucket=*"))) == 8
+    assert not (d / "lineage").exists()
     assert ckpt.done_buckets(d) == []
 
     r = pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a2")
@@ -201,20 +205,22 @@ def test_crash_between_write_and_manifest_no_duplicates(
     _assert_resumed(spark, d, counted_run)
 
 
-def test_crash_before_any_manifest_drops_lineage_file(
+def test_crash_at_the_publish_sweeps_its_temp_file(
     spark, corpus_sdf, tmp_path, counted_run, monkeypatch
 ):
-    """A kill after the lineage publish and before the manifest rename
-    leaves a whole lineage file and a manifest temp file that no commit
-    owns: the resume deletes both with the orphan bucket dirs and equals
-    an uninterrupted run."""
+    """A kill at the publish's ``os.replace`` leaves the attempt's whole
+    lineage rows in a ``.tmp-`` file that no reader sees, next to bucket
+    dirs that no attempt file owns: nothing is committed, the resume
+    deletes both and equals an uninterrupted run."""
     d = tmp_path / "crash0"
-    _crashed_run(monkeypatch, corpus_sdf, d, "a1", ckpt.os, "rename")
-    assert len(_lineage_files(d, "a1")) == 1
-    assert [p.name[:5] for p in ckpt.manifest_dir(d).iterdir()] == [".tmp-"]
+    _crashed_run(monkeypatch, corpus_sdf, d, "a1", ckpt.os, "replace")
+    assert [p.name[:5] for p in (d / "lineage").iterdir()] == [".tmp-"]
+    assert len(list((d / "files_clean").glob("bucket=*"))) == 8
+    assert ckpt.done_buckets(d) == []
 
     r = pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a2")
     assert r["buckets"] == 8
+    assert list((d / "lineage").glob(".tmp-*")) == []
     assert _lineage_files(d, "a1") == []
     _assert_resumed(spark, d, counted_run)
 
@@ -223,13 +229,13 @@ def test_crash_after_a_committed_attempt(
     spark, corpus_sdf, tmp_path, counted_run, monkeypatch
 ):
     """A whitelisted attempt commits buckets 0-3, the next attempt is
-    killed before its manifest rename: the resume keeps the first
-    attempt's buckets and lineage, drops the killed attempt's output and
-    reprocesses only buckets 4-7."""
+    killed at its publish: the resume keeps the first attempt's buckets
+    and lineage, drops the killed attempt's output and reprocesses only
+    buckets 4-7."""
     d = tmp_path / "crash1"
     pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a1", bucket_whitelist=[0, 1, 2, 3])
     [first] = _lineage_files(d, "a1")
-    _crashed_run(monkeypatch, corpus_sdf, d, "a2", ckpt.os, "rename")
+    _crashed_run(monkeypatch, corpus_sdf, d, "a2", ckpt.os, "replace")
     assert ckpt.done_buckets(d) == [0, 1, 2, 3]
 
     r = pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a3")
@@ -255,62 +261,91 @@ def test_attempts_sharing_a_run_id_keep_their_lineage(
 
 def test_clean_orphans_sweeps_stale_lineage_temp(tmp_path):
     """A publish that died before its rename leaves a ``.tmp-*`` file in
-    the lineage sink or under ``_manifest/``, and an attempt killed before
-    its manifest rename leaves a lineage file no manifest names; the next
-    start removes those and keeps the committed attempt's file."""
-    sink = tmp_path / "lineage"
-    sink.mkdir()
-    (sink / ".tmp-deadbeef").write_bytes(b"torn")
-    row = ("a1", 1, "write", -1, 3, 2, 2, None)
-    kept = lin.write_attempt(sink, "a1", [row])
-    ckpt.commit_bucket(tmp_path, kept.stem, "a1", {3: 2}, str(tmp_path / "files_clean"))
-    orphan = lin.write_attempt(sink, "a2", [row])
-    (ckpt.manifest_dir(tmp_path) / ".tmp-cafe").write_text("{")
-    assert ckpt.clean_orphans(tmp_path, tmp_path / "files_clean", sink) == sorted([
-        ckpt.manifest_dir(tmp_path) / ".tmp-cafe", sink / ".tmp-deadbeef", orphan
-    ])
-    assert list(sink.iterdir()) == [kept]
-    assert [p.name for p in ckpt.manifest_dir(tmp_path).iterdir()] == [f"{kept.stem}.json"]
+    the lineage sink, and the data its attempt wrote leaves bucket dirs
+    that no committed attempt lists; the next start removes those and
+    keeps the committed attempt's file and buckets."""
+    sink = tmp_path / "files_clean"
+    for b in (3, 5):
+        (sink / f"bucket={b}").mkdir(parents=True)
+    kept = ckpt.commit_bucket(tmp_path, "a1", _write_rows("a1", [3]))
+    stale = tmp_path / "lineage" / ".tmp-deadbeef"
+    stale.write_bytes(b"torn")
+    assert ckpt.clean_orphans(tmp_path, sink) == sorted([sink / "bucket=5", stale])
+    assert list((tmp_path / "lineage").iterdir()) == [kept]
+    assert [p.name for p in sink.iterdir()] == ["bucket=3"]
+
+
+def test_unreadable_attempt_file_is_not_committed(tmp_path):
+    """An attempt file that pyarrow cannot read commits nothing: its
+    buckets are not done (they rerun), and ``clean_orphans`` removes it
+    with the bucket dirs only it listed. A readable attempt stays
+    committed."""
+    sink = tmp_path / "files_clean"
+    for b in (3, 5):
+        (sink / f"bucket={b}").mkdir(parents=True)
+    kept = ckpt.commit_bucket(tmp_path, "a1", _write_rows("a1", [3]))
+    torn = ckpt.commit_bucket(tmp_path, "a2", _write_rows("a2", [5]))
+    torn.write_bytes(torn.read_bytes()[:-12])  # footer and magic gone
+    assert ckpt.done_buckets(tmp_path) == [3]
+    assert ckpt.clean_orphans(tmp_path, sink) == sorted([sink / "bucket=5", torn])
+    assert list((tmp_path / "lineage").iterdir()) == [kept]
+    assert ckpt.done_buckets(tmp_path) == [3]
+
+
+def _assert_refused(sdf, run_dir, old_dir):
+    """``run_dir`` is refused at start, naming ``old_dir``, before
+    anything is written: by ``run()``, and by ``build_verdict_frame``,
+    whose plan ``main.py --explain`` prints."""
+    before = sorted(run_dir.rglob("*"))
+    with pytest.raises(ValueError, match=re.escape(str(old_dir))):
+        pipeline.build_verdict_frame(sdf, CFG, run_dir=run_dir)
+    with pytest.raises(ValueError, match=re.escape(str(old_dir))):
+        pipeline.run(sdf, CFG, run_dir=run_dir, run_id="new")
+    assert sorted(run_dir.rglob("*")) == before
 
 
 def test_old_bucket_partitioned_lineage_is_rejected(corpus_sdf, tmp_path):
     """A run dir whose lineage sink still holds ``bucket=<b>`` dirs (the
     old layout) is refused at start, naming the dir; it is not migrated."""
     (tmp_path / "lineage" / "bucket=3").mkdir(parents=True)
-    with pytest.raises(ValueError, match=re.escape(str(tmp_path / "lineage"))):
-        pipeline.run(corpus_sdf, CFG, run_dir=tmp_path, run_id="new")
-    assert not ckpt.manifest_dir(tmp_path).exists()
+    _assert_refused(corpus_sdf, tmp_path, tmp_path / "lineage")
 
 
 def test_old_per_bucket_manifests_are_rejected(corpus_sdf, tmp_path):
     """A run dir committed with per-bucket manifests (the old layout) is
-    refused at start, naming the dir, before anything is written: by
-    ``run()``, and by ``build_verdict_frame``, whose plan ``main.py
-    --explain`` prints."""
-    old = ckpt.manifest_dir(tmp_path) / "bucket-00003.json"
+    refused at start, naming the dir, before anything is written."""
+    old = tmp_path / "_manifest" / "bucket-00003.json"
     old.parent.mkdir()
     old.write_text(json.dumps({"run_id": "old", "bucket": 3, "status": "done"}))
-    with pytest.raises(ValueError, match=re.escape(str(old.parent))):
-        pipeline.build_verdict_frame(corpus_sdf, CFG, run_dir=tmp_path)
-    with pytest.raises(ValueError, match=re.escape(str(old.parent))):
-        pipeline.run(corpus_sdf, CFG, run_dir=tmp_path, run_id="new")
-    assert sorted(tmp_path.rglob("*")) == [old.parent, old]
+    _assert_refused(corpus_sdf, tmp_path, old.parent)
+
+
+def test_old_attempt_manifests_are_rejected(corpus_sdf, tmp_path):
+    """A run dir committed with one JSON manifest per attempt (the layout
+    before the attempt's lineage file became its commit) is refused at
+    start, naming the dir, before anything is written; it is not
+    migrated."""
+    old = tmp_path / "_manifest" / "attempt-old-0000abcd.json"
+    old.parent.mkdir()
+    old.write_text(json.dumps({
+        "run_id": "old", "buckets": {"3": 7},
+        "output_path": str(tmp_path / "files_clean"), "schema_version": 2,
+    }))
+    _assert_refused(corpus_sdf, tmp_path, old.parent)
 
 
 def test_explain_prints_the_resumed_plan(corpus_pdf, tmp_path):
-    """``main.py --explain`` prints the plan ``run()`` would execute: on a
-    run dir with a committed attempt and a ``--buckets`` whitelist, the
-    plan prunes both right after the dedup window. ``main`` starts and
-    stops its own session, so it runs in a subprocess."""
+    """``main.py --explain`` prints the plan ``run()`` writes: on a run dir
+    with a committed attempt and a ``--buckets`` whitelist, the plan
+    prunes both right after the dedup window, and it ends in the write's
+    sort on (bucket, repo, path, commit). ``main`` starts and stops its
+    own session, so it runs in a subprocess."""
     src = tmp_path / "files.parquet"
     corpus_pdf[["repo", "path", "commit", "lang", "content"]].head(60).to_parquet(
         src, index=False
     )
     run_dir = tmp_path / "run"
-    ckpt.commit_bucket(
-        run_dir, "attempt-old-0000abcd", "old", {0: 5, 3: 7},
-        str(run_dir / "files_clean"),
-    )
+    ckpt.commit_bucket(run_dir, "old", _write_rows("old", [0, 3]))
     env = {k: v for k, v in os.environ.items() if k != "PYSPARK_GATEWAY_PORT"}
     env.update(SPARK_GRAFT_MASTER="local[1]", SPARK_GRAFT_DRIVER_MEM="1g")
     proc = subprocess.run(
@@ -327,27 +362,12 @@ def test_explain_prints_the_resumed_plan(corpus_pdf, tmp_path):
     assert proc.returncode == 0, proc.stderr[-4000:]
     assert re.search(r"NOT bucket#\d+ IN \(0,3\)", proc.stdout), proc.stdout
     assert re.search(r"\bbucket#\d+ IN \(3,5\)", proc.stdout), proc.stdout
-
-
-def test_write_lineage_matches_manifests(spark, corpus_sdf, tmp_path):
-    """VERDICT r02 #3: write-stage lineage files_out must be the OBSERVED
-    committed count per bucket — exactly the number the attempt manifest
-    carries for it — not the derived n_keep. Write rows are sink-grained
-    (partition_id = -1, one per bucket), and files_in (kept rows entering
-    the write) equals files_out on a healthy run."""
-    d = tmp_path / "wl"
-    pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="w1")
-    [f] = ckpt.manifest_dir(d).glob("attempt-*.json")
-    manifest = {int(b): n for b, n in json.loads(f.read_text())["buckets"].items()}
-    lin = (
-        spark.read.parquet(str(d / "lineage"))
-        .filter(F.col("stage") == "write")
-        .toPandas()
+    sort_keys = ", ".join(
+        rf"{k}#\d+ ASC NULLS FIRST" for k in ("bucket", "repo", "path", "commit")
     )
-    assert (lin["partition_id"] == -1).all()
-    got = dict(zip(lin["bucket"].astype(int), lin["files_out"].astype(int)))
-    assert got == manifest
-    assert (lin["files_in"].astype(int) == lin["files_out"].astype(int)).all()
+    assert re.search(
+        rf"\(\d+\) Sort\n.*\nArguments: \[{sort_keys}\], false", proc.stdout
+    ), proc.stdout
 
 
 def test_write_lineage_surfaces_loss(spark, corpus_sdf):
@@ -500,21 +520,27 @@ def test_run_writes_one_lineage_file(spark, counted_run):
     ]
 
 
-def test_run_commits_one_manifest(counted_run):
-    """A run commits exactly one manifest, named after its lineage file,
-    listing every bucket with the rows it wrote there."""
+def test_write_lineage_is_the_commit(counted_run):
+    """A run commits by publishing its one lineage file; there is no
+    ``_manifest/``. VERDICT r02 #3: the file's write rows carry the
+    OBSERVED committed count of every bucket, zero-kept ones included —
+    the rows each ``bucket=<b>`` dir of files_clean holds, not the derived
+    n_keep. Write rows are sink-grained (partition_id = -1, one per
+    bucket), files_in (kept rows entering the write) equals files_out on a
+    healthy run, and ``done_buckets`` reads all 8 buckets back."""
     run_dir = counted_run[0]
-    [f] = ckpt.manifest_dir(run_dir).iterdir()
-    [lineage_file] = _lineage_files(run_dir)
-    assert f.name == f"{lineage_file.stem}.json"
-    entry = json.loads(f.read_text())
-    assert entry["run_id"] == "c1"
-    assert entry["schema_version"] == 2
+    assert not (run_dir / "_manifest").exists()
+    [f] = _lineage_files(run_dir, "c1")
+    lin = pd.read_parquet(f)
+    lin = lin[lin["stage"] == "write"]
+    assert (lin["partition_id"] == -1).all()
+    assert (lin["files_in"] == lin["files_out"]).all()
     written = pd.read_parquet(run_dir / "files_clean", columns=["bucket"])
     counts = written["bucket"].astype(int).value_counts().to_dict()
-    assert {int(b): n for b, n in entry["buckets"].items()} == {
+    assert dict(zip(lin["bucket"].astype(int), lin["files_out"].astype(int))) == {
         b: counts.get(b, 0) for b in range(8)
     }
+    assert ckpt.done_buckets(run_dir) == list(range(8))
 
 
 def test_run_metrics_record_phase_seconds(counted_run, corpus_pdf):
@@ -526,7 +552,7 @@ def test_run_metrics_record_phase_seconds(counted_run, corpus_pdf):
         for line in (counted_run[0] / "run_metrics.jsonl").read_text().splitlines()
     ]
     phases = rec["phase_s"]
-    assert set(phases) == {"write", "ledger", "readback", "lineage", "commit"}
+    assert set(phases) == {"write", "ledger", "readback", "commit"}
     assert all(v >= 0 for v in phases.values())
     assert rec["rows_scored"] == len(corpus_pdf)
     assert rec["rows_kept"] == rec["files_out"] > 0
