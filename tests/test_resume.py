@@ -520,16 +520,30 @@ def test_run_writes_one_lineage_file(spark, counted_run):
     ]
 
 
-def test_write_lineage_is_the_commit(counted_run):
-    """A run commits by publishing its one lineage file; there is no
-    ``_manifest/``. VERDICT r02 #3: the file's write rows carry the
+def test_run_commits_one_manifest(counted_run):
+    """A run commits exactly one attempt, and its commit record is the
+    published lineage file itself: there is no ``_manifest/`` dir, the
+    file carries the run id, and ``done_buckets`` reads every bucket back
+    from its write rows, one row per bucket."""
+    run_dir = counted_run[0]
+    assert not (run_dir / "_manifest").exists()
+    [f] = _lineage_files(run_dir)
+    assert f.name.startswith("attempt-c1-")
+    lin = pd.read_parquet(f)
+    assert set(lin["run_id"]) == {"c1"}
+    write = lin[lin["stage"] == "write"]
+    assert sorted(write["bucket"].astype(int)) == list(range(8))
+    assert ckpt.done_buckets(run_dir) == list(range(8))
+
+
+def test_write_lineage_matches_manifests(counted_run):
+    """VERDICT r02 #3: the committed lineage file's write rows carry the
     OBSERVED committed count of every bucket, zero-kept ones included —
     the rows each ``bucket=<b>`` dir of files_clean holds, not the derived
     n_keep. Write rows are sink-grained (partition_id = -1, one per
-    bucket), files_in (kept rows entering the write) equals files_out on a
-    healthy run, and ``done_buckets`` reads all 8 buckets back."""
+    bucket), and files_in (kept rows entering the write) equals files_out
+    on a healthy run."""
     run_dir = counted_run[0]
-    assert not (run_dir / "_manifest").exists()
     [f] = _lineage_files(run_dir, "c1")
     lin = pd.read_parquet(f)
     lin = lin[lin["stage"] == "write"]
@@ -540,7 +554,6 @@ def test_write_lineage_is_the_commit(counted_run):
     assert dict(zip(lin["bucket"].astype(int), lin["files_out"].astype(int))) == {
         b: counts.get(b, 0) for b in range(8)
     }
-    assert ckpt.done_buckets(run_dir) == list(range(8))
 
 
 def test_run_metrics_record_phase_seconds(counted_run, corpus_pdf):
