@@ -163,7 +163,7 @@ def run(
     # the ledger, never from a listing of the sink root)
     with _phase(phase_s, "readback"):
         seen = committed_counts(
-            Path(out_path), [b for b, n in sorted(kept.items()) if n]
+            Path(out_path), "bucket", [b for b, n in sorted(kept.items()) if n]
         )
     # per-stage lineage ([B:6] "every stage"): a few thousand rows already
     # on the driver; publishing them commits the attempt, so a committed
@@ -194,28 +194,29 @@ def _phase(phase_s: dict[str, float], name: str):
         phase_s[name] = time.perf_counter() - t0
 
 
-def committed_counts(root: Path, buckets: Iterable[int]) -> dict[int, int]:
-    """bucket -> rows the sink at ``root`` holds under ``bucket=<b>/``, for
-    exactly these dirs: the OBSERVED write-stage counts of the batch job.
+def committed_counts(root: Path, column: str, values: Iterable[int]) -> dict[int, int]:
+    """value -> rows the sink at ``root`` holds under ``<column>=<value>/``
+    (``bucket`` or ``batch_id``), for exactly these dirs: the OBSERVED
+    write-stage counts of a batch run or a micro-batch.
 
     Counted from the sink after the write job commits, so a write-side
     loss shows up (recounting the pre-write frame would make files_in ==
     files_out by construction). The counts are the ``num_rows`` of each
-    data file's parquet footer, read on the driver with no Spark job: the
-    batch run dir is local (``plans.checkpoint`` commits with
+    data file's parquet footer, read on the driver with no Spark job:
+    both sinks are local paths (their lineage commits with
     ``os.replace``), and Spark's own count of a partition-column-only read
     comes from the same row-group metadata. Names starting with ``_`` or
     ``.`` are skipped, as Hadoop input formats skip them (the local
-    writer's ``.part-*.crc`` checksums). Callers pass only buckets with
+    writer's ``.part-*.crc`` checksums). Callers pass only dirs with
     kept rows, so each dir must hold rows: a dir that is missing, or that
     holds no rows (its data files gone), raises here, naming it. Either
-    is a real write loss that fails the run loudly. No buckets: ``{}``."""
+    is a real write loss that fails the run loudly. No values: ``{}``."""
     import pyarrow.parquet as pq
 
     counts: dict[int, int] = {}
     empty = []
-    for b in map(int, buckets):
-        d = root / f"bucket={b}"
+    for v in map(int, values):
+        d = root / f"{column}={v}"
         files = d.iterdir() if d.is_dir() else ()
         n = sum(
             pq.read_metadata(f).num_rows
@@ -223,7 +224,7 @@ def committed_counts(root: Path, buckets: Iterable[int]) -> dict[int, int]:
             if not f.name.startswith(("_", "."))
         )
         if n:
-            counts[b] = n
+            counts[v] = n
         else:
             empty.append(str(d))
     if empty:

@@ -29,11 +29,12 @@ uninterrupted run.
 
 from __future__ import annotations
 
-import os
 import shutil
 import uuid
 from pathlib import Path
 from typing import TYPE_CHECKING
+
+from . import lineage as lin
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
@@ -55,33 +56,15 @@ def check_layout(run_dir: str | Path) -> None:
 
 
 def commit_bucket(run_dir: str | Path, run_id: str, rows: list[tuple]) -> Path:
-    """Atomically commit one attempt: write its ``lineage_rows`` (at least
-    one) as ONE parquet file under ``run_dir/lineage/`` and return its
-    path. Every bucket in the rows is done once the file is visible. It is
-    written to a ``.tmp-`` sibling (Spark and pyarrow skip dot files) and
-    published by one ``os.replace``, so readers see the whole file or none
-    of it; the name carries a fresh uuid, so two attempts sharing a
-    ``run_id`` never replace each other's rows. Keep the name, though it
-    commits a whole attempt: perfbench's ``--trace 1`` runs time
+    """Atomically commit one attempt: publish its ``lineage_rows`` (at
+    least one) as ONE parquet file under ``run_dir/lineage/`` and return
+    its path (``lineage.publish``). Every bucket in the rows is done once
+    the file is visible; the name carries a fresh uuid, so two attempts
+    sharing a ``run_id`` never replace each other's rows. Keep the name,
+    though it commits a whole attempt: perfbench's ``--trace 1`` runs time
     ``commit_bucket``, ``clean_orphans`` and ``filter_resume`` by name."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from .lineage import LINEAGE_SCHEMA
-
-    schema = to_arrow_schema(LINEAGE_SCHEMA)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), schema)],
-        schema=schema,
-    )
-    d = Path(run_dir) / "lineage"
-    d.mkdir(parents=True, exist_ok=True)
-    tmp = d / f".tmp-{uuid.uuid4().hex}"
-    pq.write_table(table, tmp)
-    path = d / f"attempt-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
-    os.replace(tmp, path)
-    return path
+    name = f"attempt-{run_id}-{uuid.uuid4().hex[:8]}.parquet"
+    return lin.publish(rows, lin.LINEAGE_SCHEMA, Path(run_dir) / "lineage" / name)
 
 
 def _attempts(run_dir: str | Path) -> tuple[set[int], list[Path]]:

@@ -14,27 +14,27 @@ each stage's in/out counts follow exactly from the ledger's
   verdict: in = all rows,   out = keep (rule_keep & survivor)
   scrub:   in = kept rows,  out = kept rows (rewrite, no drops)
   write:   in = kept rows,  out = the count the write job actually
-           committed, counted from the sink by the caller (parquet
-           footers for a batch run, a Spark count for a micro-batch) — a
-           write-side loss shows as files_in != files_out (VERDICT r02 #3).
-           Write rows are sink-grained (partition_id = -1, one per bucket
-           or micro-batch): the sink is counted per bucket, not per
-           partition.
+           committed, summed from the parquet footers of the sink's dir
+           by the caller (``pipeline.committed_counts``) — a write-side
+           loss shows as files_in != files_out (VERDICT r02 #3). Write
+           rows are sink-grained (partition_id = -1, one per bucket or
+           micro-batch): the sink is counted per dir, not per partition.
 
-A batch attempt's rows already sit on the driver, so
-``plans.checkpoint.commit_bucket`` writes them with pyarrow as ONE parquet
-file per attempt under the run dir's ``lineage/`` (no Spark job); ``bucket``
-is a data column, not a partition dir. Publishing that file is the
-attempt's commit.
-
-The same ledger, grouped by partition only, gives the streaming
-micro-batch its rows (``stream_rows``); the stream does no dedup, so it
-has no dedup stage and its grain is the micro-batch, not the bucket.
+The rows sit on the driver, so ``publish`` writes them with pyarrow as
+ONE parquet file, no Spark job: a batch attempt's as
+``lineage/attempt-<run_id>-<uuid8>.parquet`` under its run dir, whose
+publish is the attempt's commit (``plans.checkpoint.commit_bucket``;
+``bucket`` a data column); a micro-batch's, from the ledger grouped by
+partition only (``stream_rows``: no dedup stage), as
+``<out>_lineage/batch_id=<id>/lineage.parquet``, which a retry replaces.
 """
 
 from __future__ import annotations
 
+import os
+import uuid
 from collections import Counter
+from pathlib import Path
 from typing import TYPE_CHECKING, Sequence
 
 from pyspark.sql import types as T
@@ -42,8 +42,8 @@ from pyspark.sql import types as T
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, Row
 
-# a StructType, not a DDL string: the batch sink's Arrow schema is derived
-# from it without a JVM (``plans.checkpoint.commit_bucket``)
+# StructTypes, not DDL strings: ``publish`` derives the Arrow schema from
+# them without a JVM
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("run_id", T.StringType()),
     T.StructField("attempt", T.IntegerType()),
@@ -54,9 +54,9 @@ LINEAGE_SCHEMA = T.StructType([
     T.StructField("files_out", T.LongType()),
     T.StructField("rule_hit_counts", T.MapType(T.StringType(), T.LongType())),
 ])
-STREAM_LINEAGE_SCHEMA = (
-    "batch_id int, stage string, partition_id int, "
-    "files_in bigint, files_out bigint"
+# no batch_id: it is the file's partition dir
+STREAM_LINEAGE_SCHEMA = T.StructType(
+    [LINEAGE_SCHEMA[c] for c in ("stage", "partition_id", "files_in", "files_out")]
 )
 
 
@@ -132,19 +132,39 @@ def lineage_rows(
     return out
 
 
-def stream_rows(
-    rows: list["Row"], batch_id: int, n_committed: int
-) -> list[tuple]:
+def stream_rows(rows: list["Row"], n_committed: int) -> list[tuple]:
     """Micro-batch lineage rows in ``STREAM_LINEAGE_SCHEMA`` order from a
     partition-keyed ``ledger``: score/verdict/scrub per partition, then one
     write row (files_in = kept rows, files_out = ``n_committed``, the
     count of rows in the batch's sink partition)."""
     out = [
-        (batch_id, stage, r["partition_id"], fi, fo)
+        (stage, r["partition_id"], fi, fo)
         for r in rows
         for stage, fi, fo in _stage_counts(r)
         if stage != "dedup"
     ]
     n_keep = sum(r["n_keep"] for r in rows)
-    out.append((batch_id, "write", -1, n_keep, n_committed))
+    out.append(("write", -1, n_keep, n_committed))
     return out
+
+
+def publish(rows: list[tuple], schema: "T.StructType", path: Path) -> Path:
+    """Write ``rows`` (at least one, in ``schema`` order) as ONE parquet
+    file at ``path`` and return it. The file is written to a ``.tmp-``
+    sibling (Spark and pyarrow skip dot files) and published by one
+    ``os.replace``, so readers see the whole file or none of it, and a
+    file already at ``path`` is replaced whole."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow)],
+        schema=arrow,
+    )
+    path.parent.mkdir(parents=True, exist_ok=True)
+    tmp = path.parent / f".tmp-{uuid.uuid4().hex}"
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
+    return path

@@ -1,9 +1,9 @@
 """Source seams (SURVEY.md §7 M5): one config key switches the batch
 read between sandbox parquet and production Iceberg. The sandbox has no
 Iceberg jar (SURVEY.md App. A), so the iceberg branch is config-gated and
-exercised only for plan construction in prod. Reads prune columns at the
-source (metadata-only passes never deserialize `content` — SURVEY.md
-§1.3). The sink write is ``pipeline.run``'s own.
+exercised only for plan construction in prod. Spark prunes the columns a
+plan never uses at the scan (metadata-only passes never deserialize
+`content` — SURVEY.md §1.3). The sink write is ``pipeline.run``'s own.
 """
 
 from __future__ import annotations
@@ -16,14 +16,10 @@ if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
 
-def read_files(spark: "SparkSession", cfg: PipelineConfig, columns: list[str] | None = None) -> "DataFrame":
+def read_files(spark: "SparkSession", cfg: PipelineConfig) -> "DataFrame":
     if cfg.table_format == "iceberg":
-        df = spark.read.format("iceberg").load(cfg.input_path)
-    else:
-        df = spark.read.parquet(cfg.input_path)
-    if columns:
-        df = df.select(*columns)
-    return df
+        return spark.read.format("iceberg").load(cfg.input_path)
+    return spark.read.parquet(cfg.input_path)
 
 
 def read_stream_source(spark: "SparkSession", **opts):

@@ -14,14 +14,13 @@ from spardaqus_spark.config import default_config
 from spardaqus_spark.sources import io as sio
 
 
-def test_read_files_parquet_with_column_pruning(spark, corpus_pdf, tmp_path):
+def test_read_files_parquet_round_trip(spark, corpus_pdf, tmp_path):
     p = tmp_path / "files.parquet"
-    corpus_pdf[["repo", "path", "commit", "lang", "content"]].to_parquet(
-        p, index=False
-    )
+    cols = ["repo", "path", "commit", "lang", "content"]
+    corpus_pdf[cols].to_parquet(p, index=False)
     cfg = default_config(input_path=str(p))
-    df = sio.read_files(spark, cfg, columns=["repo", "path"])
-    assert df.columns == ["repo", "path"]
+    df = sio.read_files(spark, cfg)
+    assert df.columns == cols
     assert df.count() == len(corpus_pdf)
 
 

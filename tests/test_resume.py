@@ -213,7 +213,7 @@ def test_crash_at_the_publish_sweeps_its_temp_file(
     dirs that no attempt file owns: nothing is committed, the resume
     deletes both and equals an uninterrupted run."""
     d = tmp_path / "crash0"
-    _crashed_run(monkeypatch, corpus_sdf, d, "a1", ckpt.os, "replace")
+    _crashed_run(monkeypatch, corpus_sdf, d, "a1", os, "replace")
     assert [p.name[:5] for p in (d / "lineage").iterdir()] == [".tmp-"]
     assert len(list((d / "files_clean").glob("bucket=*"))) == 8
     assert ckpt.done_buckets(d) == []
@@ -235,7 +235,7 @@ def test_crash_after_a_committed_attempt(
     d = tmp_path / "crash1"
     pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a1", bucket_whitelist=[0, 1, 2, 3])
     [first] = _lineage_files(d, "a1")
-    _crashed_run(monkeypatch, corpus_sdf, d, "a2", ckpt.os, "replace")
+    _crashed_run(monkeypatch, corpus_sdf, d, "a2", os, "replace")
     assert ckpt.done_buckets(d) == [0, 1, 2, 3]
 
     r = pipeline.run(corpus_sdf, CFG, run_dir=d, run_id="a3")
@@ -402,14 +402,23 @@ def test_write_lineage_surfaces_loss(spark, corpus_sdf):
     )
 
 
+# the two sinks ``committed_counts`` serves: the batch run's bucket dirs
+# and the stream's micro-batch dirs
+COLUMNS = ("bucket", "batch_id")
+
+
 @pytest.fixture
 def three_bucket_sink(spark, tmp_path):
-    """A sink of 100 rows partitioned into ``bucket=0..2`` (34/33/33)."""
-    root = tmp_path / "sink"
-    spark.range(100).withColumn("bucket", F.col("id") % 3).write.partitionBy(
-        "bucket"
-    ).parquet(str(root))
-    return root
+    """column -> a sink of 100 rows partitioned into ``<column>=0..2``
+    (34/33/33)."""
+    def make(column):
+        root = tmp_path / column
+        spark.range(100).withColumn(column, F.col("id") % 3).write.partitionBy(
+            column
+        ).parquet(str(root))
+        return root
+
+    return make
 
 
 def _zero_row_parquet(path):
@@ -421,13 +430,14 @@ def _zero_row_parquet(path):
 
 
 def test_committed_counts_counts_present_dirs(three_bucket_sink):
-    """Exactly the requested dirs are counted; no buckets reads nothing."""
-    def count(buckets):
-        return pipeline.committed_counts(three_bucket_sink, buckets)
-
-    assert count([0, 1, 2]) == {0: 34, 1: 33, 2: 33}
-    assert count([2]) == {2: 33}
-    assert count([]) == {}
+    """Exactly the requested dirs are counted; no values read nothing."""
+    for col in COLUMNS:
+        root = three_bucket_sink(col)
+        assert pipeline.committed_counts(root, col, [0, 1, 2]) == {
+            0: 34, 1: 33, 2: 33,
+        }
+        assert pipeline.committed_counts(root, col, [2]) == {2: 33}
+        assert pipeline.committed_counts(root, col, []) == {}
 
 
 def test_committed_counts_skip_hidden_and_empty_files(three_bucket_sink):
@@ -435,32 +445,36 @@ def test_committed_counts_skip_hidden_and_empty_files(three_bucket_sink):
     formats skip them too), and a zero-row data file adds nothing: none
     of them changes a count. A dir holding only a zero-row file holds no
     rows, which is a write loss."""
-    one = three_bucket_sink / "bucket=1"
-    (one / ".part-x.parquet.crc").write_bytes(b"not parquet")
-    (one / "_tmp").write_bytes(b"not parquet")
-    _zero_row_parquet(one / "part-empty.parquet")
-    assert pipeline.committed_counts(three_bucket_sink, [0, 1, 2]) == {
-        0: 34, 1: 33, 2: 33,
-    }
-    _zero_row_parquet(three_bucket_sink / "bucket=3" / "part-empty.parquet")
-    with pytest.raises(RuntimeError, match="bucket=3"):
-        pipeline.committed_counts(three_bucket_sink, [0, 1, 2, 3])
+    for col in COLUMNS:
+        root = three_bucket_sink(col)
+        one = root / f"{col}=1"
+        (one / ".part-x.parquet.crc").write_bytes(b"not parquet")
+        (one / "_tmp").write_bytes(b"not parquet")
+        _zero_row_parquet(one / "part-empty.parquet")
+        assert pipeline.committed_counts(root, col, [0, 1, 2]) == {
+            0: 34, 1: 33, 2: 33,
+        }
+        _zero_row_parquet(root / f"{col}=3" / "part-empty.parquet")
+        with pytest.raises(RuntimeError, match=f"{col}=3"):
+            pipeline.committed_counts(root, col, [0, 1, 2, 3])
 
 
 @pytest.mark.parametrize("loss", ["missing", "emptied"])
 def test_committed_counts_fails_on_write_loss(three_bucket_sink, loss):
     """A kept dir that is gone, or that lost its data files (only the
     writer's ``.crc`` files remain), is a write loss: the count raises
-    naming the dir instead of counting the bucket as absent (which would
-    commit it with files_out 0)."""
-    lost = three_bucket_sink / "bucket=2"
-    if loss == "missing":
-        shutil.rmtree(lost)
-    else:
-        for f in lost.glob("*.parquet"):
-            f.unlink()
-    with pytest.raises(RuntimeError, match="bucket=2"):
-        pipeline.committed_counts(three_bucket_sink, [0, 1, 2])
+    naming the dir instead of counting it as absent (which would commit
+    it with files_out 0)."""
+    for col in COLUMNS:
+        root = three_bucket_sink(col)
+        lost = root / f"{col}=2"
+        if loss == "missing":
+            shutil.rmtree(lost)
+        else:
+            for f in lost.glob("*.parquet"):
+                f.unlink()
+        with pytest.raises(RuntimeError, match=f"{col}=2"):
+            pipeline.committed_counts(root, col, [0, 1, 2])
 
 
 @pytest.fixture(scope="module")
@@ -504,7 +518,7 @@ def test_committed_counts_match_spark_read(spark, counted_run):
         for r in spark.read.parquet(str(sink)).groupBy("bucket").count().collect()
     }
     assert want
-    assert pipeline.committed_counts(sink, sorted(want)) == want
+    assert pipeline.committed_counts(sink, "bucket", sorted(want)) == want
 
 
 def test_run_writes_one_lineage_file(spark, counted_run):

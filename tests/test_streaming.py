@@ -4,6 +4,10 @@ the batch pipeline, and the stateful MinHash candidate stream."""
 
 from __future__ import annotations
 
+import os
+import re
+from pathlib import Path
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -133,10 +137,12 @@ def test_micro_batch_retry_is_idempotent(spark, corpus_pdf, tmp_path):
 
 
 def test_micro_batch_job_budget(spark, corpus_sdf, tmp_path):
-    """One micro-batch = the scored write (scoring into the cache), ONE
-    collected ledger aggregate, the Spark count of the batch's sink dir
-    and the lineage write: 7 Spark jobs on 120 rows. No extra kept count
-    or second aggregate may creep back in."""
+    """One micro-batch = the scored write (scoring into the cache) and ONE
+    collected ledger aggregate (two jobs): 3 Spark jobs on 120 rows. The
+    batch dir is counted from its parquet footers and the lineage file is
+    published by the driver, neither by a Spark job. No Spark read-back,
+    lineage write, extra kept count or second aggregate may creep back
+    in."""
     sc = spark.sparkContext
     bdf = corpus_sdf.limit(120)
     sc.setJobGroup("micro_batch", "score_micro_batch job budget")
@@ -144,7 +150,79 @@ def test_micro_batch_job_budget(spark, corpus_sdf, tmp_path):
         spipe.score_micro_batch(bdf, 3, CFG, str(tmp_path / "out"))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup("micro_batch")) == 7
+    assert len(sc.statusTracker().getJobIdsForGroup("micro_batch")) == 3
+
+
+def test_stream_refuses_a_uri_sink(spark, corpus_sdf, stream_src_dir, tmp_path):
+    """The sink is counted from its footers and its lineage published by
+    ``os.replace``, so it must be a local path: a ``scheme://`` sink,
+    even ``file://``, is refused naming it, before anything is written
+    or a query starts."""
+    uri = f"file://{tmp_path}/out"
+    with pytest.raises(ValueError, match=re.escape(uri)):
+        spipe.score_micro_batch(corpus_sdf.limit(10), 0, CFG, uri)
+    stream = spark.readStream.schema(FILES_SCHEMA).parquet(str(stream_src_dir))
+    with pytest.raises(ValueError, match=re.escape(uri)):
+        spipe.scrub_stream(stream, uri, str(tmp_path / "ckpt"), CFG)
+    assert list(tmp_path.iterdir()) == []
+    assert not spark.streams.active
+
+
+class Crash(Exception):
+    """The driver dies at the patched call."""
+
+
+def test_micro_batch_killed_at_publish_then_retried(
+    spark, corpus_pdf, tmp_path, monkeypatch
+):
+    """A ``foreachBatch`` killed at its lineage publish's ``os.replace``
+    (its data written, its lineage rows only in a ``.tmp-`` file) and
+    then retried under the same batch_id ends as a clean run does: every
+    data and lineage row exists once, the lineage totals are the clean
+    run's, and the stale ``.tmp-`` file is invisible to Spark and
+    pandas readers."""
+    bdf = spark.createDataFrame(
+        corpus_pdf[["repo", "path", "commit", "lang", "content"]].head(120)
+    )
+    clean, out = tmp_path / "clean", tmp_path / "out"
+    spipe.score_micro_batch(bdf, 5, CFG, str(clean))
+
+    def crash(*a, **k):
+        raise Crash("replace")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", crash)
+        with pytest.raises(Crash):
+            spipe.score_micro_batch(bdf, 5, CFG, str(out))
+    batch_lin = Path(f"{out}_lineage") / "batch_id=5"
+    [stale] = batch_lin.iterdir()
+    assert stale.name.startswith(".tmp-")
+    spipe.score_micro_batch(bdf, 5, CFG, str(out))  # the retry
+    assert sorted(p.name for p in batch_lin.iterdir()) == [
+        stale.name, "lineage.parquet",
+    ]
+
+    key = ["repo", "path", "commit"]
+    got = spark.read.parquet(str(out)).toPandas()
+    want = spark.read.parquet(str(clean)).toPandas()
+    assert len(got) == len(want) > 0
+    assert not got.duplicated(key).any()
+    pd.testing.assert_frame_equal(
+        got.sort_values(key).reset_index(drop=True)[key + ["scrubbed_sha256"]],
+        want.sort_values(key).reset_index(drop=True)[key + ["scrubbed_sha256"]],
+    )
+
+    def totals(lin):
+        assert not lin.duplicated(["batch_id", "stage", "partition_id"]).any()
+        return lin.groupby("stage")[["files_in", "files_out"]].sum()
+
+    clean_totals = totals(pd.read_parquet(f"{clean}_lineage"))
+    assert clean_totals.loc["write", "files_out"] == len(want)
+    for lin in (
+        spark.read.parquet(f"{out}_lineage").toPandas(),
+        pd.read_parquet(f"{out}_lineage"),
+    ):
+        pd.testing.assert_frame_equal(totals(lin), clean_totals)
 
 
 def test_minhash_candidate_stream_matches_batch(spark, tmp_path):
