@@ -78,11 +78,7 @@ def main(argv: list[str] | None = None) -> int:
                 src, cfg, run_dir=args.run_dir, bucket_whitelist=buckets
             )
         )
-        print(
-            clean._sc._jvm.PythonSQLUtils.explainString(
-                clean._jdf.queryExecution(), "formatted"
-            )
-        )
+        clean.explain("formatted")
         spark.stop()
         return 0
     res = pipeline.run(

@@ -6,12 +6,7 @@ cd "$(dirname "$0")"
 mkdir -p dist
 rm -f dist/spardaqus_spark.zip
 python -c "
-import shutil, zipfile, pathlib
-root = pathlib.Path('.')
-with zipfile.ZipFile('dist/spardaqus_spark.zip', 'w', zipfile.ZIP_DEFLATED) as z:
-    for p in sorted(root.glob('spardaqus_spark/**/*.py')):
-        z.write(p, p.as_posix())
-    for p in sorted(root.glob('conf/*')):
-        z.write(p, p.as_posix())
+from spardaqus_spark.session import package_zip
+package_zip('dist/spardaqus_spark.zip')
 print('wrote dist/spardaqus_spark.zip')
 "

@@ -57,8 +57,9 @@ def score_scrub(df: "DataFrame", cfg: PipelineConfig) -> "DataFrame":
 
     Output: input columns (content := scrubbed where keep), score struct,
     rule_keep, rule_hits, keep, scrubbed_sha256. Requires an upstream
-    ``dup_loser`` column: the dedup window's, or ``lit(False)`` where
-    there is no dedup (streaming micro-batches, the pipeline query).
+    ``dup_loser`` column: the dedup window's (the batch pipeline and the
+    pipeline query, which runs its whole DAG), or ``lit(False)`` where
+    there is no dedup (streaming micro-batches).
     """
     lex = scrub.load_lexicon(cfg.lexicon_path)
     rules = cfg.rules

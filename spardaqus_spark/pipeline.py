@@ -25,32 +25,35 @@ kept, scrubbed rows. Input laid out by Iceberg's ``bucket(repo)``
 transform runs through the same DAG unchanged: the dedup exchange
 repartitions by content hash whatever the arrival layout.
 
-``run`` persists the verdict frame once and, after the write, collects
-ONE small per-(partition, bucket) aggregate from it
-(``plans.lineage.ledger``): the processed buckets, the kept buckets and
-every lineage row are derived on the driver from those rows. The
-committed counts come from the parquet footers of the kept bucket dirs
-(``committed_counts``), and the attempt's lineage rows never go back
-through Spark: the driver writes them as one parquet file, and publishing
-that file commits the whole attempt (``plans.checkpoint.commit_bucket``).
-So a run is the data write and the ledger: no read-back job, no lineage
-job and no second commit record.
+``write_and_count`` (shared with the stream's micro-batches) persists
+the verdict frame once and, after the write, collects ONE small
+per-(partition, bucket) aggregate from it (``plans.lineage.ledger``):
+the processed buckets, the kept buckets and every lineage row are
+derived on the driver from those rows. The committed counts come from
+the parquet footers of the kept bucket dirs (``committed_counts``), and
+the attempt's lineage rows never go back through Spark: the driver
+writes them as one parquet file, and publishing that file commits the
+whole attempt (``plans.checkpoint.commit_bucket``). So a run is the data
+write and the ledger: no read-back job, no lineage job and no second
+commit record.
 """
 
 from __future__ import annotations
 
+import os
+import re
 import time
 import uuid
 from contextlib import contextmanager
 from pathlib import Path
-from typing import TYPE_CHECKING, Iterable
+from typing import TYPE_CHECKING, Callable, Iterable, Sequence
 
 from .config import PipelineConfig
 from .operators import bucketize as bk, stages
 from .plans import checkpoint as ckpt, lineage as lin
 
 if TYPE_CHECKING:
-    from pyspark.sql import DataFrame
+    from pyspark.sql import DataFrame, DataFrameWriter, Row
 
 
 def build_verdict_frame(
@@ -120,51 +123,26 @@ def run(
     ``build_verdict_frame``, before scoring: only the buckets this attempt
     processes are scored, written and committed. Every bucket with input
     rows is committed, zero-kept ones included, by publishing the
-    attempt's one lineage file. Returns summary counters.
+    attempt's one lineage file. ``run_dir`` must be a local path
+    (``write_and_count``). Returns summary counters.
     """
-    from pyspark import StorageLevel
-
     run_id = run_id or uuid.uuid4().hex[:12]
-    run_dir = Path(run_dir)
-
     v = build_verdict_frame(
         df, cfg, run_dir=run_dir, bucket_whitelist=bucket_whitelist
     )
+    # joined as a string, so a refused URI is named as it was given
+    out_path = os.path.join(run_dir, "files_clean")
 
-    # The verdict frame feeds two consumers (the ledger aggregate and the
-    # clean write); persist it so the expensive scoring stage runs exactly
-    # once. MEMORY_AND_DISK: `content` rows are KB-MB, spilling is
-    # expected and fine at scale.
-    v = v.persist(StorageLevel.MEMORY_AND_DISK)
-    out_path = str(run_dir / "files_clean")
-    # crash-atomicity: sweep what a crashed attempt left uncommitted
-    # (bucket dirs of the data sink, its lineage temp file) BEFORE this
-    # attempt's append write, so reprocessing cannot duplicate rows.
-    ckpt.clean_orphans(run_dir, out_path)
+    def writer(v: "DataFrame") -> "DataFrameWriter":
+        # crash-atomicity: sweep what a crashed attempt left uncommitted
+        # (data bucket dirs, lineage temp file) BEFORE the append write,
+        # so reprocessing cannot duplicate rows
+        ckpt.clean_orphans(run_dir, out_path)
+        return build_clean_frame(v).write.mode("append").partitionBy("bucket")
+
     rules = [r.name for r in cfg.rules]
     phase_s: dict[str, float] = {}
-    try:
-        with _phase(phase_s, "write"):
-            (
-                build_clean_frame(v)
-                .write.mode("append")
-                .partitionBy("bucket")
-                .parquet(out_path)
-            )
-        # ONE aggregate, collected: the processed buckets (zero-kept ones
-        # included), the kept buckets and every lineage row come from it
-        with _phase(phase_s, "ledger"):
-            ledger = lin.ledger(v, rules)
-    finally:
-        v.unpersist()
-    kept = lin.kept_per_bucket(ledger)
-    # observed committed counts, from the parquet footers of THIS
-    # attempt's kept-bucket dirs only (which dirs must exist comes from
-    # the ledger, never from a listing of the sink root)
-    with _phase(phase_s, "readback"):
-        seen = committed_counts(
-            Path(out_path), "bucket", [b for b, n in sorted(kept.items()) if n]
-        )
+    ledger, seen = write_and_count(v, writer, "bucket", out_path, rules, phase_s)
     # per-stage lineage ([B:6] "every stage"): a few thousand rows already
     # on the driver; publishing them commits the attempt, so a committed
     # bucket always has its rows. An attempt that processed nothing
@@ -175,13 +153,56 @@ def run(
             ckpt.commit_bucket(run_dir, run_id, rows)
     result = {
         "run_id": run_id,
-        "buckets": len(kept),
+        "buckets": len({r["bucket"] for r in ledger}),
         "files_out": sum(seen.values()),
         "rows_scored": sum(r["n_all"] for r in ledger),
         "rows_kept": sum(r["n_keep"] for r in ledger),
     }
     _write_metrics(run_dir, run_id, result, phase_s)
     return result
+
+
+def write_and_count(
+    scored: "DataFrame",
+    writer: Callable[["DataFrame"], "DataFrameWriter"],
+    column: str,
+    root: str | Path,
+    rules: Sequence[str],
+    phase_s: dict[str, float],
+) -> tuple[list["Row"], dict[int, int]]:
+    """Write ``scored`` with the caller's ``writer`` into the local sink
+    ``root``, partitioned by ``column`` (``bucket`` or ``batch_id``), and
+    count what landed: the step a batch attempt and a micro-batch share.
+    ``scored`` feeds the write and ONE collected ``lineage.ledger``
+    grouped by ``column``, so it is persisted; the dirs the ledger says
+    kept rows are counted from their footers. ``phase_s`` gets the
+    ``write``, ``ledger`` and ``readback`` wall seconds. Returns (ledger
+    rows, value -> committed rows)."""
+    from pyspark import StorageLevel
+
+    root = local_root(root)
+    # content rows are KB-MB: spilling is expected and fine at scale
+    scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        with _phase(phase_s, "write"):
+            writer(scored).parquet(str(root))
+        with _phase(phase_s, "ledger"):
+            ledger = lin.ledger(scored, rules, column)
+    finally:
+        scored.unpersist()
+    kept = [k for k, n in sorted(lin.kept_per(ledger, column).items()) if n]
+    with _phase(phase_s, "readback"):
+        seen = committed_counts(root, column, kept)
+    return ledger, seen
+
+
+def local_root(root: str | Path) -> Path:
+    """``root`` as a ``Path``; a ``scheme://`` root, even ``file://``, is
+    refused by name: the footer count and ``os.replace`` need a local
+    path (object stores wait for Iceberg, SURVEY.md §4.2)."""
+    if re.match(r"[A-Za-z][\w+.-]*://", str(root)):
+        raise ValueError(f"sink must be a local path, not a URI: {root}")
+    return Path(root)
 
 
 @contextmanager
@@ -233,7 +254,7 @@ def committed_counts(root: Path, column: str, values: Iterable[int]) -> dict[int
 
 
 def _write_metrics(
-    run_dir: Path, run_id: str, result: dict, phase_s: dict[str, float]
+    run_dir: str | Path, run_id: str, result: dict, phase_s: dict[str, float]
 ) -> None:
     """run_metrics sink (SURVEY §2.1): one JSON line per run, appended —
     the bench/monitoring surface. ``phase_s`` holds the wall seconds of

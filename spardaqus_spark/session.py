@@ -31,6 +31,18 @@ def export_pythonpath() -> None:
         )
 
 
+def package_zip(zpath: str | Path) -> None:
+    """Zip the package's ``.py`` sources to ``zpath`` (``ship_package``
+    and ``package.sh``). Executors read no ``conf/`` file: the driver
+    loads the lexicon and ships it in the kernel's closure."""
+    import zipfile
+
+    root = Path(_PKG_ROOT)
+    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
+        for p in sorted((root / "spardaqus_spark").rglob("*.py")):
+            z.writestr(p.relative_to(root).as_posix(), p.read_bytes())
+
+
 def ship_package(spark: SparkSession) -> None:
     """Make `spardaqus_spark` importable by python workers of an ALREADY
     RUNNING session (e.g. one the driver harness created before importing
@@ -47,15 +59,11 @@ def ship_package(spark: SparkSession) -> None:
     import atexit
     import shutil
     import tempfile
-    import zipfile
 
-    root = Path(_PKG_ROOT)
     zdir = tempfile.mkdtemp(prefix="spardaqus_spark_pkg-")
     atexit.register(shutil.rmtree, zdir, ignore_errors=True)
     zpath = os.path.join(zdir, "spardaqus_spark.zip")
-    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
-        for p in sorted((root / "spardaqus_spark").rglob("*.py")):
-            z.writestr(p.relative_to(root).as_posix(), p.read_bytes())
+    package_zip(zpath)
     try:
         sc.addPyFile(zpath)
     except Exception:

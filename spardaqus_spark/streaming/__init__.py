@@ -1,3 +1,4 @@
 """Structured Streaming surface (SURVEY.md §2.8) — the Spardaqus
-transport/analyze analog: the SAME batch stage functions reused per
-micro-batch via foreachBatch, plus watermark/window/stateful-dedup ops."""
+transport/analyze analog: the batch pipeline's scoring kernel and write
+step reused per micro-batch via foreachBatch (``scrub_stream``), and the
+stateful MinHash near-dup candidate stream."""

@@ -25,25 +25,17 @@ Two shapes:
 
 from __future__ import annotations
 
-import re
 from pathlib import Path
 from typing import TYPE_CHECKING
 
 from ..config import PipelineConfig
 from ..operators import stages
-from ..pipeline import committed_counts
+from ..pipeline import local_root, write_and_count
 from ..plans import lineage as lin
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame
     from pyspark.sql.streaming import StreamingQuery
-
-
-def _require_local(out_dir: str) -> None:
-    """Refuse a ``scheme://`` sink: the footer count and ``os.replace``
-    need a local path (object stores wait for Iceberg, SURVEY.md §4.2)."""
-    if re.match(r"[A-Za-z][\w+.-]*://", out_dir):
-        raise ValueError(f"stream sink must be a local path, not a URI: {out_dir}")
 
 
 def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
@@ -57,43 +49,37 @@ def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
     partition instead of appending duplicates (the at-least-once ->
     exactly-once upgrade; ADVICE r01).
 
-    Lineage parity with the batch path (VERDICT r02 #4): per-stage lineage
-    rows, the write row counted from the batch dir's parquet footers, are
-    published as ``<out_dir>_lineage/batch_id=<id>/lineage.parquet``, so a
-    retried batch replaces its own lineage file too — the streaming ledger
-    stays duplicate-free under at-least-once delivery. ``out_dir`` must be
-    a local path."""
+    Lineage parity with the batch path (VERDICT r02 #4): the write, the
+    ledger and the footer count are the batch run's step
+    (``pipeline.write_and_count``, grouped by ``batch_id``), and the
+    lineage rows, rule hit counts included, are published as
+    ``<out_dir>_lineage/batch_id=<id>/lineage.parquet``, which a retried
+    batch replaces: the streaming ledger stays duplicate-free under
+    at-least-once delivery. ``out_dir`` must be a local path."""
     from pyspark.sql import functions as F
 
-    _require_local(out_dir)
     # the batch pipeline's fused kernel; the stream does no cross-batch
     # dedup, so no row is a dup loser and keep == rule_keep
     scored = stages.score_scrub(
         stages.with_sha(batch_df).withColumn("dup_loser", F.lit(False)), cfg
-    )
-    # the scored frame feeds two consumers (ledger aggregate + data sink);
-    # persist so the pandas scoring stage runs once per batch
-    scored = scored.persist()
-    try:
-        (
-            scored.filter(F.col("keep"))
+    ).withColumn("batch_id", F.lit(batch_id))
+    rules = [r.name for r in cfg.rules]
+    ledger, seen = write_and_count(
+        scored,
+        lambda s: (
+            s.filter(F.col("keep"))
             .drop("dup_loser", "keep")
-            .withColumn("batch_id", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")
-            .parquet(out_dir)
-        )
-        ledger = lin.ledger(scored, by=())
-    finally:
-        scored.unpersist()
-    # sink-observed write stage: count this batch's dir when it kept rows
-    # (zero kept rows write no dir); a missing or row-less dir fails the
-    # batch, and foreachBatch retries it idempotently
-    kept = [batch_id] if any(r["n_keep"] for r in ledger) else []
-    n_committed = committed_counts(Path(out_dir), "batch_id", kept).get(batch_id, 0)
+        ),
+        "batch_id", out_dir, rules, {},
+    )
+    # a kept batch whose dir is missing or row-less failed in the count,
+    # and foreachBatch retries it idempotently; zero kept rows write no dir
     lin.publish(
-        lin.stream_rows(ledger, n_committed), lin.STREAM_LINEAGE_SCHEMA,
+        lin.stream_rows(ledger, rules, seen.get(batch_id, 0)),
+        lin.STREAM_LINEAGE_SCHEMA,
         Path(f"{out_dir.rstrip('/')}_lineage", f"batch_id={batch_id}", "lineage.parquet"),
     )
 
@@ -105,8 +91,8 @@ def scrub_stream(
     cfg: PipelineConfig,
 ) -> "StreamingQuery":
     """files-shaped stream -> scrubbed parquet, exactly-once, into the
-    local path ``out_dir``."""
-    _require_local(out_dir)
+    local path ``out_dir``, refused before the query starts otherwise."""
+    local_root(out_dir)
     return (
         files_stream.writeStream.foreachBatch(
             lambda df, bid: score_micro_batch(df, bid, cfg, out_dir)

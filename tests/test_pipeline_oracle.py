@@ -260,8 +260,8 @@ def _lineage(v, cfg, run_id="t"):
     from spardaqus_spark.plans import lineage as lin
 
     rules = [r.name for r in cfg.rules]
-    ledger = lin.ledger(v, rules)
-    rows = lin.lineage_rows(ledger, run_id, rules, lin.kept_per_bucket(ledger))
+    ledger = lin.ledger(v, rules, "bucket")
+    rows = lin.lineage_rows(ledger, run_id, rules, lin.kept_per(ledger, "bucket"))
     return v.sparkSession.createDataFrame(rows, lin.LINEAGE_SCHEMA).toPandas()
 
 

@@ -379,8 +379,8 @@ def test_write_lineage_surfaces_loss(spark, corpus_sdf):
     sink's parquet footers in pipeline.run, the only caller)."""
     v = pipeline.build_verdict_frame(corpus_sdf, CFG)
     rules = [r.name for r in CFG.rules]
-    ledger = lin.ledger(v, rules)
-    kept = lin.kept_per_bucket(ledger)
+    ledger = lin.ledger(v, rules, "bucket")
+    kept = lin.kept_per(ledger, "bucket")
     lost_bucket = max(kept, key=kept.get)
     observed = dict(kept)
     observed[lost_bucket] -= 1  # one row never made it to the sink
@@ -496,6 +496,25 @@ def test_run_requires_run_dir(corpus_sdf):
     count-only mode to fall into."""
     with pytest.raises(TypeError, match="run_dir"):
         pipeline.run(corpus_sdf, CFG)
+
+
+def test_run_refuses_a_uri_run_dir(spark, corpus_sdf, tmp_path, monkeypatch):
+    """The committed counts come from the sink's footers and the attempt
+    commits by ``os.replace``, so a run dir must be a local path: a
+    ``scheme://`` one, even ``file://``, is refused naming it, before any
+    Spark job and before anything is written (under it, or under a
+    relative ``file:`` dir that ``Path`` would make of it)."""
+    monkeypatch.chdir(tmp_path)
+    uri = f"file://{tmp_path}/run"
+    sc = spark.sparkContext
+    sc.setJobGroup("uri_run", "pipeline.run on a URI run dir")
+    try:
+        with pytest.raises(ValueError, match=re.escape(uri)):
+            pipeline.run(corpus_sdf, CFG, run_dir=uri, run_id="u1")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("uri_run") == []
+    assert list(tmp_path.iterdir()) == []
 
 
 def test_run_job_budget(counted_run):

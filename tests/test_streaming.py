@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections import Counter
 from pathlib import Path
 
 import pandas as pd
@@ -13,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from spardaqus_spark.config import default_config
+from spardaqus_spark.operators import stages
 from spardaqus_spark.streaming import pipeline as spipe
 
 CFG = default_config()
@@ -111,7 +113,19 @@ def test_micro_batch_retry_is_idempotent(spark, corpus_pdf, tmp_path):
     # per micro-batch, idempotent under the SAME retry — batch 7 ran twice
     # but its lineage rows exist exactly once, and conservation holds per
     # batch: score in == 120 batch rows, verdict out == kept == scrub out
-    # == rows the data sink holds for that batch.
+    # == rows the data sink holds for that batch; the verdict rows' rule
+    # hit counts sum to the rule_hits of the batch's scored rows.
+    want_hits = {
+        r["rule"]: r["count"]
+        for r in stages.score_scrub(
+            stages.with_sha(bdf).withColumn("dup_loser", F.lit(False)), CFG
+        )
+        .select(F.explode("rule_hits").alias("rule"))
+        .groupBy("rule")
+        .count()
+        .collect()
+    }
+    assert want_hits
     lin = spark.read.parquet(str(out) + "_lineage").toPandas()
     assert sorted(lin["batch_id"].unique()) == [7, 8]
     dupes = lin.groupby(["batch_id", "stage", "partition_id"]).size()
@@ -134,6 +148,11 @@ def test_micro_batch_retry_is_idempotent(spark, corpus_pdf, tmp_path):
         assert by_stage.loc["write", "files_in"] == kept_rows
         assert by_stage.loc["write", "files_out"] == kept_rows
         assert (lb[lb["stage"] == "write"]["partition_id"] == -1).all()
+        hits = Counter()
+        for m in lb[lb["stage"] == "verdict"]["rule_hit_counts"].dropna():
+            hits.update(dict(m))
+        assert dict(hits) == want_hits
+        assert lb[lb["stage"] != "verdict"]["rule_hit_counts"].isna().all()
 
 
 def test_micro_batch_job_budget(spark, corpus_sdf, tmp_path):
@@ -179,8 +198,8 @@ def test_micro_batch_killed_at_publish_then_retried(
     (its data written, its lineage rows only in a ``.tmp-`` file) and
     then retried under the same batch_id ends as a clean run does: every
     data and lineage row exists once, the lineage totals are the clean
-    run's, and the stale ``.tmp-`` file is invisible to Spark and
-    pandas readers."""
+    run's, and no ``.tmp-`` file is left: the retry's publish writes the
+    same ``.tmp-<name>`` file and its rename consumes it."""
     bdf = spark.createDataFrame(
         corpus_pdf[["repo", "path", "commit", "lang", "content"]].head(120)
     )
@@ -198,9 +217,7 @@ def test_micro_batch_killed_at_publish_then_retried(
     [stale] = batch_lin.iterdir()
     assert stale.name.startswith(".tmp-")
     spipe.score_micro_batch(bdf, 5, CFG, str(out))  # the retry
-    assert sorted(p.name for p in batch_lin.iterdir()) == [
-        stale.name, "lineage.parquet",
-    ]
+    assert [p.name for p in batch_lin.iterdir()] == ["lineage.parquet"]
 
     key = ["repo", "path", "commit"]
     got = spark.read.parquet(str(out)).toPandas()
