@@ -5,9 +5,9 @@ queries()      -> the pipeline, the corpus build with its sequence packer,
                   and the fingerprint, dedup, near-dup and embedding
                   families over the `documents` / `embeddings` tables,
                   grouped by family.
-oracle_sql()   -> DuckDB twins for every SQL-expressible query; model-backed
-                  / sketch ops (pipeline, simhash, streaming band profile)
-                  are rows-only by design (SURVEY.md §3.2).
+oracle_sql()   -> DuckDB twins for every SQL-expressible query; the
+                  model-backed pipeline verdict is rows-only by design
+                  (SURVEY.md §3.2).
 """
 
 from __future__ import annotations
@@ -52,22 +52,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "near_dedup_keep": QT.q_near_dedup_keep,
         "near_dup_source_stats": QT.q_near_dup_source_stats,
         "minhash_lsh_pairs": QM.q_minhash_lsh_pairs,
-        "simhash_buckets": QM.q_simhash_buckets,
-        "streaming_band_profile": QM.q_streaming_band_profile,
         # --- embedding similarity and near-dup ---
         "embedding_norms": QT.q_embedding_norms,
         "cosine_topk": QT.q_cosine_topk,
         "embedding_near_dup": QT.q_embedding_near_dup,
         "embedding_dedup_keep": QT.q_embedding_dedup_keep,
-        "ann_lsh_cosine": QM.q_ann_lsh_checked,
         "ann_ivf_cosine": QM.q_ann_ivf_checked,
     }
 
 
 def oracle_sql() -> dict[str, str]:
     return {
-        # pipeline_documents / simhash_buckets / streaming_band_profile:
-        # intentionally omitted — model- or sketch-backed, not
+        # pipeline_documents: intentionally omitted — model-backed, not
         # ANSI-SQL-expressible (SURVEY §3.2).
         "corpus_build": QT.SQL_CORPUS_BUILD,
         "sequence_packing": QT.SQL_SEQUENCE_PACKING,
@@ -80,7 +76,7 @@ def oracle_sql() -> dict[str, str]:
         "near_dup_source_stats": QT.SQL_NEAR_DUP_SOURCE_STATS,
         # minhash_lsh_pairs runs LSH candidates through an exact-Jaccard
         # verification join, so the all-pairs exact oracle matches iff it is
-        # sound with full recall at sf0.01; the ann entries emit exact-set ∪
+        # sound with full recall at sf0.01; the ann entry emits exact-set ∪
         # violations, so the exact-cosine oracle matches iff every
         # approximate pair is sound (one-sided; recall stays gated by
         # tests/test_recall.py).
@@ -89,6 +85,5 @@ def oracle_sql() -> dict[str, str]:
         "cosine_topk": QT.SQL_COSINE_TOPK,
         "embedding_near_dup": QT.SQL_EMB_NEAR_DUP,
         "embedding_dedup_keep": QT.SQL_EMB_DEDUP_KEEP,
-        "ann_lsh_cosine": QM.SQL_ANN_CHECKED,
         "ann_ivf_cosine": QM.SQL_ANN_CHECKED,
     }

@@ -47,6 +47,17 @@ class Rule:
             raise ValueError(f"rule {self.name}: unknown op {self.op!r}")
         if self.action not in ("drop", "flag") and self.weight is None:
             raise ValueError(f"rule {self.name}: unknown action {self.action!r}")
+        # a bare string would be split into characters, a scalar fails
+        # only inside a Spark worker
+        t = self.threshold
+        if self.op in ("in", "not_in") and not isinstance(t, (list, tuple)):
+            raise ValueError(
+                f"rule {self.name}: op {self.op} needs a list threshold, got {t!r}"
+            )
+        if self.op == "between" and not (isinstance(t, (list, tuple)) and len(t) == 2):
+            raise ValueError(
+                f"rule {self.name}: op between needs [lo, hi], got {t!r}"
+            )
 
     @property
     def weight(self) -> float | None:

@@ -91,17 +91,24 @@ def build_verdict_frame(
     return stages.score_scrub(df, cfg)
 
 
-def build_clean_frame(df_verdict: "DataFrame") -> "DataFrame":
-    """verdict frame -> files_clean (kept rows, scrubbed content), then the
-    (bucket, salt) repartition (shuffle #2, kept rows only) and the sort
-    the write keeps: this is the plan ``run()`` writes. No count: AQE (on
-    by default, set by ``get_spark``) coalesces it to the data's size like
-    shuffle #1, where a fixed count would write one file per (task,
-    bucket) however little data there is."""
+def kept_rows(scored: "DataFrame") -> "DataFrame":
+    """The rows a sink holds: ``keep`` rows, without ``keep``,
+    ``rule_keep`` and ``dup_loser``, which are constant on them. Both the
+    batch sink and the stream's write one column set through this."""
     from pyspark.sql import functions as F
 
+    return scored.filter(F.col("keep")).drop("keep", "rule_keep", "dup_loser")
+
+
+def build_clean_frame(df_verdict: "DataFrame") -> "DataFrame":
+    """verdict frame -> files_clean (``kept_rows``, scrubbed content), then
+    the (bucket, salt) repartition (shuffle #2, kept rows only) and the
+    sort the write keeps: this is the plan ``run()`` writes. No count: AQE
+    (on by default, set by ``get_spark``) coalesces it to the data's size
+    like shuffle #1, where a fixed count would write one file per (task,
+    bucket) however little data there is."""
     return (
-        df_verdict.filter(F.col("keep"))
+        kept_rows(df_verdict)
         .repartition("bucket", "salt")
         # bucket first, or the writer's own Sort(bucket) replaces it
         .sortWithinPartitions("bucket", "repo", "path", "commit")

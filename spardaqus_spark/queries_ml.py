@@ -5,21 +5,20 @@ not ANSI-SQL-expressible as computed (SURVEY.md §3.2).
 - MinHash + LSH near-dup candidates (shingle -> minhash -> band -> bucket
   self-join) — the scale path whose exact baseline is
   queries_text.q_ngram_jaccard_pairs;
-- SimHash near-dup buckets;
-- LSH- and IVF-bucketed approximate nearest neighbors — the scale paths
-  for queries_text.q_cosine_topk. They run the exact twin's kernel,
-  queries_text.cosine_pairs, per sketch bucket or IVF cell instead of
-  over one group, gated at ANN_TAU.
+- IVF-bucketed approximate nearest neighbors — the scale path for
+  queries_text.q_cosine_topk. It runs the exact twin's kernel,
+  queries_text.cosine_pairs, per IVF cell instead of over one group,
+  gated at ANN_TAU.
 
 All sketches are computed with JVM-side functions where possible
-(xxhash64 on shingles, bit ops) — Python only where the semantics demand
-vectorized NumPy (the pipeline models, minhash signatures, the cosine
-matmul).
+(xxhash64 band hashes, the IVF codebook sample) — Python only where the
+semantics demand vectorized NumPy (the pipeline models, minhash
+signatures, the cosine matmul).
 
 Most of this surface is oracle-checked all the same: the registered
 minhash entry is the verified pipeline (candidates + exact-Jaccard
 verification, hash-matched against an all-pairs exact oracle), the
-registered ann entries are soundness-checked (exact-set ∪ violations vs
+registered ann entry is soundness-checked (exact-set ∪ violations vs
 an exact-cosine oracle), and minhash signatures come from a zero-shuffle
 vectorized kernel (kernels/minhash) after the JVM explode+agg form
 measured as the path's floor.
@@ -27,14 +26,13 @@ measured as the path's floor.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries_text import cosine_pairs, load, spread
+from .queries_text import cosine_pairs, exact_cos_pairs, load
 
 N_HASHES = 16  # minhash permutations
 N_BANDS = 4    # 4 rows/band -> candidates at J ~ 0.6+
-SIM_BITS = 32  # simhash width
 
 
 def _shingle_array(df: DataFrame, k: int = 5) -> DataFrame:
@@ -197,45 +195,6 @@ def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_streaming_band_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry surface for the STREAMING near-dup path (r5, VERDICT r04
-    item 5): the batch harness cannot run readStream, but the streaming
-    operator's state is exactly the (band, band_hash) bucket membership
-    this query profiles — band_frame is THE single banding definition
-    shared by batch and streaming.pipeline.minhash_candidate_stream, and
-    tests/test_streaming.py pins the streamed candidate-pair set equal to
-    the batch set (including under at-least-once redelivery). So a green
-    rows-only driver row here certifies the construction the stream
-    executes, bucket for bucket.
-
-    Per band: how many buckets hold >= 2 docs (the buckets that generate
-    candidate pairs / carry streaming state), how many docs sit in them,
-    and how many within-bucket pairs they generate pre-est-filter — the
-    state-size and fan-out numbers a capacity plan for the streaming
-    deployment needs. Rows-only by design (the signature kernel is not
-    ANSI-SQL-expressible); N_BANDS scalar rows."""
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    buckets = (
-        band_frame(minhash_signatures(docs))
-        .groupBy("band", "bh")
-        .agg(F.count("*").alias("m"))
-        .filter(F.col("m") >= 2)
-    )
-    return (
-        buckets.groupBy("band")
-        .agg(
-            F.count("*").alias("n_multi_buckets"),
-            F.sum("m").alias("n_docs_in_multi"),
-            # integer arithmetic end-to-end (ADVICE r05): m*(m-1) is always
-            # even so DIV 2 is exact in bigint; the old double division
-            # would lose integer precision past 2^53 at capacity-planning
-            # bucket sizes (m ~ 1e8). Same values/type at any sandbox scale.
-            F.expr("sum(m * (m - 1) DIV 2)").alias("n_bucket_pairs"),
-        )
-        .orderBy("band")  # tiny-agg sort (N_BANDS rows) — allowed
-    )
-
-
 MINHASH_TAU = 0.5  # exact-Jaccard keep threshold (same as the est gate)
 
 
@@ -345,72 +304,9 @@ WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= @TAU
 """.replace("@TAU", str(MINHASH_TAU))
 
 
-def q_simhash_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash over word features: sign-sum of per-word hash bits ->
-    SIM_BITS fingerprint; near-dups share the fingerprint. All JVM bit ops.
-    r6: spread — the word explode + 32 per-bit conditionals ran in the
-    single scan task (no-op at scale)."""
-
-    docs = spread(
-        load(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
-    )
-    words = F.explode(
-        F.split(F.regexp_replace(F.lower(F.col("text")), "\\s+", " "), " ")
-    ).alias("w")
-    tok = docs.select("doc_id", words).filter(F.col("w") != "")
-    h = F.xxhash64("w")
-    bit_cols = [
-        F.sum(
-            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(SIM_BITS)
-    ]
-    agg = tok.groupBy("doc_id").agg(*bit_cols)
-    fp = None
-    for i in range(SIM_BITS):
-        bit = F.when(F.col(f"b{i}") > 0, F.lit(1)).otherwise(F.lit(0))
-        term = F.shiftleft(bit.cast("long"), i)
-        fp = term if fp is None else fp + term
-    sig = agg.select("doc_id", fp.alias("simhash"))
-    w = W.partitionBy("simhash")
-    return (
-        sig.withColumn("bucket_size", F.count("*").over(w))
-        .filter(F.col("bucket_size") > 1)
-        .select("doc_id", "simhash", "bucket_size")
-    )
-
-
-# The ANN gate: both ANN paths and their checked exact side filter
+# The ANN gate: the IVF path and its checked exact side filter
 # round(cos, 4) >= ANN_TAU through queries_text.cosine_pairs.
 ANN_TAU = 0.3
-
-
-def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate NN via random-hyperplane LSH: 8 deterministic
-    pseudo-hyperplanes (hash-derived signs), bucket on the 8-bit sketch,
-    exact cosine only within buckets. Scale path: the per-bucket join
-    replaces the full cross join of q_cosine_topk."""
-    emb = load(spark, sf_dir, "embeddings")
-    dvec = F.transform("embedding", lambda x: x.cast("double"))
-    v = emb.select("vec_id", dvec.alias("v"))
-    # deterministic hyperplane h_p[i] = sign pattern from xxhash64(p, i):
-    # projection sign = sign(sum_i v[i] * s_pi) with s_pi in {-1, +1}
-    planes = []
-    for p in range(8):
-        s = F.transform(
-            F.sequence(F.lit(0), F.size("v") - 1),
-            lambda i: F.when(
-                F.pmod(F.xxhash64(F.lit(p), i), F.lit(2)) == 0, F.lit(1.0)
-            ).otherwise(F.lit(-1.0)),
-        )
-        proj = F.aggregate(
-            F.zip_with("v", s, lambda a, b: a * b), F.lit(0.0), lambda acc, x: acc + x
-        )
-        planes.append(F.when(proj > 0, F.lit(1)).otherwise(F.lit(0)) * (2 ** p))
-    sketch = sum(planes[1:], planes[0])
-    sk = v.withColumn("sketch", sketch.cast("int"))
-    # within-bucket exact cosine: the shared per-group matmul kernel
-    return cosine_pairs(sk, "sketch", ANN_TAU, gate_rounded=True)
 
 
 def q_pipeline_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -453,10 +349,10 @@ IVF_REFINE = 1   # Lloyd iterations refining the hash-sampled codebook
 
 
 def q_ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-flat approximate NN (the other canonical ANN scale path next to
-    q_ann_lsh_cosine): a FIXED-K deterministic coarse codebook (global
-    top-K by xxhash64(vec_id) — TakeOrderedAndProject, so only K rows ever
-    reach the driver regardless of corpus size), batch NumPy matmul
+    """IVF-flat approximate NN (the ANN scale path): a FIXED-K
+    deterministic coarse codebook (global top-K by xxhash64(vec_id) —
+    TakeOrderedAndProject, so only K rows ever reach the driver
+    regardless of corpus size), batch NumPy matmul
     assigns each vector to its IVF_NPROBE nearest centroid cells, exact
     cosine runs only WITHIN cells. At corpus scale the cell join replaces
     the full cross join; driver memory is O(K), never O(n).
@@ -474,8 +370,7 @@ def q_ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gated at recall >= 0.7 by tests/test_recall.py. Candidate volume
     stays cell-bounded at any setting: expected pairs ~ n^2*nprobe^2/(2K)
     vs n^2/2 all-pairs — at production scale K grows ~sqrt(n) so the
-    per-cell exact-cosine work stays constant per vector. The LSH variant
-    (above) is the angle-preserving alternative for unclustered data."""
+    per-cell exact-cosine work stays constant per vector."""
     assigned = _ivf_assign(spark, sf_dir)
 
     # Within-cell exact cosine: the shared per-group matmul kernel. Cell
@@ -583,53 +478,31 @@ def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return v.mapInPandas(assign, "vec_id bigint, v array<double>, cell int")
 
 
-def _exact_cos_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact all-pairs cosine at the ANN gate (F.round(raw, 4) >= ANN_TAU):
-    the independent reference the checked ANN queries union against, via
-    the ONE shared construction (queries_text.exact_cos_pairs)."""
-    from .queries_text import exact_cos_pairs
-
-    return exact_cos_pairs(spark, sf_dir, ANN_TAU, gate_rounded=True)
-
-
-def _ann_checked(approx: DataFrame, exact: DataFrame) -> DataFrame:
-    """One-sided soundness harness (VERDICT r03 item 4): output the exact
-    pair set PLUS any approximate pair that is not in it. When the ANN
-    path is sound (emitted subset of exact — true by construction, since it
-    computes exact cosine within cells and gates at the same threshold),
-    the union IS the exact set and the driver's DuckDB hash-match goes
-    green; any unsound emitted pair (a cell-assignment / matmul / rounding
-    bug) surfaces as an extra row and breaks the row count + hash. Recall
-    stays gated locally (tests/test_recall.py) — missed pairs are invisible
-    here by design, exactly the one-sided check the judge specified."""
-    violations = approx.select("v1", "v2", "cos").join(
-        exact.select("v1", "v2"), ["v1", "v2"], "left_anti"
+def q_ann_ivf_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Driver-facing form of the IVF-flat ANN surface, a one-sided
+    soundness harness (VERDICT r03 item 4): runs the FULL approximate
+    pipeline (q_ann_ivf_cosine — codebook, Lloyd refinement, nprobe
+    assignment, per-cell matmul) and outputs the exact pair set at the
+    ANN gate (queries_text.exact_cos_pairs) PLUS any approximate pair that
+    is not in it. When the ANN path is sound (emitted subset of exact —
+    true by construction, since it computes exact cosine within cells and
+    gates at the same threshold), the union IS the exact set and the
+    driver's DuckDB hash-match goes green; any unsound emitted pair (a
+    cell-assignment / matmul / rounding bug) surfaces as an extra row and
+    breaks the row count + hash. Recall stays gated locally
+    (tests/test_recall.py) — missed pairs are invisible here by design."""
+    exact = exact_cos_pairs(spark, sf_dir, ANN_TAU, gate_rounded=True)
+    violations = (
+        q_ann_ivf_cosine(spark, sf_dir)
+        .select("v1", "v2", "cos")
+        .join(exact.select("v1", "v2"), ["v1", "v2"], "left_anti")
     )
     return exact.unionByName(violations)
 
 
-def q_ann_lsh_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-facing form of the random-hyperplane-LSH ANN surface: runs
-    the FULL approximate pipeline (q_ann_lsh_cosine, unchanged) and proves
-    every emitted pair sound against the exact twin (_ann_checked)."""
-    return _ann_checked(
-        q_ann_lsh_cosine(spark, sf_dir), _exact_cos_pairs(spark, sf_dir)
-    )
-
-
-def q_ann_ivf_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-facing form of the IVF-flat ANN surface: runs the FULL
-    approximate pipeline (q_ann_ivf_cosine — codebook, Lloyd refinement,
-    nprobe assignment, per-cell matmul) and proves every emitted pair
-    sound against the exact twin (_ann_checked)."""
-    return _ann_checked(
-        q_ann_ivf_cosine(spark, sf_dir), _exact_cos_pairs(spark, sf_dir)
-    )
-
-
-# Independent DuckDB exact-cosine twin at the ANN gate — shared by both
-# checked ANN entries, built from the ONE pinned template
-# (queries_text.COS_PAIRS_SQL). Gate on
+# Independent DuckDB exact-cosine twin at the ANN gate of the checked IVF
+# entry, built from the ONE pinned template (queries_text.COS_PAIRS_SQL).
+# Gate on
 # ROUND(raw, 4) >= ANN_TAU to mirror cosine_pairs' rounded gate
 # exactly (probed: no midpoint or cut-boundary pairs at sf0.01).
 from .queries_text import COS_PAIRS_SQL as _COS_PAIRS_SQL  # noqa: E402

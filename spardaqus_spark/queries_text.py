@@ -5,9 +5,9 @@ cosine similarity, sequence packing and the composed corpus build
 (near-dedup removal, stratified sampling, packing).
 
 SQL-oracle-expressible variants live here with their DuckDB twins; the
-model-backed / LSH variants (MinHash, SimHash, pipeline verdict) are in
-queries_ml.py with rows-only checks. `load` (one table of an sf testdata
-dir) and `spread` (scan parallelization) serve both modules.
+model-backed / sketch variants (MinHash-LSH, IVF ANN, pipeline verdict)
+are in queries_ml.py, which shares `load` (one table of an sf testdata
+dir).
 """
 
 from __future__ import annotations
@@ -389,12 +389,12 @@ def q_embedding_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The registered form consumes the PINNED exact pair twin so the DuckDB
     recursive-CTE oracle verifies the whole pairs->components->keep chain
-    end-to-end; at corpus scale the pair source swaps to the IVF/LSH
+    end-to-end; at corpus scale the pair source swaps to the IVF
     candidates (identical downstream composition — graphops components
     are O(log n) rounds either way). The swap itself is GATED, not just
     promised: tests/test_recall.py::test_embedding_dedup_keep_scale_
-    composition runs this exact chain over the IVF and LSH pair outputs
-    and asserts keep-set superset (structural: within-cell cosines are a
+    composition runs this exact chain over the IVF pair output and
+    asserts keep-set superset (structural: within-cell cosines are a
     subset of the exact pair graph at matched rounded gates) plus a
     calibrated keep-set Jaccard (IVF 0.858 >= 0.8 at sf0.01)."""
     from .operators.graphops import connected_components
@@ -603,7 +603,7 @@ FROM embeddings GROUP BY label
 # Row cap on one cosine_pairs group (10x sf0.1's 2,000 embeddings): past
 # it, one worker's block x n slabs (~330 MB per float64 temporary at 20k
 # rows) and its O(n^2) matmul stop being a correctness-harness cost.
-# Failing fast beats a worker OOM; scale runs use the LSH/IVF paths.
+# Failing fast beats a worker OOM; scale runs use the IVF path.
 EXACT_COS_MAX_ROWS = 20_000
 
 
@@ -629,8 +629,8 @@ def cosine_pairs(
 ) -> DataFrame:
     """THE embedding cosine-pair kernel: every within-group pair
     (v1 < v2, cos) of ``df``'s (vec_id, v array<double>) rows, grouped by
-    ``key``. The exact twin runs it over one group; the LSH and IVF paths
-    over sketch buckets and IVF cells. gate_rounded=False filters the
+    ``key``. The exact twin runs it over one group; the IVF path over
+    IVF cells. gate_rounded=False filters the
     UNROUNDED ratio >= tau (the embedding_near_dup pin); gate_rounded=True
     filters round(raw, 4) >= tau (the ANN gate). Only the rounded gate is
     invariant to grouping: the raw ratio can move by an ulp with the slab
@@ -645,9 +645,9 @@ def cosine_pairs(
 
     A group above EXACT_COS_MAX_ROWS fails fast. Group width is bounded
     by the CALLER's config, not automatically: IVF_K must grow ~sqrt(n)
-    and the LSH sketch width ~log2(n) so cells and buckets stay small —
-    the module constants (K=64, 8 bits) are sized for the sandbox
-    corpora, and at 10^8+ vectors a cell left at them hits the cap."""
+    so cells stay small — the module constant (K=64) is sized for the
+    sandbox corpora, and at 10^8+ vectors a cell left at it hits the
+    cap."""
     import numpy as np
     import pandas as pd
 
@@ -661,8 +661,8 @@ def cosine_pairs(
         if n > MAX_ROWS:
             raise ValueError(
                 f"cosine_pairs: {n} embeddings in one group exceed the cap "
-                f"EXACT_COS_MAX_ROWS={MAX_ROWS}; use the LSH/IVF paths or "
-                "raise IVF_K / the sketch width"
+                f"EXACT_COS_MAX_ROWS={MAX_ROWS}; use the IVF path or "
+                "raise IVF_K"
             )
         # deterministic intra-group order: the emitted (v1 < v2) pairing
         # must not depend on the arrival order of the group's rows
@@ -708,7 +708,7 @@ def exact_cos_pairs(
     checked-ANN exact side in queries_ml) so the construction cannot
     drift between them (code-review r4 — it was hand-copied 3x):
     ``cosine_pairs`` over the whole table as one group. O(n^2) BY DESIGN —
-    correctness-harness scale only; LSH/IVF are the scale paths."""
+    correctness-harness scale only; IVF is the scale path."""
     emb = load(spark, sf_dir, "embeddings")
     dvec = F.transform("embedding", lambda x: x.cast("double"))
     v = emb.select("vec_id", dvec.alias("v"), F.lit(0).alias("g"))
@@ -717,8 +717,8 @@ def exact_cos_pairs(
 
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding-cosine near-dup pairs (cos >= 0.35 — the top ~0.1% of the pair-similarity distribution in this corpus, which contains no true dups; threshold is data-calibrated): the oracle-
-    checked baseline for the LSH-bucketed variant (queries_ml
-    q_ann_lsh_cosine). Quadratic by design — at scale the LSH path
+    checked baseline for the IVF-bucketed variant (queries_ml
+    q_ann_ivf_cosine). Quadratic by design — at scale the IVF path
     replaces the cross join; this one pins the semantics."""
     return exact_cos_pairs(spark, sf_dir, 0.35, gate_rounded=False)
 
@@ -731,7 +731,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for query vectors (vec_id < 3):
     broadcast the tiny query side, JVM-side zip_with/aggregate dot product.
-    The exact baseline for the LSH-bucketed ANN path (queries_ml).
+    The exact baseline for the IVF-bucketed ANN path (queries_ml).
     r6: base side spread — the interpreted HOF dot evaluates on the scan
     partitioning, a single task on the one-row-group sandbox table
     (no-op at scale; measured 0.57 -> 0.51 s noop)."""

@@ -30,7 +30,7 @@ from typing import TYPE_CHECKING
 
 from ..config import PipelineConfig
 from ..operators import stages
-from ..pipeline import local_root, write_and_count
+from ..pipeline import kept_rows, local_root, write_and_count
 from ..plans import lineage as lin
 
 if TYPE_CHECKING:
@@ -67,8 +67,7 @@ def score_micro_batch(batch_df: "DataFrame", batch_id: int, cfg: PipelineConfig,
     ledger, seen = write_and_count(
         scored,
         lambda s: (
-            s.filter(F.col("keep"))
-            .drop("dup_loser", "keep")
+            kept_rows(s)
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("batch_id")

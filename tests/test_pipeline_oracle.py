@@ -338,6 +338,14 @@ def test_weighted_grammar_validation():
         PipelineConfig(rules=(), verdict="weighted_sum>oops")
     r = Rule("ok", "ppl", "<=", 400.0, action="weight:2.5")
     assert r.weight == 2.5
+    # thresholds of the wrong shape: a string is not a value list, and
+    # between takes exactly [lo, hi]
+    for op, t in (
+        ("in", "en"), ("not_in", "en"), ("between", 5), ("between", [1, 2, 3])
+    ):
+        with pytest.raises(ValueError, match=f"rule x: op {op}"):
+            Rule("x", "lang_pred", op, t)
+    assert Rule("x", "ppl", "between", (1.0, 2.0)).threshold == (1.0, 2.0)
 
 
 def test_boilerplate_oracle_accepts_duplicate_index(corpus_pdf):

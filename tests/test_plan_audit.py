@@ -7,7 +7,7 @@ regressions that source lints can't see:
 1. accidental cartesian products — only the by-design cases in
    CARTESIAN_OK may contain one (e.g. cosine_topk broadcasts a tiny query
    side; embedding_near_dup is the pinned exact baseline whose scale path
-   is the LSH/IVF twins), and every exemption names a registered query;
+   is the IVF twin), and every exemption names a registered query;
 2. per-row Python evaluation (BatchEvalPython) — the runtime counterpart
    of the `F.udf` source lint; only Arrow-batched eval (ArrowEvalPython,
    MapInPandas, FlatMapGroupsInPandas, PythonMapInArrow) is allowed.
@@ -24,12 +24,11 @@ SF_DIR = "/root/testdata/sf0.001"
 # cartesian/broadcast-NLJ allowed: small side is bounded by construction
 CARTESIAN_OK = {
     "cosine_topk",        # 5-row query side, crossJoin by design
-    "embedding_near_dup", # pinned exact O(n^2) baseline; LSH twin scales
-    # r4 checked ANN forms: the exact verification side (_exact_cos_pairs)
+    "embedding_near_dup", # pinned exact O(n^2) baseline; IVF twin scales
+    # r4 checked ANN form: the exact verification side (exact_cos_pairs)
     # is the same pinned O(n^2) twin as embedding_near_dup — it exists to
-    # make the approximate path driver-checkable at small sf; the raw
-    # LSH/IVF subtrees inside these plans remain bucket-joined.
-    "ann_lsh_cosine",
+    # make the approximate path driver-checkable at small sf; the raw IVF
+    # subtree inside this plan remains cell-grouped.
     "ann_ivf_cosine",
 }
 

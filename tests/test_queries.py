@@ -1,7 +1,7 @@
 """Local replica of the driver's correctness harness (__spark_entry__.py):
 run every queries() entry on Spark at sf0.01 and compare against
 oracle_sql() via DuckDB — row count + column names + order-insensitive
-canonical value comparison. Rows-only entries just need rows >= 0 and a
+canonical value comparison. Rows-only entries need rows > 0 and a
 stable schema. The twins read only `documents` and `embeddings`."""
 
 from __future__ import annotations
@@ -83,13 +83,23 @@ def test_query_matches_duckdb(spark, duck, name):
 def test_rows_only_queries_run(spark, name):
     df = ALL[name](spark, SF_DIR)
     pdf = df.toPandas()
-    assert len(pdf) >= 0
+    assert len(pdf) > 0, f"{name}: no rows"
     assert len(df.schema.fields) > 0
     # Driver-grade canonicalization (r4): the driver's rows-only path does a
     # pandas sort_values over ALL columns, which raises on unhashable cells
     # — replicate it exactly so any list/dict-valued output column fails
     # locally first.
     pdf.sort_values(list(pdf.columns))
+
+
+def test_rows_only_entries_are_pinned():
+    """A rows-only entry has no DuckDB twin, so the check above proves
+    only that it runs; it needs a gate of its own elsewhere (the pipeline
+    verdict's is the oracle equality in tests/test_pipeline_oracle.py)."""
+    assert ROWS_ONLY == ["pipeline_documents"], (
+        f"rows-only entries {ROWS_ONLY}: a new rows-only entry needs a "
+        "statistics gate in tests/test_recall.py before it joins this list"
+    )
 
 
 def test_queries_fit_the_harness_cap():

@@ -177,29 +177,25 @@ def test_group_cosine_blocking_invariant(spark):
 
 def test_embedding_dedup_keep_scale_composition(spark):
     """VERDICT r04 item 4: q_embedding_dedup_keep's docstring promises the
-    pair source "swaps to the IVF/LSH candidates at scale — identical
+    pair source "swaps to the IVF candidates at scale — identical
     downstream composition". Prove the composition, not just the promise:
     run the SAME pairs -> connected_components -> keep-list chain over the
-    IVF and LSH pair outputs and compare keep-sets to the exact one.
+    IVF pair output and compare its keep-set to the exact one.
 
     Gates (calibrated at sf0.01 per the oracle-calibration workflow):
-      * superset — IVF/LSH pairs are exact cosines computed within
-        cells/buckets, so at MATCHED gates they are a SUBSET of the exact
-        pair graph; fewer edges can only split components, and the global
-        min of a component stays the min of any sub-component containing
-        it, so every exactly-kept vector stays kept. This is structural
-        (holds at any corpus size), hence asserted as an invariant, not a
+      * superset — IVF pairs are exact cosines computed within cells, so
+        at MATCHED gates they are a SUBSET of the exact pair graph; fewer
+        edges can only split components, and the global min of a
+        component stays the min of any sub-component containing it, so
+        every exactly-kept vector stays kept. This is structural (holds
+        at any corpus size), hence asserted as an invariant, not a
         threshold. Matched gates matter: the emitted `cos` is HALF_UP
         rounded at 4 decimals, so the baseline is exact_cos_pairs with
         gate_rounded=True — vs the raw-gate twin, boundary pairs
         (raw in [0.34995, 0.35)) would add edges and break the superset
         (measured: it does, 2 extra losers at sf0.01).
       * keep-set Jaccard — how much over-keeping the recall loss costs.
-        Measured at sf0.01: IVF 0.858 (gate 0.8, recall-0.845 path);
-        LSH 0.479 (gate 0.4) — the 8-bit sketch on near-uniform synthetic
-        embeddings is LSH's worst case (documented in q_ann_lsh_cosine),
-        so its gate is a sanity floor, not a quality bar; IVF is the
-        pinned at-scale swap for this corpus shape."""
+        Measured at sf0.01: 0.858 (gate 0.8, recall-0.845 path)."""
     from spardaqus_spark import queries_text as QT
     from spardaqus_spark.operators.graphops import connected_components
 
@@ -219,28 +215,15 @@ def test_embedding_dedup_keep_scale_composition(spark):
     k_exact = keep_set(QT.exact_cos_pairs(spark, SF_DIR, 0.35, gate_rounded=True))
     assert 0 < len(k_exact) < 500, "vacuous exact keep-set"
 
-    for name, pairs, jac_gate in (
-        (
-            "ivf",
-            QM.q_ann_ivf_cosine(spark, SF_DIR).filter(F.col("cos") >= 0.35),
-            0.8,
-        ),
-        (
-            # no dedup needed: each vector has exactly ONE 8-bit sketch,
-            # so LSH buckets are disjoint and a pair emits at most once
-            # (unlike IVF's nprobe>1 multi-cell membership)
-            "lsh",
-            QM.q_ann_lsh_cosine(spark, SF_DIR).filter(F.col("cos") >= 0.35),
-            0.4,
-        ),
-    ):
-        k_approx = keep_set(pairs)
-        assert k_approx >= k_exact, (
-            f"{name}: approximate keep-set lost {len(k_exact - k_approx)} "
-            "exactly-kept vectors — edge subset property violated"
-        )
-        jac = len(k_exact & k_approx) / len(k_exact | k_approx)
-        assert jac >= jac_gate, f"{name}: keep-set Jaccard {jac:.3f}"
+    k_ivf = keep_set(
+        QM.q_ann_ivf_cosine(spark, SF_DIR).filter(F.col("cos") >= 0.35)
+    )
+    assert k_ivf >= k_exact, (
+        f"ivf: approximate keep-set lost {len(k_exact - k_ivf)} "
+        "exactly-kept vectors — edge subset property violated"
+    )
+    jac = len(k_exact & k_ivf) / len(k_exact | k_ivf)
+    assert jac >= 0.8, f"ivf: keep-set Jaccard {jac:.3f}"
 
 
 def test_spark_round4_matches_f_round(spark):
